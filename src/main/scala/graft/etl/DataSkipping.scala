@@ -235,6 +235,17 @@ object DataSkipping {
       .withColumn("key_col", lit(keyCol))
       .coalesce(1)
 
+  /** The key column a bloom sidecar pins (`key_col` rides every row) —
+    * how a rewrite or an append of the table keeps indexing the key the
+    * base did. */
+  def bloomKeyCol(spark: SparkSession, tableDir: String): String = {
+    val keys = spark.read.parquet(s"$tableDir/_idx/bloom")
+      .select("key_col").distinct().collect().map(_.getString(0)).toSeq
+    require(keys.size == 1,
+      s"bloom sidecar under $tableDir indexes ${keys.mkString(", ")} — one key per sidecar")
+    keys.head
+  }
+
   /** Incremental `_idx/bloom` maintenance — [[appendStats]]'s twin for
     * the point-lookup sidecar: build filters ONLY for data files absent
     * from the manifest and append their rows, existing parts untouched.

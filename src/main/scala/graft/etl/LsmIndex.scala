@@ -13,34 +13,24 @@ import org.apache.spark.sql.functions.{col, lit}
   *
   * The layout (r14): the artifact root holds COMPACTION EPOCHS —
   * `path/v=E/[bucket=…/]gen=N/` — published claim-then-commit through
-  * the [[CommitProtocol]] seam (`path/_log/E.commit` is the marker;
-  * readers resolve the highest committed epoch). Within the live
-  * epoch, generation 0 is the nightly base build; each incremental
-  * batch appends a NEW generation directory (dynamic `partitionBy` —
-  * base generation files are never rewritten, spec-pinned
-  * byte-identical in all three families), reads are merge-on-read
-  * unions over the generations, and [[compact]] folds everything into
-  * a FRESH epoch's gen 0. At 100 TB this is exactly how
-  * log-structured stores absorb writes: O(batch) per append, merge
+  * the shared [[SnapshotLog]] (readers resolve the highest committed
+  * epoch). Within the live epoch, generation 0 is the nightly base
+  * build; each incremental batch appends a NEW generation directory
+  * (dynamic `partitionBy` — base generation files are never rewritten,
+  * spec-pinned byte-identical in all three families), reads are
+  * merge-on-read unions over the generations, and [[compact]] folds
+  * everything into a FRESH epoch's gen 0. At 100 TB this is exactly
+  * how log-structured stores absorb writes: O(batch) per append, merge
   * cost deferred to reads and bounded by compaction. The optional
   * hash-bucket column in front of `gen` is the serving fan-out: a
   * probe's bucket list is pushed down as a static partition filter
   * ([[prunedRead]]), so a search reads only its keys' directories
   * (the IVF "nprobe directories" story).
   *
-  * CRASH SAFETY (r13 verdict item 7 — this used to be a POSIX
-  * rename-pair swap, which has no object-store analog): a compaction
-  * stages the folded artifact into a hidden txn dir, CLAIMS the next
-  * epoch name through the protocol (atomic rename-no-replace on
-  * POSIX, conditional PUT on an object store), then publishes the
-  * commit marker; only then are superseded epochs vacuumed. Readers
-  * trust markers alone, so every crash window leaves the previous
-  * committed epoch untouched and live: before the claim only staging
-  * is lost; between claim and marker the new epoch dir is an
-  * unmarked ORPHAN the next maintenance op deletes; after the marker
-  * the new epoch is live and leftover old epochs are vacuumed on the
-  * next pass. Like the warehouse's publish path, maintenance assumes
-  * ONE writer per artifact at a time — the protocol defends against
+  * CRASH SAFETY is the log's (see [[SnapshotLog]]): the live epoch's
+  * files are only READ until the successor's marker exists, and
+  * superseded epochs are vacuumed marker-first after it. Maintenance
+  * assumes ONE writer per artifact at a time — the log defends against
   * crashed predecessors, not concurrent compactors. */
 object LsmIndex {
 
@@ -55,60 +45,22 @@ object LsmIndex {
     private[LsmIndex] def partCols: Seq[String] = bucket.map(_._1).toSeq :+ "gen"
   }
 
-  // ---- epoch resolution (claim-then-commit over CommitProtocol) ----
-
-  private def vName(e: Long) = s"v=$e"
-
-  /** Epoch numbers with a commit marker — markers are the ground
-    * truth; a `v=E` directory without one is a dead claim. (Markers of
-    * vacuumed epochs may linger; only the MAX matters to readers.) */
-  private[etl] def committedEpochs(root: String): Seq[Long] =
-    Option(new java.io.File(root, "_log").listFiles()).toSeq.flatten
-      .map(_.getName).filter(_.endsWith(".commit"))
-      .flatMap(_.stripSuffix(".commit").toLongOption)
-
   /** The live (highest-committed) epoch directory every read resolves. */
-  private[etl] def liveDir(layout: Layout): String = {
-    val e = committedEpochs(layout.path).maxOption.getOrElse(throw new
-      IllegalStateException(s"${layout.path}: no committed epoch — run write() first"))
-    s"${layout.path}/${vName(e)}"
-  }
+  private[etl] def liveDir(layout: Layout): String =
+    SnapshotLog.versionDir(layout.path, SnapshotLog.resolve(layout.path)).toString
 
-  /** Stage `rows` as a txn dir, claim the next epoch name, publish its
-    * marker, vacuum what it superseded (marker first, then dir — a
-    * half-vacuumed epoch becomes an unmarked orphan, cleaned below).
-    * Also the recovery point: dead claims and stale staging from a
-    * crashed predecessor are deleted BEFORE new work — both are
-    * invisible to readers, so deletion is always safe. */
-  private def publishEpoch(rows: DataFrame, layout: Layout,
-      protocol: CommitProtocol): Unit = {
-    val root = new java.io.File(layout.path)
-    root.mkdirs()
-    val committed = committedEpochs(layout.path).toSet
-    Option(root.listFiles()).toSeq.flatten.foreach { f =>
-      val dead =
-        (f.getName.startsWith("v=") &&
-          !f.getName.stripPrefix("v=").toLongOption.exists(committed)) ||
-        f.getName.startsWith(".epoch-")
-      if (dead) Compact.deleteRecursively(f)
+  /** Publish `rows` as the next epoch's gen 0 through [[SnapshotLog]],
+    * then vacuum what it superseded. Single-writer maintenance is also
+    * the recovery point: a crashed predecessor's dead claims and stale
+    * staging are deleted BEFORE new work — both are invisible to
+    * readers, so deletion is always safe. */
+  private def publishEpoch(rows: DataFrame, layout: Layout): Unit = {
+    SnapshotLog.recoverUncommitted(layout.path)
+    SnapshotLog.commitNext(layout.path, first = 0L) { txn =>
+      prep(rows, layout, 0L).write.mode("overwrite")
+        .partitionBy(layout.partCols: _*).parquet(txn.toString)
     }
-    val txn = new java.io.File(root,
-      s".epoch-${java.util.UUID.randomUUID().toString.take(8)}")
-    prep(rows, layout, 0L).write.mode("overwrite")
-      .partitionBy(layout.partCols: _*).parquet(txn.toString)
-    var e = committed.maxOption.map(_ + 1).getOrElse(0L)
-    // a taken name under single-writer maintenance is a crashed
-    // predecessor's COMMITTED epoch (orphans were cleaned above) —
-    // skip forward, never reuse
-    while (!protocol.claimVersion(layout.path, txn, e)) e += 1
-    require(protocol.putCommitMarker(layout.path, e,
-      s"lsm-epoch $e".getBytes("UTF-8")),
-      s"${layout.path}: epoch $e marker already present after winning its claim")
-    committed.filter(_ < e).foreach { old =>
-      java.nio.file.Files.deleteIfExists(
-        new java.io.File(s"${layout.path}/_log", s"$old.commit").toPath)
-      Compact.deleteRecursively(new java.io.File(root, vName(old)))
-    }
+    SnapshotLog.vacuum(layout.path, keep = 1)
   }
 
   private def prep(rows: DataFrame, layout: Layout, gen: Long): DataFrame = {
@@ -121,9 +73,8 @@ object LsmIndex {
 
   /** Write generation 0 — the base build, published as a fresh epoch
     * (a re-build claims the NEXT epoch; its commit supersedes). */
-  def write(rows: DataFrame, layout: Layout,
-      protocol: CommitProtocol = RenameCommitProtocol): Unit =
-    publishEpoch(rows, layout, protocol)
+  def write(rows: DataFrame, layout: Layout): Unit =
+    publishEpoch(rows, layout)
 
   /** Incremental maintenance: the batch lands as a NEW generation
     * directory inside the LIVE epoch; base generation files are never
@@ -175,8 +126,7 @@ object LsmIndex {
     * claim-then-commit (see the object doc's crash-window analysis);
     * the live epoch's files are only READ, never touched, until the
     * successor's marker exists. */
-  def compact(s: SparkSession, layout: Layout,
-      protocol: CommitProtocol = RenameCommitProtocol)(
+  def compact(s: SparkSession, layout: Layout)(
       fold: DataFrame => DataFrame = identity): Unit =
-    publishEpoch(fold(read(s, layout)), layout, protocol)
+    publishEpoch(fold(read(s, layout)), layout)
 }

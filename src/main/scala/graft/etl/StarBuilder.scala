@@ -243,88 +243,20 @@ object StarBuilder {
   // Snapshot-versioned warehouse (the time-travel analog)
   // ---------------------------------------------------------------------------
 
-  /** Version numbers with a commit marker in `$warehouse/_log`,
-    * ascending. The marker file — not the data directory — is the unit
-    * of visibility: a `v=<n>` directory without its marker is an
-    * aborted write that no reader ever resolves. */
-  def committedVersions(warehouse: String): Seq[Long] =
-    Option(new java.io.File(s"$warehouse/_log").listFiles())
-      .map(_.toSeq.map(_.getName)
-        // strict <digits>.commit match: anything else in _log (a crashed
-        // writer's leftover, an editor temp file) must be ignored, not
-        // crash every reader forever on toLong
-        .filter(_.matches("^[0-9]+\\.commit$"))
-        .map(_.stripSuffix(".commit").toLong).sorted)
-      .getOrElse(Seq.empty)
-
-  def latestVersion(warehouse: String): Option[Long] =
-    committedVersions(warehouse).lastOption
-
-  /** The commit history: (version, commit epoch-millis), log order. The
-    * commit INSTANT is the `_log` marker's BODY — [[commitMarker]]
-    * stamps the publish-time epoch-millis into the marker at creation,
-    * so TIMESTAMP-AS-OF boundaries survive coarse filesystem timestamp
-    * granularity (1 s on some filesystems) and mtime-losing restores
-    * (cp without -p, object-store downloads). Markers written before
-    * r11 are zero-byte; those fall back to mtime (r10 advice — the
-    * filter+max resolution in [[versionAsOf]] already tolerates the
-    * reordering a fallback can introduce). Planning-sized: one row per
-    * commit. */
-  def history(warehouse: String): Seq[(Long, Long)] =
-    committedVersions(warehouse).map { v =>
-      val f = new java.io.File(s"$warehouse/_log/$v.commit")
-      val body = try new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim
-      catch { case _: java.io.IOException => "" }
-      // trust the body only when it parses as a PLAUSIBLE epoch-millis
-      // (2001..2099) — a truncated prefix of a current epoch ("17" of
-      // "1723…") has too few digits and falls back to mtime instead of
-      // time-traveling the marker to 1970
-      val epoch =
-        if (body.matches("^[0-9]{12,13}$")) Some(body.toLong).filter(t =>
-          t > 978307200000L && t < 4102444800000L)
-        else None
-      v -> epoch.getOrElse(f.lastModified())
-    }
-
-  /** Resolve the snapshot that was LATEST as of `epochMillis` — the
-    * `TIMESTAMP AS OF` half of time travel ([[readAt]]'s version pin is
-    * the `VERSION AS OF` half): the HIGHEST version whose commit marker
-    * landed at or before the instant. Commit mtimes are monotone along
-    * the version order on a live warehouse (markers are created in
-    * claim order and never rewritten), but a restore that lost mtimes
-    * (cp without -p, an object-store download) breaks that — so the
-    * resolution filters and takes the max version rather than
-    * takeWhile-scanning, which would silently stop at the first
-    * out-of-order marker and time-travel to a stale snapshot. Throws if
-    * the instant predates every commit — "the table did not exist yet"
-    * must not silently serve the oldest snapshot. */
-  def versionAsOf(warehouse: String, epochMillis: Long): Long = {
-    val h = history(warehouse)
-    require(h.nonEmpty, s"no committed version in $warehouse")
-    h.filter(_._2 <= epochMillis).map(_._1).maxOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no snapshot of $warehouse existed at $epochMillis " +
-          s"(first commit: v=${h.head._1} at ${h.head._2})"))
-  }
-
   /** [[readAt]] pinned by instant instead of version number. */
   def readAsOf(spark: SparkSession, warehouse: String, table: String,
       epochMillis: Long, mergeSchema: Boolean = false): DataFrame =
     readAt(spark, warehouse, table,
-      Some(versionAsOf(warehouse, epochMillis)), mergeSchema)
+      Some(SnapshotLog.versionAsOf(warehouse, epochMillis)), mergeSchema)
 
   /** Snapshot-versioned star write — the lakehouse-table property the
     * flat [[writeAll]] lacks (Delta/Iceberg being unresolvable offline,
     * SURVEY §8): every refresh lands in a fresh `$warehouse/v=<n>/`
-    * snapshot, and ONLY after every table directory is fully written
-    * does the commit marker `_log/<n>.commit` appear, its body the
-    * commit epoch-millis (the
-    * [[publishSnapshot]] claim-then-commit protocol: snapshot staged in
-    * a writer-private dot-dir, version number claimed by atomic rename,
-    * marker created create-if-absent; an object store swaps the rename
-    * and createFile for conditional PUTs). Readers resolve versions
-    * exclusively through the log, so
+    * snapshot committed through [[SnapshotLog.commitNext]] — staged in
+    * a writer-private dot-dir, version claimed atomically, commit
+    * marker created create-if-absent only after every table directory
+    * is fully written. Readers resolve versions exclusively through the
+    * log, so
     *  - a writer killed mid-snapshot leaves either an invisible staging
     *    dot-dir or a claimed-but-uncommitted `v=<n>` orphan — both
     *    CHANGE NOTHING for readers (StarSpec proves the orphan case),
@@ -337,160 +269,25 @@ object StarBuilder {
     *    concurrent WRITERS can never interleave into one snapshot or
     *    silently overwrite each other's commit.
     * Returns the committed version number. Old snapshots are retained
-    * for time travel; a retention sweep would delete v-dirs strictly
-    * below the oldest pinned version, log-first. */
-  def writeAllVersioned(spark: SparkSession, dir: String, warehouse: String): Long = {
-    val txn = stageDir(warehouse)
-    writeTables(spark, dir, txn.toString)
-    publishSnapshot(warehouse, txn)
-  }
+    * for time travel until [[vacuumVersions]]. */
+  def writeAllVersioned(spark: SparkSession, dir: String, warehouse: String): Long =
+    SnapshotLog.commitNext(warehouse)(txn => writeTables(spark, dir, txn.toString))
 
-  /** A writer-private staging directory for one snapshot attempt —
-    * dot-prefixed so readers, [[Compact.leafDirs]] and the log scan all
-    * ignore it until [[publishSnapshot]] renames it into place. */
-  private def stageDir(warehouse: String): java.io.File = {
-    val f = new java.io.File(warehouse, s".txn_${java.util.UUID.randomUUID}")
-    f.mkdirs()
-    f
-  }
-
-  /** Two-phase publish of a fully-written staging dir: (1) CLAIM a
-    * version number by atomically renaming the dir to `v=<n>` — rename
-    * fails if the target exists, so two concurrent writers can never
-    * interleave into one snapshot directory; the loser just claims the
-    * next number. (2) COMMIT by create-if-absent of the `_log` marker —
-    * `Files.createFile` is the conflict-DETECTING primitive the classic
-    * protocol needs (a rename-over would silently replace a concurrent
-    * committer's marker). A crash between the phases leaves a claimed
-    * but uncommitted `v=<n>` orphan that readers never resolve and
-    * later writers skip past. */
-  /** The active storage protocol (the [[CommitProtocol]] seam): POSIX
-    * rename by default; swapped per-scope by [[withCommitProtocol]]
-    * (the concurrency specs run both implementations through the same
-    * publish logic). */
-  @volatile private var commitProtocol: CommitProtocol = RenameCommitProtocol
-
-  /** Run `body` with `p` as the storage commit protocol, restoring the
-    * default after — the deployment/test seam for the conditional-PUT
-    * implementation. Process-global: callers are the specs (serial) and
-    * a deployment's one-time setup, not concurrent query code. */
-  def withCommitProtocol[T](p: CommitProtocol)(body: => T): T = {
-    val prev = commitProtocol
-    commitProtocol = p
-    try body finally commitProtocol = prev
-  }
-
-  private def publishSnapshot(warehouse: String, txn: java.io.File): Long = {
-    var v = latestVersion(warehouse).getOrElse(0L) + 1
-    // a lost claim means a concurrent writer owns v=<n>: claim the next
-    // number (full-refresh snapshots are self-contained, any number works)
-    while (!commitProtocol.claimVersion(warehouse, txn, v)) v += 1
-    commitMarker(warehouse, v)
-  }
-
-  /** Publish a staging dir as EXACTLY version `v` — the commit primitive
-    * for read-modify-write writers ([[deleteWhere]], [[compactVersioned]],
-    * the streaming CDC sink), whose staged content DERIVES from the
-    * version they read: claiming "the next free number" after a
-    * concurrent commit would silently erase that commit from the latest
-    * view (a lost update). A full-refresh writer's snapshot is
-    * self-contained, so [[publishSnapshot]]'s claim-next-free stays
-    * correct there. On conflict the staging dir is deleted and a
-    * ConcurrentModificationException asks the caller to re-read and
-    * retry — optimistic concurrency, the Delta/Iceberg commit rule. */
-  private def publishSnapshotExactly(warehouse: String, txn: java.io.File,
-      v: Long): Long = {
-    if (!commitProtocol.claimVersion(warehouse, txn, v)) {
-      // a lost exact claim is a CONFLICT, never a retry-with-next: the
-      // staged content derives from v−1 and would erase the winner
-      Compact.deleteRecursively(txn)
-      val committed = committedVersions(warehouse).contains(v)
-      throw new java.util.ConcurrentModificationException(
-        if (committed)
-          s"version $v of $warehouse was committed by a concurrent writer " +
-            "since this read-modify-write began; re-read latest and retry"
-        else
-          s"version $v of $warehouse is claimed but UNCOMMITTED — either a " +
-            "concurrent writer mid-commit, or a crashed writer's orphan; if " +
-            "no writer is live (e.g. on single-writer stream restart), run " +
-            "recoverUncommitted and retry")
-    }
-    commitMarker(warehouse, v)
-  }
-
-  /** Delete claimed-but-uncommitted version directories — the recovery a
-    * crashed EXACT-version writer ([[deleteWhere]], [[compactVersioned]],
-    * the streaming CDC sink) needs: its orphan claim blocks every retry
-    * of `cur + 1` forever (the claim-next-free full-refresh writers just
-    * skip past orphans). ONLY safe when no other writer can be mid-commit
-    * — the caller asserts that (the standard case: a single-writer CDC
-    * stream restarting after a crash, before the query starts; an
-    * object-store deployment replaces the whole claim/commit pair with
-    * conditional PUTs and has no orphan window at all). Returns the
-    * removed version numbers. */
-  def recoverUncommitted(warehouse: String): Seq[Long] = {
-    val entries = Option(new java.io.File(warehouse).listFiles()).getOrElse(Array.empty)
-    // pre-claim crashes leave snapshot-sized .txn_ staging dirs no reader
-    // or writer ever touches — the recovery sweep is the one place that
-    // reclaims them
-    entries.filter(d => d.isDirectory && d.getName.startsWith(".txn_"))
-      .foreach(Compact.deleteRecursively)
-    val committed = committedVersions(warehouse).toSet
-    entries
-      .filter(d => d.isDirectory && d.getName.matches("^v=[0-9]+$"))
-      .map(d => d -> d.getName.stripPrefix("v=").toLong)
-      .filterNot { case (_, v) => committed(v) }
-      .map { case (d, v) => Compact.deleteRecursively(d); v }
-      .sorted.toSeq
-  }
-
-  /** Streaming-transaction ledger — the Delta `txn` action's role: a
-    * committed (stream id, batch id) pair recorded as `_log/txn.<id>.<batch>`
-    * (the strict `<digits>.commit` scan ignores it), holding the version
-    * that batch produced. [[txnVersion]] is how an at-least-once sink
-    * turns replay into a no-op at COMMIT level (the r9 limit: without a
-    * ledger a replayed batch re-commits an identical-content version).
-    * The marker lands AFTER the version commit, so a crash between the
-    * two degrades exactly to the old content-level idempotence — a
-    * duplicate version, never wrong data — and the next success
-    * re-marks. Create-if-absent keeps a concurrent double-replay from
-    * double-marking. */
-  def txnMark(warehouse: String, streamId: String, batchId: Long, v: Long): Unit = {
-    require(!streamId.contains("/") && !streamId.contains("."),
-      s"streamId must be path- and ledger-safe: $streamId")
-    val log = new java.io.File(s"$warehouse/_log")
-    log.mkdirs()
-    // content-atomic create-if-absent (the commit-marker fix applied to
-    // the ledger too): a racing [[txnVersion]] reader must never parse
-    // a partially written version number
-    PosixAtomic.createWithContent(
-      new java.io.File(log, s"txn.$streamId.$batchId").toPath,
-      v.toString.getBytes("UTF-8"))
-    ()
-  }
-
-  /** The version a (stream, batch) pair committed, if its ledger marker
-    * exists — None means the batch never committed (or crashed before
-    * marking, which replays safely). */
-  def txnVersion(warehouse: String, streamId: String, batchId: Long): Option[Long] = {
-    val f = new java.io.File(s"$warehouse/_log/txn.$streamId.$batchId")
-    if (!f.isFile) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong)
-  }
-
-  private def commitMarker(warehouse: String, v: Long): Long = {
-    // conditional create keeps create-if-absent as the atomic commit
-    // step; the body carries the commit epoch-millis so [[history]]
-    // does not depend on filesystem mtime granularity. Both protocol
-    // implementations are CONTENT-atomic (staged body linked/moved into
-    // the visible name), so a reader never observes a partial body;
-    // history() additionally range-checks the parsed epoch as defense
-    // in depth before trusting it over mtime.
-    if (!commitProtocol.putCommitMarker(warehouse, v,
-        String.valueOf(System.currentTimeMillis()).getBytes("UTF-8")))
-      throw new java.nio.file.FileAlreadyExistsException(
-        s"$warehouse/_log/$v.commit")
-    v
+  /** The copy-on-write commit every read-modify-write writer shares:
+    * resolve `from` (the latest when None) through the log — deriving
+    * from a claimed-but-uncommitted directory would publish a crashed
+    * writer's half-write — check `table` is in it, stage `build(src,
+    * txn)` and commit EXACTLY from + 1, so a concurrent commit fails
+    * the claim (ConcurrentModificationException) instead of being
+    * silently erased from the latest view. Returns the new version. */
+  private def deriveFrom(warehouse: String, from: Option[Long],
+      table: Option[String] = None)(
+      build: (java.io.File, java.io.File) => Unit): Long = {
+    val v = SnapshotLog.resolve(warehouse, from)
+    val src = SnapshotLog.versionDir(warehouse, v)
+    table.foreach(t => require(new java.io.File(src, t).isDirectory,
+      s"table $t is not in v=$v of $warehouse"))
+    SnapshotLog.commitExactly(warehouse, v + 1)(build(src, _))
   }
 
   /** Copy-on-write snapshot compaction — OPTIMIZE as a COMMIT instead
@@ -506,114 +303,94 @@ object StarBuilder {
     * decode/re-encode, fragmented ones repacked with [[Compact]]'s
     * formula. Returns the committed new version. */
   def compactVersioned(spark: SparkSession, warehouse: String,
-      targetBytes: Long, blockSize: Int = 128 * 1024 * 1024): Long = {
-    val cur = latestVersion(warehouse).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $warehouse"))
-    val srcRoot = new java.io.File(s"$warehouse/v=$cur")
-    val txn = stageDir(warehouse)
-    val tables = Option(srcRoot.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory &&
-        !d.getName.startsWith("_") && !d.getName.startsWith("."))
-    tables.foreach { t =>
-      if (dvDir(srcRoot, t.getName).isDirectory) {
-        // a deletion-vector sidecar addresses rows by (file, position):
-        // any repack would break those addresses, so compaction is where
-        // deletes MATERIALIZE — rewrite the live view, drop the sidecar.
-        // Output sizing scales the physical bytes by the live-row
-        // fraction (a mostly-deleted table must not keep its pre-delete
-        // file count), and a `k=v` directory layout is preserved via
-        // partitionBy so partition pruning survives the rewrite.
-        val leaves = Compact.leafDirs(t)
-        val bytes = leaves.flatMap(l => Compact.dataFiles(l)).map(_.length()).sum
-        val partCols = srcRoot.toPath.relativize(leaves.head.toPath).toString
-          .split("/").drop(1).filter(_.contains("=")).map(_.split("=", 2)(0)).toSeq
-        // mergeSchema: a DV-carrying table that also evolved by append
-        // must materialize the UNION schema in the rewrite, not whichever
-        // footer schema inference happens to pick (Compact.packInto
-        // carries the same guard on the no-DV path)
-        val live = graft.Ckpt.eager(
-          applyDv(spark, srcRoot, t.getName, mergeSchema = true))
-        val physRows = math.max(1L, spark.read.parquet(t.toString).count())
-        val liveRows = live.count()
-        // double arithmetic: bytes × rows overflows Long at the 100 TB
-        // scale this exists for (2e11 bytes × 5e7 rows > Long.MaxValue)
-        val liveBytes = bytes.toDouble * liveRows / physRows
-        val nOut = math.max(1L, math.ceil(liveBytes / targetBytes).toLong).toInt
-        if (liveRows == 0L)
-          // a fully-deleted table: dynamic partitionBy of an empty frame
-          // writes NO schema-bearing file (the dir would be unreadable);
-          // the plain write leaves one empty schema file
-          live.write.mode("overwrite").parquet(new java.io.File(txn, t.getName).toString)
-        else if (partCols.isEmpty)
-          live.repartition(nOut).write.mode("overwrite")
-            .option("parquet.block.size", blockSize.toString)
-            .parquet(new java.io.File(txn, t.getName).toString)
-        else {
-          // one task per partition value keeps rows with their leaf; the
-          // per-file row cap re-establishes target-sized files WITHIN a
-          // big leaf (compaction-throughput, not query-path, parallelism)
-          val rowsPerFile = math.max(1L,
-            (targetBytes / math.max(1.0, bytes.toDouble / physRows)).toLong)
-          live.repartition(partCols.map(col): _*)
-            .write.mode("overwrite")
-            .option("parquet.block.size", blockSize.toString)
-            .option("maxRecordsPerFile", rowsPerFile.toString)
-            .partitionBy(partCols: _*)
-            .parquet(new java.io.File(txn, t.getName).toString)
+      targetBytes: Long, blockSize: Int = 128 * 1024 * 1024): Long =
+    // compaction derives from the latest: same lost-update rule as deleteWhere
+    deriveFrom(warehouse, None) { (srcRoot, txn) =>
+      val tables = Option(srcRoot.listFiles()).getOrElse(Array.empty)
+        .filter(d => d.isDirectory &&
+          !d.getName.startsWith("_") && !d.getName.startsWith("."))
+      tables.foreach { t =>
+        if (dvDir(srcRoot, t.getName).isDirectory) {
+          // a deletion-vector sidecar addresses rows by (file, position):
+          // any repack would break those addresses, so compaction is where
+          // deletes MATERIALIZE — rewrite the live view, drop the sidecar.
+          // Output sizing scales the physical bytes by the live-row
+          // fraction (a mostly-deleted table must not keep its pre-delete
+          // file count), and a `k=v` directory layout is preserved via
+          // partitionBy so partition pruning survives the rewrite.
+          val leaves = Compact.leafDirs(t)
+          val bytes = leaves.flatMap(l => Compact.dataFiles(l)).map(_.length()).sum
+          val partCols = srcRoot.toPath.relativize(leaves.head.toPath).toString
+            .split("/").drop(1).filter(_.contains("=")).map(_.split("=", 2)(0)).toSeq
+          // mergeSchema: a DV-carrying table that also evolved by append
+          // must materialize the UNION schema in the rewrite, not whichever
+          // footer schema inference happens to pick (Compact.packInto
+          // carries the same guard on the no-DV path)
+          val live = graft.Ckpt.eager(
+            applyDv(spark, srcRoot, t.getName, mergeSchema = true))
+          val physRows = math.max(1L, spark.read.parquet(t.toString).count())
+          val liveRows = live.count()
+          // double arithmetic: bytes × rows overflows Long at the 100 TB
+          // scale this exists for (2e11 bytes × 5e7 rows > Long.MaxValue)
+          val liveBytes = bytes.toDouble * liveRows / physRows
+          val nOut = math.max(1L, math.ceil(liveBytes / targetBytes).toLong).toInt
+          if (liveRows == 0L)
+            // a fully-deleted table: dynamic partitionBy of an empty frame
+            // writes NO schema-bearing file (the dir would be unreadable);
+            // the plain write leaves one empty schema file
+            live.write.mode("overwrite").parquet(new java.io.File(txn, t.getName).toString)
+          else if (partCols.isEmpty)
+            live.repartition(nOut).write.mode("overwrite")
+              .option("parquet.block.size", blockSize.toString)
+              .parquet(new java.io.File(txn, t.getName).toString)
+          else {
+            // one task per partition value keeps rows with their leaf; the
+            // per-file row cap re-establishes target-sized files WITHIN a
+            // big leaf (compaction-throughput, not query-path, parallelism)
+            val rowsPerFile = math.max(1L,
+              (targetBytes / math.max(1.0, bytes.toDouble / physRows)).toLong)
+            live.repartition(partCols.map(col): _*)
+              .write.mode("overwrite")
+              .option("parquet.block.size", blockSize.toString)
+              .option("maxRecordsPerFile", rowsPerFile.toString)
+              .partitionBy(partCols: _*)
+              .parquet(new java.io.File(txn, t.getName).toString)
+          }
+        } else Compact.leafDirs(t).foreach { leaf =>
+          val rel = srcRoot.toPath.relativize(leaf.toPath).toString
+          Compact.packInto(spark, leaf, new java.io.File(txn, rel), targetBytes, blockSize)
         }
-      } else Compact.leafDirs(t).foreach { leaf =>
-        val rel = srcRoot.toPath.relativize(leaf.toPath).toString
-        Compact.packInto(spark, leaf, new java.io.File(txn, rel), targetBytes, blockSize)
-      }
-      // a stats manifest addresses files BY NAME: any repack leaves it
-      // pointing at files that no longer exist, so the compacted
-      // snapshot regenerates its manifest before the commit (stats
-      // columns are recoverable from the manifest's own min_* schema).
-      // Cheap next to the repack itself, and atomic with it — readers
-      // resolve either (old files, old stats) or (new files, new
-      // stats), never a mix.
-      val srcStats = new java.io.File(t, "_idx/stats")
-      if (srcStats.isDirectory) {
-        val cols = DataSkipping.statsColsOf(
-          spark.read.parquet(srcStats.toString).columns.toIndexedSeq)
-        DataSkipping.writeStats(spark, new java.io.File(txn, t.getName).toString, cols)
-      }
-      // the bloom sidecar addresses files by name too; its key column is
-      // pinned in the manifest itself (`key_col` rides every row), so the
-      // compacted snapshot regenerates it with the same atomicity (r10 —
-      // closes the r9 "bloom follows the serving-index rebuild rule"
-      // limitation for warehouse tables; the ANN indexes keep that rule,
-      // and Compact.resort proves their searches survive a repack)
-      val srcBloom = new java.io.File(t, "_idx/bloom")
-      if (srcBloom.isDirectory) {
-        val keys = spark.read.parquet(srcBloom.toString)
-          .select("key_col").distinct().collect().map(_.getString(0)).toSeq
-        require(keys.size == 1,
-          s"bloom sidecar under ${t.getName} indexes ${keys.mkString(", ")} — one key per sidecar")
-        DataSkipping.writeBloom(spark,
-          new java.io.File(txn, t.getName).toString, keys.head)
+        // a stats manifest addresses files BY NAME: any repack leaves it
+        // pointing at files that no longer exist, so the compacted
+        // snapshot regenerates its manifest before the commit (stats
+        // columns are recoverable from the manifest's own min_* schema).
+        // Cheap next to the repack itself, and atomic with it — readers
+        // resolve either (old files, old stats) or (new files, new
+        // stats), never a mix.
+        val srcStats = new java.io.File(t, "_idx/stats")
+        if (srcStats.isDirectory) {
+          val cols = DataSkipping.statsColsOf(
+            spark.read.parquet(srcStats.toString).columns.toIndexedSeq)
+          DataSkipping.writeStats(spark, new java.io.File(txn, t.getName).toString, cols)
+        }
+        // the bloom sidecar addresses files by name too; its key column is
+        // pinned in the manifest itself (`key_col` rides every row), so the
+        // compacted snapshot regenerates it with the same atomicity (r10 —
+        // closes the r9 "bloom follows the serving-index rebuild rule"
+        // limitation for warehouse tables; the ANN indexes keep that rule,
+        // and Compact.resort proves their searches survive a repack)
+        if (new java.io.File(t, "_idx/bloom").isDirectory)
+          DataSkipping.writeBloom(spark, new java.io.File(txn, t.getName).toString,
+            DataSkipping.bloomKeyCol(spark, t.toString))
       }
     }
-    // compaction derives from v=cur: same lost-update rule as deleteWhere
-    publishSnapshotExactly(warehouse, txn, cur + 1)
-  }
 
-  /** Retention sweep: keep the newest `keep` committed versions, drop
-    * the rest — LOG MARKER FIRST (the version disappears from
-    * resolution in one delete), THEN the orphaned data directory, so a
-    * crash mid-vacuum leaves only invisible orphans, never a
-    * resolvable version with missing data. Returns the dropped
+  /** Retention sweep ([[SnapshotLog.vacuum]]): keep the newest `keep`
+    * committed versions, drop the rest marker-first. Returns the dropped
     * versions. The caller owns the pin contract: vacuum only below the
     * oldest version any reader still pins. */
-  def vacuumVersions(warehouse: String, keep: Int): Seq[Long] = {
-    require(keep >= 1, "must keep at least the latest version")
-    val drop = committedVersions(warehouse).dropRight(keep)
-    drop.foreach { v =>
-      new java.io.File(s"$warehouse/_log/$v.commit").delete()
-      Compact.deleteRecursively(new java.io.File(s"$warehouse/v=$v"))
-    }
-    drop
-  }
+  def vacuumVersions(warehouse: String, keep: Int): Seq[Long] =
+    SnapshotLog.vacuum(warehouse, keep)
 
   /** Read `table` from the snapshot `version` (or the latest committed
     * one). Fails loudly on an uncommitted/unknown version — an aborted
@@ -625,16 +402,16 @@ object StarBuilder {
     * never widened. */
   def readAt(spark: SparkSession, warehouse: String, table: String,
       version: Option[Long] = None, mergeSchema: Boolean = false): DataFrame = {
-    val vs = committedVersions(warehouse)
-    require(vs.nonEmpty, s"no committed version in $warehouse")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v is not committed in $warehouse (committed: ${vs.mkString(", ")})")
-    val root = new java.io.File(s"$warehouse/v=$v")
+    val root = snapshotRoot(warehouse, version)
     if (dvDir(root, table).isDirectory) applyDv(spark, root, table, mergeSchema)
     else spark.read.option("mergeSchema", mergeSchema)
       .parquet(new java.io.File(root, table).toString)
   }
+
+  /** The directory of `version` (or the latest), resolved through the
+    * log — the one resolver both read paths share. */
+  private def snapshotRoot(warehouse: String, version: Option[Long]): java.io.File =
+    SnapshotLog.versionDir(warehouse, SnapshotLog.resolve(warehouse, version))
 
   // ---------------------------------------------------------------------------
   // Deletion vectors — row-level DELETE without rewriting data files
@@ -708,27 +485,22 @@ object StarBuilder {
   def deleteWhere(spark: SparkSession, warehouse: String, table: String,
       predicate: Column): Long = {
     import spark.implicits._
-    val cur = latestVersion(warehouse).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $warehouse"))
-    val srcRoot = new java.io.File(s"$warehouse/v=$cur")
-    require(new java.io.File(srcRoot, table).isDirectory,
-      s"table $table is not in v=$cur of $warehouse")
-    val oldDv =
-      if (dvDir(srcRoot, table).isDirectory)
-        spark.read.parquet(dvDir(srcRoot, table).toString)
-      else Seq.empty[(String, Long)].toDF("file", "pos")
-    val merged = oldDv.union(
-      liveWithRowId(spark, srcRoot, table).where(predicate)
-        .select(col("_file").as("file"), col("_pos").as("pos")))
-    val txn = stageDir(warehouse)
-    copyTree(srcRoot, txn)
-    // the merged sidecar still READS from the source version's files;
-    // the overwrite only replaces the copied sidecar in the staging dir
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(txn, s"_dv/$table").toString)
-    // staged content derives from v=cur → commit exactly cur+1, or fail
-    // if a concurrent writer got there first (lost-update protection)
-    publishSnapshotExactly(warehouse, txn, cur + 1)
+    // staged content derives from the latest → commit exactly its
+    // successor, or fail if a concurrent writer got there first
+    deriveFrom(warehouse, None, Some(table)) { (srcRoot, txn) =>
+      val oldDv =
+        if (dvDir(srcRoot, table).isDirectory)
+          spark.read.parquet(dvDir(srcRoot, table).toString)
+        else Seq.empty[(String, Long)].toDF("file", "pos")
+      val merged = oldDv.union(
+        liveWithRowId(spark, srcRoot, table).where(predicate)
+          .select(col("_file").as("file"), col("_pos").as("pos")))
+      copyTree(srcRoot, txn)
+      // the merged sidecar still READS from the source version's files;
+      // the overwrite only replaces the copied sidecar in the staging dir
+      merged.coalesce(1).write.mode("overwrite")
+        .parquet(new java.io.File(txn, s"_dv/$table").toString)
+    }
   }
 
   private def copyTree(src: java.io.File, dst: java.io.File): Unit =
@@ -749,13 +521,12 @@ object StarBuilder {
     * their version carries, and partition pruning applies per
     * snapshot — spec-pinned. */
   def writeTableVersioned(df: DataFrame, warehouse: String, table: String,
-      partitionBy: Seq[String] = Nil): Long = {
-    val txn = stageDir(warehouse)
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(new java.io.File(txn, table).toString)
-    publishSnapshot(warehouse, txn)
-  }
+      partitionBy: Seq[String] = Nil): Long =
+    SnapshotLog.commitNext(warehouse) { txn =>
+      val w = df.write.mode("overwrite")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(new java.io.File(txn, table).toString)
+    }
 
   /** Constraint-checked snapshot commit — Delta CHECK constraints / DLT
     * expectations over the versioned log: every row is tested against
@@ -784,14 +555,14 @@ object StarBuilder {
     val tagged = df.withColumn("_violated",
       array_compact(array(constraints.map { case (n, c) =>
         when(c <=> lit(false), lit(n)) }: _*)))
-    if (failFast) {
-      // persist so the rows the validation saw are EXACTLY the rows the
-      // commit writes: recomputing `df` for the write would let a
-      // non-deterministic source pass validation yet commit violating
-      // rows (r10 advice — the 'bad data never becomes a resolvable
-      // snapshot' contract holds against rand()/concurrent inputs too)
-      val persisted = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+    // persist so the rows the validation saw are EXACTLY the rows the
+    // commit writes: recomputing `df` for the write would let a
+    // non-deterministic source pass validation yet commit violating
+    // rows (the 'bad data never becomes a resolvable snapshot'
+    // contract holds against rand()/concurrent inputs too)
+    val persisted = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (failFast) {
         val counts = persisted.select(explode(col("_violated")).as("c"))
           .groupBy("c").count().collect()
           .map(r => s"${r.getString(0)}=${r.getLong(1)}")
@@ -800,18 +571,14 @@ object StarBuilder {
             s"constraint violations in $table, nothing committed: " +
               counts.sorted.mkString(", "))
         writeTableVersioned(persisted.drop("_violated"), warehouse, table)
-      } finally persisted.unpersist()
-    } else {
-      val txn = stageDir(warehouse)
-      val persisted = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-      persisted.where(size(col("_violated")) === 0).drop("_violated")
-        .write.mode("overwrite").parquet(new java.io.File(txn, table).toString)
-      persisted.where(size(col("_violated")) > 0)
-        .write.mode("overwrite")
-        .parquet(new java.io.File(txn, s"${table}_quarantine").toString)
-      persisted.unpersist()
-      publishSnapshot(warehouse, txn)
-    }
+      } else SnapshotLog.commitNext(warehouse) { txn =>
+        persisted.where(size(col("_violated")) === 0).drop("_violated")
+          .write.mode("overwrite").parquet(new java.io.File(txn, table).toString)
+        persisted.where(size(col("_violated")) > 0)
+          .write.mode("overwrite")
+          .parquet(new java.io.File(txn, s"${table}_quarantine").toString)
+      }
+    } finally persisted.unpersist()
   }
 
   /** [[writeTableVersioned]] for content DERIVED from version `from` (a
@@ -820,11 +587,10 @@ object StarBuilder {
     * committed first — the staged derivation would silently erase that
     * commit if it claimed the next free number instead. */
   def writeTableVersionedFrom(df: DataFrame, warehouse: String, table: String,
-      from: Long): Long = {
-    val txn = stageDir(warehouse)
-    df.write.mode("overwrite").parquet(new java.io.File(txn, table).toString)
-    publishSnapshotExactly(warehouse, txn, from + 1)
-  }
+      from: Long): Long =
+    deriveFrom(warehouse, Some(from)) { (_, txn) =>
+      df.write.mode("overwrite").parquet(new java.io.File(txn, table).toString)
+    }
 
   /** Append `df`'s rows to `table` as a new snapshot derived from
     * version `from`: the prior snapshot is byte-copied (base data files
@@ -844,52 +610,42 @@ object StarBuilder {
     * byte-identical, the new column exists only where new data carries
     * it, and a backfill is an explicit separate rewrite. */
   def appendTableVersioned(df: DataFrame, warehouse: String, table: String,
-      from: Long): Long = {
-    // the orphan rule readAt enforces holds for writers too: deriving a
-    // snapshot from a claimed-but-uncommitted v-dir would publish a
-    // crashed writer's half-write as committed data
-    require(committedVersions(warehouse).contains(from),
-      s"version $from is not committed in $warehouse — refusing to derive " +
-        "a snapshot from an uncommitted/orphan directory")
-    val srcRoot = new java.io.File(s"$warehouse/v=$from")
-    require(new java.io.File(srcRoot, table).isDirectory,
-      s"table $table is not in v=$from of $warehouse")
-    // a data-skipping sidecar byte-copied across this append would NOT
-    // cover the new files — pruned reads at from+1 would silently drop
-    // every appended row (the DataSkipping 'refuse instead' rule). The
-    // stats path with manifest maintenance is appendTableVersionedStats;
-    // a bloom sidecar grows through appendBloom on that same path.
-    Seq("stats", "bloom").foreach { kind =>
-      require(!new java.io.File(srcRoot, s"$table/_idx/$kind").isDirectory,
-        s"table $table carries an _idx/$kind sidecar in v=$from: a plain " +
-          "append would leave it stale (appended files invisible to pruned " +
-          "reads) — use appendTableVersionedStats, which grows the manifest")
+      from: Long): Long =
+    deriveFrom(warehouse, Some(from), Some(table)) { (srcRoot, txn) =>
+      // a data-skipping sidecar byte-copied across this append would NOT
+      // cover the new files — pruned reads at from+1 would silently drop
+      // every appended row (the DataSkipping 'refuse instead' rule). The
+      // stats path with manifest maintenance is appendTableVersionedStats;
+      // a bloom sidecar grows through appendBloom on that same path.
+      Seq("stats", "bloom").foreach { kind =>
+        require(!new java.io.File(srcRoot, s"$table/_idx/$kind").isDirectory,
+          s"table $table carries an _idx/$kind sidecar in v=$from: a plain " +
+            "append would leave it stale (appended files invisible to pruned " +
+            "reads) — use appendTableVersionedStats, which grows the manifest")
+      }
+      // a hive-partitioned (`k=v/`) snapshot cannot take a flat file
+      // drop-in: appended files at the table root break Spark's partition
+      // discovery ("conflicting directory structures") and the partition
+      // column's inferred type need not match the frame's — a committed
+      // snapshot would be unreadable. Refuse with the remedy.
+      require(!Option(new java.io.File(srcRoot, table).listFiles())
+        .getOrElse(Array.empty)
+        .exists(f => f.isDirectory && f.getName.contains("=")),
+        s"table $table in v=$from has a hive-partitioned layout: a flat append " +
+          "would break partition discovery — commit a fresh snapshot via " +
+          "writeTableVersioned with the same partitionBy instead")
+      // merged read: after a prior evolution the table's files carry mixed
+      // footers, and the superset check must hold against their UNION
+      val existing = df.sparkSession.read.option("mergeSchema", true)
+        .parquet(new java.io.File(srcRoot, table).toString).schema
+      val incoming = df.schema.map(f => f.name -> f.dataType).toMap
+      val broken = existing.filterNot(f => incoming.get(f.name).contains(f.dataType))
+      require(broken.isEmpty,
+        s"appendTableVersioned to $table: incoming schema must be a superset " +
+          s"with identical types; missing/retyped: ${broken.map(_.name).mkString(", ")}")
+      copyTree(srcRoot, txn)
+      df.write.mode("append").parquet(new java.io.File(txn, table).toString)
     }
-    // a hive-partitioned (`k=v/`) snapshot cannot take a flat file
-    // drop-in: appended files at the table root break Spark's partition
-    // discovery ("conflicting directory structures") and the partition
-    // column's inferred type need not match the frame's — a committed
-    // snapshot would be unreadable. Refuse with the remedy.
-    require(!Option(new java.io.File(srcRoot, table).listFiles())
-      .getOrElse(Array.empty)
-      .exists(f => f.isDirectory && f.getName.contains("=")),
-      s"table $table in v=$from has a hive-partitioned layout: a flat append " +
-        "would break partition discovery — commit a fresh snapshot via " +
-        "writeTableVersioned with the same partitionBy instead")
-    // merged read: after a prior evolution the table's files carry mixed
-    // footers, and the superset check must hold against their UNION
-    val existing = df.sparkSession.read.option("mergeSchema", true)
-      .parquet(new java.io.File(srcRoot, table).toString).schema
-    val incoming = df.schema.map(f => f.name -> f.dataType).toMap
-    val broken = existing.filterNot(f => incoming.get(f.name).contains(f.dataType))
-    require(broken.isEmpty,
-      s"appendTableVersioned to $table: incoming schema must be a superset " +
-        s"with identical types; missing/retyped: ${broken.map(_.name).mkString(", ")}")
-    val txn = stageDir(warehouse)
-    copyTree(srcRoot, txn)
-    df.write.mode("append").parquet(new java.io.File(txn, table).toString)
-    publishSnapshotExactly(warehouse, txn, from + 1)
-  }
 
   /** [[writeTableVersioned]] with a clustered layout and a committed
     * `_stats` data-skipping manifest — the "stats in the log" shape: the
@@ -897,31 +653,25 @@ object StarBuilder {
     * intervals on those columns are tight and disjoint), the per-file
     * manifest is written INSIDE the staging dir, and both become visible
     * in one commit — a reader never sees data without its stats or
-    * stats for files that aren't there. blockSize/check-interval pins
-    * follow [[writeFactClustered]] (deterministic row groups). */
+    * stats for files that aren't there. Written by [[writeClustered]]
+    * (deterministic row groups). */
   def writeTableVersionedStats(df: DataFrame, warehouse: String, table: String,
       sortBy: Seq[String], statsCols: Seq[String],
       blockSize: Int = 128 * 1024 * 1024): Long = {
     require(sortBy.nonEmpty, "writeTableVersionedStats needs a clustering key")
-    val txn = stageDir(warehouse)
-    val tableDir = new java.io.File(txn, table).toString
-    df.repartitionByRange(4, sortBy.map(col): _*)
-      .sortWithinPartitions(sortBy.map(col): _*)
-      .write.mode("overwrite")
-      .option("parquet.block.size", blockSize.toString)
-      // deterministic flush points — see writeFactClustered
-      .option("parquet.block.size.row.check.min", "100")
-      .option("parquet.block.size.row.check.max", "100")
-      .parquet(tableDir)
-    DataSkipping.writeStats(df.sparkSession, tableDir, statsCols)
-    publishSnapshot(warehouse, txn)
+    SnapshotLog.commitNext(warehouse) { txn =>
+      val tableDir = new java.io.File(txn, table).toString
+      writeClustered(df, sortBy.map(col), tableDir, blockSize)
+      DataSkipping.writeStats(df.sparkSession, tableDir, statsCols)
+    }
   }
 
   /** Incremental commit to a stats-carrying table — the versioned-path
     * consumer of [[DataSkipping.appendStats]]: the new snapshot's data
     * files are BYTE-COPIES of the current ones plus freshly written
-    * files for `df`, and the `_idx/stats` manifest grows by exactly the
-    * new files' rows; copied data files AND copied manifest parts stay
+    * files for `df`, and the `_idx/stats` manifest (and an `_idx/bloom`
+    * sidecar, when the table carries one) grows by exactly the new
+    * files' rows; copied data files AND copied manifest parts stay
     * byte-identical (DataSkippingSpec pins both). Nightly ingest
     * therefore pays O(new data) for the table and its skipping sidecar
     * alike — a full [[writeTableVersionedStats]] recommit would rescan
@@ -935,23 +685,17 @@ object StarBuilder {
       sortBy: Seq[String], statsCols: Seq[String],
       blockSize: Int = 128 * 1024 * 1024): Long = {
     require(sortBy.nonEmpty, "appendTableVersionedStats needs a clustering key")
-    val cur = latestVersion(warehouse).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $warehouse"))
-    val srcRoot = new java.io.File(s"$warehouse/v=$cur")
-    require(new java.io.File(srcRoot, table).isDirectory,
-      s"table $table is not in v=$cur of $warehouse")
-    val txn = stageDir(warehouse)
-    copyTree(srcRoot, txn)
-    val tableDir = new java.io.File(txn, table).toString
-    df.repartitionByRange(4, sortBy.map(col): _*)
-      .sortWithinPartitions(sortBy.map(col): _*)
-      .write.mode("append")
-      .option("parquet.block.size", blockSize.toString)
-      .option("parquet.block.size.row.check.min", "100")
-      .option("parquet.block.size.row.check.max", "100")
-      .parquet(tableDir)
-    DataSkipping.appendStats(df.sparkSession, tableDir, statsCols)
-    publishSnapshotExactly(warehouse, txn, cur + 1)
+    deriveFrom(warehouse, None, Some(table)) { (srcRoot, txn) =>
+      copyTree(srcRoot, txn)
+      val tableDir = new java.io.File(txn, table).toString
+      writeClustered(df, sortBy.map(col), tableDir, blockSize, mode = "append")
+      DataSkipping.appendStats(df.sparkSession, tableDir, statsCols)
+      // the copied bloom sidecar must cover the appended files too, or a
+      // point lookup at the new version never opens them
+      if (new java.io.File(tableDir, "_idx/bloom").isDirectory)
+        DataSkipping.appendBloom(df.sparkSession, tableDir,
+          DataSkipping.bloomKeyCol(df.sparkSession, tableDir))
+    }
   }
 
   /** Manifest-pruned interval scan of a committed snapshot table: the
@@ -964,14 +708,9 @@ object StarBuilder {
     * resurrect deleted rows. */
   def readAtPruned(spark: SparkSession, warehouse: String, table: String,
       c: String, lo: Any, hi: Any, version: Option[Long] = None): DataFrame = {
-    val vs = committedVersions(warehouse)
-    require(vs.nonEmpty, s"no committed version in $warehouse")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v is not committed in $warehouse (committed: ${vs.mkString(", ")})")
-    val root = new java.io.File(s"$warehouse/v=$v")
+    val root = snapshotRoot(warehouse, version)
     require(!dvDir(root, table).isDirectory,
-      s"readAtPruned: $table carries a deletion vector at v=$v — " +
+      s"readAtPruned: $table carries a deletion vector at ${root.getName} — " +
         "compactVersioned materializes it; pruned scans don't apply DVs")
     DataSkipping.prunedScan(spark, new java.io.File(root, table).toString, c, lo, hi)
   }
@@ -1098,7 +837,7 @@ object StarBuilder {
     * without changing a row is the point. Reps keep cycling version
     * pairs; vacuum bounds the scratch store (the q119 convention). */
   val q153_merge_versioned: Q = (s, d) => {
-    val wh = scratchDir(s, d, "merge_log")
+    val wh = scratchDir(s, d, "mergelog")
     val f = Star.fact(s, d)
     val maxY = f.agg(max("tahun")).head().getLong(0)
     val base = studentSummary(f.where(col("tahun") < maxY &&
@@ -1633,23 +1372,28 @@ object StarBuilder {
   def writeFactClustered(spark: SparkSession, dir: String, out: String,
       sorted: Boolean, blockSize: Int = 128 * 1024 * 1024): Unit = {
     val fact = factNilaiMk(spark, dir)
-    val laid =
-      if (sorted) fact.repartitionByRange(4, col("student"))
-        .sortWithinPartitions("student")
-      // same task count, layout uncorrelated with student — the control
-      else fact.repartition(4, col("course"))
-    laid.write.mode("overwrite")
+    if (sorted) writeClustered(fact, Seq(col("student")), out, blockSize)
+    // same task count, layout uncorrelated with student — the control
+    else writeClustered(fact.repartition(4, col("course")), Nil, out, blockSize)
+  }
+
+  /** The clustered write every layout above shares: range-partition
+    * `df` 4 ways on `key` and sort within each task (an empty `key`
+    * keeps `df`'s own layout), with the row-group size-check interval
+    * pinned (the default adapts 100→10000 rows on the previous group's
+    * average row width): flush points — and so the row-group min/max
+    * stats the skip measurements assert on — become a deterministic
+    * function of the rows alone (adaptive check intervals made the 2×
+    * sorted-vs-unsorted skip margin flaky). */
+  private def writeClustered(df: DataFrame, key: Seq[Column], out: String,
+      blockSize: Int, mode: String = "overwrite"): Unit =
+    (if (key.isEmpty) df
+     else df.repartitionByRange(4, key: _*).sortWithinPartitions(key: _*))
+      .write.mode(mode)
       .option("parquet.block.size", blockSize.toString)
-      // pin the size-check interval (default adapts 100→10000 rows on
-      // the previous group's average row width): flush points — and so
-      // the row-group min/max stats the skip measurements assert on —
-      // become a deterministic function of the rows alone (r8 ADVICE:
-      // adaptive check intervals were the residual flake in the 2×
-      // sorted-vs-unsorted margin)
       .option("parquet.block.size.row.check.min", "100")
       .option("parquet.block.size.row.check.max", "100")
       .parquet(out)
-  }
 
   /** Per-dimension bucket bits for the Z-order key (16 buckets/dim). */
   private val zBits = 4
@@ -1705,13 +1449,7 @@ object StarBuilder {
     val z = interleaved(dims.zip(bnds).map {
       case (c, b) => quantileBucket(c, b.toSeq)
     })
-    fact.repartitionByRange(4, z).sortWithinPartitions(z)
-      .write.mode("overwrite")
-      .option("parquet.block.size", blockSize.toString)
-      // deterministic flush points — see writeFactClustered
-      .option("parquet.block.size.row.check.min", "100")
-      .option("parquet.block.size.row.check.max", "100")
-      .parquet(out)
+    writeClustered(fact, Seq(z), out, blockSize)
   }
 
   /** q48 (A10): the surrogate-keyed time dimension itself. Deliberately

@@ -418,14 +418,6 @@ object TextStats {
       : (Vector[(Long, String, String, Long)], DataFrame) =
     bpeTrainedOn(s, d, "vocab", lit(true))
 
-  /** Probe hook for the merge-count scaling measurement (SURVEY §8,
-    * [[graft.BpeProbe]]): train with an arbitrary k under its own memo
-    * entry. The GATE stays at [[bpeMerges]] — this measures the
-    * driver-loop cost curve, nothing more. */
-  private[graft] def bpeTrainProbe(s: SparkSession, d: String, k: Int)
-      : Vector[(Long, String, String, Long)] =
-    bpeTrainedOn(s, d, "probe", lit(true), k)._1
-
   /** [[bpeTrained]] over a doc subset — q106 trains on the q70 TRAIN
     * split only, so held-out application measures generalization, not
     * memorization. The memo key DERIVES from (label, filter SQL, merge
@@ -462,17 +454,16 @@ object TextStats {
   }
 
   private def bpeTrainedOn(s: SparkSession, d: String, label: String,
-      ibFilter: Column, numMerges: Int = bpeMerges)
-      : (Vector[(Long, String, String, Long)], DataFrame) = {
+      ibFilter: Column): (Vector[(Long, String, String, Long)], DataFrame) = {
     val fSig = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${ibFilter.toString}|k=$numMerges".getBytes("UTF-8"))
+      .digest(s"${ibFilter.toString}|k=$bpeMerges".getBytes("UTF-8"))
       .take(4).map("%02x".format(_)).mkString
     val memoKey = s"bpe:$label:$fSig"
     val vocabFinal = graft.SessionMemo(s, d, memoKey) {
       var vocab = bpeVocab0(s, d, ibFilter).localCheckpoint(true)
       var merges = Vector.empty[(Long, String, String, Long)]
       var done = false
-      for (step <- 1 to numMerges if !done) {
+      for (step <- 1 to bpeMerges if !done) {
         val top = bpePairCounts(vocab)
           .orderBy(col("freq").desc, col("l").asc, col("r").asc)
           .limit(1).collect()
@@ -522,10 +513,10 @@ object TextStats {
   /** Per-pass accounting for [[bpeTrainBatched]]: for each pass, the
     * candidate-pool size it saw (≤ 8·batch; smaller = the pair table
     * itself is running dry) and the picks the disjointness filter
-    * admitted. The depth probe (BpeProbe) and the starvation spec read
-    * these to SEPARATE two very different underfills (r10 verdict item
-    * 3): a full pool picking < batch/2 is true disjointness starvation
-    * (the documented re-rank fallback would be required); a shrunken
+    * admitted. The starvation spec reads these to SEPARATE two very
+    * different underfills: a full pool picking < batch/2 is true
+    * disjointness starvation (the documented re-rank fallback would be
+    * required); a shrunken
     * pool underfilling is corpus exhaustion — the same early-stop the
     * sequential trainer hits, no fallback applicable. */
   final case class BpePassStats(poolSize: Int, picks: Int)

@@ -548,7 +548,7 @@ object EventStream {
     *
     * COMMIT-level exactly-once (the r9 limit, closed): each applied
     * batch records its (streamId, batchId) in the version log's txn
-    * ledger ([[graft.etl.StarBuilder.txnMark]] — the Delta `txn`
+    * ledger ([[graft.etl.SnapshotLog.txnMark]] — the Delta `txn`
     * action), and a replayed batch whose marker exists SKIPS entirely —
     * no duplicate version, no wasted apply. Marker lands after the
     * commit, so a crash in between degrades to the content-level
@@ -559,9 +559,9 @@ object EventStream {
   def cdcApplySink(warehouse: String, table: String, keys: Seq[String],
       streamId: String = ""): (DataFrame, Long) => Unit =
     (feedBatch, batchId) => if (!feedBatch.isEmpty) {
-      import graft.etl.StarBuilder
+      import graft.etl.{SnapshotLog, StarBuilder}
       val sid = if (streamId.nonEmpty) streamId else table
-      if (StarBuilder.txnVersion(warehouse, sid, batchId).isEmpty) {
+      if (SnapshotLog.txnVersion(warehouse, sid, batchId).isEmpty) {
         // the idempotence AND correctness arguments both assume one change
         // per key per batch (tableDiff's contract): two changes for one key
         // in a single batch have no defined order here, and blindly
@@ -577,12 +577,12 @@ object EventStream {
         // exactly its successor — a concurrent commit makes this batch
         // fail (and replay after restart, idempotently) instead of
         // silently erasing the other writer's version from the latest view
-        val cur = StarBuilder.latestVersion(warehouse).getOrElse(
+        val cur = SnapshotLog.latestVersion(warehouse).getOrElse(
           throw new IllegalStateException(s"no committed version in $warehouse"))
         val base = StarBuilder.readAt(feedBatch.sparkSession, warehouse, table, Some(cur))
         val v = StarBuilder.writeTableVersionedFrom(
           StarBuilder.applyChanges(base, feedBatch, keys), warehouse, table, cur)
-        StarBuilder.txnMark(warehouse, sid, batchId, v)
+        SnapshotLog.txnMark(warehouse, sid, batchId, v)
       }
     }
 

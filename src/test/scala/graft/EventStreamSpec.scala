@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.etl.SnapshotLog
 import graft.streaming.{EngEv, Ev, EventStream, FunnelEv, Session, TenEv}
 
 /** Structured Streaming shapes over MemoryStream: stateful sessionization
@@ -522,24 +523,24 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       input.addData(b2: _*); query.processAllAvailable()
       assert(latest() == Map(2L -> 21.0, 3L -> 30.0, 4L -> 40.0))
       // each batch committed one version; v1 stays pinned-readable
-      assert(StarBuilder.committedVersions(wh) == Seq(1L, 2L, 3L))
+      assert(SnapshotLog.committedVersions(wh) == Seq(1L, 2L, 3L))
       assert(StarBuilder.readAt(spark, wh, "t", Some(v1)).count() == 3L)
       // at-least-once replay of batch 1 after a simulated sink failure:
       // its txn ledger marker exists, so the sink SKIPS — no duplicate
       // version, state untouched (commit-level exactly-once)
       sink(b2.toDF("k", "change_type", "old_x", "new_x"), 1L)
       assert(latest() == Map(2L -> 21.0, 3L -> 30.0, 4L -> 40.0))
-      assert(StarBuilder.committedVersions(wh) == Seq(1L, 2L, 3L))
+      assert(SnapshotLog.committedVersions(wh) == Seq(1L, 2L, 3L))
       // the ledger recorded which version batch 1 produced
-      assert(StarBuilder.txnVersion(wh, "t", 1L).contains(3L))
+      assert(SnapshotLog.txnVersion(wh, "t", 1L).contains(3L))
       // an empty tick commits nothing
       sink(b2.take(0).toDF("k", "change_type", "old_x", "new_x"), 2L)
-      assert(StarBuilder.committedVersions(wh) == Seq(1L, 2L, 3L))
+      assert(SnapshotLog.committedVersions(wh) == Seq(1L, 2L, 3L))
       // a NEW batch id with identical content is a different transaction
       // — the ledger keys on (stream, batch), never content, so it
       // commits (content-idempotent: the table state cannot change)
       sink(b2.toDF("k", "change_type", "old_x", "new_x"), 5L)
-      assert(StarBuilder.committedVersions(wh) == Seq(1L, 2L, 3L, 4L))
+      assert(SnapshotLog.committedVersions(wh) == Seq(1L, 2L, 3L, 4L))
       assert(latest() == Map(2L -> 21.0, 3L -> 30.0, 4L -> 40.0))
       // two changes for one key in a single batch have no defined order:
       // the sink must refuse rather than commit a duplicate-key version
@@ -549,10 +550,10 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       intercept[IllegalArgumentException] {
         sink(dup.toDF("k", "change_type", "old_x", "new_x"), 3L)
       }
-      assert(StarBuilder.committedVersions(wh) == Seq(1L, 2L, 3L, 4L))
+      assert(SnapshotLog.committedVersions(wh) == Seq(1L, 2L, 3L, 4L))
       // the refused batch left no ledger marker: a corrected retry of
       // the SAME batch id applies rather than being skipped
-      assert(StarBuilder.txnVersion(wh, "t", 3L).isEmpty)
+      assert(SnapshotLog.txnVersion(wh, "t", 3L).isEmpty)
     } finally query.stop()
   }
 

@@ -2,16 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{CommitProtocol, ConditionalPutCommitProtocol, LsmIndex,
-  RenameCommitProtocol}
+  RenameCommitProtocol, SnapshotLog}
 
 /** The shared LSM module's own contract (the three family specs —
   * DedupSpec span/chunk, RetrievalSpec postings — pin each domain's
   * semantics THROUGH this module; this suite pins what only the shared
   * code owns: the claim-then-commit epoch publish and its crash-window
   * recovery, exercised against BOTH CommitProtocol shapes — the POSIX
-  * rename implementation and the conditional-PUT object-store model
-  * (r13 verdict item 7: the old rename-pair swap had no object-store
-  * analog). */
+  * rename implementation and the conditional-PUT object-store model,
+  * picked through the log's scoped selector. */
 class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
 
   private def layout(bucketed: Boolean): (String, LsmIndex.Layout) = {
@@ -36,13 +35,16 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
 
   for ((pname, proto) <- protocols) {
 
-    test(s"[$pname] compact folds generations into a fresh committed epoch; superseded epochs vacuumed") {
+    def protoTest(name: String)(body: => Unit): Unit =
+      test(s"[$pname] $name")(SnapshotLog.withProtocol(proto)(body))
+
+    protoTest("compact folds generations into a fresh committed epoch; superseded epochs vacuumed") {
       import spark.implicits._
       val (out, l) = layout(bucketed = true)
-      LsmIndex.write((0L until 8L).map(k => (k, k * 10)).toDF("k", "v"), l, proto)
+      LsmIndex.write((0L until 8L).map(k => (k, k * 10)).toDF("k", "v"), l)
       LsmIndex.append((8L until 12L).map(k => (k, k * 10)).toDF("k", "v"), l, gen = 1L)
       val before = rowsOf(l)
-      LsmIndex.compact(spark, l, proto)()
+      LsmIndex.compact(spark, l)()
       assert(rowsOf(l) == before)
       // exactly one live epoch (the old one vacuumed), and inside it
       // gen=1 folded away: only gen=0 remains under every bucket
@@ -53,30 +55,30 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
       assert(gens == Set("gen=0"))
       // the publish cleaned up after itself — no staging residue
       assert(Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-        .forall(f => !f.getName.startsWith(".epoch-")))
+        .forall(f => !f.getName.startsWith(".txn_")))
     }
 
-    test(s"[$pname] compact discards a stale staging dir left by a crashed predecessor") {
+    protoTest("compact discards a stale staging dir left by a crashed predecessor") {
       import spark.implicits._
       val (out, l) = layout(bucketed = false)
-      LsmIndex.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), l, proto)
+      LsmIndex.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), l)
       LsmIndex.append(Seq((3L, 30L)).toDF("k", "v"), l, gen = 1L)
-      // a predecessor crashed mid-staging: junk at <path>/.epoch-… must
+      // a predecessor crashed mid-staging: junk at <path>/.txn_… must
       // not poison the next run (it is discarded, never merged)
-      val stale = new java.io.File(out, ".epoch-deadbeef")
+      val stale = new java.io.File(out, ".txn_deadbeef")
       stale.mkdirs()
       java.nio.file.Files.writeString(
         new java.io.File(stale, "junk.txt").toPath, "not parquet")
       val before = rowsOf(l)
-      LsmIndex.compact(spark, l, proto)()
+      LsmIndex.compact(spark, l)()
       assert(rowsOf(l) == before)
       assert(!stale.exists())
     }
 
-    test(s"[$pname] a claimed-but-unmarked epoch (crash between claim and marker) never serves and is recovered") {
+    protoTest("a claimed-but-unmarked epoch (crash between claim and marker) never serves and is recovered") {
       import spark.implicits._
       val (out, l) = layout(bucketed = false)
-      LsmIndex.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), l, proto)
+      LsmIndex.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), l)
       LsmIndex.append(Seq((3L, 30L)).toDF("k", "v"), l, gen = 1L)
       val before = rowsOf(l)
       // simulate a predecessor that died AFTER claiming the next epoch
@@ -91,7 +93,7 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
       // the next compact deletes the dead claim and commits cleanly
       // (claiming an epoch number ≥ the orphan's is fine — the name is
       // free again after recovery)
-      LsmIndex.compact(spark, l, proto)()
+      LsmIndex.compact(spark, l)()
       assert(rowsOf(l) == before)
       assert(!new java.io.File(orphan, "junk.txt").exists())
       // the artifact converged to exactly one live, committed epoch
@@ -99,17 +101,17 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
       assert(live.size == 1, s"expected one live epoch, got $live")
     }
 
-    test(s"[$pname] a fold that merges rows is applied exactly once per compaction") {
+    protoTest("a fold that merges rows is applied exactly once per compaction") {
       import spark.implicits._
       import org.apache.spark.sql.functions._
       val (_, l) = layout(bucketed = false)
       // same key in both generations: the fold must sum them into one row
-      LsmIndex.write(Seq((1L, 5L), (2L, 7L)).toDF("k", "v"), l, proto)
+      LsmIndex.write(Seq((1L, 5L), (2L, 7L)).toDF("k", "v"), l)
       LsmIndex.append(Seq((1L, 3L)).toDF("k", "v"), l, gen = 1L)
-      LsmIndex.compact(spark, l, proto)(_.groupBy("k").agg(sum("v").as("v")))
+      LsmIndex.compact(spark, l)(_.groupBy("k").agg(sum("v").as("v")))
       assert(rowsOf(l) == Set((1L, 8L), (2L, 7L)))
       // idempotent at the data level: compacting again changes nothing
-      LsmIndex.compact(spark, l, proto)(_.groupBy("k").agg(sum("v").as("v")))
+      LsmIndex.compact(spark, l)(_.groupBy("k").agg(sum("v").as("v")))
       assert(rowsOf(l) == Set((1L, 8L), (2L, 7L)))
     }
   }

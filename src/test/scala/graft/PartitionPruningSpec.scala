@@ -708,6 +708,33 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
       .select("key_col").distinct().collect().map(_.getString(0)).toSeq == Seq("key"))
   }
 
+  test("appendTableVersionedStats grows the bloom sidecar over the appended files") {
+    import spark.implicits._
+    import graft.etl.DataSkipping
+    val wh = java.nio.file.Files.createTempDirectory("graft_avbloom").toString
+    val v1 = StarBuilder.writeTableVersionedStats(
+      (1L to 400L).map(i => (i, s"k_$i")).toDF("id", "key"), wh, "t",
+      sortBy = Seq("id"), statsCols = Seq("id"), blockSize = 64 * 1024)
+    DataSkipping.writeBloom(spark, s"$wh/v=$v1/t", "key")
+    val v2 = StarBuilder.appendTableVersionedStats(
+      (401L to 500L).map(i => (i, s"k_$i")).toDF("id", "key"), wh, "t",
+      sortBy = Seq("id"), statsCols = Seq("id"), blockSize = 64 * 1024)
+    val t2 = s"$wh/v=$v2/t"
+    // the sidecar at the new version covers every data file, appended
+    // ones included
+    val bFiles = spark.read.parquet(s"$t2/_idx/bloom").collect()
+      .map(_.getAs[String]("file")).toSet
+    val dFiles = new java.io.File(t2).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.getName).toSet
+    assert(bFiles == dFiles, s"bloom sidecar misses appended files: $bFiles vs $dFiles")
+    // a key that exists only in the appended rows is found through it
+    val probes = Seq("k_450")
+    val hits = DataSkipping.bloomScan(spark, t2, "key", probes)
+      .where(col("key").isin(probes: _*))
+      .select("id", "key").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(hits == Seq((450L, "k_450")))
+  }
+
   test("PQ DV sidecar: erasure vanishes from search on unchanged code files; rebuild drops it") {
     import graft.ops.Similarity
     val sfDir = "/root/testdata/sf0.001"

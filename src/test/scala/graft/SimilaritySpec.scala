@@ -369,8 +369,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.functions._
     // one definition guarded two ways: the DuckDB gate pins the VALUES,
     // this pins the r14 accumulator promotion against the streaming
-    // twin's exploded-cell artifact row-for-row (CovProbe re-asserts the
-    // same identity at widths 64/256/512 on synthetic vectors)
+    // twin's exploded-cell artifact row-for-row (PROBE_COV_r14.txt records
+    // the same identity at widths 64/256/512 on synthetic vectors)
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.Star
+import graft.etl.{SnapshotLog, Star}
 
 /** Unit layer from SURVEY.md §5: the cumulative-GPA window (A15) checked
   * against a brute-force Scala fold, plus the grade map and deterministic
@@ -206,14 +206,14 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     val v2 = StarBuilder.writeAllVersioned(spark, dir2, wh)
     assert(v2 == 2L)
     assert(factRows(Some(v1)) == pinned)
-    assert(StarBuilder.latestVersion(wh).contains(2L))
+    assert(SnapshotLog.latestVersion(wh).contains(2L))
     assert(factRows(None).size == 3)
 
     // a writer killed mid-snapshot: v=3 table data exists but its
     // commit marker never landed — readers still resolve v2, and a
     // pin to the orphan refuses instead of serving half a write
     StarBuilder.writeTables(spark, dir1, s"$wh/v=3")
-    assert(StarBuilder.latestVersion(wh).contains(2L))
+    assert(SnapshotLog.latestVersion(wh).contains(2L))
     assert(factRows(None).size == 3)
     val e = intercept[IllegalArgumentException] {
       StarBuilder.readAt(spark, wh, "fact_nilai_mk", Some(3L))
@@ -224,13 +224,13 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     java.nio.file.Files.write(
       new java.io.File(s"$wh/_log", ".staging_junk.commit").toPath,
       Array.emptyByteArray)
-    assert(StarBuilder.committedVersions(wh) == Seq(1L, 2L))
+    assert(SnapshotLog.committedVersions(wh) == Seq(1L, 2L))
     // the next writer CLAIMS PAST the orphaned v=3 (rename onto an
     // existing dir fails → bump), so the orphan is never overwritten
     // and the new snapshot commits as v=4
     val v4 = StarBuilder.writeAllVersioned(spark, dir2, wh)
     assert(v4 == 4L)
-    assert(StarBuilder.committedVersions(wh) == Seq(1L, 2L, 4L))
+    assert(SnapshotLog.committedVersions(wh) == Seq(1L, 2L, 4L))
     assert(factRows(Some(4L)).size == 3)
   }
 
@@ -316,7 +316,7 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
       scala.concurrent.duration.Duration(120, "s"))
     pool.shutdown()
     assert(versions.sorted == (1L to 6L))
-    assert(StarBuilder.committedVersions(wh) == (1L to 6L))
+    assert(SnapshotLog.committedVersions(wh) == (1L to 6L))
     (1L to 6L).foreach { v =>
       assert(StarBuilder.readAt(spark, wh, "t", Some(v)).count() == 1L)
     }
@@ -328,7 +328,7 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("conditional-PUT protocol: six racing writers, same guarantees") {
-    graft.etl.StarBuilder.withCommitProtocol(
+    SnapshotLog.withProtocol(
       new graft.etl.ConditionalPutCommitProtocol)(stressSixWriters())
   }
 
@@ -344,13 +344,13 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     }
     // the failed attempt cleaned its staging dir and changed nothing
     assert(!new java.io.File(wh).listFiles().exists(_.getName.startsWith(".txn_")))
-    assert(StarBuilder.committedVersions(wh) == Seq(1L))
+    assert(SnapshotLog.committedVersions(wh) == Seq(1L))
     assert(StarBuilder.readAt(spark, wh, "t", None).count() == 1L)
     // the orphan claim would block cur+1 retries FOREVER (it never
     // commits); the single-writer recovery sweeps it — and also reclaims
     // a pre-claim crash's staging dir, which nothing else ever touches
     new java.io.File(wh, ".txn_deadbeef").mkdirs()
-    assert(StarBuilder.recoverUncommitted(wh) == Seq(2L))
+    assert(SnapshotLog.recoverUncommitted(wh) == Seq(2L))
     assert(!new java.io.File(wh, ".txn_deadbeef").exists())
     val v2 = StarBuilder.deleteWhere(spark, wh, "t", col("x") > 0.0)
     assert(v2 == 2L && StarBuilder.readAt(spark, wh, "t", None).count() == 0L)
@@ -365,7 +365,7 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     // conditional-PUT protocol too (the store is the ground truth — no
     // side-channel state survives the delete), so the post-recovery
     // retry must succeed exactly as on the rename path
-    graft.etl.StarBuilder.withCommitProtocol(
+    SnapshotLog.withProtocol(
       new graft.etl.ConditionalPutCommitProtocol)(occRefusalScenario())
   }
 
@@ -538,7 +538,7 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     // leaf packed to one file; the source snapshot is byte-untouched
     val v2 = StarBuilder.compactVersioned(spark, wh, targetBytes = 1L << 30)
     assert(v2 == v1 + 1)
-    assert(StarBuilder.committedVersions(wh) == Seq(v1, v2))
+    assert(SnapshotLog.committedVersions(wh) == Seq(v1, v2))
     assert(md5s(factLeaf(v2)).size == 1)
     assert(factRows(v2) == rowsV1)
     assert(md5s(factLeaf(v1)) == v1Files) // v1 pins still serve identical bytes
@@ -546,12 +546,32 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     // retention: the marker goes first, then the data dir — v1 stops
     // resolving and its directory is gone; latest still serves
     assert(StarBuilder.vacuumVersions(wh, keep = 1) == Seq(v1))
-    assert(StarBuilder.committedVersions(wh) == Seq(v2))
+    assert(SnapshotLog.committedVersions(wh) == Seq(v2))
     assert(!new java.io.File(s"$wh/v=$v1").exists())
     assert(factRows(v2) == rowsV1)
     intercept[IllegalArgumentException] {
       StarBuilder.readAt(spark, wh, "fact_nilai_mk", Some(v1))
     }
+  }
+
+  test("vacuum that cannot delete a marker throws and leaves that version serving") {
+    import spark.implicits._
+    import graft.etl.StarBuilder
+    val wh = java.nio.file.Files.createTempDirectory("graft_vacfail").toString
+    val v1 = StarBuilder.writeTableVersioned(Seq((1L, 1.0)).toDF("k", "x"), wh, "t")
+    StarBuilder.writeTableVersioned(Seq((2L, 2.0)).toDF("k", "x"), wh, "t")
+    // a marker the filesystem refuses to delete: a non-empty directory
+    // under the marker's name still resolves v1 as committed
+    val marker = new java.io.File(s"$wh/_log/$v1.commit")
+    assert(marker.delete())
+    new java.io.File(marker, "pinned").mkdirs()
+    assert(SnapshotLog.committedVersions(wh).contains(v1))
+    intercept[java.io.IOException] {
+      StarBuilder.vacuumVersions(wh, keep = 1)
+    }
+    // the version still resolves, so its data must still be there
+    assert(SnapshotLog.committedVersions(wh).contains(v1))
+    assert(StarBuilder.readAt(spark, wh, "t", Some(v1)).count() == 1L)
   }
 
   test("readAsOf: timestamp time travel resolves the latest commit at the instant") {
@@ -580,16 +600,16 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     }
     setCommitBody(v1, T0 + 1000L)
     setCommitTime(v2, T0 + 2000L)
-    assert(StarBuilder.history(wh) == Seq(v1 -> (T0 + 1000L), v2 -> (T0 + 2000L)))
+    assert(SnapshotLog.history(wh) == Seq(v1 -> (T0 + 1000L), v2 -> (T0 + 2000L)))
     // before the first commit: the table did not exist — refuse
     val e = intercept[IllegalArgumentException](
-      StarBuilder.versionAsOf(wh, T0 + 999L))
+      SnapshotLog.versionAsOf(wh, T0 + 999L))
     assert(e.getMessage.contains("no snapshot"))
     // boundaries are inclusive; between commits resolves the older one
-    assert(StarBuilder.versionAsOf(wh, T0 + 1000L) == v1)
-    assert(StarBuilder.versionAsOf(wh, T0 + 1999L) == v1)
-    assert(StarBuilder.versionAsOf(wh, T0 + 2000L) == v2)
-    assert(StarBuilder.versionAsOf(wh, Long.MaxValue) == v2)
+    assert(SnapshotLog.versionAsOf(wh, T0 + 1000L) == v1)
+    assert(SnapshotLog.versionAsOf(wh, T0 + 1999L) == v1)
+    assert(SnapshotLog.versionAsOf(wh, T0 + 2000L) == v2)
+    assert(SnapshotLog.versionAsOf(wh, Long.MaxValue) == v2)
     assert(StarBuilder.readAsOf(spark, wh, "t", T0 + 1500L).count() == 1L)
     assert(StarBuilder.readAsOf(spark, wh, "t", T0 + 2500L).count() == 2L)
     // a restore that lost mtime order (cp without -p) must not
@@ -597,7 +617,7 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     // filter+max-version, not a scan that stops at the first
     // out-of-order marker
     setCommitTime(v1, T0 + 5000L)
-    assert(StarBuilder.versionAsOf(wh, T0 + 4000L) == v2)
+    assert(SnapshotLog.versionAsOf(wh, T0 + 4000L) == v2)
     // the r11 advice scenario: a TRUNCATED numeric body ("17" of
     // "17230…") must NOT be trusted as a near-1970 instant — too few
     // digits, so resolution falls back to the file's mtime
@@ -606,7 +626,7 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     java.nio.file.Files.setLastModifiedTime( // the write itself bumps mtime
       new java.io.File(s"$wh/_log/$v1.commit").toPath,
       java.nio.file.attribute.FileTime.fromMillis(T0 + 5000L))
-    assert(StarBuilder.history(wh).toMap.apply(v1) == (T0 + 5000L))
+    assert(SnapshotLog.history(wh).toMap.apply(v1) == (T0 + 5000L))
   }
 
   test("mergeInto: all four MERGE branches classify on one frame") {
@@ -783,12 +803,12 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
         Seq("pos_x" -> (col("x") > 0)))
     }
     assert(e.getMessage.contains("pos_x=1"))
-    assert(StarBuilder.committedVersions(wh).isEmpty)
+    assert(SnapshotLog.committedVersions(wh).isEmpty)
     // quarantine mode: ONE atomic commit carrying both tables; the NULL
     // row PASSES (ANSI CHECK: only literal FALSE violates)
     val v = StarBuilder.writeTableVersionedChecked(df, wh, "t",
       Seq("pos_x" -> (col("x") > 0)), failFast = false)
-    assert(StarBuilder.committedVersions(wh) == Seq(v))
+    assert(SnapshotLog.committedVersions(wh) == Seq(v))
     assert(StarBuilder.readAt(spark, wh, "t", Some(v))
       .collect().map(_.getAs[Long]("k")).toSet == Set(1L, 3L))
     val q = StarBuilder.readAt(spark, wh, "t_quarantine", Some(v)).collect()
