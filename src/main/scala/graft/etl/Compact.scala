@@ -4,16 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Small-file compaction — the OPTIMIZE analog for this engine's
-  * incremental paths ([[StarBuilder.upsertDim]] rewrites,
-  * [[graft.ops.Similarity.appendIvfIndex]]/`appendPqIndex` appends, the
-  * streaming `parquetBatchSink`), all of which accumulate one-or-more
-  * files per increment. At 100 TB the file-count explosion, not the
+  * flat (non-LSM) incremental paths ([[StarBuilder.upsertDim]]
+  * rewrites, the streaming `parquetBatchSink`), both of which
+  * accumulate one-or-more files per increment; the persisted indexes
+  * compact through [[LsmIndex.compact]] instead. At 100 TB the file-count explosion, not the
   * bytes, is the serving killer: scan planning, footer reads and
   * open() round-trips all scale with file count.
   *
   * [[Compact.compact]] bin-packs each partition LEAF directory's files
   * into ⌈Σbytes / targetBytes⌉ outputs, preserving the partition
-  * directory structure (a `tahun=…`/`c_id=…` dir is rewritten in place,
+  * directory structure (a `tahun=…` dir is rewritten in place,
   * never merged across partition values) and — when `sortBy` is given —
   * re-establishing the clustered order inside the packed files (range
   * partition + in-task sort, the [[StarBuilder.writeFactClustered]]

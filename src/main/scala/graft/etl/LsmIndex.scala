@@ -2,14 +2,20 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import scala.jdk.CollectionConverters._
 
 /** SHARED log-structured (LSM) maintenance for the engine's persisted
   * index artifacts — one definition of the gen-partitioned layout the
   * span index ([[graft.ops.Dedup.writeSpanIndex]]), the lexical
-  * postings index ([[graft.ops.Retrieval.writeLexIndex]]) and the
-  * chunk ledger ([[graft.ops.Dedup.writeChunkIndex]]) all maintain
-  * (r12 verdict item 3: three copies of append/merge-on-read/compact
-  * meant a bug fixed in one had to be found in three).
+  * postings index ([[graft.ops.Retrieval.writeLexIndex]]), the chunk
+  * ledger ([[graft.ops.Dedup.writeChunkIndex]]), the ER name ledger
+  * (q191) and the two vector indexes — IVF rows and seed codebook
+  * ([[graft.ops.Similarity.writeIvfIndex]]), PQ codes, product
+  * codebook and coarse centroids ([[graft.ops.Similarity.writePqIndex]])
+  * — all maintain (r12 verdict item 3: three copies of
+  * append/merge-on-read/compact meant a bug fixed in one had to be
+  * found in three). A rebuild that fails part-way publishes nothing:
+  * the previous epoch keeps serving.
   *
   * The layout (r14): the artifact root holds COMPACTION EPOCHS —
   * `path/v=E/[bucket=…/]gen=N/` — published claim-then-commit through
@@ -17,7 +23,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * epoch). Within the live epoch, generation 0 is the nightly base
   * build; each incremental batch appends a NEW generation directory
   * (dynamic `partitionBy` — base generation files are never rewritten,
-  * spec-pinned byte-identical in all three families), reads are
+  * spec-pinned byte-identical per family), reads are
   * merge-on-read unions over the generations, and [[compact]] folds
   * everything into a FRESH epoch's gen 0. At 100 TB this is exactly
   * how log-structured stores absorb writes: O(batch) per append, merge
@@ -77,14 +83,28 @@ object LsmIndex {
     publishEpoch(rows, layout)
 
   /** Incremental maintenance: the batch lands as a NEW generation
-    * directory inside the LIVE epoch; base generation files are never
-    * touched. Batches must be disjoint in the domain's row-identity
-    * (doc-disjoint for all three current families — the
-    * incremental-family convention). */
-  def append(rows: DataFrame, layout: Layout, gen: Long): Unit = {
-    require(gen > 0, s"generation must be > 0 (0 is the base build); got $gen")
-    prep(rows, layout, gen).write.mode("append")
-      .partitionBy(layout.partCols: _*).parquet(liveDir(layout))
+    * directory inside the LIVE epoch — one above the highest `gen=`
+    * already there; base generation files are never touched. Batches
+    * must be disjoint in the domain's row-identity (doc- or
+    * vector-disjoint for every current family — the incremental-family
+    * convention). An artifact with no committed epoch has no base to
+    * grow: the append throws. */
+  def append(rows: DataFrame, layout: Layout): Unit = {
+    val live = liveDir(layout)
+    prep(rows, layout, nextGen(live, layout)).write.mode("append")
+      .partitionBy(layout.partCols: _*).parquet(live)
+  }
+
+  /** Highest `gen=N` directory under the live epoch (behind the bucket
+    * level when there is one), plus 1 — at least 1, since 0 is the base. */
+  private def nextGen(live: String, layout: Layout): Long = {
+    val depth = if (layout.bucket.isDefined) 2 else 1
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(live), depth)
+    try {
+      val gens = walk.iterator().asScala.map(_.getFileName.toString)
+        .collect { case n if n.startsWith("gen=") => n.stripPrefix("gen=").toLong }
+      (0L +: gens.toSeq).max + 1
+    } finally walk.close()
   }
 
   /** Merge-on-read union over every generation of the live epoch,

@@ -377,8 +377,7 @@ object StarBuilder {
         // pinned in the manifest itself (`key_col` rides every row), so the
         // compacted snapshot regenerates it with the same atomicity (r10 —
         // closes the r9 "bloom follows the serving-index rebuild rule"
-        // limitation for warehouse tables; the ANN indexes keep that rule,
-        // and Compact.resort proves their searches survive a repack)
+        // limitation for warehouse tables)
         if (new java.io.File(t, "_idx/bloom").isDirectory)
           DataSkipping.writeBloom(spark, new java.io.File(txn, t.getName).toString,
             DataSkipping.bloomKeyCol(spark, t.toString))

@@ -801,8 +801,8 @@ object Dedup {
     * twist: counts for the SAME hash exist in base and batch, so the
     * mergeable unit is the per-generation count row and
     * [[readSpanIndex]]'s merge-on-read SUMS them. */
-  def appendSpanIndex(docs: DataFrame, out: String, gen: Long): Unit =
-    LsmIndex.append(spanIndexRows(docs), spanLayout(out), gen)
+  def appendSpanIndex(docs: DataFrame, out: String): Unit =
+    LsmIndex.append(spanIndexRows(docs), spanLayout(out))
 
   /** Merge-on-read over all generations: total occurrence count per
     * hash — the frame whose `occ > 1` slice is the streaming probe's
@@ -853,7 +853,7 @@ object Dedup {
     graft.BuildPhase.timed {
       graft.SessionMemo.once(s, d, "spans:idxInc") {
         writeSpanIndex(docs.where(idBucket(col("doc_id")) < 50), idx)
-        appendSpanIndex(docs.where(idBucket(col("doc_id")) >= 50), idx, gen = 1L)
+        appendSpanIndex(docs.where(idBucket(col("doc_id")) >= 50), idx)
       }
     }
     val base = LsmIndex.readByGen(s, spanLayout(idx)).where(col("gen") === 0L)
@@ -1392,9 +1392,9 @@ object Dedup {
     * [[graft.etl.LsmIndex.append]] generation append. Batches must be
     * doc-disjoint (the incremental-family convention). */
   def appendChunkIndex(s: SparkSession, d: String, out: String,
-      rowFilter: Column, gen: Long): Unit =
+      rowFilter: Column): Unit =
     LsmIndex.append(cdcChunksOf(docShingles(s, d).where(rowFilter)),
-      chunkLayout(out), gen)
+      chunkLayout(out))
 
   /** The duplication ledger served FROM the index files alone —
     * merge-on-read union over the generations through the shared
@@ -1455,7 +1455,7 @@ object Dedup {
     graft.BuildPhase.timed {
       graft.SessionMemo.once(s, d, "chunk:index") {
         writeChunkIndex(s, d, idx, bucket < 50)
-        appendChunkIndex(s, d, idx, bucket >= 50, gen = 1L)
+        appendChunkIndex(s, d, idx, bucket >= 50)
       }
     }
     chunkIndexDups(s, idx)
@@ -1481,7 +1481,7 @@ object Dedup {
     graft.BuildPhase.timed {
       graft.SessionMemo.once(s, d, "chunk:index") {
         writeChunkIndex(s, d, idx, bucket < 50)
-        appendChunkIndex(s, d, idx, bucket >= 50, gen = 1L)
+        appendChunkIndex(s, d, idx, bucket >= 50)
       }
     }
     val ch = LsmIndex.readByGen(s, chunkLayout(idx))
@@ -1786,7 +1786,7 @@ object Dedup {
       graft.SessionMemo.once(s, d, "name:index") {
         graft.etl.LsmIndex.write(nameRows(s, d, bucket < 40), nameLayout(idx))
         graft.etl.LsmIndex.append(
-          nameRows(s, d, bucket >= 40 && bucket < 80), nameLayout(idx), gen = 1L)
+          nameRows(s, d, bucket >= 40 && bucket < 80), nameLayout(idx))
       }
     }
     val probe = nameRows(s, d, bucket >= 80)

@@ -467,10 +467,10 @@ object Retrieval {
     * incremental-family convention): a doc split across generations
     * would double-count its dl in avgdl and its postings in df. */
   def appendLexIndex(s: SparkSession, d: String, out: String,
-      rowFilter: Column, gen: Long): Unit = {
+      rowFilter: Column): Unit = {
     val docs = TextCore.docShingles(s, d).where(rowFilter)
-    LsmIndex.append(postingsOf(docs), postingsLayout(out), gen)
-    LsmIndex.append(statsOf(docs), statsLayout(out), gen)
+    LsmIndex.append(postingsOf(docs), postingsLayout(out))
+    LsmIndex.append(statsOf(docs), statsLayout(out))
   }
 
   /** BM25 top-N served FROM the persisted index alone: merge-on-read
@@ -548,7 +548,7 @@ object Retrieval {
     graft.BuildPhase.timed {
       graft.SessionMemo.once(s, d, "lex:index") {
         writeLexIndex(s, d, idx, bucket < 50)
-        appendLexIndex(s, d, idx, bucket >= 50, gen = 1L)
+        appendLexIndex(s, d, idx, bucket >= 50)
       }
     }
     lexIndexSearch(s, idx)
@@ -616,7 +616,7 @@ object Retrieval {
     graft.BuildPhase.timed {
       graft.SessionMemo.once(s, d, "lex:index") {
         writeLexIndex(s, d, idx, bucket < 50)
-        appendLexIndex(s, d, idx, bucket >= 50, gen = 1L)
+        appendLexIndex(s, d, idx, bucket >= 50)
       }
     }
     val byTerm = LsmIndex.readByGen(s, postingsLayout(idx))

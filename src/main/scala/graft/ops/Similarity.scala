@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
 import org.apache.spark.sql.expressions.Window
+import graft.etl.LsmIndex
 import graft.etl.Star.{round4, round4Sql}
 
 /** Approximate-nearest-neighbor / similarity search over
@@ -498,24 +499,26 @@ object Similarity {
       q36_knn_brute(s, d).select(col("query_id"), col("neighbor_id")))(
       _.localCheckpoint(true))
 
-  /** (vec_id, c_id, rn): every vector's `cents` ranked by cosine (desc,
-    * c_id asc), kept to `keep` — the one IVF primitive everything else
-    * derives from: rn = 1 is the bucket assignment, rn ≤ p a query's probe
-    * set. One corpus × centroids cross join per call. `cents` must be tiny
-    * (it is broadcast): a codebook, never data. */
+  /** `all`'s columns plus (c_id, rn, c_cos): every vector's `cents`
+    * ranked by cosine (desc, c_id asc), kept to `keep` — the one IVF
+    * primitive everything else derives from: rn = 1 is the bucket
+    * assignment, rn ≤ p a query's probe set. One corpus × centroids cross
+    * join per call. `cents` must be tiny (it is broadcast): a codebook,
+    * never data. */
   private def rankAgainstScored(all: DataFrame, cents: DataFrame, keep: Int): DataFrame = {
     val w = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id").asc)
     all.crossJoin(broadcast(cents))
       .withColumn("c_cos", dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= keep)
-      .select(col("vec_id"), col("c_id"), col("rn"), col("c_cos"))
+      .drop("cv", "cn")
   }
 
-  /** [[rankAgainstScored]] minus the score — the narrow frame every IVF
-    * consumer checkpoints/joins; q154 is the one score consumer. */
+  /** [[rankAgainstScored]] narrowed to (vec_id, c_id, rn) — the frame
+    * every IVF consumer checkpoints/joins; q154 and the index searches
+    * ([[probesOf]]) read the wide form. */
   private def rankAgainst(all: DataFrame, cents: DataFrame, keep: Int): DataFrame =
-    rankAgainstScored(all, cents, keep).drop("c_cos")
+    rankAgainstScored(all, cents, keep).select(col("vec_id"), col("c_id"), col("rn"))
 
   /** The seed (training-free) codebook: the 16 vectors with vec_id < 16. */
   private def seedCents(all: DataFrame): DataFrame =
@@ -568,57 +571,97 @@ object Similarity {
   val q37_knn_ivf: Q = (s, d) =>
     ivfKnnFrom(s, d, centroidRanks(s, d, nProbe), nProbe)
 
+  /** A vector-index row layout (IVF rows, PQ codes) bucketed by
+    * `cb` = c_id — a copy of the centroid id, because LsmIndex reads
+    * drop their partition columns and the searches join on c_id. */
+  private[graft] def byCentroid(path: String) =
+    LsmIndex.Layout(path, Some(("cb", col("c_id"))))
+
+  /** The frozen coarse (c_id, cv, cn) codebook both vector indexes rank
+    * probes from. */
+  private def centroidsLayout(index: String) =
+    LsmIndex.Layout(s"$index/_centroids", singleFile = true)
+
   /** Materialize the IVF index in its serving layout: the corpus with its
-    * bucket assignment, written as a parquet table PARTITIONED BY the
-    * centroid id. This is the physical form behind q37's scale story — a
-    * probe set becomes a partition filter, so an nprobe-bucket search
-    * reads exactly nprobe directories and leaves the rest of the corpus
-    * untouched (PartitionPruningSpec asserts the file-level pruning).
-    * Norms are precomputed into the index so serving never rescans raw
-    * embeddings. The frozen centroid codebook rides along under
-    * `_centroids/` (underscore-prefixed, so partition discovery on the
-    * root never sees it) — [[ivfIndexSearch]] ranks probes from the
-    * artifact alone, the [[writePqIndex]] rule. `rowFilter` scopes the
-    * indexed rows (base-corpus builds that [[appendIvfIndex]] grows);
-    * the codebook stays the full seed book regardless — bucket routing
-    * is fixed at build time, not a function of which rows arrived.
-    * The root overwrite clears any previous `_dv/` sidecar: a rebuild
-    * starts clean, whatever was soft-deleted is simply not re-added by
-    * the caller's rowFilter. */
+    * bucket assignment, published as an [[LsmIndex]] epoch BUCKETED BY
+    * the centroid id. This is the physical form behind q37's scale
+    * story — a probe set becomes a partition filter, so an
+    * nprobe-bucket search reads exactly nprobe directories and leaves
+    * the rest of the corpus untouched (PartitionPruningSpec asserts the
+    * file-level pruning). Norms are precomputed into the index so
+    * serving never rescans raw embeddings. The frozen centroid codebook
+    * rides along as its own layout under `_centroids/`
+    * (underscore-prefixed, outside every epoch) — [[ivfIndexSearch]]
+    * ranks probes from the artifact alone, the [[writePqIndex]] rule.
+    * `rowFilter` scopes the indexed rows (base-corpus builds that
+    * [[appendIvfIndex]] grows); the codebook stays the full seed book
+    * regardless — bucket routing is fixed at build time, not a function
+    * of which rows arrived. A rebuild that fails publishes nothing (the
+    * previous epoch keeps serving); one that succeeds then clears the
+    * `_dv/` sidecar ([[clearDv]]). */
   def writeIvfIndex(s: SparkSession, d: String, out: String,
       rowFilter: Column = lit(true)): Unit = {
-    val all = vecs(s, d)
-    ivfIndexRows(s, d, rowFilter).write
-      .mode("overwrite").partitionBy("c_id").parquet(out)
-    seedCents(all).coalesce(1).write.mode("overwrite")
-      .parquet(s"$out/_centroids")
+    val cents = seedCents(vecs(s, d))
+    LsmIndex.write(ivfIndexRows(s, d, cents, rowFilter), byCentroid(out))
+    LsmIndex.write(cents, centroidsLayout(out))
+    clearDv(out)
   }
 
   /** The index rows for the corpus subset passing `rowFilter`, assigned
-    * under the FROZEN seed codebook (the codebook is fixed at index-build
-    * time; incremental appends must reuse it or bucket membership would
-    * shift under the readers). */
-  private def ivfIndexRows(s: SparkSession, d: String, rowFilter: Column): DataFrame = {
-    val all = vecs(s, d)
-    val subset = all.where(rowFilter)
-    assignments(subset, seedCents(all))
+    * under the FROZEN codebook `cents` (fixed at index-build time;
+    * incremental appends read it back from the index, or bucket
+    * membership would shift under the readers). */
+  private def ivfIndexRows(s: SparkSession, d: String, cents: DataFrame,
+      rowFilter: Column): DataFrame = {
+    val subset = vecs(s, d).where(rowFilter)
+    assignments(subset, cents)
       .join(subset, "vec_id")
       .select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
   }
 
   /** Incremental IVF maintenance — the serving path [[writeIvfIndex]]
-    * lacks: assign ONLY the incoming batch against the frozen codebook
-    * and APPEND its rows; dynamic partitionBy writes touch exactly the
-    * directories of buckets that received a new vector, so the base
-    * index files are never rewritten (PartitionPruningSpec asserts both
-    * at the file level). The codebook is deliberately NOT retrained here
-    * — q107 is the report that tells the operator when the accumulated
-    * drift justifies a [[writeIvfIndex]] rebuild (with a q99/q101
-    * retrain). */
+    * lacks: assign ONLY the incoming batch against the index's own
+    * frozen codebook and append its rows as a new [[LsmIndex]]
+    * generation; the write touches exactly the directories of buckets
+    * that received a new vector, so the base index files are never
+    * rewritten (PartitionPruningSpec asserts both at the file level).
+    * The codebook is deliberately NOT retrained here — q107 is the
+    * report that tells the operator when the accumulated drift
+    * justifies a [[writeIvfIndex]] rebuild (with a q99/q101 retrain). */
   def appendIvfIndex(s: SparkSession, d: String, out: String,
       rowFilter: Column): Unit =
-    ivfIndexRows(s, d, rowFilter).write
-      .mode("append").partitionBy("c_id").parquet(out)
+    LsmIndex.append(
+      ivfIndexRows(s, d, LsmIndex.read(s, centroidsLayout(out)), rowFilter),
+      byCentroid(out))
+
+  /** Drop an index's `_dv/` sidecar — called by both rebuilds AFTER
+    * they publish: whatever the previous index soft-deleted is simply
+    * not re-added by the caller's rowFilter, so carrying the old
+    * sidecar forward would double-apply it. Clearing last means a crash
+    * between publish and clear leaves conservative over-suppression
+    * until the retry, never a resurrected erased vector. */
+  private def clearDv(index: String): Unit =
+    graft.etl.Compact.deleteRecursively(new java.io.File(s"$index/_dv"))
+
+  /** (query_id, qv, qn, c_id): each query's `nprobe` nearest codebook
+    * entries — [[rankAgainstScored]] with the (query_id, qv, qn) queries
+    * in the corpus role. The query vector rides along, so the candidate
+    * join needs no second broadcast. */
+  private def probesOf(qn: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    rankAgainstScored(
+      qn.select(col("query_id").as("vec_id"), col("qv").as("v"), col("qn").as("nrm")),
+      cents, nprobe)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
+        col("c_id"))
+
+  /** An index's rows in the buckets `probes` names — the probe UNION
+    * pushed down as a static partition filter (a driver-side list
+    * bounded by min(queries × nprobe, numCentroids) — the q37 "nprobe
+    * directories" story) — minus the `_dv/` erasures. */
+  private def probedRows(s: SparkSession, index: String, layout: LsmIndex.Layout,
+      probes: DataFrame): DataFrame =
+    dvAntiJoin(s, index,
+      LsmIndex.prunedRead(s, layout, LsmIndex.probeBuckets(probes, col("c_id"))))
 
   /** Merge `ids` into the kilobyte `_dv/` deletion-vector sidecar under
     * `index` — the one erasure mechanism both persisted ANN indexes
@@ -634,10 +677,10 @@ object Similarity {
     * stage-then-swap scheme would instead yank captured paths out from
     * under in-flight tasks). Idempotent: re-deleting an id appends a
     * duplicate row to the same logical set. Rebuilds clear the log
-    * wholesale ([[writeIvfIndex]]/[[writePqIndex]] — the only writers
-    * that may touch existing sidecar files, and only while they own
-    * the whole artifact). Index data files are never touched, so a
-    * GDPR-class erasure costs a sidecar append at any index size. */
+    * wholesale after they publish ([[clearDv]] — the only writer that
+    * may touch existing sidecar files). Index data files are never
+    * touched, so a GDPR-class erasure costs a sidecar append at any
+    * index size. */
   private def mergeDvSidecar(s: SparkSession, index: String, ids: Seq[Long]): Unit = {
     import s.implicits._
     ids.distinct.sorted.toDF("vec_id")
@@ -673,10 +716,10 @@ object Similarity {
     mergeDvSidecar(s, index, ids)
 
   /** Cosine top-k served FROM a persisted [[writeIvfIndex]] artifact
-    * alone: probe ranking reads the `_centroids/` sidecar (never raw
-    * embeddings), the probe UNION is pushed down as a static c_id
-    * partition filter on the index root (an nprobe search reads nprobe
-    * directories — the PartitionPruningSpec claim, now a serving path),
+    * alone: probe ranking reads the `_centroids/` layout (never raw
+    * embeddings), the probe UNION is pushed down as a static bucket
+    * filter on the live epoch ([[probedRows]] — an nprobe search reads
+    * nprobe directories, the PartitionPruningSpec claim),
     * per-query candidate scoping is a broadcast equi-join on c_id, and
     * the `_dv/` deletion sidecar is anti-joined before the top-k window
     * so an erased vector never surfaces as a neighbor between rebuilds.
@@ -686,19 +729,10 @@ object Similarity {
     * tie-break, self-matches excluded — q37's exact contract. */
   def ivfIndexSearch(s: SparkSession, index: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
-    val cents = s.read.parquet(s"$index/_centroids")
     val qn = queries.withColumn("qn", graft.functions.VectorOps.norm(col("qv")))
-    val wp = Window.partitionBy("query_id").orderBy(col("c_cos").desc, col("c_id").asc)
-    val probes = qn.crossJoin(broadcast(cents))
-      .withColumn("c_cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(wp))
-      .where(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qn"), col("c_id"))
-    val probedBuckets = probes.select("c_id").distinct()
-      .collect().map(_.getAs[Number]("c_id").longValue).toSeq
-    val rows = dvAntiJoin(s, index,
-      s.read.parquet(index).where(col("c_id").isin(probedBuckets: _*)))
-    val cand = rows.join(broadcast(probes), Seq("c_id"))
+    val probes = probesOf(qn, LsmIndex.read(s, centroidsLayout(index)), nprobe)
+    val cand = probedRows(s, index, byCentroid(index), probes)
+      .join(broadcast(probes), Seq("c_id"))
       .where(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
@@ -1354,33 +1388,45 @@ object Similarity {
     * codebooks arrive as arguments (read back from the index on
     * append) so incremental growth can never shift existing rows'
     * buckets or codes. */
-  private def pqIndexRows(s: SparkSession, d: String, cb: DataFrame,
+  private[graft] def pqIndexRows(s: SparkSession, d: String, cb: DataFrame,
       cents: DataFrame, rowFilter: Column): DataFrame =
     pqCodesFor(s, d, cb)
       .where(rowFilter)
       .select(col("vec_id"), col("j"), col("code"))
       .join(assignments(vecs(s, d).where(rowFilter), cents), "vec_id")
 
+  private def pqCodebookLayout(index: String) =
+    LsmIndex.Layout(s"$index/codebook", singleFile = true)
+
   /** Materialize the PQ serving index — the physical artifact
-    * q108–q111 recompute per query: under `out`,
+    * q108–q111 recompute per query: three [[LsmIndex]] layouts under
+    * `out`,
     *  - `codebook/`  the 64-row (j, k, cb) product codebook
-    *  - `centroids/` the 16-row coarse (c_id, cv, cn) IVF codebook, so
+    *  - `_centroids/` the 16-row coarse (c_id, cv, cn) IVF codebook, so
     *    query-side probe ranking reads the index, never raw embeddings
-    *  - `codes/`     (vec_id, j, code) PARTITIONED BY the coarse c_id —
-    *    aligned with [[writeIvfIndex]]'s directory layout so an IVFPQ
+    *  - `codes/`     (vec_id, j, code, c_id) BUCKETED BY the coarse
+    *    c_id — aligned with [[writeIvfIndex]]'s layout so an IVFPQ
     *    probe set prunes code directories the same way (q110's story)
     * Codebooks are tiny (always broadcast at read); codes are three
     * narrow integer columns per (vector, subspace) — q108's 128×
-    * memory story made durable. */
-  /** With `train = true`, the persisted product codebook is the q111
+    * memory story made durable.
+    *
+    * With `train = true`, the persisted product codebook is the q111
     * Lloyd-refit one (one per-subspace k-means step over the seed
     * encoding) — trained ONCE at build time and frozen into the index;
     * [[appendPqIndex]] reads the codebook back from disk, so
     * incremental batches automatically encode under the same trained
-    * book (the FAISS `train`-then-`add` lifecycle). */
+    * book (the FAISS `train`-then-`add` lifecycle).
+    *
+    * Every input the rowFilter touches is computed before the first
+    * publish (the trained codebook is materialized, the codes publish
+    * first), so a rebuild that fails publishes nothing and the previous
+    * index keeps serving. The three layouts commit one after another:
+    * only a crash between two commits of a TRAINED rebuild can pair new
+    * codes with the old book, until the retry. */
   def writePqIndex(s: SparkSession, d: String, out: String,
       rowFilter: Column = lit(true), train: Boolean = false): Unit = {
-    val all = vecs(s, d)
+    val cents = seedCents(vecs(s, d))
     val cb =
       if (train)
         // trained on exactly the rows the index will hold (the base
@@ -1388,24 +1434,10 @@ object Similarity {
         graft.Ckpt.eager(pqTrainedCodebook(s, d,
           pqCodes(s, d).where(rowFilter).select(col("vec_id"), col("j"), col("code"))))
       else pqCodebook(s, d)
-    cb.coalesce(1).write.mode("overwrite").parquet(s"$out/codebook")
-    seedCents(all).coalesce(1).write.mode("overwrite").parquet(s"$out/centroids")
-    pqIndexRows(s, d, cb, seedCents(all), rowFilter)
-      .write.mode("overwrite").partitionBy("c_id").parquet(s"$out/codes")
-    // a REBUILD starts from a clean slate: whatever the previous index
-    // generation soft-deleted is simply not re-added by the caller's
-    // rowFilter — carrying the old sidecar forward would double-apply
-    // it. Cleared LAST, deliberately: an in-place rebuild of three
-    // artifact dirs is not atomic, so a mid-rebuild crash leaves SOME
-    // bad window under any ordering — clearing first would leave the
-    // intact OLD index serving with no sidecar (silent RESURRECTION of
-    // erased vectors, the one failure an erasure mechanism must not
-    // have), while clearing last leaves at worst a tiny window where a
-    // completed rebuild still carries the stale sidecar, whose effect
-    // is conservative over-suppression until the operator's retry.
-    // (The rebuild itself assumes exclusive ownership — the codes
-    // overwrite already breaks concurrent searches regardless.)
-    graft.etl.Compact.deleteRecursively(new java.io.File(s"$out/_dv"))
+    LsmIndex.write(pqIndexRows(s, d, cb, cents, rowFilter), byCentroid(s"$out/codes"))
+    LsmIndex.write(cb, pqCodebookLayout(out))
+    LsmIndex.write(cents, centroidsLayout(out))
+    clearDv(out)
   }
 
   /** Soft-delete vectors from a persisted PQ index — the erasure path
@@ -1424,18 +1456,18 @@ object Similarity {
 
   /** Incremental PQ maintenance — [[appendIvfIndex]]'s twin: encode
     * ONLY the incoming batch under the index's own FROZEN codebooks
-    * (read back from `out`, not recomputed) and append; dynamic
-    * partitionBy writes touch exactly the coarse buckets that received
-    * a vector, so base code files are never rewritten
+    * (read back from `out`, not recomputed) and append it as a new
+    * [[LsmIndex]] generation, touching exactly the coarse buckets that
+    * received a vector — base code files are never rewritten
     * (PartitionPruningSpec asserts byte-identity file by file).
     * Codebooks are deliberately not retrained here — q107 is the
     * staleness report that schedules the [[writePqIndex]] rebuild. */
   def appendPqIndex(s: SparkSession, d: String, out: String,
       rowFilter: Column): Unit =
-    pqIndexRows(s, d,
-      s.read.parquet(s"$out/codebook"), s.read.parquet(s"$out/centroids"),
-      rowFilter)
-      .write.mode("append").partitionBy("c_id").parquet(s"$out/codes")
+    LsmIndex.append(
+      pqIndexRows(s, d, LsmIndex.read(s, pqCodebookLayout(out)),
+        LsmIndex.read(s, centroidsLayout(out)), rowFilter),
+      byCentroid(s"$out/codes"))
 
   /** ADC top-k search FROM a persisted [[writePqIndex]] artifact: the
     * corpus side exists ONLY as the code table — raw embeddings are
@@ -1443,24 +1475,19 @@ object Similarity {
     * in the plan lives under the index root). `queries` carries
     * (query_id, qv) raw query vectors — queries are new data; only the
     * corpus is pre-encoded. Probe pruning: rank the index centroids
-    * per query (cosine desc, c_id asc), keep `nprobe`, and push the
-    * probe UNION down as a static c_id partition filter (a driver-side
-    * list bounded by min(queries × nprobe, numCentroids) — the q37
-    * "nprobe directories" story on the code table), while the
-    * per-query candidate scoping stays a broadcast equi-join on c_id.
-    * Returns (query_id, rank, vec_id, adist): top `k` by ADC distance
-    * (asc, vec_id asc tie-break), self-matches excluded. */
+    * per query ([[probesOf]]) and read only the probed buckets
+    * ([[probedRows]]), while the per-query candidate scoping stays a
+    * broadcast equi-join on c_id. The deletion-vector anti-join runs
+    * BEFORE the top-k window, so surviving ranks equal a
+    * rebuild-without-the-ids (PartitionPruningSpec pins that
+    * equivalence on unchanged files). Returns (query_id, rank, vec_id,
+    * adist): top `k` by ADC distance (asc, vec_id asc tie-break),
+    * self-matches excluded. */
   def pqIndexSearch(s: SparkSession, index: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
-    val cb = s.read.parquet(s"$index/codebook")
-    val cents = s.read.parquet(s"$index/centroids")
+    val cb = LsmIndex.read(s, pqCodebookLayout(index))
     val qn = queries.withColumn("qn", graft.functions.VectorOps.norm(col("qv")))
-    val wp = Window.partitionBy("query_id").orderBy(col("c_cos").desc, col("c_id").asc)
-    val probes = qn.crossJoin(broadcast(cents))
-      .withColumn("c_cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(wp))
-      .where(col("rn") <= nprobe)
-      .select(col("query_id"), col("c_id"))
+    val probes = probesOf(qn, LsmIndex.read(s, centroidsLayout(index)), nprobe)
     val qsub = qn
       .withColumn("u", transform(col("qv"), x => x / col("qn")))
       .select(col("query_id"),
@@ -1470,18 +1497,8 @@ object Similarity {
     val dtab = qsub.join(broadcast(cb), "j")
       .select(col("query_id"), col("j"), col("k").as("code"),
         l2sq(col("x"), col("cb")).as("dq"))
-    val probedBuckets = probes.select("c_id").distinct()
-      .collect().map(_.getAs[Number]("c_id").longValue).toSeq
-    val codes0 = s.read.parquet(s"$index/codes")
-      .where(col("c_id").isin(probedBuckets: _*))
-    // honor the deletion-vector sidecar (r9 verdict: an erasure must
-    // not keep surfacing as a neighbor until the nightly rebuild —
-    // erasure SLAs don't wait for index cadence). The anti-join runs
-    // BEFORE the top-k window, so surviving ranks equal a
-    // rebuild-without-the-ids (PartitionPruningSpec pins that
-    // equivalence on unchanged files).
-    val codes = dvAntiJoin(s, index, codes0)
-    val cand = codes.join(broadcast(probes), Seq("c_id"))
+    val cand = probedRows(s, index, byCentroid(s"$index/codes"), probes)
+      .join(broadcast(probes), Seq("c_id"))
       .where(col("vec_id") =!= col("query_id"))
     val approx = subspaceTotal(
       cand.join(broadcast(dtab), Seq("query_id", "j", "code")),

@@ -1762,31 +1762,44 @@ object EventStream {
       .flatMapGroupsWithState[FunnelState, FunnelStage](
         OutputMode.Update(), GroupStateTimeout.NoTimeout) {
         (uid: Long, batch: Iterator[FunnelEv], state: GroupState[FunnelState]) =>
-          var st = state.getOption.getOrElse(FunnelState(None, None, None))
-          var touched = false
-          batch.foreach { e =>
-            def first(cur: Option[Long]) = Some(cur.fold(e.es)(math.min(_, e.es)))
-            e.event_type match {
-              case "view"     => st = st.copy(tView = first(st.tView)); touched = true
-              case "click"    => st = st.copy(tClick = first(st.tClick)); touched = true
-              case "purchase" => st = st.copy(tPurchase = first(st.tPurchase)); touched = true
-              case _          => () // non-funnel types pass through untracked
-            }
-          }
+          val (st, lastEs) =
+            foldFunnel(state.getOption.getOrElse(FunnelState(None, None, None)), batch)
           // a batch with no funnel event for this user changes nothing:
           // no state entry for never-participants (state must grow with
           // funnel users, not with every user who ever produced ANY
           // event) and no re-emitted unchanged row for participants
-          if (!touched) Iterator.empty
+          if (lastEs.isEmpty) Iterator.empty
           else {
             state.update(st)
-            val s1 = st.tView.isDefined
-            val s2 = s1 && st.tClick.exists(_ > st.tView.get)
-            val s3 = s2 && st.tPurchase.exists(_ > st.tClick.get)
-            Iterator.single(
-              FunnelStage(uid, if (s3) 3L else if (s2) 2L else if (s1) 1L else 0L))
+            Iterator.single(funnelStage(uid, st))
           }
       }
+  }
+
+  /** Fold a batch into the first-occurrence timestamps of the three
+    * funnel stages; also returns the latest funnel-event time in the
+    * batch — None when the batch has no funnel event (non-funnel types
+    * pass through untracked). */
+  private def foldFunnel(start: FunnelState,
+      batch: Iterator[FunnelEv]): (FunnelState, Option[Long]) =
+    batch.foldLeft((start, Option.empty[Long])) { case ((st, last), e) =>
+      def first(cur: Option[Long]) = Some(cur.fold(e.es)(math.min(_, e.es)))
+      val next = e.event_type match {
+        case "view"     => Some(st.copy(tView = first(st.tView)))
+        case "click"    => Some(st.copy(tClick = first(st.tClick)))
+        case "purchase" => Some(st.copy(tPurchase = first(st.tPurchase)))
+        case _          => None
+      }
+      next.fold((st, last))(n => (n, Some(last.fold(e.es)(math.max(_, e.es)))))
+    }
+
+  /** The stage verdict, min-chained as in batch q73: a stage counts only
+    * if its first occurrence is strictly after the previous stage's. */
+  private def funnelStage(uid: Long, st: FunnelState): FunnelStage = {
+    val s1 = st.tView.isDefined
+    val s2 = s1 && st.tClick.exists(_ > st.tView.get)
+    val s3 = s2 && st.tPurchase.exists(_ > st.tClick.get)
+    FunnelStage(uid, if (s3) 3L else if (s2) 2L else if (s1) 1L else 0L)
   }
 
   /** [[funnelStream]] with BOUNDED state — the attribution-window form a
@@ -1810,29 +1823,14 @@ object EventStream {
           if (state.hasTimedOut) {
             val st = state.get
             state.remove()
-            val s1 = st.tView.isDefined
-            val s2 = s1 && st.tClick.exists(_ > st.tView.get)
-            val s3 = s2 && st.tPurchase.exists(_ > st.tClick.get)
-            Iterator.single(
-              FunnelStage(uid, if (s3) 3L else if (s2) 2L else if (s1) 1L else 0L))
+            Iterator.single(funnelStage(uid, FunnelState(st.tView, st.tClick, st.tPurchase)))
           } else {
-            var st = state.getOption.getOrElse(FunnelTimedState(None, None, None, 0L))
-            var touched = false
-            batch.foreach { e =>
-              def first(cur: Option[Long]) = Some(cur.fold(e.es)(math.min(_, e.es)))
-              // only funnel events are tracked — and only they run the
-              // attribution clock (a non-funnel event neither creates
-              // state nor extends the window)
-              e.event_type match {
-                case "view"     => st = st.copy(tView = first(st.tView),
-                  lastEs = math.max(st.lastEs, e.es)); touched = true
-                case "click"    => st = st.copy(tClick = first(st.tClick),
-                  lastEs = math.max(st.lastEs, e.es)); touched = true
-                case "purchase" => st = st.copy(tPurchase = first(st.tPurchase),
-                  lastEs = math.max(st.lastEs, e.es)); touched = true
-                case _          => ()
-              }
-            }
+            val prev = state.getOption.getOrElse(FunnelTimedState(None, None, None, 0L))
+            // only funnel events are tracked — and only they run the
+            // attribution clock (a non-funnel event neither creates
+            // state nor extends the window)
+            val (st, lastEs) =
+              foldFunnel(FunnelState(prev.tView, prev.tClick, prev.tPurchase), batch)
             // an untouched user's state and TIMEOUT stay as they are —
             // re-issuing setTimeoutTimestamp from a stale lastEs would
             // throw once the watermark has passed it (a non-funnel event
@@ -1840,12 +1838,12 @@ object EventStream {
             // otherwise kill the whole query), and funnel events are
             // never late under EventTimeTimeout so a touched user's
             // (lastEs + attribution) is always above the watermark
-            if (!touched) Iterator.empty
-            else {
-              state.update(st)
-              state.setTimeoutTimestamp((st.lastEs + attributionSeconds) * 1000L)
-              Iterator.empty
+            lastEs.foreach { es =>
+              val last = math.max(prev.lastEs, es)
+              state.update(FunnelTimedState(st.tView, st.tClick, st.tPurchase, last))
+              state.setTimeoutTimestamp((last + attributionSeconds) * 1000L)
             }
+            Iterator.empty
           }
       }
   }
@@ -1866,30 +1864,36 @@ object EventStream {
           if (state.hasTimedOut) {
             val st = state.get
             state.remove()
-            Iterator.single(Session(uid, st.start_es, st.end_es, st.n_events))
+            Iterator.single(toSession(uid, st))
           } else {
-            val sorted = batch.toSeq.sortBy(e => (e.es, e.event_id))
-            var cur = state.getOption
-            val closed = Seq.newBuilder[Session]
-            sorted.foreach { e =>
-              cur match {
-                case None =>
-                  cur = Some(SessionState(e.es, e.es, 1))
-                case Some(st) if e.es - st.end_es > sessionGapSeconds =>
-                  closed += Session(uid, st.start_es, st.end_es, st.n_events)
-                  cur = Some(SessionState(e.es, e.es, 1))
-                case Some(st) =>
-                  cur = Some(SessionState(st.start_es, math.max(st.end_es, e.es), st.n_events + 1))
-              }
-            }
+            val (cur, closed) = foldSessions(uid, state.getOption, batch)
             cur.foreach { st =>
               state.update(st)
               state.setTimeoutTimestamp((st.end_es + sessionGapSeconds) * 1000L)
             }
-            closed.result().iterator
+            closed.iterator
           }
       }
   }
+
+  /** Fold a batch, in (es, event_id) order, into the user's open
+    * session: returns the session still open afterwards and the ones a
+    * gap above [[sessionGapSeconds]] closed. */
+  private def foldSessions(uid: Long, open: Option[SessionState],
+      batch: Iterator[Ev]): (Option[SessionState], Seq[Session]) = {
+    val closed = Seq.newBuilder[Session]
+    val cur = batch.toSeq.sortBy(e => (e.es, e.event_id)).foldLeft(open) {
+      case (Some(st), e) if e.es - st.end_es <= sessionGapSeconds =>
+        Some(SessionState(st.start_es, math.max(st.end_es, e.es), st.n_events + 1))
+      case (prev, e) =>
+        prev.foreach(st => closed += toSession(uid, st))
+        Some(SessionState(e.es, e.es, 1))
+    }
+    (cur, closed.result())
+  }
+
+  private def toSession(uid: Long, st: SessionState): Session =
+    Session(uid, st.start_es, st.end_es, st.n_events)
 
   /** Gap-based sessionization with one open-session state per user.
     * Emits a [[Session]] whenever a new event closes the previous one;
@@ -1902,22 +1906,9 @@ object EventStream {
       .flatMapGroupsWithState[SessionState, Session](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (uid: Long, batch: Iterator[Ev], state: GroupState[SessionState]) =>
-          val sorted = batch.toSeq.sortBy(e => (e.es, e.event_id))
-          var cur = state.getOption
-          val closed = Seq.newBuilder[Session]
-          sorted.foreach { e =>
-            cur match {
-              case None =>
-                cur = Some(SessionState(e.es, e.es, 1))
-              case Some(st) if e.es - st.end_es > sessionGapSeconds =>
-                closed += Session(uid, st.start_es, st.end_es, st.n_events)
-                cur = Some(SessionState(e.es, e.es, 1))
-              case Some(st) =>
-                cur = Some(SessionState(st.start_es, math.max(st.end_es, e.es), st.n_events + 1))
-            }
-          }
+          val (cur, closed) = foldSessions(uid, state.getOption, batch)
           cur.foreach(state.update)
-          closed.result().iterator
+          closed.iterator
       }
   }
 }

@@ -205,7 +205,7 @@ class ChunkSampleSketchSpec extends AnyFunSuite with SparkTestBase {
     Dedup.writeChunkIndex(spark, dir, out, col("doc_id") % 2 === 0)
     val gen0 = genMd5s(new java.io.File(s"$out/chunks"), 0L)
     assert(gen0.nonEmpty)
-    Dedup.appendChunkIndex(spark, dir, out, col("doc_id") % 2 === 1, gen = 1L)
+    Dedup.appendChunkIndex(spark, dir, out, col("doc_id") % 2 === 1)
     // LSM contract: base generation byte-untouched by the append
     assert(genMd5s(new java.io.File(s"$out/chunks"), 0L) == gen0)
     assert(genMd5s(new java.io.File(s"$out/chunks"), 1L).nonEmpty)

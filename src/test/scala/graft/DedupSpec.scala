@@ -171,7 +171,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       walk(new java.io.File(out)).find(_.getName == s"gen=$gen")
     }
     val gen0 = md5s(genDir(0L).get)
-    Dedup.appendSpanIndex(batch, out, gen = 1L)
+    Dedup.appendSpanIndex(batch, out)
     // LSM contract: the base generation is byte-untouched by the append
     assert(md5s(genDir(0L).get) == gen0)
     assert(genDir(1L).exists(_.isDirectory))

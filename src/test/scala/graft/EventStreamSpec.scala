@@ -1073,7 +1073,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       query.processAllAvailable()
       assert(results.sorted.toSeq == expectedFirst) // stream ≡ batch, wave 1
       // APPEND mid-stream: generation 1 (docs 20+) is served next batch
-      Retrieval.appendLexIndex(spark, dir, idx, col("doc_id") >= 20, gen = 1L)
+      Retrieval.appendLexIndex(spark, dir, idx, col("doc_id") >= 20)
       val expectedSecond = batchSearch(second.map(_._1).toSeq)
       // the appended docs really are reachable (they share the corpus terms)
       assert(expectedSecond.exists(_._3 >= 20L))

@@ -42,7 +42,7 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
       import spark.implicits._
       val (out, l) = layout(bucketed = true)
       LsmIndex.write((0L until 8L).map(k => (k, k * 10)).toDF("k", "v"), l)
-      LsmIndex.append((8L until 12L).map(k => (k, k * 10)).toDF("k", "v"), l, gen = 1L)
+      LsmIndex.append((8L until 12L).map(k => (k, k * 10)).toDF("k", "v"), l)
       val before = rowsOf(l)
       LsmIndex.compact(spark, l)()
       assert(rowsOf(l) == before)
@@ -62,7 +62,7 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
       import spark.implicits._
       val (out, l) = layout(bucketed = false)
       LsmIndex.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), l)
-      LsmIndex.append(Seq((3L, 30L)).toDF("k", "v"), l, gen = 1L)
+      LsmIndex.append(Seq((3L, 30L)).toDF("k", "v"), l)
       // a predecessor crashed mid-staging: junk at <path>/.txn_… must
       // not poison the next run (it is discarded, never merged)
       val stale = new java.io.File(out, ".txn_deadbeef")
@@ -79,7 +79,7 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
       import spark.implicits._
       val (out, l) = layout(bucketed = false)
       LsmIndex.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), l)
-      LsmIndex.append(Seq((3L, 30L)).toDF("k", "v"), l, gen = 1L)
+      LsmIndex.append(Seq((3L, 30L)).toDF("k", "v"), l)
       val before = rowsOf(l)
       // simulate a predecessor that died AFTER claiming the next epoch
       // name but BEFORE publishing its marker: a v=1 dir with garbage
@@ -107,13 +107,41 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
       val (_, l) = layout(bucketed = false)
       // same key in both generations: the fold must sum them into one row
       LsmIndex.write(Seq((1L, 5L), (2L, 7L)).toDF("k", "v"), l)
-      LsmIndex.append(Seq((1L, 3L)).toDF("k", "v"), l, gen = 1L)
+      LsmIndex.append(Seq((1L, 3L)).toDF("k", "v"), l)
       LsmIndex.compact(spark, l)(_.groupBy("k").agg(sum("v").as("v")))
       assert(rowsOf(l) == Set((1L, 8L), (2L, 7L)))
       // idempotent at the data level: compacting again changes nothing
       LsmIndex.compact(spark, l)(_.groupBy("k").agg(sum("v").as("v")))
       assert(rowsOf(l) == Set((1L, 8L), (2L, 7L)))
     }
+  }
+
+  test("appends take the next generation: gen=1 then gen=2, both read, compact folds them into gen=0") {
+    import spark.implicits._
+    val (out, l) = layout(bucketed = true)
+    def gens(): Set[String] = new java.io.File(out, "v=0").listFiles()
+      .filter(_.isDirectory).flatMap(_.listFiles()).filter(_.isDirectory)
+      .map(_.getName).toSet
+    LsmIndex.write((0L until 8L).map(k => (k, k * 10)).toDF("k", "v"), l)
+    LsmIndex.append((8L until 12L).map(k => (k, k * 10)).toDF("k", "v"), l)
+    LsmIndex.append((12L until 14L).map(k => (k, k * 10)).toDF("k", "v"), l)
+    assert(gens() == Set("gen=0", "gen=1", "gen=2"))
+    val byGen = LsmIndex.readByGen(spark, l).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[Number]("gen").longValue).toMap
+    assert(byGen == (0L until 14L).map(k => k -> (if (k < 8) 0L else if (k < 12) 1L else 2L)).toMap)
+    LsmIndex.compact(spark, l)()
+    assert(rowsOf(l) == (0L until 14L).map(k => (k, k * 10)).toSet)
+    assert(LsmIndex.readByGen(spark, l).select("gen").distinct().collect()
+      .map(_.getAs[Number](0).longValue).toSet == Set(0L))
+    assert(epochDirs(out) == Set("v=1"))
+  }
+
+  test("appending to an artifact with no committed epoch throws and writes nothing") {
+    import spark.implicits._
+    val (out, l) = layout(bucketed = false)
+    intercept[IllegalArgumentException](
+      LsmIndex.append(Seq((1L, 10L)).toDF("k", "v"), l))
+    assert(!new java.io.File(out).exists())
   }
 
   test("a re-build (write over an existing artifact) supersedes via a fresh epoch, never in place") {

@@ -3,21 +3,48 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
-import graft.etl.StarBuilder
+import graft.etl.{SnapshotLog, StarBuilder}
+import scala.jdk.CollectionConverters._
 
 /** The warehouse facts are partitioned by `tahun` (StarBuilder.writeAll);
   * a year-filtered read must prune to that year's partition at planning
   * time — the partition-pruning story behind A19/A20. */
 class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
 
+  /** The live epoch directory of an LsmIndex artifact at `path`. */
+  private def liveEpoch(path: String): java.io.File =
+    SnapshotLog.versionDir(path, SnapshotLog.resolve(path))
+
+  /** The parquet files under `dir` (any depth), keyed by their path
+    * relative to it (`cb=K/gen=N/part-…` in a bucketed epoch). */
+  private def parquetFiles(dir: java.io.File): Map[String, java.io.File] = {
+    val root = dir.toPath
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.map(_.toFile)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(f => root.relativize(f.toPath).toString -> f).toMap
+    finally walk.close()
+  }
+
+  private def md5s(dir: java.io.File): Map[String, String] =
+    parquetFiles(dir).map { case (rel, f) =>
+      val h = java.security.MessageDigest.getInstance("MD5")
+        .digest(java.nio.file.Files.readAllBytes(f.toPath))
+      rel -> h.map("%02x".format(_)).mkString
+    }
+
+  /** The bucket directory (`cb=K`) a relative epoch path lives in. */
+  private def bucketOf(rel: String): String = rel.takeWhile(_ != '/')
+
   test("a 4-probe query over the IVF index reads exactly 4 bucket directories") {
     // q37's scale claim made physical: writeIvfIndex lays the corpus out
-    // partitioned by centroid id, so a probe set is a partition filter and
+    // bucketed by centroid id, so a probe set is a partition filter and
     // an nprobe search reads nprobe directories — not the corpus.
     val idx = java.nio.file.Files.createTempDirectory("graft_ivf").toString
     graft.ops.Similarity.writeIvfIndex(spark, "/root/testdata/sf0.001", idx)
+    val live = liveEpoch(idx).toString
     val probes = Seq(1L, 3L, 5L, 7L)
-    val probed = spark.read.parquet(idx).where(col("c_id").isin(probes: _*))
+    val probed = spark.read.parquet(live).where(col("cb").isin(probes: _*))
     val scan = probed.queryExecution.executedPlan.collectFirst {
       case f: FileSourceScanExec => f
     }.getOrElse(fail("no FileSourceScanExec in plan"))
@@ -25,11 +52,11 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
       s"expected partition filters, got: ${scan.partitionFilters}")
     val dirs = scan.relation.location.listFiles(scan.partitionFilters, Nil)
       .flatMap(_.files)
-      .map(_.getPath.getParent.getName).distinct.sorted
-    assert(dirs == probes.map(c => s"c_id=$c"),
+      .map(_.getPath.getParent.getParent.getName).distinct.sorted
+    assert(dirs == probes.map(c => s"cb=$c"),
       s"probe read touched: ${dirs.mkString(", ")}")
     // and the pruned read is the same rows the logical filter selects
-    val expected = spark.read.parquet(idx)
+    val expected = spark.read.parquet(live)
       .collect().count(r => probes.contains(r.getAs[Long]("c_id")))
     assert(probed.count() == expected)
   }
@@ -43,14 +70,9 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     // already-ingested history (vec_id hash bucket < 50) the append grows
     Similarity.writeIvfIndex(spark, sfDir, idx)
     val baseIdx = idx + "_base"
-    Similarity.appendIvfIndex(spark, sfDir, baseIdx, bucket < 50)
-    def filesIn(dir: String): Map[String, Set[String]] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("c_id="))
-        .map(d => d.getName ->
-          d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet)
-        .toMap
-    }
+    Similarity.writeIvfIndex(spark, sfDir, baseIdx, bucket < 50)
+    def filesIn(dir: String): Map[String, Set[String]] =
+      parquetFiles(liveEpoch(dir)).keySet.groupBy(bucketOf)
     val before = filesIn(baseIdx)
     Similarity.appendIvfIndex(spark, sfDir, baseIdx, bucket >= 50)
     val after = filesIn(baseIdx)
@@ -61,10 +83,9 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     }
     // 2. new files appear exactly under the buckets the incoming batch
     //    was assigned to (read the appended rows back for the truth)
-    // partition-column inference reads c_id back as int — normalize via Number
-    val incomingBuckets = spark.read.parquet(baseIdx)
+    val incomingBuckets = spark.read.parquet(liveEpoch(baseIdx).toString)
       .where(bucket >= 50).select("c_id").distinct()
-      .collect().map(r => s"c_id=${r.getAs[Number]("c_id").longValue}").toSet
+      .collect().map(r => s"cb=${r.getAs[Long]("c_id")}").toSet
     val grown = after.filter { case (dir, fs) =>
       fs != before.getOrElse(dir, Set.empty)
     }.keySet
@@ -72,25 +93,22 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
       s"append touched $grown, expected $incomingBuckets")
     // 3. the appended index serves the same rows as a full rebuild (the
     //    frozen codebook makes base assignments append-invariant)
-    def pairs(dir: String): Set[(Long, Long)] = spark.read.parquet(dir)
-      .select("vec_id", "c_id").collect()
-      .map(r => (r.getAs[Number]("vec_id").longValue,
-        r.getAs[Number]("c_id").longValue)).toSet
+    def pairs(dir: String): Set[(Long, Long)] =
+      spark.read.parquet(liveEpoch(dir).toString)
+        .select("vec_id", "c_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
     val rebuilt = pairs(idx)
     val incremental = pairs(baseIdx)
     assert(incremental == rebuilt)
-    // 4. OPTIMIZE on the grown index: bin-packing the accumulated
-    //    small files must not change a single served row, and the
-    //    bucket directories (the probe-pruning unit) must survive
-    val fragged = new java.io.File(baseIdx).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("c_id="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    val packed = graft.etl.Compact.compact(spark, baseIdx, 1L << 30)
-    assert(packed.nonEmpty, s"append should leave multi-file buckets (had $fragged files)")
-    val afterFiles = new java.io.File(baseIdx).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("c_id="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    assert(afterFiles < fragged)
+    // 4. compaction of the grown index: folding the generations must
+    //    not change a single served row, must shrink the file count,
+    //    and the bucket directories (the probe-pruning unit) survive
+    val fragged = parquetFiles(liveEpoch(baseIdx)).size
+    graft.etl.LsmIndex.compact(spark, Similarity.byCentroid(baseIdx))()
+    val packed = filesIn(baseIdx)
+    assert(packed.values.map(_.size).sum < fragged,
+      s"compaction should fold the generations' files (had $fragged files)")
+    assert(packed.keySet == after.keySet)
     assert(pairs(baseIdx) == rebuilt)
   }
 
@@ -102,15 +120,7 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     Similarity.writePqIndex(spark, sfDir, idx, bucket < 50)
     // content hash per code file — append must leave every base file's
     // BYTES untouched, not just its name
-    def codeFileHashes(dir: String): Map[String, String] = {
-      val root = new java.io.File(s"$dir/codes")
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("c_id="))
-        .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-          val h = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-          s"${d.getName}/${f.getName}" -> h.map("%02x".format(_)).mkString
-        }).toMap
-    }
+    def codeFileHashes(dir: String): Map[String, String] = md5s(liveEpoch(s"$dir/codes"))
     val before = codeFileHashes(idx)
     assert(before.nonEmpty)
     Similarity.appendPqIndex(spark, sfDir, idx, bucket >= 50)
@@ -121,11 +131,6 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     // the grown index holds exactly what a full rebuild would
     val full = java.nio.file.Files.createTempDirectory("graft_pq_full").toString
     Similarity.writePqIndex(spark, sfDir, full)
-    def codeRows(dir: String): Set[(Long, Long, Long, Long)] =
-      spark.read.parquet(s"$dir/codes").select("vec_id", "j", "code", "c_id")
-        .collect().map(r => (r.getAs[Number]("vec_id").longValue,
-          r.getAs[Number]("j").longValue, r.getAs[Number]("code").longValue,
-          r.getAs[Number]("c_id").longValue)).toSet
     assert(codeRows(idx) == codeRows(full))
     // ADC search touches ONLY index files: every file relation in the
     // search plan must live under the index root — raw embeddings are
@@ -151,23 +156,32 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     // and it returns a full top-5 per query
     val rows = res.collect()
     assert(rows.length == 2 * 5)
-    // OPTIMIZE on the serving index: bin-packing the appended code
-    // table must not change a single search result — the maintenance
-    // op an accumulating index needs, proven against its own query
+    // compaction of the serving index: folding the appended code
+    // generation must not change a single search result — the
+    // maintenance op an accumulating index needs, proven against its
+    // own query
     def pairs(r: Array[org.apache.spark.sql.Row]): Seq[(Long, Long, Long)] =
       r.map(x => (x.getAs[Long]("query_id"), x.getAs[Long]("rank"),
         x.getAs[Long]("vec_id"))).sorted.toSeq
     val beforeCompact = pairs(rows)
-    def codeFileCount = new java.io.File(s"$idx/codes").listFiles()
-      .filter(_.getName.startsWith("c_id="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
+    def codeFileCount = parquetFiles(liveEpoch(s"$idx/codes")).size
     val nFiles = codeFileCount
-    val packed = graft.etl.Compact.compact(spark, s"$idx/codes", 1L << 30)
-    assert(packed.nonEmpty && codeFileCount < nFiles,
-      s"append should leave multi-file buckets to pack (had $nFiles files)")
+    graft.etl.LsmIndex.compact(spark, Similarity.byCentroid(s"$idx/codes"))()
+    assert(codeFileCount < nFiles,
+      s"compaction should fold the generations' files (had $nFiles files)")
     val reSearched = Similarity.pqIndexSearch(spark, idx, queries, nprobe = 4, k = 5)
     assert(pairs(reSearched.collect()) == beforeCompact)
   }
+
+  /** (vec_id, j, code, c_id) of a PQ index's live code rows. */
+  private def codeRows(dir: String): Set[(Long, Long, Long, Long)] =
+    codeTuples(spark.read.parquet(liveEpoch(s"$dir/codes").toString))
+
+  private def codeTuples(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
+    df.select("vec_id", "j", "code", "c_id")
+      .collect().map(r => (r.getAs[Number]("vec_id").longValue,
+        r.getAs[Number]("j").longValue, r.getAs[Number]("code").longValue,
+        r.getAs[Number]("c_id").longValue)).toSet
 
   test("trained PQ index: appends encode under the frozen trained codebook") {
     // the FAISS train-then-add lifecycle: the codebook is Lloyd-refit
@@ -183,26 +197,70 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     // the persisted codebook really is the trained one, not the seed
     val seedIdx = java.nio.file.Files.createTempDirectory("graft_pq_seed").toString
     Similarity.writePqIndex(spark, sfDir, seedIdx, bucket < 50)
+    def layer(dir: String, name: String) =
+      spark.read.parquet(liveEpoch(s"$dir/$name").toString).drop("gen")
     def cbRows(dir: String): Set[(Long, Long, Seq[Double])] =
-      spark.read.parquet(s"$dir/codebook").collect()
+      layer(dir, "codebook").collect()
         .map(r => (r.getAs[Number]("j").longValue, r.getAs[Number]("k").longValue,
           r.getAs[Seq[Double]]("cb"))).toSet
     assert(cbRows(idx) != cbRows(seedIdx))
     Similarity.appendPqIndex(spark, sfDir, idx, bucket >= 50)
-    // grown-under-frozen-book == full-corpus rebuild under that book:
-    // rebuild by copying the trained codebook dir and re-encoding all
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft_pq_tr_full").toString
-    spark.read.parquet(s"$idx/codebook").coalesce(1)
-      .write.parquet(s"$rebuilt/codebook")
-    spark.read.parquet(s"$idx/centroids").coalesce(1)
-      .write.parquet(s"$rebuilt/centroids")
-    Similarity.appendPqIndex(spark, sfDir, rebuilt, col("vec_id") >= Long.MinValue)
-    def codeRows(dir: String): Set[(Long, Long, Long, Long)] =
-      spark.read.parquet(s"$dir/codes").select("vec_id", "j", "code", "c_id")
-        .collect().map(r => (r.getAs[Number]("vec_id").longValue,
-          r.getAs[Number]("j").longValue, r.getAs[Number]("code").longValue,
-          r.getAs[Number]("c_id").longValue)).toSet
-    assert(codeRows(idx) == codeRows(rebuilt))
+    // grown-under-frozen-book == full-corpus encoding under that book
+    val expected = Similarity.pqIndexRows(spark, sfDir,
+      layer(idx, "codebook"), layer(idx, "_centroids"), col("vec_id") >= Long.MinValue)
+    assert(codeRows(idx) == codeTuples(expected))
+  }
+
+  /** Rebuild `idx` with a rowFilter whose UDF throws at execution time:
+    * the rebuild must fail and `search` must still return what it
+    * returned before. Run with adaptive execution on and off: with it
+    * on, the UDF's pre-shuffle stage runs before the write command
+    * starts; with it off, the failure lands inside the write job — the
+    * window any failed write stage (I/O error, lost executor) opens. */
+  private def assertFailedRebuildKeepsServing[T](search: => T)(
+      rebuild: org.apache.spark.sql.Column => Unit): Unit = {
+    import org.apache.spark.sql.functions.udf
+    val before = search
+    val boom = udf((id: Long) => {
+      if (id >= 0) throw new IllegalStateException(s"rowFilter failed on $id")
+      true
+    })
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    try Seq("true", "false").foreach { aqe =>
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      intercept[Exception](rebuild(boom(col("vec_id"))))
+      assert(search == before, s"with spark.sql.adaptive.enabled=$aqe")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  /** The test corpus the failed-rebuild tests index. */
+  private val sfDir = "/root/testdata/sf0.001"
+
+  private def testQueries(n: Int) =
+    spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .where(col("vec_id") < n)
+      .select(col("vec_id").as("query_id"),
+        col("embedding").cast("array<double>").as("qv"))
+      .localCheckpoint(true)
+
+  test("a failed IVF rebuild leaves the previous index serving") {
+    import graft.ops.Similarity
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_fail").toString
+    Similarity.writeIvfIndex(spark, sfDir, idx)
+    val queries = testQueries(4)
+    assertFailedRebuildKeepsServing(
+      Similarity.ivfIndexSearch(spark, idx, queries, nprobe = 4, k = 5)
+        .collect().toSeq)(Similarity.writeIvfIndex(spark, sfDir, idx, _))
+  }
+
+  test("a failed PQ rebuild leaves the previous index serving") {
+    import graft.ops.Similarity
+    val idx = java.nio.file.Files.createTempDirectory("graft_pq_fail").toString
+    Similarity.writePqIndex(spark, sfDir, idx)
+    val queries = testQueries(2)
+    assertFailedRebuildKeepsServing(
+      Similarity.pqIndexSearch(spark, idx, queries, nprobe = 4, k = 5)
+        .collect().toSeq)(Similarity.writePqIndex(spark, sfDir, idx, _, train = false))
   }
 
   test("clustered (sorted) layout skips row groups an unsorted layout must read") {
@@ -750,15 +808,7 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
         r.getAs[Long]("vec_id"))).sorted.toSeq
     val before = search(idx)
     val victim = before.head._3 // a served neighbor — the erasure target
-    def codeMd5s(dir: String): Map[String, String] = {
-      val root = new java.io.File(s"$dir/codes")
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("c_id="))
-        .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-          val h = java.security.MessageDigest.getInstance("MD5")
-            .digest(java.nio.file.Files.readAllBytes(f.toPath))
-          s"${d.getName}/${f.getName}" -> h.map("%02x".format(_)).mkString
-        }).toMap
-    }
+    def codeMd5s(dir: String): Map[String, String] = md5s(liveEpoch(s"$dir/codes"))
     val codesBefore = codeMd5s(idx)
     Similarity.deletePqVectors(spark, idx, Seq(victim))
     val after = search(idx)
@@ -814,15 +864,7 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     fileRoots.foreach { p =>
       assert(p.contains(idx), s"index search scans a non-index file source: $p")
     }
-    def dataMd5s(dir: String): Map[String, String] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("c_id="))
-        .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-          val h = java.security.MessageDigest.getInstance("MD5")
-            .digest(java.nio.file.Files.readAllBytes(f.toPath))
-          s"${d.getName}/${f.getName}" -> h.map("%02x".format(_)).mkString
-        }).toMap
-    }
+    def dataMd5s(dir: String): Map[String, String] = md5s(liveEpoch(dir))
     val filesBefore = dataMd5s(idx)
     val victim = before.head._3 // a served neighbor — the erasure target
     Similarity.deleteIvfVectors(spark, idx, Seq(victim))
@@ -838,8 +880,8 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     // idempotent: re-deleting merges to the same sidecar content
     Similarity.deleteIvfVectors(spark, idx, Seq(victim))
     assert(search(idx) == after)
-    // a rebuild starts clean: the root overwrite drops the sidecar and
-    // the victim (re-added by the unfiltered rebuild) serves again
+    // a rebuild starts clean: the published rebuild drops the sidecar
+    // and the victim (re-added by the unfiltered rebuild) serves again
     Similarity.writeIvfIndex(spark, sfDir, idx)
     assert(!new java.io.File(s"$idx/_dv").exists())
     assert(search(idx) == before)

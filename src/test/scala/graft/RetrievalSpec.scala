@@ -109,7 +109,7 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
     Retrieval.writeLexIndex(spark, dir, out, col("doc_id") % 2 === 0)
     val gen0 = genMd5s(new java.io.File(s"$out/postings"), 0L)
     assert(gen0.nonEmpty)
-    Retrieval.appendLexIndex(spark, dir, out, col("doc_id") % 2 === 1, gen = 1L)
+    Retrieval.appendLexIndex(spark, dir, out, col("doc_id") % 2 === 1)
     // LSM contract: base generation byte-untouched by the append
     assert(genMd5s(new java.io.File(s"$out/postings"), 0L) == gen0)
     assert(genMd5s(new java.io.File(s"$out/postings"), 1L).nonEmpty)
@@ -150,7 +150,7 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
     })
     val out = java.nio.file.Files.createTempDirectory("graft_lexidx_c").toString
     Retrieval.writeLexIndex(spark, dir, out, col("doc_id") % 2 === 0)
-    Retrieval.appendLexIndex(spark, dir, out, col("doc_id") % 2 === 1, gen = 1L)
+    Retrieval.appendLexIndex(spark, dir, out, col("doc_id") % 2 === 1)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "doc_id", "lex_rank", "bscore").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
