@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * versioned warehouse provides the commit half). Two complementary
   * indexes, each a tiny parquet table living under the data directory
   * in a `_`-prefixed sidecar (invisible to plain parquet scans, skipped
-  * by [[Compact.leafDirs]]):
+  * by [[leaves]]):
   *
   *  - `_idx/stats`: per-file min/max/count for designated columns — the
   *    Delta/Iceberg "stats in the log" shape. An interval predicate
@@ -32,23 +32,37 @@ import org.apache.spark.sql.functions._
   * File paths are stored RELATIVE to the table directory (the
   * deletion-vector precedent): a manifest written in a staging dir
   * stays valid after [[StarBuilder]]'s atomic rename into `v=<n>/`,
-  * and a byte-copied snapshot keeps its manifest. A REPACK invalidates
+  * and a byte-copied snapshot keeps its manifest. A REWRITE invalidates
   * both sidecars (file names change) — [[StarBuilder.compactVersioned]]
-  * therefore regenerates BOTH for the compacted snapshot (`_idx/stats`
-  * from its own min_* schema, `_idx/bloom` from its pinned key_col);
-  * the in-place [[Compact.compact]] does not, and the ANN serving
+  * therefore regenerates BOTH for a rewritten table (`_idx/stats` from
+  * its own min_* schema, `_idx/bloom` from its pinned key_col) and
+  * carries them as-is with a table it does not rewrite; the ANN serving
   * indexes keep the rebuild-with-the-artifact rule.
   */
 object DataSkipping {
   type Q = (SparkSession, String) => DataFrame
 
   /** The `_metadata.file_path` of every row, relativized to the table
-    * root by matching on the root's basename — unambiguous because the
-    * path tail `<basename>/<file>` appears exactly once. */
-  private def relFile(tableDir: String): Column = {
+    * root: the tail after the LAST `/<basename>/` — THE file identity of
+    * every per-file sidecar (stats, bloom, deletion vectors). The last
+    * occurrence is the table root itself, because nothing under a table
+    * root shares its name (subdirectories are `k=v`); a directory above
+    * the warehouse may (`<tmp>/t/wh/v=1/t/…`). */
+  private[etl] def relFile(tableDir: String): Column = {
     val base = new java.io.File(tableDir).getName
     regexp_extract(col("_metadata.file_path"),
-      "/" + java.util.regex.Pattern.quote(base) + "/(.*)$", 1)
+      "^.*/" + java.util.regex.Pattern.quote(base) + "/(.*)$", 1)
+  }
+
+  /** The partition leaves of a table directory — the deepest
+    * directories, skipping `_`-prefixed sidecars and dot-staging dirs —
+    * each with its parquet data files: the one data-file walk
+    * [[listDataFiles]] and [[StarBuilder.compactVersioned]] share. */
+  private[etl] def leaves(dir: java.io.File): Seq[(java.io.File, Seq[java.io.File])] = {
+    val (subs, files) = Option(dir.listFiles()).toSeq.flatten.partition(_.isDirectory)
+    val parts = subs.filterNot(d => d.getName.startsWith("_") || d.getName.startsWith("."))
+    if (parts.isEmpty) Seq(dir -> files.filter(_.getName.endsWith(".parquet")))
+    else parts.flatMap(leaves)
   }
 
   // ---------------------------------------------------------------------------
@@ -91,15 +105,12 @@ object DataSkipping {
       .parquet(fresh.map(f => s"$tableDir/$f"): _*)
 
   /** The data files of `tableDir` (recursive — partitioned layouts
-    * included; `_`-prefixed sidecars and dot-staging dirs skipped, the
-    * [[Compact.leafDirs]] rule), RELATIVE to the table root — the same
-    * file identity [[relFile]] gives manifest rows, so set-difference
-    * against the manifest is exact. */
+    * included; the [[leaves]] walk), RELATIVE to the table root — the
+    * same file identity [[relFile]] gives manifest rows, so
+    * set-difference against the manifest is exact. */
   private def listDataFiles(tableDir: String): Seq[String] = {
     val root = new java.io.File(tableDir)
-    Compact.leafDirs(root)
-      .flatMap(leaf => Compact.dataFiles(leaf).toSeq)
-      .map(f => root.toPath.relativize(f.toPath).toString)
+    leaves(root).flatMap(_._2).map(f => root.toPath.relativize(f.toPath).toString)
   }
 
   /** Incremental `_idx/stats` maintenance — the append twin
@@ -135,7 +146,7 @@ object DataSkipping {
   /** The stats columns a manifest indexes, recovered from its own
     * min_* schema — THE definition, shared with
     * [[StarBuilder.compactVersioned]]'s regeneration so the append
-    * guard and the repack can never disagree on what a manifest
+    * guard and the rewrite can never disagree on what a manifest
     * covers. */
   private[etl] def statsColsOf(manifestColumns: Seq[String]): Seq[String] =
     manifestColumns.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
@@ -146,8 +157,7 @@ object DataSkipping {
   def statsManifest(spark: SparkSession, tableDir: String): DataFrame = {
     require(new java.io.File(s"$tableDir/_idx/stats").isDirectory,
       s"no stats manifest under $tableDir — writeStats was never run " +
-        "(or a repack dropped it; compactVersioned regenerates stats, " +
-        "in-place Compact.compact does not)")
+        "(or a rewrite outside compactVersioned, which regenerates it, dropped it)")
     spark.read.parquet(s"$tableDir/_idx/stats")
   }
 
@@ -282,7 +292,7 @@ object DataSkipping {
       keys: Seq[String]): Seq[String] = {
     require(new java.io.File(s"$tableDir/_idx/bloom").isDirectory,
       s"no bloom sidecar under $tableDir — writeBloom was never run " +
-        "(a repack invalidates it; rebuild with the table, the serving-index rule)")
+        "(a rewrite invalidates it; rebuild with the table, the serving-index rule)")
     import spark.implicits._
     val probes = keys.toDF("k")
       .select(col("k"), explode(bloomPositions(col("k"))).as("pos"))

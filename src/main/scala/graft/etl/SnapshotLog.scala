@@ -13,7 +13,7 @@ import java.io.File
   *    ever resolves;
   *  - `_log/txn.<stream>.<batch>` — the streaming txn ledger;
   *  - `.txn_<uuid>/` — a writer-private staging dir, invisible to
-  *    readers, [[Compact.leafDirs]] and the log scan.
+  *    readers, the [[DataSkipping.leaves]] walk and the log scan.
   * A commit stages its content, CLAIMS the version name through the
   * [[CommitProtocol]] seam, then creates the marker create-if-absent,
   * so every crash window leaves the previous committed version live:
@@ -120,7 +120,7 @@ object SnapshotLog {
     val txn = new File(root, s"$stagingPrefix${java.util.UUID.randomUUID}")
     txn.mkdirs()
     try write(txn)
-    catch { case e: Throwable => Compact.deleteRecursively(txn); throw e }
+    catch { case e: Throwable => deleteRecursively(txn); throw e }
     txn
   }
 
@@ -145,7 +145,7 @@ object SnapshotLog {
   def commitExactly(root: String, v: Long)(write: File => Unit): Long = {
     val txn = stage(root)(write)
     if (!protocol.claimVersion(txn, versionDir(root, v))) {
-      Compact.deleteRecursively(txn)
+      deleteRecursively(txn)
       throw new java.util.ConcurrentModificationException(
         if (committedVersions(root).contains(v))
           s"version $v of $root was committed by a concurrent writer " +
@@ -180,13 +180,13 @@ object SnapshotLog {
   def recoverUncommitted(root: String): Seq[Long] = {
     val entries = Option(new File(root).listFiles()).getOrElse(Array.empty)
     entries.filter(d => d.isDirectory && d.getName.startsWith(stagingPrefix))
-      .foreach(Compact.deleteRecursively)
+      .foreach(deleteRecursively)
     val committed = committedVersions(root).toSet
     entries
       .filter(d => d.isDirectory && d.getName.matches("^v=[0-9]+$"))
       .map(d => d -> d.getName.stripPrefix("v=").toLong)
       .filterNot { case (_, v) => committed(v) }
-      .map { case (d, v) => Compact.deleteRecursively(d); v }
+      .map { case (d, v) => deleteRecursively(d); v }
       .sorted.toSeq
   }
 
@@ -201,9 +201,16 @@ object SnapshotLog {
     val drop = committedVersions(root).dropRight(keep)
     drop.foreach { v =>
       java.nio.file.Files.deleteIfExists(marker(root, v).toPath)
-      Compact.deleteRecursively(versionDir(root, v))
+      deleteRecursively(versionDir(root, v))
     }
     drop
+  }
+
+  /** Delete `f` and everything under it, best effort — the one delete
+    * for staging dirs, orphans, vacuumed versions and index sidecars. */
+  private[graft] def deleteRecursively(f: File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
+    f.delete()
   }
 
   // ---- streaming-transaction ledger ----

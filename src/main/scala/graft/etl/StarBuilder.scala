@@ -290,18 +290,21 @@ object StarBuilder {
     SnapshotLog.commitExactly(warehouse, v + 1)(build(src, _))
   }
 
-  /** Copy-on-write snapshot compaction — OPTIMIZE as a COMMIT instead
-    * of an in-place rewrite: bin-pack the latest committed snapshot's
-    * tables into a NEW version directory and commit it through the
-    * same marker protocol, so a reader of "latest" sees either the old
-    * snapshot or the fully-committed compacted one — never the
-    * intermediate state the in-place [[Compact.compact]] documents as
-    * its caveat (and version pins keep working: the source snapshot is
-    * untouched). Each partition leaf keeps its relative path
-    * (`fact_nilai_mk/tahun=…` stays that leaf); leaves already at or
-    * under the ⌈Σbytes/target⌉ count are byte-copied without
-    * decode/re-encode, fragmented ones repacked with [[Compact]]'s
-    * formula. Returns the committed new version. */
+  /** Copy-on-write snapshot compaction — OPTIMIZE as a COMMIT: the
+    * latest committed snapshot's tables land in a NEW version directory
+    * committed through the same marker protocol, so a reader of
+    * "latest" sees either the old snapshot or the fully-committed
+    * compacted one, and version pins keep working (the source snapshot
+    * is untouched). One decision per table:
+    *  - CARRY: no deletion vector, and every partition leaf already at
+    *    or under ⌈leaf bytes / target⌉ files — the table is byte-copied,
+    *    sidecars included, with no decode/re-encode;
+    *  - REWRITE: every other table, through [[rewriteTable]] — deletes
+    *    materialize, the `k=v` layout is kept, a stats-carrying table is
+    *    re-clustered on its stats columns so file-level skipping
+    *    survives (and tightens again after appends), and the stats and
+    *    bloom sidecars are regenerated over the new files.
+    * Returns the committed new version. */
   def compactVersioned(spark: SparkSession, warehouse: String,
       targetBytes: Long, blockSize: Int = 128 * 1024 * 1024): Long =
     // compaction derives from the latest: same lost-update rule as deleteWhere
@@ -310,79 +313,80 @@ object StarBuilder {
         .filter(d => d.isDirectory &&
           !d.getName.startsWith("_") && !d.getName.startsWith("."))
       tables.foreach { t =>
-        if (dvDir(srcRoot, t.getName).isDirectory) {
-          // a deletion-vector sidecar addresses rows by (file, position):
-          // any repack would break those addresses, so compaction is where
-          // deletes MATERIALIZE — rewrite the live view, drop the sidecar.
-          // Output sizing scales the physical bytes by the live-row
-          // fraction (a mostly-deleted table must not keep its pre-delete
-          // file count), and a `k=v` directory layout is preserved via
-          // partitionBy so partition pruning survives the rewrite.
-          val leaves = Compact.leafDirs(t)
-          val bytes = leaves.flatMap(l => Compact.dataFiles(l)).map(_.length()).sum
-          val partCols = srcRoot.toPath.relativize(leaves.head.toPath).toString
-            .split("/").drop(1).filter(_.contains("=")).map(_.split("=", 2)(0)).toSeq
-          // mergeSchema: a DV-carrying table that also evolved by append
-          // must materialize the UNION schema in the rewrite, not whichever
-          // footer schema inference happens to pick (Compact.packInto
-          // carries the same guard on the no-DV path)
-          val live = graft.Ckpt.eager(
-            applyDv(spark, srcRoot, t.getName, mergeSchema = true))
-          val physRows = math.max(1L, spark.read.parquet(t.toString).count())
-          val liveRows = live.count()
-          // double arithmetic: bytes × rows overflows Long at the 100 TB
-          // scale this exists for (2e11 bytes × 5e7 rows > Long.MaxValue)
-          val liveBytes = bytes.toDouble * liveRows / physRows
-          val nOut = math.max(1L, math.ceil(liveBytes / targetBytes).toLong).toInt
-          if (liveRows == 0L)
-            // a fully-deleted table: dynamic partitionBy of an empty frame
-            // writes NO schema-bearing file (the dir would be unreadable);
-            // the plain write leaves one empty schema file
-            live.write.mode("overwrite").parquet(new java.io.File(txn, t.getName).toString)
-          else if (partCols.isEmpty)
-            live.repartition(nOut).write.mode("overwrite")
-              .option("parquet.block.size", blockSize.toString)
-              .parquet(new java.io.File(txn, t.getName).toString)
-          else {
-            // one task per partition value keeps rows with their leaf; the
-            // per-file row cap re-establishes target-sized files WITHIN a
-            // big leaf (compaction-throughput, not query-path, parallelism)
-            val rowsPerFile = math.max(1L,
-              (targetBytes / math.max(1.0, bytes.toDouble / physRows)).toLong)
-            live.repartition(partCols.map(col): _*)
-              .write.mode("overwrite")
-              .option("parquet.block.size", blockSize.toString)
-              .option("maxRecordsPerFile", rowsPerFile.toString)
-              .partitionBy(partCols: _*)
-              .parquet(new java.io.File(txn, t.getName).toString)
-          }
-        } else Compact.leafDirs(t).foreach { leaf =>
-          val rel = srcRoot.toPath.relativize(leaf.toPath).toString
-          Compact.packInto(spark, leaf, new java.io.File(txn, rel), targetBytes, blockSize)
+        val out = new java.io.File(txn, t.getName)
+        val leaves = DataSkipping.leaves(t)
+        val atTarget = leaves.forall { case (_, fs) =>
+          fs.length <= math.max(1L, (fs.map(_.length()).sum + targetBytes - 1) / targetBytes)
         }
-        // a stats manifest addresses files BY NAME: any repack leaves it
-        // pointing at files that no longer exist, so the compacted
-        // snapshot regenerates its manifest before the commit (stats
-        // columns are recoverable from the manifest's own min_* schema).
-        // Cheap next to the repack itself, and atomic with it — readers
-        // resolve either (old files, old stats) or (new files, new
-        // stats), never a mix.
-        val srcStats = new java.io.File(t, "_idx/stats")
-        if (srcStats.isDirectory) {
-          val cols = DataSkipping.statsColsOf(
-            spark.read.parquet(srcStats.toString).columns.toIndexedSeq)
-          DataSkipping.writeStats(spark, new java.io.File(txn, t.getName).toString, cols)
-        }
-        // the bloom sidecar addresses files by name too; its key column is
-        // pinned in the manifest itself (`key_col` rides every row), so the
-        // compacted snapshot regenerates it with the same atomicity (r10 —
-        // closes the r9 "bloom follows the serving-index rebuild rule"
-        // limitation for warehouse tables)
-        if (new java.io.File(t, "_idx/bloom").isDirectory)
-          DataSkipping.writeBloom(spark, new java.io.File(txn, t.getName).toString,
-            DataSkipping.bloomKeyCol(spark, t.toString))
+        if (atTarget && !dvDir(srcRoot, t.getName).isDirectory) copyTree(t, out)
+        else rewriteTable(spark, srcRoot, t, out, leaves, targetBytes, blockSize)
       }
     }
+
+  /** [[compactVersioned]]'s rewrite of table `t` of snapshot `srcRoot`
+    * into `out`: the live rows (a deletion vector addresses rows by
+    * (file, position), which any rewrite breaks, so deletes MATERIALIZE
+    * here and the sidecar is dropped) at ⌈live bytes / target⌉ files. */
+  private def rewriteTable(spark: SparkSession, srcRoot: java.io.File,
+      t: java.io.File, out: java.io.File,
+      leaves: Seq[(java.io.File, Seq[java.io.File])],
+      targetBytes: Long, blockSize: Int): Unit = {
+    val bytes = leaves.flatMap(_._2).map(_.length()).sum
+    val partCols = t.toPath.relativize(leaves.head._1.toPath).toString
+      .split("/").filter(_.contains("=")).map(_.split("=", 2)(0)).toSeq
+    // mergeSchema: after a schema evolution by append the table holds
+    // MIXED footers; the rewrite must materialize the UNION schema (nulls
+    // where a file predates a column), not whichever footer schema
+    // inference happens to pick — the Delta OPTIMIZE semantic
+    val live = applyDv(spark, srcRoot, t.getName, mergeSchema = true)
+    val physRows = math.max(1L, spark.read.parquet(t.toString).count())
+    val liveRows =
+      if (dvDir(srcRoot, t.getName).isDirectory) live.count() else physRows
+    // output sizing scales the physical bytes by the live-row fraction (a
+    // mostly-deleted table must not keep its pre-delete file count);
+    // double arithmetic: bytes × rows overflows Long at the 100 TB scale
+    // this exists for (2e11 bytes × 5e7 rows > Long.MaxValue)
+    val nOut = math.max(1L,
+      math.ceil(bytes.toDouble * liveRows / physRows / targetBytes).toLong).toInt
+    // a stats manifest is only useful over files clustered on its
+    // columns (disjoint intervals): re-cluster on them, recovered from
+    // the manifest's own min_* schema
+    val stats = new java.io.File(t, "_idx/stats")
+    val sortBy = if (!stats.isDirectory) Nil else DataSkipping.statsColsOf(
+      spark.read.parquet(stats.toString).columns.toIndexedSeq)
+    if (liveRows == 0L)
+      // a fully-deleted table: dynamic partitionBy of an empty frame
+      // writes NO schema-bearing file (the dir would be unreadable); the
+      // plain write leaves one empty schema file
+      live.write.mode("overwrite").parquet(out.toString)
+    else if (partCols.nonEmpty) {
+      // one task per partition value keeps rows with their leaf; the
+      // per-file row cap re-establishes target-sized files WITHIN a big
+      // leaf (compaction-throughput, not query-path, parallelism)
+      val rowsPerFile = math.max(1L,
+        (targetBytes / math.max(1.0, bytes.toDouble / physRows)).toLong)
+      live.repartition(partCols.map(col): _*)
+        .sortWithinPartitions((partCols ++ sortBy).map(col): _*)
+        .write.mode("overwrite")
+        .option("parquet.block.size", blockSize.toString)
+        .option("maxRecordsPerFile", rowsPerFile.toString)
+        .partitionBy(partCols: _*)
+        .parquet(out.toString)
+    } else if (sortBy.nonEmpty)
+      writeClustered(live, sortBy.map(col), out.toString, blockSize, files = nOut)
+    else
+      live.repartition(nOut).write.mode("overwrite")
+        .option("parquet.block.size", blockSize.toString)
+        .parquet(out.toString)
+    // both sidecars address files BY NAME, so the rewrite regenerates
+    // them before the commit — readers resolve either (old files, old
+    // sidecars) or (new files, new sidecars), never a mix. The bloom key
+    // column is pinned in the sidecar itself (`key_col` rides every row).
+    if (sortBy.nonEmpty) DataSkipping.writeStats(spark, out.toString, sortBy)
+    if (new java.io.File(t, "_idx/bloom").isDirectory)
+      DataSkipping.writeBloom(spark, out.toString,
+        DataSkipping.bloomKeyCol(spark, t.toString))
+  }
 
   /** Retention sweep ([[SnapshotLog.vacuum]]): keep the newest `keep`
     * committed versions, drop the rest marker-first. Returns the dropped
@@ -418,7 +422,7 @@ object StarBuilder {
 
   /** The sidecar lives BESIDE the table dir (`v=<n>/_dv/<table>/`), not
     * inside it: the snapshot-root `_dv` prefix keeps it out of every
-    * table scan and [[Compact.leafDirs]] walk, while the explicit read
+    * table scan and [[compactVersioned]]'s table list, while the explicit read
     * path `.../_dv/<table>` has a clean basename so the sidecar itself
     * reads as a normal parquet table. */
   private def dvDir(versionRoot: java.io.File, table: String) =
@@ -433,12 +437,12 @@ object StarBuilder {
     * is exactly the row address an Iceberg v2 position-delete / Delta
     * deletion vector records. */
   private def withRowId(spark: SparkSession, versionRoot: java.io.File,
-      table: String, mergeSchema: Boolean = false): DataFrame =
-    spark.read.option("mergeSchema", mergeSchema)
-      .parquet(new java.io.File(versionRoot, table).toString).select(col("*"),
-      regexp_extract(col("_metadata.file_path"),
-        "/v=[0-9]+/" + java.util.regex.Pattern.quote(table) + "/(.*)$", 1).as("_file"),
+      table: String, mergeSchema: Boolean = false): DataFrame = {
+    val tableDir = new java.io.File(versionRoot, table).toString
+    spark.read.option("mergeSchema", mergeSchema).parquet(tableDir).select(col("*"),
+      DataSkipping.relFile(tableDir).as("_file"),
       col("_metadata.row_index").as("_pos"))
+  }
 
   /** The live rows of a (possibly DV-carrying) table, still carrying
     * their `_file`/`_pos` row addresses: base rows anti-joined against
@@ -479,8 +483,8 @@ object StarBuilder {
     * `_`-prefixed sidecar is invisible to plain parquet readers, which
     * therefore see all physical rows — use the log-resolved path);
     * pinned versions are untouched, and [[compactVersioned]] folds the
-    * sidecar into a real rewrite ([[Compact]] would otherwise break
-    * the file-relative row addresses). Returns the committed version. */
+    * sidecar into a real rewrite of the table (it never carries a
+    * DV-carrying table as-is). Returns the committed version. */
   def deleteWhere(spark: SparkSession, warehouse: String, table: String,
       predicate: Column): Long = {
     import spark.implicits._
@@ -1376,18 +1380,19 @@ object StarBuilder {
     else writeClustered(fact.repartition(4, col("course")), Nil, out, blockSize)
   }
 
-  /** The clustered write every layout above shares: range-partition
-    * `df` 4 ways on `key` and sort within each task (an empty `key`
-    * keeps `df`'s own layout), with the row-group size-check interval
-    * pinned (the default adapts 100→10000 rows on the previous group's
-    * average row width): flush points — and so the row-group min/max
-    * stats the skip measurements assert on — become a deterministic
-    * function of the rows alone (adaptive check intervals made the 2×
-    * sorted-vs-unsorted skip margin flaky). */
+  /** The clustered write every layout above (and [[rewriteTable]])
+    * shares: range-partition `df` `files` ways on `key` and sort within
+    * each task (an empty `key` keeps `df`'s own layout), with the
+    * row-group size-check interval pinned (the default adapts
+    * 100→10000 rows on the previous group's average row width): flush
+    * points — and so the row-group min/max stats the skip measurements
+    * assert on — become a deterministic function of the rows alone
+    * (adaptive check intervals made the 2× sorted-vs-unsorted skip
+    * margin flaky). */
   private def writeClustered(df: DataFrame, key: Seq[Column], out: String,
-      blockSize: Int, mode: String = "overwrite"): Unit =
+      blockSize: Int, mode: String = "overwrite", files: Int = 4): Unit =
     (if (key.isEmpty) df
-     else df.repartitionByRange(4, key: _*).sortWithinPartitions(key: _*))
+     else df.repartitionByRange(files, key: _*).sortWithinPartitions(key: _*))
       .write.mode(mode)
       .option("parquet.block.size", blockSize.toString)
       .option("parquet.block.size.row.check.min", "100")

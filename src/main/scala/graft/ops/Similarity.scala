@@ -641,7 +641,7 @@ object Similarity {
     * between publish and clear leaves conservative over-suppression
     * until the retry, never a resurrected erased vector. */
   private def clearDv(index: String): Unit =
-    graft.etl.Compact.deleteRecursively(new java.io.File(s"$index/_dv"))
+    graft.etl.SnapshotLog.deleteRecursively(new java.io.File(s"$index/_dv"))
 
   /** (query_id, qv, qn, c_id): each query's `nprobe` nearest codebook
     * entries — [[rankAgainstScored]] with the (query_id, qv, qn) queries

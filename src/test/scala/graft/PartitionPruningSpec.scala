@@ -382,63 +382,69 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     info(f"time pred:    z=$zTime bystudent=$oneTime (selected $zTimeSel, total $total)")
   }
 
-  test("compact bin-packs each partition's small files, contents identical") {
+  /** The data files of a table dir (sidecars under `_idx` excluded),
+    * keyed by their path relative to it. */
+  private def tableDataFiles(dir: java.io.File): Map[String, java.io.File] =
+    parquetFiles(dir).filter { case (rel, _) => !rel.startsWith("_") }
+
+  test("compactVersioned re-clusters an appended stats table: disjoint intervals, narrow band prunes") {
     import spark.implicits._
-    import graft.etl.Compact
-    val root = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    // two partition values, fragmented into 6 files each — the
-    // accumulation pattern of per-increment appends
-    (1L to 600L).map(i => (i, s"val_$i", if (i % 2 == 0) "a" else "b"))
-      .toDF("id", "payload", "p")
-      .repartition(6)
-      .write.mode("overwrite").partitionBy("p").parquet(root)
-    def filesPerPartition: Map[String, Array[java.io.File]] =
-      new java.io.File(root).listFiles().filter(_.getName.startsWith("p="))
-        .map(d => d.getName ->
-          d.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet")))
-        .toMap
-    // counts AND bytes captured eagerly — the files are deleted by the
-    // compaction, after which File.length() silently reports 0
-    val before: Map[String, (Int, Long)] = filesPerPartition.map {
-      case (p, fs) => p -> ((fs.length, fs.map(_.length()).sum))
+    import graft.etl.DataSkipping
+    val wh = java.nio.file.Files.createTempDirectory("graft_cvclust").toString
+    // four batches interleaved on id (batch k holds the ids ≡ k mod 4):
+    // each commit is clustered only among its own files, so after the
+    // appends every band overlaps one file of each batch
+    def batch(k: Int) = (1L to 16000L).filter(_ % 4 == k)
+      .map(i => (i, s"p_$i")).toDF("id", "payload")
+    StarBuilder.writeTableVersionedStats(batch(0), wh, "t",
+      sortBy = Seq("id"), statsCols = Seq("id"))
+    (1 to 3).foreach(k => StarBuilder.appendTableVersionedStats(batch(k), wh, "t",
+      sortBy = Seq("id"), statsCols = Seq("id")))
+    val t1 = new java.io.File(liveEpoch(wh), "t")
+    val files1 = tableDataFiles(t1)
+    assert(files1.size == 16)
+    // a target of a quarter of the table's bytes asks for ≥ 2 files
+    val target = files1.values.map(_.length()).sum / 4
+    StarBuilder.compactVersioned(spark, wh, target)
+    val t2 = new java.io.File(liveEpoch(wh), "t")
+    val n2 = tableDataFiles(t2).size
+    assert(n2 >= 2 && n2 < files1.size, s"compacted to $n2 files")
+    // the regenerated manifest covers every row, and its [min, max]
+    // intervals are disjoint: the rewrite is range-clustered on the
+    // manifest's own stats column
+    val m2 = DataSkipping.statsManifest(spark, t2.toString).collect()
+      .map(r => (r.getAs[Long]("min_id"), r.getAs[Long]("max_id"), r.getAs[Long]("n_rows")))
+      .sortBy(_._1)
+    assert(m2.length == n2 && m2.map(_._3).sum == 16000L)
+    m2.sliding(2).foreach { case Array(a, b) =>
+      assert(a._2 < b._1, s"overlapping intervals: ${m2.mkString(" ")}")
     }
-    assert(before.values.forall(_._1 == 6))
-    val rowsBefore = spark.read.parquet(root).collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[String]("payload"), r.getAs[String]("p")))
-      .sorted.toSeq
-    // target ≈ half of each partition's bytes → expect ceil(bytes/target)
-    // files per partition, computed by the same formula the spec states
-    val target = before.values.map(_._2).max / 2 + 1
-    val results = Compact.compact(spark, root, target)
-    val after = filesPerPartition
-    before.foreach { case (p, (n, bytes)) =>
-      val expected = math.max(1L, (bytes + target - 1) / target).toInt
-      assert(after(p).length == expected,
-        s"$p: ${after(p).length} files, expected $expected")
-      assert(after(p).length < n)
-    }
-    assert(results.map(_.dir).toSet.size == 2)
-    // contents survive byte-for-byte (as rows)
-    val rowsAfter = spark.read.parquet(root).collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[String]("payload"), r.getAs[String]("p")))
-      .sorted.toSeq
-    assert(rowsAfter == rowsBefore)
-    // idempotent: a second pass at the same target touches nothing
-    assert(Compact.compact(spark, root, target).isEmpty)
+    // so a narrow band opens fewer files than the table has, and the
+    // pruned read serves exactly the band
+    val pruned = DataSkipping.prunedFiles(spark, t2.toString, "id", 8000L, 8009L)
+    assert(pruned.nonEmpty && pruned.length < n2,
+      s"no file skip after compaction: ${pruned.length} of $n2 files")
+    assert(StarBuilder.readAtPruned(spark, wh, "t", "id", 8000L, 8009L)
+      .where(col("id").between(8000L, 8009L)).select("id").as[Long]
+      .collect().sorted.toSeq == (8000L to 8009L))
   }
 
   test("row-group skip survives compaction of a clustered table") {
-    import graft.etl.{Compact, StarBuilder}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.functions.{hash, lit, pmod}
     val sfDir = "/root/testdata/sf0.001"
     val base = java.nio.file.Files.createTempDirectory("graft_compact_cl").toString
+    val wh = s"$base/wh"
     val blockSize = 64 * 1024
-    // a fragmented clustered table: 12 small student-sorted files (the
-    // state after many clustered increments), plus the unsorted control
-    StarBuilder.factNilaiMk(spark, sfDir)
-      .repartitionByRange(12, col("student")).sortWithinPartitions("student")
-      .write.option("parquet.block.size", blockSize.toString)
-      .parquet(s"$base/clustered")
+    // a fragmented clustered table: 3 student-clustered commits of 4
+    // files each (the state after many clustered increments), plus the
+    // unsorted control
+    val fact = StarBuilder.factNilaiMk(spark, sfDir)
+    def batch(k: Int) = fact.where(pmod(hash(col("course")), lit(3)) === k)
+    StarBuilder.writeTableVersionedStats(batch(0), wh, "fact",
+      sortBy = Seq("student"), statsCols = Seq("student"), blockSize = blockSize)
+    (1 to 2).foreach(k => StarBuilder.appendTableVersionedStats(batch(k), wh, "fact",
+      sortBy = Seq("student"), statsCols = Seq("student"), blockSize = blockSize))
     StarBuilder.writeFactClustered(spark, sfDir, s"$base/unsorted", sorted = false, blockSize)
     def scanRows(dir: String, pred: org.apache.spark.sql.Column): Long = {
       val df = spark.read.parquet(dir).where(pred)
@@ -450,31 +456,79 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
       finalPlan.collectFirst { case f: FileSourceScanExec => f }
         .getOrElse(fail(s"no FileSourceScanExec under $dir")).metrics("numOutputRows").value
     }
-    val r = spark.read.parquet(s"$base/clustered")
+    def factDir = new java.io.File(liveEpoch(wh), "fact")
+    val r = spark.read.parquet(factDir.toString)
       .agg(org.apache.spark.sql.functions.min("student"),
         org.apache.spark.sql.functions.max("student")).head()
     val (mn, mx) = (r.getLong(0), r.getLong(1))
     val pred = col("student").between(mn + (mx - mn) * 45 / 100, mn + (mx - mn) * 50 / 100)
-    val skipBefore = scanRows(s"$base/clustered", pred)
-    def fileCount = new java.io.File(s"$base/clustered")
-      .listFiles().count(f => f.isFile && f.getName.endsWith(".parquet"))
-    val nBefore = fileCount
+    val skipBefore = scanRows(factDir.toString, pred)
+    val rowsBefore = spark.read.parquet(factDir.toString).count()
+    val nBefore = tableDataFiles(factDir).size
     assert(nBefore == 12)
-    // pack ~4:1, re-sorting on the cluster key
-    val target = new java.io.File(s"$base/clustered").listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.length()).sum / 3
-    val res = Compact.compact(spark, s"$base/clustered", target,
-      sortBy = Seq("student"), blockSize = blockSize)
-    assert(res.exists(_.dir.endsWith("clustered")))
-    assert(fileCount < nBefore)
-    val skipAfter = scanRows(s"$base/clustered", pred)
+    // pack ~4:1; the rewrite re-sorts on the manifest's cluster key
+    val target = tableDataFiles(factDir).values.map(_.length()).sum / 3
+    StarBuilder.compactVersioned(spark, wh, target, blockSize = blockSize)
+    val nAfter = tableDataFiles(factDir).size
+    assert(nAfter < nBefore)
+    assert(spark.read.parquet(factDir.toString).count() == rowsBefore)
+    val skipAfter = scanRows(factDir.toString, pred)
     val unsortedScan = scanRows(s"$base/unsorted", pred)
     // clustering survives: the compacted table still skips ≥ 2× vs the
     // uncorrelated layout on the same predicate
     assert(skipAfter * 2 <= unsortedScan,
       s"compaction destroyed clustering: $skipAfter vs unsorted $unsortedScan")
-    info(s"files $nBefore→$fileCount; scan rows before=$skipBefore after=$skipAfter " +
+    info(s"files $nBefore→$nAfter; scan rows before=$skipBefore after=$skipAfter " +
       s"unsorted=$unsortedScan")
+  }
+
+  test("compactVersioned carries a table already at target byte-for-byte, sidecars included") {
+    import spark.implicits._
+    import graft.etl.DataSkipping
+    val wh = java.nio.file.Files.createTempDirectory("graft_cvcarry").toString
+    val v1 = StarBuilder.writeTableVersionedStats(
+      (1L to 400L).map(i => (i, s"k_$i")).toDF("id", "key"), wh, "t",
+      sortBy = Seq("id"), statsCols = Seq("id"), blockSize = 64 * 1024)
+    val t1 = new java.io.File(s"$wh/v=$v1/t")
+    DataSkipping.writeBloom(spark, t1.toString, "key")
+    // the smallest file as the target: ⌈bytes/target⌉ ≥ the file count
+    val target = tableDataFiles(t1).values.map(_.length()).min
+    val v2 = StarBuilder.compactVersioned(spark, wh, target)
+    val t2 = new java.io.File(s"$wh/v=$v2/t")
+    // data files and both sidecars' part files are byte-copies
+    val before = md5s(t1)
+    assert(before.keys.exists(_.startsWith("_idx/stats/")) &&
+      before.keys.exists(_.startsWith("_idx/bloom/")))
+    assert(md5s(t2) == before)
+    // and the carried manifest still prunes the new version's reads
+    val nFiles = tableDataFiles(t2).size
+    val pruned = DataSkipping.prunedFiles(spark, t2.toString, "id", 50L, 60L)
+    assert(pruned.nonEmpty && pruned.length < nFiles)
+    assert(StarBuilder.readAtPruned(spark, wh, "t", "id", 50L, 60L)
+      .where(col("id").between(50L, 60L)).select("id").as[Long]
+      .collect().sorted.toSeq == (50L to 60L))
+  }
+
+  test("a stats table under a directory named like the table serves pruned reads after an append") {
+    import spark.implicits._
+    import graft.etl.DataSkipping
+    // the warehouse lives under an ancestor that shares the table's name:
+    // every sidecar must still name files relative to the table root
+    val wh = new java.io.File(
+      java.nio.file.Files.createTempDirectory("graft_samename").toFile, "t/wh").toString
+    StarBuilder.writeTableVersionedStats(
+      (1L to 400L).map(i => (i, s"p_$i")).toDF("id", "payload"), wh, "t",
+      sortBy = Seq("id"), statsCols = Seq("id"))
+    StarBuilder.appendTableVersionedStats(
+      (401L to 500L).map(i => (i, s"p_$i")).toDF("id", "payload"), wh, "t",
+      sortBy = Seq("id"), statsCols = Seq("id"))
+    assert(StarBuilder.readAtPruned(spark, wh, "t", "id", 390L, 420L)
+      .where(col("id").between(390L, 420L)).select("id").as[Long]
+      .collect().sorted.toSeq == (390L to 420L))
+    val t2 = new java.io.File(liveEpoch(wh), "t")
+    val manifestFiles = DataSkipping.statsManifest(spark, t2.toString).collect()
+      .map(_.getAs[String]("file")).toSet
+    assert(manifestFiles == tableDataFiles(t2).keySet)
   }
 
   test("stats manifest prunes files at planning time; compaction regenerates it") {
