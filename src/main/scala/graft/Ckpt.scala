@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Deterministic lifecycle for PER-QUERY eager local checkpoints — the
   * r13 "orphaned checkpoint blocks" fix, at the cause instead of the
@@ -53,6 +54,12 @@ import scala.collection.mutable.ArrayBuffer
   * session).
   */
 private[graft] object Ckpt {
+  /** A driver-sized frame collected into a local relation: reading it
+    * back (or a projection of it) runs no job. Not registered — the
+    * rows live on the driver heap, not in the block store. */
+  def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
   private final case class Scope(session: SparkSession, threadId: Long)
 
   /** A scope's frames plus a weak ref to the OWNING thread — the weak

@@ -2,6 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 /** SHARED log-structured (LSM) maintenance for the engine's persisted
@@ -33,6 +35,12 @@ import scala.jdk.CollectionConverters._
   * ([[prunedRead]]), so a search reads only its keys' directories
   * (the IVF "nprobe directories" story).
   *
+  * EPOCH MEMO (the Delta rule: a snapshot's state is built once per log
+  * version): every read resolves the live epoch through [[scanLive]], which
+  * infers the schema — and, for a single-file layout, loads the rows —
+  * once per (session, layout path) and serves later reads from memory
+  * until an append, rebuild or compaction changes the key.
+  *
   * CRASH SAFETY is the log's (see [[SnapshotLog]]): the live epoch's
   * files are only READ until the successor's marker exists, and
   * superseded epochs are vacuumed marker-first after it. Maintenance
@@ -54,6 +62,34 @@ object LsmIndex {
   /** The live (highest-committed) epoch directory every read resolves. */
   private[etl] def liveDir(layout: Layout): String =
     SnapshotLog.versionDir(layout.path, SnapshotLog.resolve(layout.path)).toString
+
+  /** One resolved live epoch per (session, layout path): its key, its
+    * schema (reads scan with it and infer nothing) and, for a
+    * single-file layout, its rows as a driver-side local relation. The
+    * key is (epoch dir, marker commit instant, sorted `gen=` listing): a
+    * rebuild or compaction moves the dir (or, after the artifact is
+    * deleted and rebuilt, the instant) and an append adds a generation,
+    * so each misses the memo. */
+  private val epochs = TrieMap.empty[(SparkSession, String),
+    ((String, Long, Seq[String]), StructType, Option[DataFrame])]
+
+  /** Every generation of the live epoch, partition columns kept — or
+    * only those under the `subdirs` that exist, so a probe lists just
+    * its buckets' directories (partition discovery over every bucket
+    * would list them all, in a Spark job past 32 directories). */
+  private def scanLive(s: SparkSession, layout: Layout,
+      subdirs: Option[Seq[String]] = None): DataFrame = {
+    val v = SnapshotLog.resolve(layout.path)
+    val dir = SnapshotLog.versionDir(layout.path, v).toString
+    val key = (dir, SnapshotLog.commitInstant(layout.path, v), genDirs(dir, layout))
+    val (_, schema, rows) = epochs.updateWith((s, layout.path))(_.filter(_._1 == key).orElse {
+      val df = s.read.parquet(dir)
+      Some((key, df.schema, Option.when(layout.singleFile)(graft.Ckpt.local(df))))
+    }).get
+    val paths = subdirs.fold(Seq(dir))(
+      _.map(sub => s"$dir/$sub").filter(new java.io.File(_).isDirectory))
+    rows.getOrElse(s.read.schema(schema).option("basePath", dir).parquet(paths: _*))
+  }
 
   /** Publish `rows` as the next epoch's gen 0 through [[SnapshotLog]],
     * then vacuum what it superseded. Single-writer maintenance is also
@@ -91,49 +127,50 @@ object LsmIndex {
     * grow: the append throws. */
   def append(rows: DataFrame, layout: Layout): Unit = {
     val live = liveDir(layout)
-    prep(rows, layout, nextGen(live, layout)).write.mode("append")
+    val gens = genDirs(live, layout).map(_.split("gen=").last.toLong)
+    prep(rows, layout, (0L +: gens).max + 1).write.mode("append")
       .partitionBy(layout.partCols: _*).parquet(live)
   }
 
-  /** Highest `gen=N` directory under the live epoch (behind the bucket
-    * level when there is one), plus 1 — at least 1, since 0 is the base. */
-  private def nextGen(live: String, layout: Layout): Long = {
-    val depth = if (layout.bucket.isDefined) 2 else 1
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(live), depth)
-    try {
-      val gens = walk.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("gen=") => n.stripPrefix("gen=").toLong }
-      (0L +: gens.toSeq).max + 1
-    } finally walk.close()
+  /** The `gen=N` directories under an epoch (behind the bucket level
+    * when there is one), as sorted relative paths. */
+  private def genDirs(live: String, layout: Layout): Seq[String] = {
+    val root = java.nio.file.Paths.get(live)
+    val walk = java.nio.file.Files.walk(root, if (layout.bucket.isDefined) 2 else 1)
+    try walk.iterator().asScala.filter(_.getFileName.toString.startsWith("gen="))
+      .map(root.relativize(_).toString).toSeq.sorted
+    finally walk.close()
   }
 
   /** Merge-on-read union over every generation of the live epoch,
     * partition columns dropped — domain folds (occurrence sums, df
     * derivation) stay with the caller, in the same scan that serves. */
   def read(s: SparkSession, layout: Layout): DataFrame =
-    s.read.parquet(liveDir(layout)).drop(layout.partCols: _*)
+    scanLive(s, layout).drop(layout.partCols: _*)
 
   /** All generations WITH the `gen` column (bucket dropped) — the
     * staleness reports' input (what did the appends change?). */
-  def readByGen(s: SparkSession, layout: Layout): DataFrame =
-    layout.bucket.fold(s.read.parquet(liveDir(layout))) { case (name, _) =>
-      s.read.parquet(liveDir(layout)).drop(name)
-    }
+  def readByGen(s: SparkSession, layout: Layout): DataFrame = {
+    val all = scanLive(s, layout)
+    layout.bucket.fold(all) { case (name, _) => all.drop(name) }
+  }
 
-  /** The artifact read scoped to a probe's bucket list — the static
-    * partition filter every serving path pushes into the file scan
+  /** The artifact read scoped to a probe's bucket list — only those
+    * buckets' directories are listed, and the static partition filter
+    * every serving path pushes into the file scan stays on the plan
     * (file-level-pinned in PartitionPruningSpec for both bucketed
     * families). */
   def prunedRead(s: SparkSession, layout: Layout, buckets: Seq[Long]): DataFrame = {
     val (name, _) = layout.bucket.getOrElse(
       throw new IllegalArgumentException(s"${layout.path} has no bucket fan-out"))
-    s.read.parquet(liveDir(layout))
+    scanLive(s, layout, Some(buckets.distinct.map(b => s"$name=$b")))
       .where(col(name).isin(buckets: _*)).drop(layout.partCols: _*)
   }
 
-  /** Driver-side distinct bucket list of a probe frame — bounded by
-    * the probe batch, never the corpus (the Delta-style driver-pruning
-    * pattern every serving path uses). */
+  /** Driver-side distinct bucket list of a distributed probe frame —
+    * bounded by the probe batch, never the corpus (the Delta-style
+    * driver-pruning pattern; one distinct + collect job — the BM25 and
+    * IVF searches compute theirs from local relations and skip it). */
   def probeBuckets(probe: DataFrame, bucketExpr: Column): Seq[Long] =
     probe.select(bucketExpr.as("b")).distinct()
       .collect().map(_.getLong(0)).toSeq

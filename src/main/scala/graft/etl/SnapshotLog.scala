@@ -65,21 +65,25 @@ object SnapshotLog {
     * filter+max resolution in [[versionAsOf]] tolerates the reordering
     * a fallback can introduce). Planning-sized: one row per commit. */
   def history(root: String): Seq[(Long, Long)] =
-    committedVersions(root).map { v =>
-      val f = marker(root, v)
-      val body = try new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim
-      catch { case _: java.io.IOException => "" }
-      // trust the body only when it parses as a PLAUSIBLE epoch-millis
-      // (2001..2099) — a truncated prefix of a current epoch ("17" of
-      // "1723…") has too few digits and falls back to mtime instead of
-      // time-traveling the marker to 1970
-      val epoch =
-        if (body.matches("^[0-9]{12,13}$")) Some(body.toLong).filter(t =>
-          t > 978307200000L && t < 4102444800000L)
-        else None
-      v -> epoch.getOrElse(f.lastModified())
-    }
+    committedVersions(root).map(v => v -> commitInstant(root, v))
+
+  /** Version `v`'s commit epoch-millis, read from its marker (see
+    * [[history]]). */
+  def commitInstant(root: String, v: Long): Long = {
+    val f = marker(root, v)
+    val body = try new String(
+      java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim
+    catch { case _: java.io.IOException => "" }
+    // trust the body only when it parses as a PLAUSIBLE epoch-millis
+    // (2001..2099) — a truncated prefix of a current epoch ("17" of
+    // "1723…") has too few digits and falls back to mtime instead of
+    // time-traveling the marker to 1970
+    val epoch =
+      if (body.matches("^[0-9]{12,13}$")) Some(body.toLong).filter(t =>
+        t > 978307200000L && t < 4102444800000L)
+      else None
+    epoch.getOrElse(f.lastModified())
+  }
 
   /** The version that was LATEST as of `epochMillis` — the highest
     * version whose marker landed at or before the instant. Filter+max,

@@ -74,15 +74,8 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -103,6 +96,19 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** THE interpreted fold — the expression's eval path and the
+    * driver-side probe ranking ([[graft.ops.Similarity]]) both call it,
+    * so a driver-ranked cosine equals the executor-computed one. */
+  def fold(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
+    acc
+  }
 }
 
 /** acc = Σ (a(i) − b(i))², folded left-to-right — bit-equal to the

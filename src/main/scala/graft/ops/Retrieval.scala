@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.etl.Star.{round4, round4Sql}
 
 /** Hybrid retrieval — the rung above per-doc scoring (q94 TF-IDF) that a
@@ -67,22 +69,28 @@ object Retrieval {
     docs.select(size(col("words")).cast("long").as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
 
-  /** (n_corpus, avgdl) from an additive stats frame — THE one place the
-    * avgdl division happens, shared by the in-memory arm and the
-    * file-served index so the double is bit-identical in both. */
-  private def deriveStats(stats: DataFrame): DataFrame =
-    stats.agg(sum(col("n_docs")).as("n_corpus"), sum(col("sum_dl")).as("sdl"))
-      .select(col("n_corpus"),
-        (col("sdl").cast("double") / col("n_corpus").cast("double")).as("avgdl"))
+  /** BM25's corpus constants, driver scalars every scoring expression
+    * inlines as literals: the corpus size and the mean doc length. */
+  private final case class Corpus(n: Long, avgdl: Double)
 
-  /** Session-memoized (one derived row): the cluster analog is the
-    * additive stats table the persisted index stores ([[statsLayout]] —
-    * q161 genuinely reads stats from files every rep; the in-memory
-    * arm should not re-aggregate the corpus for two scalars). */
-  private def corpusStats(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo(s, d, "lex:stats")(
-      deriveStats(statsOf(TextCore.docShingles(s, d))))(
-      _.localCheckpoint(true))
+  /** (n_corpus, avgdl) from an additive stats frame (driver-sized: one
+    * row per generation, read back as a local relation) — THE one place
+    * the avgdl division happens, shared by the in-memory arm and the
+    * file-served index so the double is bit-identical in both (long
+    * sums, then the same IEEE division SQL's double cast performs). */
+  private def deriveStats(stats: DataFrame): Corpus = {
+    val rows = stats.collect()
+    val n = rows.map(_.getAs[Long]("n_docs")).sum
+    Corpus(n, rows.map(_.getAs[Long]("sum_dl")).sum.toDouble / n.toDouble)
+  }
+
+  /** Session-memoized (the additive row as a local relation): the
+    * cluster analog is the additive stats table the persisted index
+    * stores ([[statsLayout]]); the in-memory arm should not
+    * re-aggregate the corpus for two scalars. */
+  private def corpusStats(s: SparkSession, d: String): Corpus =
+    deriveStats(graft.SessionMemo(s, d, "lex:stats")(
+      statsOf(TextCore.docShingles(s, d)))(graft.Ckpt.local))
 
   /** The lexical arm: BM25(k1, b) top-[[lexDepth]] docs per query.
     * Query formulation is the q94 rung composed: each query doc's
@@ -107,19 +115,25 @@ object Retrieval {
   private def lexTopMemo(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "lex:top")(lexTop(s, d))(_.localCheckpoint(true))
 
-  /** df restricted to the query terms: semi-join the postings to the
-    * DISTINCT query-term set (broadcast — bounded by the query set's
-    * vocabulary, a few hundred terms) BEFORE the per-term count, so the
-    * df aggregation's input is the query terms' postings, never the
-    * corpus vocabulary. df per term is exact either way — every posting
+  /** df restricted to the query terms of a distributed (corpus-doc)
+    * query frame: semi-join the postings to the DISTINCT query-term set
+    * (broadcast — bounded by the query set's vocabulary, a few hundred
+    * terms; the free-text path, whose terms are already on the driver,
+    * filters with `isin` instead — [[prunedPostings]]) BEFORE the
+    * per-term count, so the df aggregation's input is the query terms'
+    * postings, never the corpus vocabulary. df per term is exact either way — every posting
     * of a query term survives the semi-join; only never-used terms'
     * rows disappear. At 100 TB this is the difference between
     * aggregating billions of postings into a billions-of-terms df table
     * and aggregating the query terms' posting lists into a
     * query-vocabulary-sized one. */
   private def queryDf(post: DataFrame, qtf: DataFrame): DataFrame =
-    post.join(broadcast(qtf.select("term").distinct()), Seq("term"), "left_semi")
-      .groupBy("term").agg(count(lit(1)).as("df"))
+    termDf(post.join(broadcast(qtf.select("term").distinct()), Seq("term"), "left_semi"))
+
+  /** df per term of a postings frame: its row count (postings are unique
+    * per (doc, term)). */
+  private def termDf(post: DataFrame): DataFrame =
+    post.groupBy("term").agg(count(lit(1)).as("df"))
 
   /** Rank a (query_id, term, tf) frame's terms by q94's tf·N/df and
     * keep the top [[qTerms]] per query — the query-formulation half,
@@ -131,16 +145,27 @@ object Retrieval {
     * downstream scoring never touches a vocabulary-sized frame again:
     * only query terms' df values are ever used. */
   private def rankQueryTerms(qtf: DataFrame, dfreq: DataFrame,
-      stats: DataFrame): DataFrame = {
+      st: Corpus): DataFrame = {
     val wq = Window.partitionBy("query_id")
       .orderBy(col("qscore").desc, col("term").asc)
     broadcast(qtf)
-      .join(dfreq, "term").crossJoin(broadcast(stats))
+      .join(dfreq, "term")
       .withColumn("qscore", col("tf").cast("double") *
-        col("n_corpus").cast("double") / col("df").cast("double"))
+        lit(st.n.toDouble) / col("df").cast("double"))
       .withColumn("q_rank", row_number().over(wq).cast("long"))
       .where(col("q_rank") <= qTerms)
       .select(col("query_id"), col("term"), col("q_rank"), col("df"))
+  }
+
+  /** One posting's BM25(k1v, bv) contribution for its query term —
+    * idf(df)·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)), THE expression every
+    * ranking evaluates (q343 sweeps it over a (k1, b) grid). */
+  private def contribOf(st: Corpus, k1v: Double, bv: Double): Column = {
+    val idf = (lit(st.n.toDouble) - col("df").cast("double") + lit(0.5)) /
+      (col("df").cast("double") + lit(0.5))
+    idf * (col("tf").cast("double") * lit(k1v + 1)) /
+      (col("tf").cast("double") +
+        lit(k1v) * (lit(1.0) - lit(bv) + lit(bv) * col("dl").cast("double") / lit(st.avgdl)))
   }
 
   /** The BM25 scoring half: ranked query terms against the postings —
@@ -149,31 +174,19 @@ object Retrieval {
     * rests on its bit-stability). `qterms` carries each term's df
     * (denormalized by [[rankQueryTerms]]), so the ONLY broadcast here
     * is the ≤ numQueries·[[qTerms]]-row query-term table — the
-    * vocabulary-sized df frame never reaches an exchange. */
-  private def bm25ScoreTerms(post: DataFrame, stats: DataFrame,
-      qterms: DataFrame): DataFrame =
-    bm25ScoreTermsK(post, stats, qterms, qTerms)
-
-  /** [[bm25ScoreTerms]] generalized to `k` per-query term arms — the
-    * PRF-expanded query (q170) scores 5 arms (3 original + 2 expansion)
-    * through the SAME fixed-order chain: the arms sum left-to-right in
-    * q_rank order, so the result stays bit-identical cross-engine at
-    * any k. */
-  private def bm25ScoreTermsK(post: DataFrame, stats: DataFrame,
-      qterms: DataFrame, k: Int): DataFrame = {
-    val idf = (col("n_corpus").cast("double") - col("df").cast("double") + lit(0.5)) /
-      (col("df").cast("double") + lit(0.5))
-    val contrib = idf * (col("tf").cast("double") * lit(k1 + 1)) /
-      (col("tf").cast("double") +
-        lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / col("avgdl")))
+    * vocabulary-sized df frame never reaches an exchange. `k` per-query
+    * term arms: the PRF-expanded query (q170) scores 5 (3 original + 2
+    * expansion) through the SAME fixed-order chain — the arms sum
+    * left-to-right in q_rank order, bit-identical cross-engine at any k. */
+  private def bm25ScoreTerms(post: DataFrame, st: Corpus,
+      qterms: DataFrame, k: Int = qTerms): DataFrame = {
     def arm(r: Int): Column =
       coalesce(max(when(col("q_rank") === r, col("contrib"))), lit(0.0))
     val wl = Window.partitionBy("query_id")
       .orderBy(col("bscore").desc, col("doc_id").asc)
     post.join(broadcast(qterms), "term")
       .where(col("doc_id") =!= col("query_id"))
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib", contrib)
+      .withColumn("contrib", contribOf(st, k1, b))
       .groupBy("query_id", "doc_id")
       .agg((1 to k).map(arm).reduceLeft(_ + _).as("bscore"))
       .withColumn("lex_rank", row_number().over(wl).cast("long"))
@@ -192,7 +205,7 @@ object Retrieval {
       .withColumnRenamed("doc_id", "query_id")
       .select(col("query_id"), col("term"), col("tf"))
 
-  private def bm25Top(post: DataFrame, stats: DataFrame): DataFrame = {
+  private def bm25Top(post: DataFrame, stats: Corpus): DataFrame = {
     val qtf = corpusQtf(post)
     bm25ScoreTerms(post, stats, rankQueryTerms(qtf, queryDf(post, qtf), stats))
   }
@@ -482,6 +495,33 @@ object Retrieval {
     bm25Top(LsmIndex.read(s, postingsLayout(index)),
       deriveStats(LsmIndex.read(s, statsLayout(index))))
 
+  /** (query_id, term, tf) of a driver-sized free-text query batch, as a
+    * local relation: the shared normalize/split chain is evaluated over
+    * the batch (over a local relation that projection runs no job),
+    * empty terms are dropped and tf is counted on the driver. */
+  private[graft] def queryTf(s: SparkSession, queries: DataFrame): DataFrame = {
+    val words = queries.select(col("query_id"),
+      TextCore.wordsCol(TextCore.normCol(col("text"))).as("words"))
+    val tf = words.collect().toSeq.flatMap { r =>
+      Option(r.getSeq[String](1)).toSeq.flatten.filter(_.nonEmpty).map(r.get(0) -> _)
+    }.groupBy(identity).toSeq.map { case ((q, t), n) => Row(q, t, n.size.toLong) }
+    s.createDataFrame(tf.asJava, StructType(Seq(words.schema("query_id"),
+      StructField("term", StringType), StructField("tf", LongType))))
+  }
+
+  /** The postings of a [[queryTf]] frame's terms — their term buckets
+    * pushed down as a static partition filter (computed on the driver by
+    * [[termBucket]] over the local relation; package-visible so the
+    * pruning spec can pin the file-level scan the same way
+    * PartitionPruningSpec pins the IVF probe read), then the terms
+    * themselves as a pushed `isin` filter. */
+  private[graft] def prunedPostings(s: SparkSession, index: String,
+      qtf: DataFrame): DataFrame = {
+    val terms = qtf.select(col("term"), termBucket(col("term"))).collect()
+    LsmIndex.prunedRead(s, postingsLayout(index), terms.map(_.getLong(1)).distinct.toSeq)
+      .where(col("term").isin(terms.map(_.getString(0)).distinct.toSeq: _*))
+  }
+
   /** BM25 top-[[lexDepth]] from the persisted index for FREE-TEXT
     * queries (query_id, text) — the serving entry the streaming twin
     * ([[graft.streaming.EventStream.lexSearchBatch]]) wraps: query
@@ -492,35 +532,17 @@ object Retrieval {
     * A query whose id collides with an indexed doc_id scores without
     * that doc (the corpus path's self-exclusion predicate, kept so the
     * two paths agree exactly on corpus-doc queries — parity
-    * spec-pinned). */
-  /** The postings read scoped to the query terms' buckets — the static
-    * partition filter [[lexIndexSearchText]] serves through (package-
-    * visible so the pruning spec can pin the file-level scan the same
-    * way PartitionPruningSpec pins the IVF probe read). */
-  private[graft] def prunedPostings(s: SparkSession, index: String,
-      queries: DataFrame): DataFrame = {
-    val qterms = queries
-      .select(explode(TextCore.wordsCol(TextCore.normCol(col("text")))).as("term"))
-      .where(col("term") =!= "")
-    LsmIndex.prunedRead(s, postingsLayout(index),
-      LsmIndex.probeBuckets(qterms, termBucket(col("term"))))
-  }
-
+    * spec-pinned). The batch is driver-sized: it is collected once
+    * ([[queryTf]]). */
   def lexIndexSearchText(s: SparkSession, index: String,
       queries: DataFrame): DataFrame = {
-    // push the query terms' buckets down as a static partition filter
-    // (the q37/pqIndexSearch probedBuckets convention — a driver-side
-    // list bounded by the query set's distinct terms): a search reads
-    // only its terms' directories. df over the pruned read is exact —
-    // every posting of a query term lives in that term's bucket.
-    val post = prunedPostings(s, index, queries)
+    // a search reads only its terms' postings: df over them is exact —
+    // every posting of a query term lives in that term's bucket — and
+    // the BM25 join drops every other term's postings anyway
+    val qtf = queryTf(s, queries)
+    val post = prunedPostings(s, index, qtf)
     val stats = deriveStats(LsmIndex.read(s, statsLayout(index)))
-    val qtf = queries
-      .select(col("query_id"),
-        explode(TextCore.wordsCol(TextCore.normCol(col("text")))).as("term"))
-      .where(col("term") =!= "")
-      .groupBy("query_id", "term").agg(count(lit(1)).as("tf"))
-    bm25ScoreTerms(post, stats, rankQueryTerms(qtf, queryDf(post, qtf), stats))
+    bm25ScoreTerms(post, stats, rankQueryTerms(qtf, termDf(post), stats))
   }
 
   /** Major compaction via the shared crash-safe
@@ -692,15 +714,15 @@ object Retrieval {
     val orig = graft.Ckpt.eager(rankQueryTerms(qtf, dfAll, stats))
     val we = Window.partitionBy("query_id")
       .orderBy(col("escore").desc, col("term").asc)
-    val exp = broadcast(candSum).join(dfAll, "term").crossJoin(broadcast(stats))
+    val exp = broadcast(candSum).join(dfAll, "term")
       .withColumn("escore", col("tfsum").cast("double") *
-        col("n_corpus").cast("double") / col("df").cast("double"))
+        lit(stats.n.toDouble) / col("df").cast("double"))
       .join(broadcast(orig.select(col("query_id"), col("term"))),
         Seq("query_id", "term"), "left_anti")
       .withColumn("q_rank", (row_number().over(we) + qTerms).cast("long"))
       .where(col("q_rank") <= qTerms + fbTerms)
       .select(col("query_id"), col("term"), col("q_rank"), col("df"))
-    bm25ScoreTermsK(post, stats, orig.unionByName(exp), qTerms + fbTerms)
+    bm25ScoreTerms(post, stats, orig.unionByName(exp), qTerms + fbTerms)
       .select(col("query_id"), col("lex_rank").as("rank"), col("doc_id"),
         round4(col("bscore")).as("prf_score"))
       .orderBy("query_id", "rank")
@@ -738,20 +760,13 @@ object Retrieval {
       .withColumnRenamed("doc_id", "query_id")
       .select(col("query_id"), col("term"), col("tf"))
     val qterms = rankQueryTerms(qtf, queryDf(post, qtf), stats)
-    val idf = (col("n_corpus").cast("double") - col("df").cast("double") + lit(0.5)) /
-      (col("df").cast("double") + lit(0.5))
-    def contribAt(k1v: Double, bv: Double): Column =
-      idf * (col("tf").cast("double") * lit(k1v + 1)) /
-        (col("tf").cast("double") +
-          lit(k1v) * (lit(1.0) - lit(bv) + lit(bv) * col("dl").cast("double") / col("avgdl")))
     val aggs = bm25Grid.zipWithIndex.map { case ((k1c, bc), i) =>
-      val c = contribAt(k1c / 100.0, bc / 100.0)
+      val c = contribOf(stats, k1c / 100.0, bc / 100.0)
       (1 to qTerms).map(r => coalesce(max(when(col("q_rank") === r, c)), lit(0.0)))
         .reduceLeft(_ + _).as(s"s_$i")
     }
     val scored = post.join(broadcast(qterms), "term")
       .where(col("doc_id") =!= col("query_id"))
-      .crossJoin(broadcast(stats))
       .groupBy("query_id", "doc_id")
       .agg(aggs.head, aggs.tail: _*)
     val stackArgs = bm25Grid.indices

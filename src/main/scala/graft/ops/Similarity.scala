@@ -515,8 +515,8 @@ object Similarity {
   }
 
   /** [[rankAgainstScored]] narrowed to (vec_id, c_id, rn) — the frame
-    * every IVF consumer checkpoints/joins; q154 and the index searches
-    * ([[probesOf]]) read the wide form. */
+    * every IVF consumer checkpoints/joins; q154 reads the wide form (the
+    * index searches rank the same way on the driver, [[rankProbes]]). */
   private def rankAgainst(all: DataFrame, cents: DataFrame, keep: Int): DataFrame =
     rankAgainstScored(all, cents, keep).select(col("vec_id"), col("c_id"), col("rn"))
 
@@ -540,7 +540,7 @@ object Similarity {
 
   /** [[rankAgainst]] the seed codebook; q92 checkpoints one call and
     * derives all four sweep points from it. */
-  private def centroidRanks(s: SparkSession, d: String, keep: Int): DataFrame = {
+  private[graft] def centroidRanks(s: SparkSession, d: String, keep: Int): DataFrame = {
     val all = vecs(s, d)
     rankAgainst(all, seedCents(all), keep)
   }
@@ -643,25 +643,47 @@ object Similarity {
   private def clearDv(index: String): Unit =
     graft.etl.SnapshotLog.deleteRecursively(new java.io.File(s"$index/_dv"))
 
-  /** (query_id, qv, qn, c_id): each query's `nprobe` nearest codebook
-    * entries — [[rankAgainstScored]] with the (query_id, qv, qn) queries
-    * in the corpus role. The query vector rides along, so the candidate
-    * join needs no second broadcast. */
-  private def probesOf(qn: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
-    rankAgainstScored(
-      qn.select(col("query_id").as("vec_id"), col("qv").as("v"), col("qn").as("nrm")),
-      cents, nprobe)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-        col("c_id"))
+  /** (query_id, qv, qn, c_id): each query's `nprobe` nearest entries of
+    * the index's coarse codebook, ranked ON THE DRIVER — the codebook is
+    * the memoized 16-row `_centroids` epoch and the query batch is
+    * driver-sized, so the ranking runs no job. It is
+    * [[rankAgainstScored]]'s ranking (spec-pinned on every q37 query):
+    * cosine desc in Spark's double order, then c_id asc, the dot product
+    * folded by [[graft.functions.DotProduct.fold]] and qn the
+    * [[graft.functions.VectorOps.norm]] expression over the batch. The
+    * query vector rides along, so the candidate join needs no second
+    * broadcast. A local relation; a query with a NULL vector probes
+    * nothing. */
+  private[graft] def rankProbes(s: SparkSession, index: String, queries: DataFrame,
+      nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+    import scala.jdk.CollectionConverters._
+    def arr(v: scala.collection.Seq[Double]) = ArrayData.toArrayData(v.toArray)
+    val cents = LsmIndex.read(s, centroidsLayout(index)).select("c_id", "cv", "cn")
+      .collect().map(c => (c.getLong(0), arr(c.getSeq[Double](1)), c.getDouble(2)))
+    val qn = queries.select(col("query_id"), col("qv"),
+      graft.functions.VectorOps.norm(col("qv")).as("qn"))
+    val probes = qn.collect().toSeq.filterNot(_.isNullAt(2)).flatMap { q =>
+      val qv = arr(q.getSeq[Double](1))
+      cents.map { case (c, cv, cn) =>
+        c -> graft.functions.DotProduct.fold(qv, cv) / (q.getDouble(2) * cn)
+      }.sortWith { case ((c1, x), (c2, y)) =>
+        val o = SQLOrderingUtil.compareDoubles(x, y)
+        o > 0 || o == 0 && c1 < c2
+      }.take(nprobe).map(p => org.apache.spark.sql.Row(q(0), q(1), q(2), p._1))
+    }
+    s.createDataFrame(probes.asJava,
+      qn.schema.add("c_id", org.apache.spark.sql.types.LongType))
+  }
 
   /** An index's rows in the buckets `probes` names — the probe UNION
-    * pushed down as a static partition filter (a driver-side list
-    * bounded by min(queries × nprobe, numCentroids) — the q37 "nprobe
-    * directories" story) — minus the `_dv/` erasures. */
+    * (read off the local probe relation, bounded by min(queries ×
+    * nprobe, numCentroids)) pushed down as a static partition filter,
+    * the q37 "nprobe directories" story — minus the `_dv/` erasures. */
   private def probedRows(s: SparkSession, index: String, layout: LsmIndex.Layout,
       probes: DataFrame): DataFrame =
-    dvAntiJoin(s, index,
-      LsmIndex.prunedRead(s, layout, LsmIndex.probeBuckets(probes, col("c_id"))))
+    dvAntiJoin(s, index, LsmIndex.prunedRead(s, layout,
+      probes.select("c_id").collect().map(_.getLong(0)).distinct.toSeq))
 
   /** Merge `ids` into the kilobyte `_dv/` deletion-vector sidecar under
     * `index` — the one erasure mechanism both persisted ANN indexes
@@ -704,7 +726,7 @@ object Similarity {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     if (parts.isEmpty) rows
     else rows.join(
-      broadcast(s.read.parquet(parts.map(_.toString).toIndexedSeq: _*)),
+      broadcast(s.read.schema("vec_id BIGINT").parquet(parts.map(_.toString).toIndexedSeq: _*)),
       Seq("vec_id"), "left_anti")
   }
 
@@ -716,9 +738,10 @@ object Similarity {
     mergeDvSidecar(s, index, ids)
 
   /** Cosine top-k served FROM a persisted [[writeIvfIndex]] artifact
-    * alone: probe ranking reads the `_centroids/` layout (never raw
-    * embeddings), the probe UNION is pushed down as a static bucket
-    * filter on the live epoch ([[probedRows]] — an nprobe search reads
+    * alone: probes are ranked on the driver against the `_centroids/`
+    * layout ([[rankProbes]]; never raw embeddings), the probe UNION is
+    * pushed down as a static bucket filter on the live epoch
+    * ([[probedRows]] — an nprobe search reads
     * nprobe directories, the PartitionPruningSpec claim),
     * per-query candidate scoping is a broadcast equi-join on c_id, and
     * the `_dv/` deletion sidecar is anti-joined before the top-k window
@@ -729,8 +752,7 @@ object Similarity {
     * tie-break, self-matches excluded — q37's exact contract. */
   def ivfIndexSearch(s: SparkSession, index: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
-    val qn = queries.withColumn("qn", graft.functions.VectorOps.norm(col("qv")))
-    val probes = probesOf(qn, LsmIndex.read(s, centroidsLayout(index)), nprobe)
+    val probes = rankProbes(s, index, queries, nprobe)
     val cand = probedRows(s, index, byCentroid(index), probes)
       .join(broadcast(probes), Seq("c_id"))
       .where(col("vec_id") =!= col("query_id"))
@@ -1475,8 +1497,8 @@ object Similarity {
     * in the plan lives under the index root). `queries` carries
     * (query_id, qv) raw query vectors — queries are new data; only the
     * corpus is pre-encoded. Probe pruning: rank the index centroids
-    * per query ([[probesOf]]) and read only the probed buckets
-    * ([[probedRows]]), while the per-query candidate scoping stays a
+    * per query on the driver ([[rankProbes]]) and read only the probed
+    * buckets ([[probedRows]]), while the per-query candidate scoping stays a
     * broadcast equi-join on c_id. The deletion-vector anti-join runs
     * BEFORE the top-k window, so surviving ranks equal a
     * rebuild-without-the-ids (PartitionPruningSpec pins that
@@ -1487,7 +1509,7 @@ object Similarity {
       nprobe: Int, k: Int): DataFrame = {
     val cb = LsmIndex.read(s, pqCodebookLayout(index))
     val qn = queries.withColumn("qn", graft.functions.VectorOps.norm(col("qv")))
-    val probes = probesOf(qn, LsmIndex.read(s, centroidsLayout(index)), nprobe)
+    val probes = rankProbes(s, index, queries, nprobe)
     val qsub = qn
       .withColumn("u", transform(col("qv"), x => x / col("qn")))
       .select(col("query_id"),

@@ -179,7 +179,7 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
       .select(Retrieval.termBucket(org.apache.spark.sql.functions.lit("zebra")),
         Retrieval.termBucket(org.apache.spark.sql.functions.lit("apple")))
       .collect()(0) match { case r => Set(r.getLong(0), r.getLong(1)) }
-    val pruned = Retrieval.prunedPostings(spark, out, q)
+    val pruned = Retrieval.prunedPostings(spark, out, Retrieval.queryTf(spark, q))
     val scan = pruned.queryExecution.executedPlan.collectFirst {
       case f: FileSourceScanExec => f
     }.getOrElse(fail("no FileSourceScanExec in plan"))
