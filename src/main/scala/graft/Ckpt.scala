@@ -24,7 +24,7 @@ import scala.jdk.CollectionConverters._
   *    REGISTERED against its session.
   *  - [[beginQuery]] runs when the next top-level query on the same
   *    session begins (wired once, in `SparkEntry.queries`' thunks —
-  *    every driver/bench/Verify/Thrift-style caller goes through that
+  *    every driver/Verify/Thrift-style caller goes through that
   *    map): all frames the previous query registered are unpersisted
   *    on the spot. Steady-state storage is therefore ONE query's
   *    bounded checkpoint set, never a growing pile waiting for GC.

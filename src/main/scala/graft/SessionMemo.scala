@@ -48,35 +48,18 @@ import scala.collection.concurrent.TrieMap
   *     feature-space-bounded input artifact of the scoring pass, the
   *     production train-once/score-many boundary, (b) the scoring pass
   *     — the query's serving contract — runs per rep, and (c) the fit
-  *     cost is BuildPhase-charged, so it is visible in rep 1's build
-  *     column and in the bench's memo_build_total. No FURTHER
+  *     cost is paid once, by the session's first call, where a
+  *     per-session measurement still sees it. No FURTHER
   *     single-consumer memo may land without extending this list and
   *     its justification; anything beyond a fit/score split falls back
-  *     to rule 1.
-  *
-  * Build accounting: every materialization is timed into [[buildLog]]
-  * (key → seconds) so the bench artifact can report the session's
-  * total memo-build bill per key — the one-time builds land in rep 1
-  * of the first consumer and a sum-of-medians total would otherwise
-  * silently exclude them (r18 verdict, "What's wrong #1"). */
+  *     to rule 1. */
 private[graft] object SessionMemo {
   private val cache = TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** Memo-build seconds per (key, dir) — cumulative for the JVM; the
-    * bench dumps it at session end. TrieMap: builders may run on any
-    * thread. */
-  val buildLog = TrieMap.empty[(String, String), Double]
 
   def apply(spark: SparkSession, dir: String, key: String)
            (build: => DataFrame)
            (materialize: DataFrame => DataFrame): DataFrame =
-    cache.getOrElseUpdate((spark, dir, key), {
-      val t0 = System.nanoTime()
-      val df = materialize(build)
-      val sec = (System.nanoTime() - t0) / 1e9
-      buildLog.updateWith((key, dir))(v => Some(v.getOrElse(0.0) + sec))
-      df
-    })
+    cache.getOrElseUpdate((spark, dir, key), materialize(build))
 
   private val onceDone = TrieMap.empty[(SparkSession, String, String), Unit]
 

@@ -12,6 +12,21 @@ import graft.etl.{DataSkipping, StarBuilder, TextExtract}
   */
 object SparkEntry {
 
+  /** The engine's one session definition: `local[cpus]` with one
+    * shuffle partition per core and the UI off. The session zone is
+    * pinned to UTC because [[graft.ops.Events.events]] converts
+    * TIMESTAMP_NTZ through it, and parquet TIMESTAMP(NANOS) reads as
+    * Long because the events feed stores nanos; both are session-level
+    * so no query builder mutates shared conf. Callers add only what is
+    * theirs (an app name, a warehouse dir) before `getOrCreate()`. */
+  def session(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Top-10 students by weighted GPA — scan→join→agg→sort→limit, the
     * reference's core query shape (insight_transkrip.sql:15-25). */

@@ -339,12 +339,10 @@ object DataSkipping {
     val out = StarBuilder.scratchDir(s, d, "bloomidx")
     val fp = graft.ops.TextCore.docShingles(s, d)
       .select(col("doc_id"), md5(col("norm")).as("fingerprint"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "bloom:idx") {
-        fp.repartition(8, col("fingerprint"))
-          .write.mode("overwrite").parquet(out)
-        writeBloom(s, out, "fingerprint")
-      }
+    graft.SessionMemo.once(s, d, "bloom:idx") {
+      fp.repartition(8, col("fingerprint"))
+        .write.mode("overwrite").parquet(out)
+      writeBloom(s, out, "fingerprint")
     }
     val probes = fp.where(col("doc_id") < 3)
       .select("fingerprint").collect().map(_.getString(0)).toSeq
@@ -372,15 +370,13 @@ object DataSkipping {
     val fp = graft.ops.TextCore.docShingles(s, d)
       .select(col("doc_id"), md5(col("norm")).as("fingerprint"))
     val bucket = graft.ops.TextCore.idBucket(col("doc_id"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "bloom:idxInc") {
-        fp.where(bucket < 50).repartition(4, col("fingerprint"))
-          .write.mode("overwrite").parquet(out)
-        writeBloom(s, out, "fingerprint")
-        fp.where(bucket >= 50).repartition(4, col("fingerprint"))
-          .write.mode("append").parquet(out)
-        appendBloom(s, out, "fingerprint")
-      }
+    graft.SessionMemo.once(s, d, "bloom:idxInc") {
+      fp.where(bucket < 50).repartition(4, col("fingerprint"))
+        .write.mode("overwrite").parquet(out)
+      writeBloom(s, out, "fingerprint")
+      fp.where(bucket >= 50).repartition(4, col("fingerprint"))
+        .write.mode("append").parquet(out)
+      appendBloom(s, out, "fingerprint")
     }
     val probes = fp.where(col("doc_id") < 6)
       .select("fingerprint").collect().map(_.getString(0)).toSeq

@@ -159,7 +159,7 @@ object TextExtract {
   }
 
   /** q185 (A1 + A18 for a semi-structured source): JSONL ingest with
-    * PERMISSIVE corrupt-record quarantine. The build phase materializes
+    * PERMISSIVE corrupt-record quarantine. The build step materializes
     * the documents table as a JSON-lines feed (once per session) and
     * plants a shard of 7 deterministically truncated records — the
     * malformed-producer case every large-scale JSON ingest meets. The
@@ -174,25 +174,23 @@ object TextExtract {
     * quarantine count at exactly the planted 7. */
   val q185_jsonl_quarantine: Q = (s, d) => {
     val scratch = graft.etl.StarBuilder.scratchDir(s, d, "jsonl")
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "jsonl:feed") {
-        s.read.parquet(s"$d/documents.parquet")
-          .select("doc_id", "text", "lang", "source", "n_chars")
-          .coalesce(4)
-          .write.mode("overwrite").json(scratch)
-        val badLines = (0 until 7).map(i =>
-          s"""{"doc_id": ${-1 - i}, "lang": "xx", "text": "trunc""")
-        // via the session-resolved Hadoop FileSystem, not a driver-local
-        // java.nio write (r13 advice): the feed directory lives on
-        // whatever filesystem the Spark write above targeted — on a
-        // cluster/object-store deployment a local write would land the
-        // shard beside the DRIVER, invisible to the executors' scan
-        val shard = new org.apache.hadoop.fs.Path(scratch, "part-corrupt.json")
-        val fs = shard.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val out = fs.create(shard, true)
-        try out.write(badLines.mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-      }
+    graft.SessionMemo.once(s, d, "jsonl:feed") {
+      s.read.parquet(s"$d/documents.parquet")
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(4)
+        .write.mode("overwrite").json(scratch)
+      val badLines = (0 until 7).map(i =>
+        s"""{"doc_id": ${-1 - i}, "lang": "xx", "text": "trunc""")
+      // via the session-resolved Hadoop FileSystem, not a driver-local
+      // java.nio write (r13 advice): the feed directory lives on
+      // whatever filesystem the Spark write above targeted — on a
+      // cluster/object-store deployment a local write would land the
+      // shard beside the DRIVER, invisible to the executors' scan
+      val shard = new org.apache.hadoop.fs.Path(scratch, "part-corrupt.json")
+      val fs = shard.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val out = fs.create(shard, true)
+      try out.write(badLines.mkString("\n").getBytes("UTF-8"))
+      finally out.close()
     }
     val schema = s.read.parquet(s"$d/documents.parquet").schema
       .add("_bad", org.apache.spark.sql.types.StringType)

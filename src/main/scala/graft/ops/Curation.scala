@@ -653,8 +653,7 @@ object Curation {
         .groupBy(col("c_mktsegment").as("seg"),
           expr("CAST(year(o_orderdate) AS BIGINT)").as("yr"),
           col("o_orderpriority").as("prio"))
-        .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .agg(count(lit(1)).as("cnt")))(_.localCheckpoint(true))
 
   /** q339's diversity floor: a class releases only with ≥ l distinct
     * sensitive values. */

@@ -635,10 +635,7 @@ object Dedup {
   private def bandedCorpus(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "pairs:bands")(
       withBandKeys(docShingles(s, d).select(col("doc_id"), col("sh_md5"))))(
-      // build charged to the build phase (r18) — q32 now triggers this
-      // memo first in a bench run, and the one-time index build must
-      // not read as q32's serve cost
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      _.localCheckpoint(true))
 
   private[graft] def baseBandIndex(s: SparkSession, d: String): DataFrame =
     bandedCorpus(s, d)
@@ -841,8 +838,7 @@ object Dedup {
   val q128_span_index_report: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "spanidx_full")
     val docs = docShingles(s, d)
-    graft.BuildPhase.timed(
-      graft.SessionMemo.once(s, d, "spans:idxFull")(writeSpanIndex(docs, idx)))
+    graft.SessionMemo.once(s, d, "spans:idxFull")(writeSpanIndex(docs, idx))
     val dupFromFiles = readSpanIndex(s, idx).where(col("occ") > 1).select("h")
     spanReport(flagAgainst(spanWindowsOf(docs), dupFromFiles))
   }
@@ -850,11 +846,9 @@ object Dedup {
   val q127_span_staleness: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "spanidx")
     val docs = docShingles(s, d)
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "spans:idxInc") {
-        writeSpanIndex(docs.where(idBucket(col("doc_id")) < 50), idx)
-        appendSpanIndex(docs.where(idBucket(col("doc_id")) >= 50), idx)
-      }
+    graft.SessionMemo.once(s, d, "spans:idxInc") {
+      writeSpanIndex(docs.where(idBucket(col("doc_id")) < 50), idx)
+      appendSpanIndex(docs.where(idBucket(col("doc_id")) >= 50), idx)
     }
     val base = LsmIndex.readByGen(s, spanLayout(idx)).where(col("gen") === 0L)
       .select(col("h"), col("occ").as("occ0"))
@@ -1161,8 +1155,7 @@ object Dedup {
       docShingles(s, d).select(col("doc_id"), col("sh_md5"))
         .withColumn("mhs",
           graft.functions.VectorOps.minhashSignature(col("sh_md5"), numHashes))
-        .select("doc_id", "mhs"))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .select("doc_id", "mhs"))(_.localCheckpoint(true))
     // ONE fused pass over all four configs (r19, guide §2.4 + the
     // plan-size item): the old per-config loop unioned four subtrees,
     // each executing its band self-join TWICE per rep (once for the
@@ -1452,11 +1445,9 @@ object Dedup {
   lazy val q172_chunk_index_dups: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "chunkidx")
     val bucket = TextCore.idBucket(col("doc_id"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "chunk:index") {
-        writeChunkIndex(s, d, idx, bucket < 50)
-        appendChunkIndex(s, d, idx, bucket >= 50)
-      }
+    graft.SessionMemo.once(s, d, "chunk:index") {
+      writeChunkIndex(s, d, idx, bucket < 50)
+      appendChunkIndex(s, d, idx, bucket >= 50)
     }
     chunkIndexDups(s, idx)
   }
@@ -1478,11 +1469,9 @@ object Dedup {
   lazy val q173_chunk_staleness: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "chunkidx")
     val bucket = TextCore.idBucket(col("doc_id"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "chunk:index") {
-        writeChunkIndex(s, d, idx, bucket < 50)
-        appendChunkIndex(s, d, idx, bucket >= 50)
-      }
+    graft.SessionMemo.once(s, d, "chunk:index") {
+      writeChunkIndex(s, d, idx, bucket < 50)
+      appendChunkIndex(s, d, idx, bucket >= 50)
     }
     val ch = LsmIndex.readByGen(s, chunkLayout(idx))
     val byHash = ch.groupBy("chunk_md5").agg(
@@ -1782,12 +1771,10 @@ object Dedup {
   lazy val q191_name_index_probe: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "nameidx")
     val bucket = TextCore.idBucket(col("p_partkey"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "name:index") {
-        graft.etl.LsmIndex.write(nameRows(s, d, bucket < 40), nameLayout(idx))
-        graft.etl.LsmIndex.append(
-          nameRows(s, d, bucket >= 40 && bucket < 80), nameLayout(idx))
-      }
+    graft.SessionMemo.once(s, d, "name:index") {
+      graft.etl.LsmIndex.write(nameRows(s, d, bucket < 40), nameLayout(idx))
+      graft.etl.LsmIndex.append(
+        nameRows(s, d, bucket >= 40 && bucket < 80), nameLayout(idx))
     }
     val probe = nameRows(s, d, bucket >= 80)
     val buckets = graft.etl.LsmIndex.probeBuckets(probe,

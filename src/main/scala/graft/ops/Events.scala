@@ -32,8 +32,8 @@ object Events {
     *
     * For the NTZ shape the naive wall-clock is epoch-converted through a
     * TimestampType cast, which applies the session time zone — sessions
-    * MUST pin UTC ([[graft.Verify]]/[[graft.Bench]] builders,
-    * `SparkTestSession` all do) or the epoch shifts by the zone offset;
+    * MUST pin UTC ([[graft.SparkEntry.session]] does, for `Verify` and
+    * `SparkTestSession`) or the epoch shifts by the zone offset;
     * fail fast with the remedy instead of flaking the cross-engine gate.
     * DuckDB reads either file shape natively and `floor(epoch(ts))`
     * treats naive timestamps as UTC, so oracles are unchanged. */
@@ -137,14 +137,13 @@ object Events {
     * subplan per reference. The cells carry the transition matrix
     * (sum over gap_s) and the dwell histogram (project gap_s)
     * losslessly, so every consumer reads one materialized bounded
-    * artifact; the one-time build is charged to the build phase. */
+    * artifact, built once per session. */
   private[graft] def transitionGapCells(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:transitionGapCells")(
       transitionGapRows(s, d)
         .groupBy(col("event_type").as("from_type"),
           col("next_type").as("to_type"), col("gap_s"))
-        .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .agg(count(lit(1)).as("cnt")))(_.localCheckpoint(true))
 
   private[graft] def sessionTransitions(s: SparkSession, d: String): DataFrame =
     transitionGapCells(s, d)
@@ -317,13 +316,12 @@ object Events {
     * n_events, start_es, end_es) — the SessionMemo artifact the
     * session-family consumers read (q69's range join, q314's quantile
     * report); q51 itself stays un-memoized for honest bench, and the
-    * one-time materialization is charged to the build phase. */
+    * materialization runs once per session. */
   private[graft] def sessionTable(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:sessions")(
       q51_sessionize(s, d)
         .select(col("user_id"), col("session_id"), col("n_events"),
-          col("start_es"), col("end_es")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+          col("start_es"), col("end_es")))(_.localCheckpoint(true))
 
   /** The per-session ENTRY/EXIT table (user_id, session_id, entry,
     * exit, ne) — the boundary marginal of the sessionized pass,
@@ -344,8 +342,7 @@ object Events {
           count(lit(1)).as("ne"))
         .select(col("user_id"), col("session_id"),
           col("fst.event_type").as("entry"), col("lst.event_type").as("exit"),
-          col("ne")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+          col("ne")))(_.localCheckpoint(true))
 
   val q69_range_join: Q = (s, d) => {
     // the session intervals are consumed as a materialized table (the
@@ -511,16 +508,15 @@ object Events {
     * q283/q292/q293/q295/q299/q309/q325/q332 — the whole daily
     * time-series family) each re-ran the identical corpus groupBy per
     * rep; several re-paid it per REFERENCE through their own
-    * Ckpt.persisted. One materialized bounded artifact per session;
-    * the build is charged to the build phase. Weekday (q274/q299/
-    * q325) and epoch marginals fold from it losslessly. */
+    * Ckpt.persisted. One materialized bounded artifact per session.
+    * Weekday (q274/q299/q325) and epoch marginals fold from it
+    * losslessly. */
   private[graft] def dailyCells(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:dailyCells")(
       events(s, d)
         .groupBy(col("event_type"),
           expr("CAST(es div 86400 AS BIGINT)").as("day"))
-        .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .agg(count(lit(1)).as("cnt")))(_.localCheckpoint(true))
 
   val q186_ewma_rate: Q = (s, d) => {
     val daily = dailyCells(s, d)
@@ -1172,8 +1168,7 @@ object Events {
       driftDayCells(s, d)
         .groupBy(col("event_type"), driftEpoch(col("day")).as("epoch"),
           col("bucket"))
-        .agg(sum("cnt").as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .agg(sum("cnt").as("cnt")))(_.localCheckpoint(true))
 
   /** The (event_type, day, bucket) DAY-grain drift cells — calendar ×
     * types × 16-bounded, session-memoized (r19): q321's flappiness
@@ -1188,8 +1183,7 @@ object Events {
         .select(col("event_type"), expr("es div 86400").as("day"),
           driftBucketCol.as("bucket"))
         .groupBy("event_type", "day", "bucket")
-        .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .agg(count(lit(1)).as("cnt")))(_.localCheckpoint(true))
 
   val q229_dist_drift: Q = (s, d) => driftTable(driftCells(s, d))
 
@@ -1242,8 +1236,7 @@ object Events {
           driftEpoch(expr("es div 86400")).as("epoch"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cent"))
         .groupBy("event_type", "epoch", "cent")
-        .agg(count(lit(1)).as("cnt")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .agg(count(lit(1)).as("cnt")))(_.localCheckpoint(true))
 
   val q290_ks_drift: Q = (s, d) =>
     ksFromCells(ksCells(s, d))
@@ -2012,13 +2005,11 @@ object Events {
     * that builds it re-ran per consumer per rep even though its input
     * was already the memoized interaction set. One materialized bounded
     * artifact for the CONSUMER side (q306); the primary (q296) builds
-    * the grid fresh per rep per SessionMemo rule 3. Build charged to
-    * the build phase. */
+    * the grid fresh per rep per SessionMemo rule 3. */
   private[graft] def coocGrid(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:coocGrid")(
       cooccurrencePairGrid(uiItems(s, d))
-        .select("k1", "k2", "co_users", "jaccard_bp", "lift_bp"))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .select("k1", "k2", "co_users", "jaccard_bp", "lift_bp"))(_.localCheckpoint(true))
 
   /** The distinct (user_id, item k) interaction set q296 and q306 both
     * read — session-memoized so a gate run pays the corpus extraction
@@ -3077,9 +3068,8 @@ object Events {
     * Same hour-bucket scale decision as before (the q122/q193
     * two-phase rule): the lag window partitions by `es div 3600`, so
     * no task sorts more than an hour of traffic, at the documented
-    * cost of dropping cross-boundary handoffs. The one-time
-    * materialization is charged to the build phase
-    * ([[graft.BuildPhase]]), the sessionTable convention. */
+    * cost of dropping cross-boundary handoffs. Materialized once per
+    * session, the sessionTable convention. */
   private[graft] def handoffEdges(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:handoffEdges")({
       val wh = Window.partitionBy("hb").orderBy("es", "event_id")
@@ -3089,7 +3079,7 @@ object Events {
         .where(col("src").isNotNull && col("src") =!= col("user_id"))
         .groupBy(col("src"), col("user_id").as("dst"))
         .agg(count(lit(1)).as("w"))
-    })(df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+    })(_.localCheckpoint(true))
 
   /** The undirected SIMPLE handoff graph (least/greatest, distinct)
     * derived from [[handoffEdges]] — q334/q341/q345's edge set. The
@@ -3103,7 +3093,7 @@ object Events {
       handoffEdges(s, d)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .distinct())(df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .distinct())(_.localCheckpoint(true))
 
   /** The distinct user set — the graph family's NODE table
     * (q265/q334/q344/q345 each need "every user, including the
@@ -3112,8 +3102,7 @@ object Events {
     * from the full corpus per consumer per rep. */
   private[graft] def userIds(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "events:userIds")(
-      events(s, d).select(col("user_id")).distinct())(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      events(s, d).select(col("user_id")).distinct())(_.localCheckpoint(true))
 
   lazy val q265_user_pagerank: Q = (s, d) => {
     // the session-memoized edge/node artifacts (one lag pass and one

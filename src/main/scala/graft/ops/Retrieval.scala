@@ -370,10 +370,8 @@ object Retrieval {
     * to see WHY a doc ranked. */
   lazy val q160_hybrid_bm25_rrf: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "ivfhy")
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "ivf:hybrid") {
-        Similarity.writeIvfIndex(s, d, idx)
-      }
+    graft.SessionMemo.once(s, d, "ivf:hybrid") {
+      Similarity.writeIvfIndex(s, d, idx)
     }
     val queries = s.read.parquet(s"$d/embeddings.parquet")
       .where(col("vec_id") < Similarity.numQueries)
@@ -567,11 +565,9 @@ object Retrieval {
   lazy val q161_lex_index_search: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "lexidx")
     val bucket = TextCore.idBucket(col("doc_id"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "lex:index") {
-        writeLexIndex(s, d, idx, bucket < 50)
-        appendLexIndex(s, d, idx, bucket >= 50)
-      }
+    graft.SessionMemo.once(s, d, "lex:index") {
+      writeLexIndex(s, d, idx, bucket < 50)
+      appendLexIndex(s, d, idx, bucket >= 50)
     }
     lexIndexSearch(s, idx)
       .select(col("query_id"), col("lex_rank"), col("doc_id"),
@@ -590,10 +586,8 @@ object Retrieval {
     * path ships with the measurement that justifies it). */
   lazy val q162_hybrid_ablation: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "ivfhy")
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "ivf:hybrid") {
-        Similarity.writeIvfIndex(s, d, idx)
-      }
+    graft.SessionMemo.once(s, d, "ivf:hybrid") {
+      Similarity.writeIvfIndex(s, d, idx)
     }
     val queries = s.read.parquet(s"$d/embeddings.parquet")
       .where(col("vec_id") < Similarity.numQueries)
@@ -635,11 +629,9 @@ object Retrieval {
   lazy val q164_lex_staleness: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "lexidx")
     val bucket = TextCore.idBucket(col("doc_id"))
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "lex:index") {
-        writeLexIndex(s, d, idx, bucket < 50)
-        appendLexIndex(s, d, idx, bucket >= 50)
-      }
+    graft.SessionMemo.once(s, d, "lex:index") {
+      writeLexIndex(s, d, idx, bucket < 50)
+      appendLexIndex(s, d, idx, bucket >= 50)
     }
     val byTerm = LsmIndex.readByGen(s, postingsLayout(idx))
       .groupBy("term").agg(

@@ -741,14 +741,12 @@ object TextStats {
     * the gate proves the artifact ROUND-TRIPS the model bit-exactly —
     * a step dropped, reordered, or corrupted in the file changes token
     * counts and fails the hash (the q114/q128 serve-from-files rule,
-    * applied to the tokenizer). Model write is session-once (build
-    * phase); serving replays k literal replaces inside one codegen'd
+    * applied to the tokenizer). Model write is session-once; serving
+    * replays k literal replaces inside one codegen'd
     * projection — the merge table rides the plan as literals. */
   lazy val q156_bpe_model_serve: Q = (s, d) => {
     val path = graft.etl.StarBuilder.scratchDir(s, d, "bpemodel")
-    graft.BuildPhase.timed {
-      graft.SessionMemo.once(s, d, "bpe:model")(writeBpeModel(s, d, path))
-    }
+    graft.SessionMemo.once(s, d, "bpe:model")(writeBpeModel(s, d, path))
     val merges = s.read.parquet(path).orderBy("step").collect()
       .map(r => (r.getAs[String]("left_sym"), r.getAs[String]("right_sym")))
     val sym0 = concat(lit("|"), array_join(split(col("w"), ""), "||"), lit("|"))
@@ -986,8 +984,7 @@ object TextStats {
       .agg(count(lit(1)).as("s_cnt"),
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_cnt"))
     val model = memo.fold(modelDf) { case (dir, key) =>
-        graft.SessionMemo(s, dir, key)(modelDf)(
-          df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        graft.SessionMemo(s, dir, key)(modelDf)(_.localCheckpoint(true))
       }
       .collect()
       .map(r => (r.getAs[Long]("b"), r.getAs[Long]("s_cnt"), r.getAs[Long]("t_cnt")))
@@ -1168,8 +1165,7 @@ object TextStats {
     // of re-running the train-split corpus aggregate
     val fitted = graft.SessionMemo(s, d, "text:nbLangidFit")(
         tok.where(idBucket(col("doc_id")) < 80)
-          .groupBy("lang", "b").agg(count(lit(1)).as("cnt")))(
-        df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+          .groupBy("lang", "b").agg(count(lit(1)).as("cnt")))(_.localCheckpoint(true))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val totals = fitted.groupBy(_._1).map { case (c, rs) => c -> rs.map(_._3).sum }
@@ -1299,7 +1295,7 @@ object TextStats {
     * (ties negative, both engines). */
   lazy val q163_quality_perceptron: Q = (s, d) => {
     import s.implicits._
-    val wSeq = graft.BuildPhase.timed(qpTrain(s, d))
+    val wSeq = qpTrain(s, d)
     val wdf =
       if (wSeq.isEmpty) Seq.empty[(Long, Long)].toDF("b", "w")
       else wSeq.toDF("b", "w")
@@ -1870,8 +1866,7 @@ object TextStats {
     graft.SessionMemo(s, d, "text:wordIdCells")(
       docShingles(s, d)
         .select(idBucket(col("doc_id")).as("ib"), explode(col("words")).as("w"))
-        .groupBy("ib", "w").agg(count(lit(1)).as("cw")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .groupBy("ib", "w").agg(count(lit(1)).as("cw")))(_.localCheckpoint(true))
 
   /** The corpus unigram type-count table (w, cw) — vocabulary-bounded,
     * UNFILTERED (empty-string tokens retained so token totals fold from
@@ -1881,20 +1876,18 @@ object TextStats {
     * runs once per session for the whole word-marginal family. */
   private[graft] def unigramCounts(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "text:unigramCounts")(
-      wordIdCells(s, d).groupBy("w").agg(sum("cw").as("cw")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+      wordIdCells(s, d).groupBy("w").agg(sum("cw").as("cw")))(_.localCheckpoint(true))
 
   /** The (source, word) count cells — source×vocabulary-bounded,
     * session-memoized (r19): q307's shape audit and q316's cosine grid
     * both aggregated the identical (source, w, c) marginal per rep
-    * (q316 under a per-rep persist). One materialized artifact; build
-    * charged to the build phase. */
+    * (q316 under a per-rep persist). One materialized artifact, built
+    * once per session. */
   private[graft] def sourceWordCells(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "text:sourceWordCells")(
       docShingles(s, d)
         .select(col("source"), explode(col("words")).as("w"))
-        .groupBy("source", "w").agg(count(lit(1)).as("c")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .groupBy("source", "w").agg(count(lit(1)).as("c")))(_.localCheckpoint(true))
 
   /** The corpus bigram type-count table (bg, cab) — bigram-vocabulary-
     * bounded (type counts, not tokens — the standard LM count-table
@@ -1903,8 +1896,7 @@ object TextStats {
   private[graft] def bigramCounts(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo(s, d, "text:bigramCounts")(
       docShingles(s, d).select(explode(bigramsCol(col("words"))).as("bg"))
-        .groupBy("bg").agg(count(lit(1)).as("cab")))(
-      df => graft.BuildPhase.timed(df.localCheckpoint(true)))
+        .groupBy("bg").agg(count(lit(1)).as("cab")))(_.localCheckpoint(true))
 
   lazy val q279_collocations: Q = (s, d) => {
     val uni = unigramCounts(s, d).where(col("w") =!= "")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class SourceFormatsSpec extends AnyFunSuite with SparkTestBase {
 
   // the events `ts` may arrive as nanos-as-long (the legacy nanosAsLong
-  // conf is set once in SparkTestSession's builder) or as NTZ micros —
+  // conf is set once, in SparkEntry.session) or as NTZ micros —
   // Events.events branches on the resolved schema; this suite never
   // reads ts, so either shape serves
   private def eventsDf =
@@ -66,6 +66,14 @@ class SourceFormatsSpec extends AnyFunSuite with SparkTestBase {
       assert(e.getMessage.contains("pin spark.sql.session.timeZone=UTC"))
       assert(e.getMessage.contains("America/New_York"))
     } finally spark.conf.set("spark.sql.session.timeZone", orig)
+  }
+
+  test("the shared test session runs under the engine's SparkEntry.session settings") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
 
   test("ORC pushes filters to the scan like parquet") {

@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared local session for all specs (lazy singleton — Spark startup is
-  * the dominant test cost, so every suite reuses one session). */
+  * the dominant test cost, so every suite reuses one session), built from
+  * the engine's own definition, [[SparkEntry.session]]. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = SparkEntry.session(4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // driver events parquet stores TIMESTAMP(NANOS); session-level so no
-      // suite mutates (or needs to restore) shared conf mid-run
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
