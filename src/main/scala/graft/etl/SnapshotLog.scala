@@ -174,6 +174,15 @@ object SnapshotLog {
     v
   }
 
+  /** Create `<prefix>.<n>` under version dir `dir`, with the lowest free
+    * `n` at or above the count already there, content-atomically through
+    * the storage protocol: an append-only record log inside a version
+    * (the [[LsmIndex]] erase records). */
+  def putNext(dir: File, prefix: String, payload: Array[Byte]): Unit = {
+    var n = Option(dir.list()).fold(0)(_.count(_.startsWith(s"$prefix.")))
+    while (!protocol.putIfAbsent(new File(dir, s"$prefix.$n"), payload)) n += 1
+  }
+
   // ---- maintenance ----
 
   /** Delete claimed-but-uncommitted version directories and stale

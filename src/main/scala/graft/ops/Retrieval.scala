@@ -484,6 +484,25 @@ object Retrieval {
     LsmIndex.append(statsOf(docs), statsLayout(out))
   }
 
+  /** Erase docs from a persisted lexical index between rebuilds: an
+    * [[graft.etl.LsmIndex.erase]] of the doc ids on the postings, then
+    * one negative (n_docs, sum_dl) row appended to the additive stats
+    * sidecar for the docs the postings still held — so df, N and avgdl,
+    * and every bscore with them, equal a rebuild without the docs. The
+    * doc lengths come from one postings scan (dl rides on every
+    * posting); a repeated erase finds nothing left to subtract and
+    * writes nothing. The postings erase goes first: a crash between the
+    * two leaves stale corpus constants, never an erased doc serving. */
+  def deleteLexDocs(s: SparkSession, index: String, ids: Seq[Long]): Unit = {
+    val gone = LsmIndex.read(s, postingsLayout(index))
+      .where(col("doc_id").isin(ids: _*)).select("doc_id", "dl").distinct()
+      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+    LsmIndex.erase(postingsLayout(index), "doc_id", ids)
+    if (gone.getLong(0) > 0)
+      LsmIndex.append(s.createDataFrame(Seq((-gone.getLong(0), -gone.getLong(1))))
+        .toDF("n_docs", "sum_dl"), statsLayout(index))
+  }
+
   /** BM25 top-N served FROM the persisted index alone: merge-on-read
     * over the postings generations (one union scan — df and scores come
     * out of the same pass) with the corpus constants summed from the

@@ -597,14 +597,14 @@ object Similarity {
     * [[appendIvfIndex]] grows); the codebook stays the full seed book
     * regardless — bucket routing is fixed at build time, not a function
     * of which rows arrived. A rebuild that fails publishes nothing (the
-    * previous epoch keeps serving); one that succeeds then clears the
-    * `_dv/` sidecar ([[clearDv]]). */
+    * previous epoch keeps serving). The new epoch keeps only the erasures
+    * ([[deleteIvfVectors]]) that land while it is written; the caller's
+    * `rowFilter` leaves out the ids erased before. */
   def writeIvfIndex(s: SparkSession, d: String, out: String,
       rowFilter: Column = lit(true)): Unit = {
     val cents = seedCents(vecs(s, d))
     LsmIndex.write(ivfIndexRows(s, d, cents, rowFilter), byCentroid(out))
     LsmIndex.write(cents, centroidsLayout(out))
-    clearDv(out)
   }
 
   /** The index rows for the corpus subset passing `rowFilter`, assigned
@@ -633,15 +633,6 @@ object Similarity {
     LsmIndex.append(
       ivfIndexRows(s, d, LsmIndex.read(s, centroidsLayout(out)), rowFilter),
       byCentroid(out))
-
-  /** Drop an index's `_dv/` sidecar — called by both rebuilds AFTER
-    * they publish: whatever the previous index soft-deleted is simply
-    * not re-added by the caller's rowFilter, so carrying the old
-    * sidecar forward would double-apply it. Clearing last means a crash
-    * between publish and clear leaves conservative over-suppression
-    * until the retry, never a resurrected erased vector. */
-  private def clearDv(index: String): Unit =
-    graft.etl.SnapshotLog.deleteRecursively(new java.io.File(s"$index/_dv"))
 
   /** (query_id, qv, qn, c_id): each query's `nprobe` nearest entries of
     * the index's coarse codebook, ranked ON THE DRIVER — the codebook is
@@ -679,73 +670,28 @@ object Similarity {
   /** An index's rows in the buckets `probes` names — the probe UNION
     * (read off the local probe relation, bounded by min(queries ×
     * nprobe, numCentroids)) pushed down as a static partition filter,
-    * the q37 "nprobe directories" story — minus the `_dv/` erasures. */
-  private def probedRows(s: SparkSession, index: String, layout: LsmIndex.Layout,
+    * the q37 "nprobe directories" story. */
+  private def probedRows(s: SparkSession, layout: LsmIndex.Layout,
       probes: DataFrame): DataFrame =
-    dvAntiJoin(s, index, LsmIndex.prunedRead(s, layout,
-      probes.select("c_id").collect().map(_.getLong(0)).distinct.toSeq))
+    LsmIndex.prunedRead(s, layout,
+      probes.select("c_id").collect().map(_.getLong(0)).distinct.toSeq)
 
-  /** Merge `ids` into the kilobyte `_dv/` deletion-vector sidecar under
-    * `index` — the one erasure mechanism both persisted ANN indexes
-    * share ([[deleteIvfVectors]] / [[deletePqVectors]]): keyed on
-    * vec_id because a code/vector row's identity IS its vec_id, no
-    * file/pos addressing needed. The sidecar is an APPEND-ONLY log of
-    * erased ids: between rebuilds the deletion set only grows, and the
-    * serve-side anti-join is insensitive to duplicate rows, so the
-    * merged set is always the union of every file ever appended — no
-    * file is ever rewritten, renamed, or deleted, which is what makes
-    * a concurrent [[dvAntiJoin]] read safe (a plan that captured the
-    * old file list sees a valid, possibly one-delete-stale set; a
-    * stage-then-swap scheme would instead yank captured paths out from
-    * under in-flight tasks). Idempotent: re-deleting an id appends a
-    * duplicate row to the same logical set. Rebuilds clear the log
-    * wholesale after they publish ([[clearDv]] — the only writer that
-    * may touch existing sidecar files). Index data files are never
-    * touched, so a GDPR-class erasure costs a sidecar append at any
-    * index size. */
-  private def mergeDvSidecar(s: SparkSession, index: String, ids: Seq[Long]): Unit = {
-    import s.implicits._
-    ids.distinct.sorted.toDF("vec_id")
-      .coalesce(1).write.mode("append").parquet(s"$index/_dv")
-  }
-
-  /** Anti-join `rows` against the `_dv/` sidecar if one exists — the
-    * serve-side half of the deletion-vector contract, applied BEFORE
-    * any top-k window so surviving ranks equal a
-    * rebuild-without-the-ids. The sidecar is kilobytes: broadcast.
-    * Reads the COMMITTED part files by explicit list, not the
-    * directory: a concurrent first-ever append creates `_dv/` (holding
-    * only `_temporary`) before any footer commits, and a directory
-    * read would fail schema inference in exactly the window the
-    * append-only design exists to keep safe. A part file committed
-    * between the list and the read is simply not seen yet —
-    * one-delete-stale, the documented freshness bound. */
-  private def dvAntiJoin(s: SparkSession, index: String, rows: DataFrame): DataFrame = {
-    val dv = new java.io.File(s"$index/_dv")
-    val parts = Option(dv.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    if (parts.isEmpty) rows
-    else rows.join(
-      broadcast(s.read.schema("vec_id BIGINT").parquet(parts.map(_.toString).toIndexedSeq: _*)),
-      Seq("vec_id"), "left_anti")
-  }
-
-  /** Soft-delete vectors from a persisted IVF index — [[deletePqVectors]]'s
-    * twin for the flat-vector artifact: [[ivfIndexSearch]] honors the
-    * sidecar between rebuilds, and the nightly [[writeIvfIndex]] rebuild
-    * drops it by excluding the ids from its rowFilter. */
+  /** Erase vectors from a persisted IVF index — [[deletePqVectors]]'s
+    * twin: an [[LsmIndex.erase]] of the ids on the index rows, so
+    * [[ivfIndexSearch]] never returns them and no data file is touched;
+    * a [[writeIvfIndex]] rebuild leaves them out through its rowFilter. */
   def deleteIvfVectors(s: SparkSession, index: String, ids: Seq[Long]): Unit =
-    mergeDvSidecar(s, index, ids)
+    LsmIndex.erase(byCentroid(index), "vec_id", ids)
 
   /** Cosine top-k served FROM a persisted [[writeIvfIndex]] artifact
     * alone: probes are ranked on the driver against the `_centroids/`
     * layout ([[rankProbes]]; never raw embeddings), the probe UNION is
     * pushed down as a static bucket filter on the live epoch
     * ([[probedRows]] — an nprobe search reads
-    * nprobe directories, the PartitionPruningSpec claim),
-    * per-query candidate scoping is a broadcast equi-join on c_id, and
-    * the `_dv/` deletion sidecar is anti-joined before the top-k window
-    * so an erased vector never surfaces as a neighbor between rebuilds.
+    * nprobe directories, the PartitionPruningSpec claim, with erased
+    * vectors dropped by the read, before the top-k window, so an erased
+    * vector never surfaces as a neighbor), and per-query candidate
+    * scoping is a broadcast equi-join on c_id.
     * `queries` carries (query_id, qv) raw vectors — queries are new
     * data; only the corpus is pre-indexed. Returns (query_id, rank,
     * neighbor_id, cosine): top `k` by cosine desc, vec_id asc
@@ -753,7 +699,7 @@ object Similarity {
   def ivfIndexSearch(s: SparkSession, index: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
     val probes = rankProbes(s, index, queries, nprobe)
-    val cand = probedRows(s, index, byCentroid(index), probes)
+    val cand = probedRows(s, byCentroid(index), probes)
       .join(broadcast(probes), Seq("c_id"))
       .where(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
@@ -782,13 +728,13 @@ object Similarity {
     * (vec_id % 97 = 13, < 970 — ≤ 10 ids), then run [[ivfIndexSearch]]
     * against the files. The DuckDB oracle computes the q37 IVF search
     * with the SAME ids excluded from the candidate side — matching
-    * rows+hash proves the grown artifact + kilobyte sidecar serve
-    * exactly what a rebuild without the erased vectors would, without
-    * touching one index data file (PartitionPruningSpec pins the
+    * rows+hash proves the grown artifact + its epoch's erase record
+    * serve exactly what a rebuild without the erased vectors would,
+    * without touching one index data file (PartitionPruningSpec pins the
     * byte-identity and the rebuild equivalence). Deleted ids stay valid
     * ROUTING entries (centroids are frozen at build); they stop being
     * candidates. The build+delete is session-invariant: built once,
-    * reps serve (delete merges idempotently to the same sidecar). */
+    * reps serve (a repeated erase writes nothing). */
   lazy val q140_ivf_dv_search: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "ivfserve")
     val bucket = TextCore.idBucket(col("vec_id"))
@@ -1457,22 +1403,16 @@ object Similarity {
     LsmIndex.write(pqIndexRows(s, d, cb, cents, rowFilter), byCentroid(s"$out/codes"))
     LsmIndex.write(cb, pqCodebookLayout(out))
     LsmIndex.write(cents, centroidsLayout(out))
-    clearDv(out)
   }
 
-  /** Soft-delete vectors from a persisted PQ index — the erasure path
-    * [[pqIndexSearch]] honors BETWEEN rebuilds: merge `ids` into the
-    * kilobyte `_dv/` sidecar under the index root ([[graft.etl.
-    * StarBuilder.deleteWhere]]'s deletion-vector shape, keyed on vec_id
-    * because the code rows' identity IS the vec_id — no file/pos
-    * addressing needed). Code files are never touched (the spec pins
-    * byte-identity), so a GDPR-class erasure costs a sidecar write at
-    * any index size; the nightly [[writePqIndex]] rebuild drops the
-    * sidecar by excluding the ids from its rowFilter. Idempotent:
-    * re-deleting an id merges to the same set ([[mergeDvSidecar]] — the
-    * machinery shared with [[deleteIvfVectors]]). */
+  /** Erase vectors from a persisted PQ index between rebuilds: an
+    * [[LsmIndex.erase]] of the ids on the `codes/` rows (keyed on vec_id,
+    * the code rows' identity). Code files are never touched (the spec
+    * pins byte-identity), so an erasure costs one small record at any
+    * index size; the nightly [[writePqIndex]] rebuild leaves the ids out
+    * through its rowFilter. Idempotent: a repeated erase writes nothing. */
   def deletePqVectors(s: SparkSession, index: String, ids: Seq[Long]): Unit =
-    mergeDvSidecar(s, index, ids)
+    LsmIndex.erase(byCentroid(s"$index/codes"), "vec_id", ids)
 
   /** Incremental PQ maintenance — [[appendIvfIndex]]'s twin: encode
     * ONLY the incoming batch under the index's own FROZEN codebooks
@@ -1497,8 +1437,8 @@ object Similarity {
     * corpus is pre-encoded. Probe pruning: rank the index centroids
     * per query on the driver ([[rankProbes]]) and read only the probed
     * buckets ([[probedRows]]), while the per-query candidate scoping stays a
-    * broadcast equi-join on c_id. The deletion-vector anti-join runs
-    * BEFORE the top-k window, so surviving ranks equal a
+    * broadcast equi-join on c_id. The read drops erased vectors BEFORE
+    * the top-k window, so surviving ranks equal a
     * rebuild-without-the-ids (PartitionPruningSpec pins that
     * equivalence on unchanged files). Returns (query_id, rank, vec_id,
     * adist): top `k` by ADC distance (asc, vec_id asc tie-break),
@@ -1517,7 +1457,7 @@ object Similarity {
     val dtab = qsub.join(broadcast(cb), "j")
       .select(col("query_id"), col("j"), col("k").as("code"),
         l2sq(col("x"), col("cb")).as("dq"))
-    val cand = probedRows(s, index, byCentroid(s"$index/codes"), probes)
+    val cand = probedRows(s, byCentroid(s"$index/codes"), probes)
       .join(broadcast(probes), Seq("c_id"))
       .where(col("vec_id") =!= col("query_id"))
     val approx = subspaceTotal(
@@ -2374,8 +2314,8 @@ object Similarity {
        |        WHERE ${graft.ops.TextCore.idBucketSql("vec_id")} < 80)""".stripMargin
 
   /** `ivf` CTE body with the q140 deletion-vector set excised from the
-    * candidate join — the oracle twin of [[dvAntiJoin]] applied before
-    * the top-k window (assignments and probe routing unchanged: erasure
+    * candidate join — the oracle twin of the [[LsmIndex.erase]] filter
+    * the index read applies before the top-k window (assignments and probe routing unchanged: erasure
     * removes a vector as a NEIGHBOR, never as a centroid). */
   private val ivfDvCte =
     s"""cent AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM vecs

@@ -476,15 +476,15 @@ object EventStream {
     * vectors): arriving query vectors are answered with top-k cosine
     * neighbors FROM the persisted IVF index, per micro-batch. Unlike
     * the text probes there is no useful stateless in-flight half —
-    * probe ranking, the partition-pruned candidate scope, the
-    * deletion-vector anti-join and the top-k window are all
-    * aggregation-shaped — so the WHOLE search runs in `foreachBatch`
+    * probe ranking, the partition-pruned candidate scope and the top-k
+    * window are all aggregation-shaped — so the WHOLE search runs in `foreachBatch`
     * through the batch helper
     * [[graft.ops.Similarity.ivfIndexSearch]] (the [[spanReportBatch]]
     * convention: one definition, stream and batch can never drift).
     * Queries are independent rows, so the stream holds no state; the
-    * index is static files the nightly build owns, erasures reach
-    * results through the `_dv/` sidecar without waiting for a rebuild
+    * index is static files the nightly build owns, erasures
+    * ([[graft.ops.Similarity.deleteIvfVectors]]) reach results through
+    * the live epoch's erase records without waiting for a rebuild
     * (EventStreamSpec proves two-micro-batch parity with the batch
     * search AND live erasure mid-stream). */
   def annSearchBatch(s: org.apache.spark.sql.SparkSession, index: String,

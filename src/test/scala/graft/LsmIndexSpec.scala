@@ -8,9 +8,10 @@ import graft.etl.{CommitProtocol, ConditionalPutCommitProtocol, LsmIndex,
   * DedupSpec span/chunk, RetrievalSpec postings — pin each domain's
   * semantics THROUGH this module; this suite pins what only the shared
   * code owns: the claim-then-commit epoch publish and its crash-window
-  * recovery, exercised against BOTH CommitProtocol shapes — the POSIX
-  * rename implementation and the conditional-PUT object-store model,
-  * picked through the log's scoped selector. */
+  * recovery, and erasure and its races with a publish, exercised
+  * against BOTH CommitProtocol shapes — the POSIX rename implementation
+  * and the conditional-PUT object-store model, picked through the log's
+  * scoped selector. */
 class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
 
   private def layout(bucketed: Boolean): (String, LsmIndex.Layout) = {
@@ -28,6 +29,28 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
   private def epochDirs(out: String): Set[String] =
     Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("v=")).map(_.getName).toSet
+
+  /** The erase records (`_erase.<n>`) under an artifact, at any depth. */
+  private def eraseFiles(out: String): Iterable[String] =
+    fileListing(out).keys.filter(_.split('/').last.startsWith("_erase."))
+
+  /** 200 seeded 16-dim embeddings for the IVF race specs. */
+  private lazy val embsDir = {
+    val rnd = new scala.util.Random(71)
+    writeMiniEmbeddings((0L until 200L).map(i => i -> Seq.fill(16)(rnd.nextGaussian().toFloat)))
+  }
+
+  /** The ids of the top-3 IVF neighbours of vector `id`'s own embedding
+    * (query id 10000, so no self-exclusion applies): `id` itself first,
+    * unless it is erased. */
+  private def neighbours(ivf: String, id: Long): Seq[Long] = {
+    import org.apache.spark.sql.functions.col
+    val q = spark.read.parquet(s"$embsDir/embeddings.parquet").where(col("vec_id") === id)
+      .select(org.apache.spark.sql.functions.lit(10000L).as("query_id"),
+        col("embedding").cast("array<double>").as("qv"))
+    graft.ops.Similarity.ivfIndexSearch(spark, ivf, q, 4, 3).collect()
+      .map(_.getAs[Long]("neighbor_id")).toSeq
+  }
 
   private val protocols: Seq[(String, CommitProtocol)] = Seq(
     "rename" -> RenameCommitProtocol,
@@ -113,6 +136,68 @@ class LsmIndexSpec extends AnyFunSuite with SparkTestBase {
       // idempotent at the data level: compacting again changes nothing
       LsmIndex.compact(spark, l)(_.groupBy("k").agg(sum("v").as("v")))
       assert(rowsOf(l) == Set((1L, 8L), (2L, 7L)))
+    }
+
+    // an erase racing a rebuild, stopped at the rebuild's claim (before
+    // its marker) or just after its marker (before its vacuum): either
+    // way the erased vector must not serve from the rebuilt index
+    for ((point, atClaim) <- Seq("claim" -> true, "marker" -> false))
+      protoTest(s"an erase at a rebuild's $point survives the rebuild") {
+        import graft.ops.Similarity
+        val ivf = java.nio.file.Files.createTempDirectory("graft_lsm_race").toString
+        val victim = 7L
+        Similarity.writeIvfIndex(spark, embsDir, ivf)
+        assert(neighbours(ivf, victim).head == victim)
+        SnapshotLog.withProtocol(new HookedProtocol(proto, atClaim)(
+            Similarity.deleteIvfVectors(spark, ivf, Seq(victim)))) {
+          Similarity.writeIvfIndex(spark, embsDir, ivf)
+        }
+        val served = neighbours(ivf, victim)
+        assert(served.nonEmpty && !served.contains(victim), s"erased $victim served: $served")
+      }
+
+    protoTest("an erase at a compaction's claim is carried into the new epoch") {
+      import spark.implicits._
+      val (out, l) = layout(bucketed = true)
+      LsmIndex.write((0L until 8L).map(k => (k, k * 10)).toDF("k", "v"), l)
+      LsmIndex.append((8L until 12L).map(k => (k, k * 10)).toDF("k", "v"), l)
+      SnapshotLog.withProtocol(new HookedProtocol(proto, atClaim = true)(
+          LsmIndex.erase(l, "k", Seq(5L)))) {
+        LsmIndex.compact(spark, l)()
+      }
+      assert(epochDirs(out) == Set("v=1"))
+      assert(rowsOf(l) == (0L until 12L).filter(_ != 5L).map(k => (k, k * 10)).toSet)
+      assert(eraseFiles(out).size == 1, "the late erase is the new epoch's one record")
+    }
+
+    protoTest("erase drops rows from every read, is idempotent, and compact drops them physically") {
+      import spark.implicits._
+      val (out, l) = layout(bucketed = true)
+      val all = (0L until 12L).map(k => (k, k * 10)).toSet
+      LsmIndex.write((0L until 8L).map(k => (k, k * 10)).toDF("k", "v"), l)
+      LsmIndex.append((8L until 12L).map(k => (k, k * 10)).toDF("k", "v"), l)
+      val data = fileListing(out).filter(_._1.endsWith(".parquet"))
+      LsmIndex.erase(l, "k", Seq(9L, 3L, 9L))
+      val kept = all.filterNot(r => r._1 == 3L || r._1 == 9L)
+      assert(rowsOf(l) == kept)
+      assert(LsmIndex.readByGen(spark, l).select("k").as[Long].collect().toSet == kept.map(_._1))
+      // bucket 1 = k ≡ 1 (mod 4): 1, 5 and the erased 9
+      assert(LsmIndex.prunedRead(spark, l, Seq(1L)).select("k").as[Long].collect().toSet ==
+        Set(1L, 5L))
+      assert(fileListing(out).filter(_._1.endsWith(".parquet")) == data, "data files touched")
+      // a repeated erase, a subset and an empty one change nothing on disk
+      val once = fileListing(out)
+      LsmIndex.erase(l, "k", Seq(3L, 9L))
+      LsmIndex.erase(l, "k", Seq(9L))
+      LsmIndex.erase(l, "k", Nil)
+      assert(fileListing(out) == once)
+      assert(rowsOf(l) == kept)
+      // a session that never saw the erase serves it too
+      assert(LsmIndex.read(spark.newSession(), l).count() == kept.size)
+      LsmIndex.compact(spark, l)()
+      assert(rowsOf(l) == kept)
+      assert(eraseFiles(out).isEmpty, "compact left an erase record")
+      assert(spark.read.parquet(s"$out/v=1").count() == kept.size, "erased rows left on disk")
     }
   }
 

@@ -874,13 +874,13 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     val rebuiltIdx = java.nio.file.Files.createTempDirectory("graft_pq_dv_rb").toString
     Similarity.writePqIndex(spark, sfDir, rebuiltIdx, col("vec_id") =!= victim)
     assert(after == search(rebuiltIdx))
-    // idempotent: re-deleting merges to the same sidecar content
+    // idempotent: re-deleting serves the same result
     Similarity.deletePqVectors(spark, idx, Seq(victim))
     assert(search(idx) == after)
-    // a rebuild starts clean: the sidecar is dropped and the victim
-    // (re-added by the unfiltered rebuild) serves again
+    // a rebuild starts clean: the new epoch carries no erasure and the
+    // victim (re-added by the unfiltered rebuild) serves again
     Similarity.writePqIndex(spark, sfDir, idx)
-    assert(!new java.io.File(s"$idx/_dv").exists())
+    assert(search(idx).exists(_._3 == victim))
     assert(search(idx) == before)
   }
 
@@ -931,13 +931,13 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     val rebuiltIdx = java.nio.file.Files.createTempDirectory("graft_ivf_dv_rb").toString
     Similarity.writeIvfIndex(spark, sfDir, rebuiltIdx, col("vec_id") =!= victim)
     assert(after == search(rebuiltIdx))
-    // idempotent: re-deleting merges to the same sidecar content
+    // idempotent: re-deleting serves the same result
     Similarity.deleteIvfVectors(spark, idx, Seq(victim))
     assert(search(idx) == after)
-    // a rebuild starts clean: the published rebuild drops the sidecar
-    // and the victim (re-added by the unfiltered rebuild) serves again
+    // a rebuild starts clean: the new epoch carries no erasure and the
+    // victim (re-added by the unfiltered rebuild) serves again
     Similarity.writeIvfIndex(spark, sfDir, idx)
-    assert(!new java.io.File(s"$idx/_dv").exists())
+    assert(search(idx).exists(_._3 == victim))
     assert(search(idx) == before)
   }
 

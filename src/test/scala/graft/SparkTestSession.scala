@@ -20,6 +20,17 @@ object SparkTestSession {
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestSession.spark
 
+  /** Every file under `dir`, relative path → size: a listing to compare
+    * before and after an operation that must write nothing. */
+  def fileListing(dir: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> p.toFile.length).toMap
+    finally walk.close()
+  }
+
   /** Write a tiny star (lineitem + orders [+ part]) to a temp dir shaped
     * like the driver's testdata, so Star/Insights run on controlled rows.
     *
