@@ -1389,7 +1389,9 @@ object Similarity {
     * first), so a rebuild that fails publishes nothing and the previous
     * index keeps serving. The three layouts commit one after another:
     * only a crash between two commits of a TRAINED rebuild can pair new
-    * codes with the old book, until the retry. */
+    * codes with the old book, until the retry. The new codes epoch keeps
+    * only the erasures ([[deletePqVectors]]) that land while it is
+    * written; the caller's `rowFilter` leaves out the ids erased before. */
   def writePqIndex(s: SparkSession, d: String, out: String,
       rowFilter: Column = lit(true), train: Boolean = false): Unit = {
     val cents = seedCents(vecs(s, d))
