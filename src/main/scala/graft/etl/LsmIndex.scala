@@ -99,7 +99,8 @@ object LsmIndex {
       subdirs: Option[Seq[String]] = None): DataFrame = {
     val v = SnapshotLog.resolve(layout.path)
     val dir = SnapshotLog.versionDir(layout.path, v)
-    val key = (dir.toString, SnapshotLog.commitInstant(layout.path, v), genDirs(dir.toString, layout))
+    val key = (dir.toString, SnapshotLog.commitInstant(layout.path, v),
+      genDirs(dir.toString, layout))
     val records = eraseRecords(dir)
     val live = epochs.updateWith((s, layout.path)) { memo =>
       val data = memo.filter(_.key == key).getOrElse {
@@ -116,11 +117,10 @@ object LsmIndex {
     live.keep.fold(all)(all.where)
   }
 
-  /** The `_erase.<n>` records of an epoch directory, in commit order
+  /** The `_erase.<n>` record names of an epoch directory, sorted
     * (underscore-prefixed: partition discovery never sees them). */
   private def eraseRecords(dir: File): Seq[String] =
-    Option(dir.list()).toSeq.flatten.filter(_.matches("^_erase\\.[0-9]+$"))
-      .sortBy(_.stripPrefix("_erase.").toLong)
+    Option(dir.list()).toSeq.flatten.filter(_.matches("^_erase\\.[0-9]+$")).sorted
 
   /** id column → erased ids over `records` of `dir`. A record is its id
     * column's name, then one id per line. A record vacuumed since the
@@ -221,24 +221,25 @@ object LsmIndex {
   }
 
   /** Merge-on-read union over every generation of the live epoch,
-    * erased rows and partition columns dropped — domain folds (occurrence sums, df
-    * derivation) stay with the caller, in the same scan that serves. */
+    * erased rows and partition columns dropped — domain folds
+    * (occurrence sums, df derivation) stay with the caller, in the same
+    * scan that serves. */
   def read(s: SparkSession, layout: Layout): DataFrame =
     scanLive(s, layout).drop(layout.partCols: _*)
 
   /** All generations WITH the `gen` column (bucket and erased rows
-    * dropped) — the
-    * staleness reports' input (what did the appends change?). */
+    * dropped) — the staleness reports' input (what did the appends
+    * change?). */
   def readByGen(s: SparkSession, layout: Layout): DataFrame = {
     val all = scanLive(s, layout)
     layout.bucket.fold(all) { case (name, _) => all.drop(name) }
   }
 
   /** The artifact read scoped to a probe's bucket list, erased rows
-    * dropped — only those buckets' directories are listed, and the static partition filter
-    * every serving path pushes into the file scan stays on the plan
-    * (file-level-pinned in PartitionPruningSpec for both bucketed
-    * families). */
+    * dropped — only those buckets' directories are listed, and the
+    * static partition filter every serving path pushes into the file
+    * scan stays on the plan (file-level-pinned in PartitionPruningSpec
+    * for both bucketed families). */
   def prunedRead(s: SparkSession, layout: Layout, buckets: Seq[Long]): DataFrame = {
     val (name, _) = layout.bucket.getOrElse(
       throw new IllegalArgumentException(s"${layout.path} has no bucket fan-out"))
