@@ -1483,21 +1483,14 @@ object StarBuilder {
     * had grown to 3.5% of the whole suite when every rep re-paid it);
     * re-invocations are pure version-log reads. Version-cycling
     * re-runs stay covered by StarBuilderSpec and by q153/q159, whose
-    * reps still pay their writes — and by the SLOW-GATE mode (r17
-    * advice item 3): `SPARK_GRAFT_FULL_LIFECYCLE=1` makes every
-    * invocation re-run the whole write → compact → vacuum cycle over
-    * the EXISTING log, so a periodic Verify run under that flag puts
-    * repeated-compaction regressions back in front of the hash gate
-    * (the oracle is idempotent across cycles by construction). */
+    * reps still pay their writes. */
   val q115_versioned_star: Q = (s, d) => {
     val wh = scratchDir(s, d, "vwh")
-    def lifecycle(): Unit = {
+    graft.SessionMemo.once(s, d, "vwh:lifecycle") {
       writeAllVersioned(s, d, wh)
       compactVersioned(s, wh, targetBytes = 64L * 1024 * 1024)
       vacuumVersions(wh, keep = 1)
     }
-    if (sys.env.get("SPARK_GRAFT_FULL_LIFECYCLE").contains("1")) lifecycle()
-    else graft.SessionMemo.once(s, d, "vwh:lifecycle") { lifecycle() }
     starTables.map { t =>
       readAt(s, wh, t)
         .agg(count(lit(1)).as("n_rows"))

@@ -514,13 +514,11 @@ object Curation {
   /** Per-language sample size of the q165 weighted draw — shared with
     * the streaming twin's default so the two cannot drift. */
   private[graft] val sampleK = 10
-  /** Weight tiers of the q165 draw (w = 1 + ⌊score·3⌋ ∈ 1..4). */
-  private val maxDrawsPerDoc = 4
 
   /** q165: weighted sampling WITHOUT replacement for epoch selection —
     * per language, [[sampleK]] documents drawn with probability
     * proportional to an integer QUALITY weight (w = 1 + ⌊q42-score · 3⌋
-    * ∈ 1..[[maxDrawsPerDoc]]), the Efraimidis–Spirakis bottom-k scheme
+    * ∈ 1..4), the Efraimidis–Spirakis bottom-k scheme
     * in its min-of-w-draws form: each document gets w independent
     * uniform draws (draw j = the first 8 md5 hex digits of
     * "doc_id:j" — the house oracle-replayable randomness, the

@@ -27,14 +27,22 @@ import graft.etl.Star.{round4, round4Sql}
   * Determinism: cosines are sequential folds (identical order both
   * engines); rankings order by (cosine DESC, id ASC); output cosine is
   * rounded to 4 decimals, rankings see the raw double.
+  *
+  * Every vector search — the gated queries and the persisted-index
+  * searches alike — is built from one definition of each step: the
+  * [[cosine]] expression, a candidate scope ([[bruteCandidates]] or
+  * [[ivfCandidates]]), the ADC table ([[adcTable]]) and score
+  * ([[ivfAdc]]/[[bruteAdc]]) for PQ, and the per-query top-k
+  * ([[topPerQuery]], behind [[cosineTop]] and [[adcTop]]). So the
+  * DuckDB gate on q36/q37/q110 checks the serving code too.
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
 
   private[graft] val numQueries = 10
   private val numCentroids = 16
-  private[ops] val nProbe = 4
-  private[ops] val topK = 5
+  private[graft] val nProbe = 4
+  private[graft] val topK = 5
 
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorOps.dot(a, b) // codegen'd; bit-equal to the HOF fold
@@ -43,6 +51,52 @@ object Similarity {
     s.read.parquet(s"$d/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", graft.functions.VectorOps.norm(col("v")))
+
+  /** A vector frame's rows as queries: vec_id, v, nrm renamed query_id,
+    * qv, qn (other columns kept). */
+  private def asQueries(vs: DataFrame): DataFrame =
+    vs.withColumnRenamed("vec_id", "query_id").withColumnRenamed("v", "qv")
+      .withColumnRenamed("nrm", "qn")
+
+  /** The gated query panel: the vectors with vec_id < [[numQueries]]. */
+  private def queryPanel(vs: DataFrame): DataFrame =
+    asQueries(vs.where(col("vec_id") < numQueries))
+
+  /** The cosine of query (qv, qn) and candidate (v, nrm). */
+  private def cosine: Column = dot(col("qv"), col("v")) / (col("qn") * col("nrm"))
+
+  /** Brute-force candidate scope: every corpus row against every query
+    * of a broadcast panel, minus self — the corpus streams through a
+    * broadcast nested-loop join and never shuffles. */
+  private def bruteCandidates(queries: DataFrame, corpus: DataFrame): DataFrame =
+    broadcast(queries).join(corpus, col("vec_id") =!= col("query_id"))
+
+  /** IVF candidate scope: the `rows` (vec_id, c_id, …) of the buckets
+    * each query probes — `probes` (query_id, c_id, …), batch-sized and
+    * broadcast — minus self. */
+  private def ivfCandidates(rows: DataFrame, probes: DataFrame): DataFrame =
+    rows.join(broadcast(probes), Seq("c_id")).where(col("vec_id") =!= col("query_id"))
+
+  /** The one per-query top-k of every vector search: within query_id,
+    * rows ordered by `score` (cosine desc or ADC distance asc) then
+    * vec_id asc — a total order — numbered as a long `rank`, first k
+    * kept. */
+  private def topPerQuery(ranked: DataFrame, score: Column, k: Int): DataFrame =
+    ranked.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(score, col("vec_id").asc)).cast("long"))
+      .where(col("rank") <= k)
+
+  /** Cosine top-k of candidates carrying (query_id, qv, qn) and
+    * (vec_id, v, nrm); adds `cosine` and `rank`. */
+  private def cosineTop(cand: DataFrame, k: Int): DataFrame =
+    topPerQuery(cand.withColumn("cosine", cosine), col("cosine").desc, k)
+
+  /** A cosine top-k as published rows: (query_id, rank, neighbor_id,
+    * cosine rounded to 4), ordered. */
+  private def knnRows(top: DataFrame): DataFrame =
+    top.select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
+        round4(col("cosine")).as("cosine"))
+      .orderBy("query_id", "rank")
 
   /** q200 geometry: candidate pool size, selections, diversity weight. */
   private[graft] val mmrPool = 20
@@ -108,7 +162,7 @@ object Similarity {
       .select(col("v").as("qv"), col("nrm").as("qn"))
     val pool = all.where(col("vec_id") =!= 0)
       .crossJoin(broadcast(q0)) // 1-row query ride (documented exception)
-      .withColumn("rel", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
+      .withColumn("rel", cosine)
       .orderBy(col("rel").desc, col("vec_id").asc)
       .limit(mmrPool)
       .select(col("vec_id"), col("v"), col("nrm"), col("rel"))
@@ -132,16 +186,7 @@ object Similarity {
   /** q36: exact cosine top-5 for each query vector (vec_id < 10). */
   val q36_knn_brute: Q = (s, d) => {
     val all = vecs(s, d)
-    val q = all.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val cand = broadcast(q).join(all, col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round4(col("cosine")).as("cosine"))
-      .orderBy("query_id", "rank")
+    knnRows(cosineTop(bruteCandidates(queryPanel(all), all), topK))
   }
 
   /** q269: HARD-NEGATIVE MINING — the contrastive-training data op
@@ -163,18 +208,10 @@ object Similarity {
       .select(col("vec_id"), col("label").cast("long").as("label"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", graft.functions.VectorOps.norm(col("v")))
-    val q = all.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("label").as("q_label"))
-    val cand = broadcast(q).join(all, col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val wn = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val negs = cand.where(col("label") =!= col("q_label"))
-      .withColumn("rank", row_number().over(wn).cast("long"))
-      .where(col("rank") <= 3)
+    val cand = bruteCandidates(queryPanel(all).withColumnRenamed("label", "q_label"), all)
+    val negs = cosineTop(cand.where(col("label") =!= col("q_label")), 3)
     val posBest = cand.where(col("label") === col("q_label"))
-      .groupBy("query_id").agg(max(col("cosine")).as("pos_best"))
+      .groupBy("query_id").agg(max(cosine).as("pos_best"))
     negs.join(posBest, Seq("query_id"), "left")
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
         round4(col("cosine")).as("neg_cosine"),
@@ -262,17 +299,8 @@ object Similarity {
     * candidate stage and the full ranking its re-scorer. */
   val q276_matryoshka_recall: Q = (s, d) => {
     val all = vecs(s, d)
-    def top(vcol: DataFrame): DataFrame = {
-      val q = vcol.where(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("vec_id").asc)
-      broadcast(q).join(vcol, col("vec_id") =!= col("query_id"))
-        .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= topK)
-        .select(col("query_id"), col("vec_id"))
-    }
+    def top(vs: DataFrame): DataFrame =
+      cosineTop(bruteCandidates(queryPanel(vs), vs), topK).select(col("query_id"), col("vec_id"))
     val full = top(all)
     val trunc = top(all
       .select(col("vec_id"), slice(col("v"), 1, truncDims).as("v"))
@@ -384,29 +412,32 @@ object Similarity {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
       .withColumn("nrm", graft.functions.VectorOps.norm(col("v")))
-    val srcPanel = all
+    val srcPanel = asQueries(all
       .where(col("label") === marginSrcLabel && col("vec_id") < marginSrcCap)
-      .select(col("vec_id").as("src_id"), col("v").as("qv"), col("nrm").as("qn"))
+      .select(col("vec_id"), col("v"), col("nrm")))
     val tgt = all.where(col("label") === marginTgtLabel)
-      .select(col("vec_id").as("tgt_id"), col("v").as("tv"), col("nrm").as("tn"))
-    val w = Window.partitionBy("src_id")
-      .orderBy(col("cosine").desc, col("tgt_id").asc)
-    val ranked = tgt.crossJoin(broadcast(srcPanel)) // ≤60-row panel ride
-      .withColumn("cosine", dot(col("qv"), col("tv")) / (col("qn") * col("tn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= marginK)
+      .select(col("vec_id"), col("v"), col("nrm"))
+    marginPivot(cosineTop(tgt.crossJoin(broadcast(srcPanel)), marginK)) // ≤60-row panel ride
+      .select(col("query_id").as("src_id"), col("top1").as("tgt_id"),
+        round4(col("c1")).as("cos_top1"), col("margin"), col("accepted"))
+      .orderBy("src_id")
+  }
+
+  /** The q231/q233 margin pivot over a per-query top-[[marginK]] cosine
+    * ranking: per query_id, the top-1 vec_id (`top1`) and cosine `c1`,
+    * the ratio margin 4·c1 / (((c1+c2)+c3)+c4) rounded to 4, and the
+    * cross-multiplied accept test `accepted`. */
+  private def marginPivot(top: DataFrame): DataFrame = {
     def at(r: Int, c: String) = max(when(col("rank") === r, col(c)))
     val sum4 = col("c1") + col("c2") + col("c3") + col("c4")
-    ranked.groupBy("src_id")
-      .agg(at(1, "tgt_id").as("tgt_id"), at(1, "cosine").as("c1"),
+    top.groupBy("query_id")
+      .agg(at(1, "vec_id").as("top1"), at(1, "cosine").as("c1"),
         at(2, "cosine").as("c2"), at(3, "cosine").as("c3"),
         at(4, "cosine").as("c4"))
-      .select(col("src_id"), col("tgt_id"),
-        round4(col("c1")).as("cos_top1"),
+      .select(col("query_id"), col("top1"), col("c1"),
         round4(lit(4) * col("c1") / sum4).as("margin"),
         when(lit(80) * col("c1") > lit(21) * sum4, 1L).otherwise(0L)
           .as("accepted"))
-      .orderBy("src_id")
   }
 
   /** q233: IVF-SERVED margin mining — q231's production path with its
@@ -436,34 +467,23 @@ object Similarity {
       .where(col("label") === marginSrcLabel && col("vec_id") < marginSrcCap)
       .select("vec_id")
     val probes = ranked.join(broadcast(srcPanel), "vec_id")
-      .select(col("vec_id").as("src_id"), col("c_id"))
-    val tgtAssign = ranked.where(col("rn") === 1)
+      .select(col("vec_id").as("query_id"), col("c_id"))
+      .join(asQueries(all), "query_id")
+    val tgtRows = ranked.where(col("rn") === 1)
       .join(labels.where(col("label") === marginTgtLabel).select("vec_id"), "vec_id")
       .select(col("vec_id"), col("c_id"))
-    val q = all.select(col("vec_id").as("src_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy("src_id").orderBy(col("cosine").desc, col("tgt_id").asc)
-    val cand = probes.join(tgtAssign, "c_id")
-      .select(col("src_id"), col("vec_id").as("tgt_id"))
-      .join(q, "src_id")
-      .join(all.select(col("vec_id").as("tgt_id"), col("v"), col("nrm")), "tgt_id")
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= marginK)
-    def at(r: Int, c: String) = max(when(col("rank") === r, col(c)))
-    val sum4 = col("c1") + col("c2") + col("c3") + col("c4")
-    val piv = cand.groupBy("src_id")
-      .agg(at(1, "tgt_id").as("tgt_ivf"), at(1, "cosine").as("c1"),
-        at(2, "cosine").as("c2"), at(3, "cosine").as("c3"),
-        at(4, "cosine").as("c4"))
+      .join(all, "vec_id")
+    // src and tgt labels differ, so the scope's self-exclusion drops nothing
+    val piv = marginPivot(cosineTop(ivfCandidates(tgtRows, probes), marginK))
+      .withColumnRenamed("query_id", "src_id")
     q231_margin_mining(s, d)
       .select(col("src_id"), col("tgt_id").as("tgt_brute"))
       .join(piv, Seq("src_id"), "left")
-      .select(col("src_id"), col("tgt_brute"), col("tgt_ivf"),
-        when(col("tgt_ivf") === col("tgt_brute"), 1L).otherwise(0L)
+      .select(col("src_id"), col("tgt_brute"), col("top1").as("tgt_ivf"),
+        when(col("top1") === col("tgt_brute"), 1L).otherwise(0L)
           .as("top1_match"),
-        round4(lit(4) * col("c1") / sum4).as("margin_ivf"),
-        when(lit(80) * col("c1") > lit(21) * sum4, 1L).otherwise(0L)
-          .as("accepted_ivf"))
+        col("margin").as("margin_ivf"),
+        coalesce(col("accepted"), lit(0L)).as("accepted_ivf"))
       .orderBy("src_id")
   }
 
@@ -545,26 +565,23 @@ object Similarity {
     rankAgainst(all, seedCents(all), keep)
   }
 
+  /** (query_id, c_id): each panel query's `p` nearest centroids in a
+    * [[rankAgainst]] frame (ranked to ≥ p) — the in-memory twin of
+    * [[rankProbes]]. */
+  private def panelProbes(ranked: DataFrame, p: Int): DataFrame =
+    ranked.where(col("vec_id") < numQueries && col("rn") <= p)
+      .select(col("vec_id").as("query_id"), col("c_id"))
+
   /** The q37 IVF search over a prebuilt [[centroidRanks]] frame (ranked to
-    * ≥ probeCount). */
+    * ≥ probeCount): [[ivfIndexSearch]]'s scope and top-k over the
+    * in-memory bucket assignment. */
   private def ivfKnnFrom(s: SparkSession, d: String, ranked: DataFrame,
       probeCount: Int): DataFrame = {
     val all = vecs(s, d)
-    val assign = ranked.where(col("rn") === 1).select(col("vec_id"), col("c_id"))
-    val probes = ranked.where(col("vec_id") < numQueries && col("rn") <= probeCount)
-      .select(col("vec_id").as("query_id"), col("c_id"))
-    val q = all.select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val cand = probes.join(assign, "c_id")
-      .where(col("vec_id") =!= col("query_id"))
-      .join(q, "query_id")
+    val rows = ranked.where(col("rn") === 1).select(col("vec_id"), col("c_id"))
       .join(all, "vec_id")
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round4(col("cosine")).as("cosine"))
-      .orderBy("query_id", "rank")
+    val probes = panelProbes(ranked, probeCount).join(queryPanel(all), "query_id")
+    knnRows(cosineTop(ivfCandidates(rows, probes), topK))
   }
 
   /** q37: IVF top-5 — bucket by nearest centroid, probe 4 buckets. */
@@ -691,24 +708,16 @@ object Similarity {
     * nprobe directories, the PartitionPruningSpec claim, with erased
     * vectors dropped by the read, before the top-k window, so an erased
     * vector never surfaces as a neighbor), and per-query candidate
-    * scoping is a broadcast equi-join on c_id.
+    * scoping is the broadcast equi-join on c_id of [[ivfCandidates]].
     * `queries` carries (query_id, qv) raw vectors — queries are new
     * data; only the corpus is pre-indexed. Returns (query_id, rank,
     * neighbor_id, cosine): top `k` by cosine desc, vec_id asc
-    * tie-break, self-matches excluded — q37's exact contract. */
+    * tie-break, self-matches excluded — q37's contract, computed by
+    * the same [[ivfCandidates]] and [[cosineTop]] q37 runs. */
   def ivfIndexSearch(s: SparkSession, index: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
     val probes = rankProbes(s, index, queries, nprobe)
-    val cand = probedRows(s, byCentroid(index), probes)
-      .join(broadcast(probes), Seq("c_id"))
-      .where(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round4(col("cosine")).as("cosine"))
-      .orderBy("query_id", "rank")
+    knnRows(cosineTop(ivfCandidates(probedRows(s, byCentroid(index), probes), probes), k))
   }
 
   /** The q140 deterministic erasure set: a bounded GDPR-request-sized
@@ -881,13 +890,7 @@ object Similarity {
     * never shuffles). */
   lazy val q85_quantized_knn_recall: Q = (s, d) => {
     val all = reconstructed(s, d)
-    val q = all.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    val qknn = broadcast(q).join(all, col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
+    val qknn = cosineTop(bruteCandidates(queryPanel(all), all), topK)
       .select(col("query_id").as("q2"), col("vec_id").as("n2"))
     val exact = exactPairs(s, d)
     exact.join(qknn,
@@ -1042,13 +1045,16 @@ object Similarity {
   private def l2sq(a: Column, b: Column): Column =
     graft.functions.VectorOps.squaredL2(a, b)
 
+  /** A frame of unit vectors `u` split into their 4 subvectors: the
+    * other columns plus (j, x), one row per subspace. */
+  private def subvectors(unit: DataFrame): DataFrame =
+    unit.withColumn("j", explode(sequence(lit(0), lit(pqSubspaces - 1))))
+      .withColumn("x", slice(col("u"), col("j") * pqSubDim + 1, lit(pqSubDim)))
+      .drop("u")
+
   /** (vec_id, j, x): every unit vector's 4 subvectors. */
   private def pqSubvectors(s: SparkSession, d: String): DataFrame =
-    unitVecs(s, d)
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(pqSubspaces - 1))).as("j"), col("u"))
-      .select(col("vec_id"), col("j"),
-        slice(col("u"), col("j") * pqSubDim + 1, lit(pqSubDim)).as("x"))
+    subvectors(unitVecs(s, d))
 
   /** The seed PQ codebook (j, k, cb): subspace j's code k = seed vector
     * k's j-th subvector (vec_id < 16, unit-normalized) — training-free
@@ -1116,6 +1122,54 @@ object Similarity {
       .orderBy("vec_id")
   }
 
+  /** The ADC distance table (query_id, j, code, dq): each query's
+    * (query_id, qv, qn) unit subvectors' squared L2 to every code of
+    * product codebook `cb` — queries × 4 × 16 rows, always broadcast. */
+  private def adcTable(queries: DataFrame, cb: DataFrame): DataFrame =
+    subvectors(queries.select(col("query_id"), transform(col("qv"), x => x / col("qn")).as("u")))
+      .join(broadcast(cb), "j")
+      .select(col("query_id"), col("j"), col("k").as("code"),
+        l2sq(col("x"), col("cb")).as("dq"))
+
+  /** (query_id, vec_id, adist): the ADC distance of every `codes` row
+    * (vec_id, j, code) to every query of `table`, minus self — PQ's
+    * brute-force scope. */
+  private def bruteAdc(codes: DataFrame, table: DataFrame): DataFrame =
+    subspaceTotal(
+      codes.join(broadcast(table), Seq("j", "code")).where(col("vec_id") =!= col("query_id")),
+      Seq("query_id", "vec_id"), col("dq"), "adist")
+
+  /** (query_id, vec_id, adist): the ADC distance of each query to the
+    * code rows (vec_id, j, code, c_id) of its probed buckets
+    * ([[ivfCandidates]]) — the IVFPQ score [[pqIndexSearch]] serves and
+    * q110/q133 compute in memory. */
+  private def ivfAdc(rows: DataFrame, probes: DataFrame, table: DataFrame): DataFrame =
+    subspaceTotal(
+      ivfCandidates(rows, probes).join(broadcast(table), Seq("query_id", "j", "code")),
+      Seq("query_id", "vec_id"), col("dq"), "adist")
+
+  /** ADC top-k of (query_id, vec_id, adist): adist asc, vec_id asc. */
+  private[graft] def adcTop(approx: DataFrame, k: Int): DataFrame =
+    topPerQuery(approx, col("adist").asc, k)
+
+  /** The recall tail over an already-selected top-k pair set `top`
+    * ((q2, n2) rows) vs the exact q36 top-5 — shared by q58, the
+    * in-memory ADC recalls and the persisted-index q114. */
+  private def recallVsExact(s: SparkSession, d: String, top: DataFrame): DataFrame =
+    exactPairs(s, d)
+      .join(top, col("query_id") === col("q2") && col("neighbor_id") === col("n2"), "left")
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("n_brute"), count(col("n2")).as("n_matched"))
+      .withColumn("recall",
+        round4(col("n_matched").cast("double") / col("n_brute").cast("double")))
+      .orderBy("query_id")
+
+  /** Per-query recall of an ADC ranking vs the exact q36 top-5:
+    * `approx` is (query_id, vec_id, adist). */
+  private def adcRecall(s: SparkSession, d: String, approx: DataFrame): DataFrame =
+    recallVsExact(s, d,
+      adcTop(approx, topK).select(col("query_id").as("q2"), col("vec_id").as("n2")))
+
   /** q109: PQ ADC search recall — asymmetric distance computation: the
     * query stays exact, the corpus exists only as its 4 code ids, and
     * the approximate distance is the sum of precomputed
@@ -1128,67 +1182,10 @@ object Similarity {
     * (broadcast); the corpus side joins it on (j, code) — equi, narrow,
     * no corpus shuffle wider than (vec_id, j, code); the per-query
     * top-k is a WindowGroupLimit rank filter. */
-  /** The ADC distance table (query_id, j, code, dq) under codebook
-    * `cb`: every query subvector's squared L2 to every code — queries ×
-    * 4 × 16 rows, always broadcast. */
-  private def pqDistTableFor(s: SparkSession, d: String, cb: DataFrame): DataFrame =
-    pqSubvectors(s, d).where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("j"), col("x").as("qx"))
-      .join(broadcast(cb), "j")
-      .select(col("query_id"), col("j"), col("k").as("code"),
-        l2sq(col("qx"), col("cb")).as("dq"))
+  lazy val q109_pq_adc_recall: Q = (s, d) =>
+    adcRecall(s, d, bruteAdc(pqCodes(s, d).select(col("vec_id"), col("j"), col("code")),
+      adcTable(queryPanel(vecs(s, d)), pqCodebook(s, d))))
 
-  private def pqDistTable(s: SparkSession, d: String): DataFrame =
-    pqDistTableFor(s, d, pqCodebook(s, d))
-
-  /** Top-k of an ADC ranking: (query_id, vec_id, adist) → the 5 best
-    * (adist asc, vec_id asc) per query as (q2, n2) — THE selection both
-    * recall shapes (per-query q109/q110, labelled-global q111) join
-    * against the exact pairs, so the tie-break lives in one place. */
-  private def adcTop(approx: DataFrame): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)
-    approx.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
-      .select(col("query_id").as("q2"), col("vec_id").as("n2"))
-  }
-
-  /** The recall tail over an already-selected top-k pair set `top`
-    * ((q2, n2) rows) vs the exact q36 top-5 — shared by the in-memory
-    * ADC recalls and the persisted-index q114. */
-  private def adcRecallFromTop(s: SparkSession, d: String, top: DataFrame): DataFrame =
-    exactPairs(s, d)
-      .join(top, col("query_id") === col("q2") && col("neighbor_id") === col("n2"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_brute"), count(col("n2")).as("n_matched"))
-      .withColumn("recall",
-        round4(col("n_matched").cast("double") / col("n_brute").cast("double")))
-      .orderBy("query_id")
-
-  /** Per-query recall of an ADC ranking vs the exact q36 top-5:
-    * `approx` is (query_id, vec_id, adist). */
-  private def adcRecall(s: SparkSession, d: String, approx: DataFrame): DataFrame =
-    adcRecallFromTop(s, d, adcTop(approx))
-
-  lazy val q109_pq_adc_recall: Q = (s, d) => {
-    val codes = pqCodes(s, d).select(col("vec_id"), col("j"), col("code"))
-    val approx = subspaceTotal(
-      codes.join(broadcast(pqDistTable(s, d)), Seq("j", "code"))
-        .where(col("vec_id") =!= col("query_id")),
-      Seq("query_id", "vec_id"), col("dq"), "adist")
-    adcRecall(s, d, approx)
-  }
-
-  /** q110: IVF+PQ — the full ANN serving stack (the FAISS IVFPQ shape,
-    * Jégou et al. TPAMI'11 §V): the coarse quantizer prunes the corpus
-    * to the query's nProbe centroid buckets (q37's partition-pruning
-    * story — at scale the candidate read is nprobe directories of the
-    * [[writeIvfIndex]] layout), and ONLY those candidates are ranked by
-    * the PQ asymmetric distance (q109's shape — the candidate's 4 code
-    * ids meet the query's broadcast distance table; raw vectors are
-    * never touched after encoding). Reported per query against the
-    * exact cosine top-5: the recall cost of stacking both
-    * approximations, read next to q58 (IVF alone) and q109 (PQ alone).
-    * All joins equi and narrow; no corpus shuffle. */
   /** One Lloyd step per SUBSPACE: each code (j, k) recomputed as the
     * elementwise mean of its assigned subvectors, with the same
     * 10⁻⁶-quantized integer partial sums as [[lloydCodebook]] — keyed
@@ -1235,11 +1232,8 @@ object Similarity {
       pqCodes(s, d).select(col("vec_id"), col("j"), col("code")))(
       _.localCheckpoint(true))
     def arm(codes: DataFrame, cb: DataFrame, label: String): DataFrame = {
-      val approx = subspaceTotal(
-        codes.join(broadcast(pqDistTableFor(s, d, cb)), Seq("j", "code"))
-          .where(col("vec_id") =!= col("query_id")),
-        Seq("query_id", "vec_id"), col("dq"), "adist")
-      exact.join(adcTop(approx),
+      val approx = bruteAdc(codes, adcTable(queryPanel(vecs(s, d)), cb))
+      exact.join(adcTop(approx, topK).select(col("query_id").as("q2"), col("vec_id").as("n2")),
           col("query_id") === col("q2") && col("neighbor_id") === col("n2"), "left")
         .agg(count(lit(1)).as("n_exact"), count(col("n2")).as("n_found"))
         .select(lit(label).as("codebook"), col("n_exact"), col("n_found"),
@@ -1262,20 +1256,31 @@ object Similarity {
       .orderBy("codebook")
   }
 
-  lazy val q110_ivfpq_recall: Q = (s, d) => {
-    val ranked = centroidRanks(s, d, nProbe)
-    val cand = ranked.where(col("vec_id") < numQueries && col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("c_id"))
-      .join(ranked.where(col("rn") === 1).select(col("vec_id"), col("c_id")), "c_id")
-      .where(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id")
-    val codes = pqCodes(s, d).select(col("vec_id"), col("j"), col("code"))
-    val approx = subspaceTotal(
-      cand.join(codes, "vec_id")
-        .join(broadcast(pqDistTable(s, d)), Seq("query_id", "j", "code")),
-      Seq("query_id", "vec_id"), col("dq"), "adist")
-    adcRecall(s, d, approx)
+  /** (query_id, vec_id, adist) of the in-memory IVFPQ search q110 and
+    * q133 rank: the seed-codebook probes of the query panel over the
+    * code rows a full-corpus [[writePqIndex]] holds ([[pqIndexRows]]),
+    * scored by [[ivfAdc]] — [[pqIndexSearch]]'s search without the
+    * files. */
+  private[graft] def ivfpqScores(s: SparkSession, d: String): DataFrame = {
+    val all = vecs(s, d)
+    val cb = pqCodebook(s, d)
+    ivfAdc(pqIndexRows(s, d, cb, seedCents(all), lit(true)),
+      panelProbes(centroidRanks(s, d, nProbe), nProbe), adcTable(queryPanel(all), cb))
   }
+
+  /** q110: IVF+PQ — the full ANN serving stack (the FAISS IVFPQ shape,
+    * Jégou et al. TPAMI'11 §V): the coarse quantizer prunes the corpus
+    * to the query's nProbe centroid buckets (q37's partition-pruning
+    * story — at scale the candidate read is nprobe directories of the
+    * [[writeIvfIndex]] layout), and ONLY those candidates are ranked by
+    * the PQ asymmetric distance (q109's shape — the candidate's 4 code
+    * ids meet the query's broadcast distance table; raw vectors are
+    * never touched after encoding). Reported per query against the
+    * exact cosine top-5: the recall cost of stacking both
+    * approximations, read next to q58 (IVF alone) and q109 (PQ alone).
+    * The ranking is [[ivfpqScores]] — [[pqIndexSearch]]'s scope, score
+    * and top-k. All joins equi and narrow; no corpus shuffle. */
+  lazy val q110_ivfpq_recall: Q = (s, d) => adcRecall(s, d, ivfpqScores(s, d))
 
   /** ADC shortlist size for the q133 refine stage: 4× the served k —
     * the FAISS `k_factor` convention's small end. */
@@ -1301,41 +1306,20 @@ object Similarity {
     * per query (at cluster scale: point reads against the vec_id-keyed
     * store), with the query vectors broadcast. */
   lazy val q133_ivfpq_refine: Q = (s, d) => {
-    val ranked = centroidRanks(s, d, nProbe)
-    val cand = ranked.where(col("vec_id") < numQueries && col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("c_id"))
-      .join(ranked.where(col("rn") === 1).select(col("vec_id"), col("c_id")), "c_id")
-      .where(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id")
-    val codes = pqCodes(s, d).select(col("vec_id"), col("j"), col("code"))
-    val approx = subspaceTotal(
-      cand.join(codes, "vec_id")
-        .join(broadcast(pqDistTable(s, d)), Seq("query_id", "j", "code")),
-      Seq("query_id", "vec_id"), col("dq"), "adist")
+    val approx = ivfpqScores(s, d)
       .pipe(graft.Ckpt.eager) // two rankings (top-k arm + shortlist) read it
-    val wR = Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)
-    val shortlist = approx.withColumn("rr", row_number().over(wR))
-      .where(col("rr") <= refineR)
-      .select("query_id", "vec_id")
+    val shortlist = adcTop(approx, refineR).select("query_id", "vec_id")
     val all = vecs(s, d)
-    val qv = all.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val wK = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    val refinedTop = shortlist
-      .join(all, "vec_id")
-      .join(broadcast(qv), "query_id")
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(wK))
-      .where(col("rank") <= topK)
-      .select(col("query_id").as("q2"), col("vec_id").as("n2"))
+    val refined = cosineTop(
+      shortlist.join(all, "vec_id").join(broadcast(queryPanel(all)), "query_id"), topK)
     val exact = exactPairs(s, d)
     def arm(top: DataFrame, n: String): DataFrame =
-      exact.join(top,
+      exact.join(top.select(col("query_id").as("q2"), col("vec_id").as("n2")),
           col("query_id") === col("q2") && col("neighbor_id") === col("n2"), "left")
         .groupBy("query_id")
         .agg(count(lit(1)).as("n_exact"), count(col("n2")).as(n))
-    arm(adcTop(approx), "n_adc")
-      .join(arm(refinedTop, "n_refined").drop("n_exact"), "query_id")
+    arm(adcTop(approx, topK), "n_adc")
+      .join(arm(refined, "n_refined").drop("n_exact"), "query_id")
       .select(col("query_id"), col("n_exact"), col("n_adc"), col("n_refined"),
         round4(col("n_adc").cast("double") / col("n_exact").cast("double"))
           .as("recall_adc"),
@@ -1438,8 +1422,10 @@ object Similarity {
     * (query_id, qv) raw query vectors — queries are new data; only the
     * corpus is pre-encoded. Probe pruning: rank the index centroids
     * per query on the driver ([[rankProbes]]) and read only the probed
-    * buckets ([[probedRows]]), while the per-query candidate scoping stays a
-    * broadcast equi-join on c_id. The read drops erased vectors BEFORE
+    * buckets ([[probedRows]]); the scope, score and top-k are
+    * [[ivfAdc]] and [[adcTop]], the code q110/q133 rank with
+    * ([[ivfpqScores]]; SimilaritySpec pins pair-level parity on a
+    * full-corpus index). The read drops erased vectors BEFORE
     * the top-k window, so surviving ranks equal a
     * rebuild-without-the-ids (PartitionPruningSpec pins that
     * equivalence on unchanged files). Returns (query_id, rank, vec_id,
@@ -1447,27 +1433,11 @@ object Similarity {
     * self-matches excluded. */
   def pqIndexSearch(s: SparkSession, index: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
-    val cb = LsmIndex.read(s, pqCodebookLayout(index))
-    val qn = queries.withColumn("qn", graft.functions.VectorOps.norm(col("qv")))
+    val table = adcTable(
+      queries.withColumn("qn", graft.functions.VectorOps.norm(col("qv"))),
+      LsmIndex.read(s, pqCodebookLayout(index)))
     val probes = rankProbes(s, index, queries, nprobe)
-    val qsub = qn
-      .withColumn("u", transform(col("qv"), x => x / col("qn")))
-      .select(col("query_id"),
-        explode(sequence(lit(0), lit(pqSubspaces - 1))).as("j"), col("u"))
-      .select(col("query_id"), col("j"),
-        slice(col("u"), col("j") * pqSubDim + 1, lit(pqSubDim)).as("x"))
-    val dtab = qsub.join(broadcast(cb), "j")
-      .select(col("query_id"), col("j"), col("k").as("code"),
-        l2sq(col("x"), col("cb")).as("dq"))
-    val cand = probedRows(s, byCentroid(s"$index/codes"), probes)
-      .join(broadcast(probes), Seq("c_id"))
-      .where(col("vec_id") =!= col("query_id"))
-    val approx = subspaceTotal(
-      cand.join(broadcast(dtab), Seq("query_id", "j", "code")),
-      Seq("query_id", "vec_id"), col("dq"), "adist")
-    val w = Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)
-    approx.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    adcTop(ivfAdc(probedRows(s, byCentroid(s"$index/codes"), probes), probes, table), k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("adist"))
   }
 
@@ -1476,10 +1446,11 @@ object Similarity {
     * < 50, the q80/q89/q107 incremental-family convention), grow it
     * with [[appendPqIndex]] under the frozen codebooks, then run
     * [[pqIndexSearch]] against the files and report per-query recall
-    * vs the exact q36 — the SAME contract as q110, which computes the
-    * identical search in-memory: matching results are the proof that
-    * the persisted, incrementally-grown index serves exactly what a
-    * full recompute would (the oracle is literally q110's). */
+    * vs the exact q36 — the SAME contract as q110, which runs the same
+    * [[ivfAdc]] and [[adcTop]] over in-memory code rows: matching
+    * results are the proof that the persisted, incrementally-grown
+    * index serves exactly what a full recompute would (the oracle is
+    * literally q110's). */
   lazy val q114_pq_index_recall: Q = (s, d) => {
     val idx = graft.etl.StarBuilder.scratchDir(s, d, "pq")
     val bucket = TextCore.idBucket(col("vec_id"))
@@ -1494,7 +1465,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val top = pqIndexSearch(s, idx, queries, nProbe, topK)
       .select(col("query_id").as("q2"), col("vec_id").as("n2"))
-    adcRecallFromTop(s, d, top)
+    recallVsExact(s, d, top)
   }
 
   /** The q142 similarity threshold — q35's embedding near-dup bar, so
@@ -2474,16 +2445,9 @@ object Similarity {
 
   /** q58: recall of the IVF path against the exact baseline — the
     * measured accuracy/cost tradeoff of the 4-probe bucket search. */
-  lazy val q58_ivf_recall: Q = (s, d) => {
-    val brute = exactPairs(s, d)
-    val ivf = q37_knn_ivf(s, d).select(col("query_id").as("q2"), col("neighbor_id").as("n2"))
-    brute.join(ivf,
-        col("query_id") === col("q2") && col("neighbor_id") === col("n2"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_brute"), count(col("n2")).as("n_matched"))
-      .withColumn("recall", round4(col("n_matched").cast("double") / col("n_brute").cast("double")))
-      .orderBy("query_id")
-  }
+  lazy val q58_ivf_recall: Q = (s, d) =>
+    recallVsExact(s, d,
+      q37_knn_ivf(s, d).select(col("query_id").as("q2"), col("neighbor_id").as("n2")))
 
   /** The shared q116/q117/q118 oracle prefix: centered corpus, u₀ and
     * the 3 power steps to (u₃, w₃) with the Rayleigh λ. */

@@ -145,6 +145,24 @@ class HybridServingSpec extends AnyFunSuite with SparkTestBase {
     assert(serve(spark.newSession(), lex, ivf, q) == rebuilt)
   }
 
+  test("a warm PQ or IVF index search runs no schema inference and a pinned job count") {
+    val sfDir = "/root/testdata/sf0.001"
+    val (pq, ivf) = (tmp("graft_pq_budget"), tmp("graft_ivf_budget"))
+    Similarity.writePqIndex(spark, sfDir, pq)
+    Similarity.writeIvfIndex(spark, sfDir, ivf)
+    def q(id: Long) = spark.createDataFrame(Seq((id, Seq.tabulate(64)(i => math.sin(i + id)))))
+      .toDF("query_id", "qv")
+    Similarity.pqIndexSearch(spark, pq, q(1L), 4, 5).collect()
+    Similarity.ivfIndexSearch(spark, ivf, q(1L), 4, 5).collect()
+    val warmPq = jobsOf(Similarity.pqIndexSearch(spark, pq, q(2L), 4, 5).collect())
+    val warmIvf = jobsOf(Similarity.ivfIndexSearch(spark, ivf, q(2L), 4, 5).collect())
+    assert(!warmPq.exists(_.startsWith("parquet at")), s"schema inference: $warmPq")
+    // the counts of the serving plans as they stood before the vector
+    // searches shared one top-k: a change to either plan shows here
+    assert(warmPq.size == 6, s"${warmPq.size} jobs: ${warmPq.mkString("\n")}")
+    assert(warmIvf.size == 5, s"${warmIvf.size} jobs: ${warmIvf.mkString("\n")}")
+  }
+
   test("driver-ranked IVF probes equal rankAgainstScored's for every q37 query") {
     val ivf = tmp("graft_probe_parity")
     Similarity.writeIvfIndex(spark, embsDir, ivf)

@@ -214,6 +214,24 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("pqIndexSearch on a full-corpus index serves q110's in-memory IVFPQ ranking pair for pair") {
+    import org.apache.spark.sql.functions.col
+    val sfDir = "/root/testdata/sf0.001"
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_parity").toString
+    Similarity.writePqIndex(spark, sfDir, idx)
+    val queries = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .where(col("vec_id") < Similarity.numQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").cast("array<double>").as("qv"))
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+      df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
+        r.getAs[Long]("vec_id"))).toSeq.sorted
+    val served = pairs(Similarity.pqIndexSearch(spark, idx, queries,
+      Similarity.nProbe, Similarity.topK))
+    val inMemory = pairs(Similarity.adcTop(Similarity.ivfpqScores(spark, sfDir), Similarity.topK))
+    assert(served.size == Similarity.numQueries * Similarity.topK)
+    assert(served == inMemory)
+  }
+
   test("q99: a bucket whose members sum to zero keeps its seed centroid") {
     // single centroid (id 0); member 16 is its exact negation, so the
     // Lloyd mean is the zero vector — cosine to it would be 0/0 for every
