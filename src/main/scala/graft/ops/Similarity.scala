@@ -1257,15 +1257,17 @@ object Similarity {
   }
 
   /** (query_id, vec_id, adist) of the in-memory IVFPQ search q110 and
-    * q133 rank: the seed-codebook probes of the query panel over the
+    * q133 rank: the seed-codebook probes of the query panel (only the
+    * panel is ranked, as [[rankProbes]] ranks only the batch) over the
     * code rows a full-corpus [[writePqIndex]] holds ([[pqIndexRows]]),
     * scored by [[ivfAdc]] — [[pqIndexSearch]]'s search without the
     * files. */
   private[graft] def ivfpqScores(s: SparkSession, d: String): DataFrame = {
     val all = vecs(s, d)
     val cb = pqCodebook(s, d)
+    val panelRanks = rankAgainst(all.where(col("vec_id") < numQueries), seedCents(all), nProbe)
     ivfAdc(pqIndexRows(s, d, cb, seedCents(all), lit(true)),
-      panelProbes(centroidRanks(s, d, nProbe), nProbe), adcTable(queryPanel(all), cb))
+      panelProbes(panelRanks, nProbe), adcTable(queryPanel(all), cb))
   }
 
   /** q110: IVF+PQ — the full ANN serving stack (the FAISS IVFPQ shape,
