@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import graft.etl.Star.{round4, round4Sql}
 
@@ -128,12 +128,8 @@ object Retrieval {
     * and aggregating the query terms' posting lists into a
     * query-vocabulary-sized one. */
   private def queryDf(post: DataFrame, qtf: DataFrame): DataFrame =
-    termDf(post.join(broadcast(qtf.select("term").distinct()), Seq("term"), "left_semi"))
-
-  /** df per term of a postings frame: its row count (postings are unique
-    * per (doc, term)). */
-  private def termDf(post: DataFrame): DataFrame =
-    post.groupBy("term").agg(count(lit(1)).as("df"))
+    post.join(broadcast(qtf.select("term").distinct()), Seq("term"), "left_semi")
+      .groupBy("term").agg(count(lit(1)).as("df"))
 
   /** Rank a (query_id, term, tf) frame's terms by q94's tf·N/df and
     * keep the top [[qTerms]] per query — the query-formulation half,
@@ -359,7 +355,8 @@ object Retrieval {
     * index served by [[Similarity.ivfIndexSearch]] (nprobe/top-k at the
     * q37 defaults — the oracle recomputes that search declaratively, so
     * a green row re-proves files-served ≡ recomputed, the q114
-    * pattern). Fusion: full-outer on (query_id, doc_id),
+    * pattern). Fusion ([[rrfFuse]]): the two arms matched on
+    * (query_id, doc_id),
     * rrf = 1/(60+lex_rank) + 1/(60+vec_rank) with an absent side
     * contributing 0, top-5 per query by (rrf desc, doc_id asc). The
     * embeddings table indexes the corpus id space (vec_id ≡ doc_id); a
@@ -377,57 +374,54 @@ object Retrieval {
       .where(col("vec_id") < Similarity.numQueries)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("qv"))
-    val vec = Similarity
-      .ivfIndexSearch(s, idx, queries, Similarity.nProbe, Similarity.topK)
-      .select(col("query_id").as("vq"), col("neighbor_id").as("vd"),
-        col("rank").as("vec_rank"))
-    rrfFuse(lexTopMemo(s, d), vec)
+    rrfFuse(lexTopMemo(s, d),
+      Similarity.ivfIndexSearch(s, idx, queries, Similarity.nProbe, Similarity.topK))
   }
 
-  /** THE fusion stage: full-outer the lexical (query_id, doc_id,
-    * lex_rank) and vector (vq, vd, vec_rank) arms, score
-    * rrf = 1/(k+lex_rank) + 1/(k+vec_rank) with an absent arm
-    * contributing 0 (two reciprocals added in fixed written order —
-    * bit-stable), top-[[Similarity.topK]] per query by (rrf desc,
-    * doc_id asc). Shared by the gated q160 and the streaming twin
-    * ([[graft.streaming.EventStream.hybridSearchBatch]]) so in-stream
+  /** THE fusion stage, on the driver: the lexical (query_id, doc_id,
+    * lex_rank) and vector ([[Similarity.ivfIndexSearch]]-shaped
+    * query_id, rank, neighbor_id) arms — per-query top-k lists of a
+    * driver-sized batch with long ids — are collected and matched on
+    * (query_id, doc_id), scored rrf = 1/(k+lex_rank) + 1/(k+vec_rank)
+    * with an absent arm contributing 0 (two reciprocals added in fixed
+    * written order — bit-stable), and ranked top-[[Similarity.topK]] per
+    * query by (rrf desc, doc_id asc) with [[DriverTopK]]. Returns a local
+    * relation (query_id, rank, doc_id, lex_rank, vec_rank, rrf_score),
+    * ordered. Shared by the gated q160 and the serving path
+    * ([[hybridIndexSearch]], which the streaming twin
+    * [[graft.streaming.EventStream.hybridSearchBatch]] wraps), so served
     * fusion can never drift from the gated definition. */
   private[graft] def rrfFuse(lex: DataFrame, vec: DataFrame): DataFrame = {
-    val rrf =
-      coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank").cast("double")), lit(0.0)) +
-      coalesce(lit(1.0) / (lit(rrfK) + col("vec_rank").cast("double")), lit(0.0))
-    val wf = Window.partitionBy("query_id")
-      .orderBy(col("rrf").desc, col("doc_id").asc)
-    lex.join(vec, col("query_id") === col("vq") && col("doc_id") === col("vd"),
-        "full_outer")
-      .select(coalesce(col("query_id"), col("vq")).as("query_id"),
-        coalesce(col("doc_id"), col("vd")).as("doc_id"),
-        col("lex_rank"), col("vec_rank"))
-      .withColumn("rrf", rrf)
-      .withColumn("rank", row_number().over(wf).cast("long"))
-      .where(col("rank") <= Similarity.topK)
-      .select(col("query_id"), col("rank"), col("doc_id"),
-        col("lex_rank"), col("vec_rank"), round4(col("rrf")).as("rrf_score"))
-      .orderBy("query_id", "rank")
+    def arm(df: DataFrame, doc: String, rank: String) = df.collect().map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Long](doc)) -> r.getAs[Long](rank)).toMap
+    val (lexRanks, vecRanks) = (arm(lex, "doc_id", "lex_rank"), arm(vec, "neighbor_id", "rank"))
+    def recip(r: Option[Long]) = r.fold(0.0)(x => 1.0 / (rrfK + x.toDouble))
+    val fused = DriverTopK.perQuery((lexRanks.keySet ++ vecRanks.keySet).toSeq
+        .map(key => (key, recip(lexRanks.get(key)) + recip(vecRanks.get(key)))),
+        Similarity.topK)(_._1._1, _._2, _._1._2)
+      .map { case (((q, d), rrf), rank) => Row(q, rank, d,
+        lexRanks.get((q, d)).map(Long.box).orNull, vecRanks.get((q, d)).map(Long.box).orNull, rrf)
+      }
+    lex.sparkSession.createDataFrame(fused.asJava, StructType(Seq(
+        StructField("query_id", LongType), StructField("rank", LongType, nullable = false)) ++
+        Seq("doc_id", "lex_rank", "vec_rank").map(StructField(_, LongType)) :+
+        StructField("rrf", DoubleType, nullable = false)))
+      .select(col("query_id"), col("rank"), col("doc_id"), col("lex_rank"),
+        col("vec_rank"), round4(col("rrf")).as("rrf_score"))
   }
 
   /** Hybrid serving from the two PERSISTED artifacts alone — free-text
     * + vector queries (query_id, text, qv) against the postings index
     * (term-bucket-pruned) and the IVF index (probe-pruned), fused by
     * [[rrfFuse]]: the full q160 semantics with every input read from
-    * files, which is what a serving tier actually deploys. */
+    * files, which is what a serving tier actually deploys. Two pruned
+    * scans are its only Spark jobs; everything else ranks on the
+    * driver. */
   def hybridIndexSearch(s: SparkSession, lexIndex: String, ivfIndex: String,
-      queries: DataFrame): DataFrame = {
-    val lex = lexIndexSearchText(s, lexIndex,
-        queries.select(col("query_id"), col("text")))
-      .select(col("query_id"), col("doc_id"), col("lex_rank"))
-    val vec = Similarity.ivfIndexSearch(s, ivfIndex,
-        queries.select(col("query_id"), col("qv")),
-        Similarity.nProbe, Similarity.topK)
-      .select(col("query_id").as("vq"), col("neighbor_id").as("vd"),
-        col("rank").as("vec_rank"))
-    rrfFuse(lex, vec)
-  }
+      queries: DataFrame): DataFrame =
+    rrfFuse(lexIndexSearchText(s, lexIndex, queries.select(col("query_id"), col("text"))),
+      Similarity.ivfIndexSearch(s, ivfIndex, queries.select(col("query_id"), col("qv")),
+        Similarity.nProbe, Similarity.topK))
 
   // -------------------------------------------------------------------------
   // Persisted lexical (BM25) index — the retrieval family's serve-from-
@@ -549,17 +543,44 @@ object Retrieval {
     * A query whose id collides with an indexed doc_id scores without
     * that doc (the corpus path's self-exclusion predicate, kept so the
     * two paths agree exactly on corpus-doc queries — parity
-    * spec-pinned). The batch is driver-sized: it is collected once
-    * ([[queryTf]]). */
+    * spec-pinned). The batch is driver-sized, with long ids: it is
+    * collected once ([[queryTf]]), its terms' pruned postings are
+    * collected once — the one Spark job — and the rest runs on the
+    * driver: df is a term's posting count, the query terms rank by
+    * tf·N/df then term and the docs by bscore then doc_id
+    * ([[DriverTopK]], [[rankQueryTerms]]'s and [[bm25ScoreTerms]]'
+    * orders), and [[contribOf]] is evaluated over a local relation (no
+    * job). The arms sum in q_rank order as [[bm25ScoreTerms]] sums
+    * them. Returns a local relation (query_id, doc_id, lex_rank,
+    * bscore), ordered by query then rank. */
   def lexIndexSearchText(s: SparkSession, index: String,
       queries: DataFrame): DataFrame = {
     // a search reads only its terms' postings: df over them is exact —
-    // every posting of a query term lives in that term's bucket — and
-    // the BM25 join drops every other term's postings anyway
+    // every posting of a query term lives in that term's bucket
     val qtf = queryTf(s, queries)
-    val post = prunedPostings(s, index, qtf)
-    val stats = deriveStats(LsmIndex.read(s, statsLayout(index)))
-    bm25ScoreTerms(post, stats, rankQueryTerms(qtf, termDf(post), stats))
+    val st = deriveStats(LsmIndex.read(s, statsLayout(index)))
+    val postings = prunedPostings(s, index, qtf).select("doc_id", "dl", "term", "tf")
+      .collect().groupBy(_.getString(2))
+    def df(t: Row) = postings(t.getString(1)).length.toLong
+    val terms = DriverTopK.perQuery(qtf.collect().filter(t => postings.contains(t.getString(1))),
+      qTerms)(_.getLong(0), t => t.getLong(2).toDouble * st.n.toDouble / df(t).toDouble,
+      _.getString(1))(DriverTopK.utf8)
+    val hits = terms.flatMap { case (t, qRank) =>
+      postings(t.getString(1)).filter(_.getLong(0) != t.getLong(0)).map(p =>
+        Row(t.getLong(0), p.getLong(0), qRank, df(t), p.getLong(3), p.getLong(1)))
+    }
+    val scored = s.createDataFrame(hits.asJava, StructType(
+        Seq("query_id", "doc_id", "q_rank", "df", "tf", "dl").map(StructField(_, LongType))))
+      .select(col("query_id"), col("doc_id"), col("q_rank"), contribOf(st, k1, b))
+      .collect().groupBy(r => (r.getLong(0), r.getLong(1))).toSeq.map { case ((q, d), arms) =>
+        val byRank = arms.map(a => a.getLong(2) -> a.getDouble(3)).toMap
+        (q, d, (1L to qTerms).map(byRank.getOrElse(_, 0.0)).reduceLeft(_ + _))
+      }
+    val top = DriverTopK.perQuery(scored, lexDepth)(_._1, _._3, _._2)
+      .map { case ((q, d, bscore), rank) => Row(q, d, rank, bscore) }
+    s.createDataFrame(top.asJava, StructType(Seq(qtf.schema("query_id"),
+      StructField("doc_id", LongType), StructField("lex_rank", LongType, nullable = false),
+      StructField("bscore", DoubleType, nullable = false))))
   }
 
   /** Major compaction via the shared crash-safe

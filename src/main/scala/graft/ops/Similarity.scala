@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import scala.util.chaining._
 import org.apache.spark.sql.expressions.Window
 import graft.etl.LsmIndex
@@ -28,13 +31,14 @@ import graft.etl.Star.{round4, round4Sql}
   * engines); rankings order by (cosine DESC, id ASC); output cosine is
   * rounded to 4 decimals, rankings see the raw double.
   *
-  * Every vector search — the gated queries and the persisted-index
-  * searches alike — is built from one definition of each step: the
-  * [[cosine]] expression, a candidate scope ([[bruteCandidates]] or
-  * [[ivfCandidates]]), the ADC table ([[adcTable]]) and score
-  * ([[ivfAdc]]/[[bruteAdc]]) for PQ, and the per-query top-k
-  * ([[topPerQuery]], behind [[cosineTop]] and [[adcTop]]). So the
-  * DuckDB gate on q36/q37/q110 checks the serving code too.
+  * Every batch vector search and the PQ index search are built from
+  * one definition of each step: the [[cosine]] expression, a candidate
+  * scope ([[bruteCandidates]] or [[ivfCandidates]]), the ADC table
+  * ([[adcTable]]) and score ([[ivfAdc]]/[[bruteAdc]]) for PQ, and the
+  * per-query top-k ([[topPerQuery]], behind [[cosineTop]] and
+  * [[adcTop]]). The IVF index search ranks its one collected scan on
+  * the driver with the same fold and order ([[DriverTopK]]); specs pin
+  * it to q37 row for row, and the DuckDB gate checks it through q140.
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
@@ -91,12 +95,14 @@ object Similarity {
   private def cosineTop(cand: DataFrame, k: Int): DataFrame =
     topPerQuery(cand.withColumn("cosine", cosine), col("cosine").desc, k)
 
-  /** A cosine top-k as published rows: (query_id, rank, neighbor_id,
-    * cosine rounded to 4), ordered. */
+  /** A cosine top-k's published columns: (query_id, rank, neighbor_id,
+    * cosine rounded to 4). */
+  private def knnCols: Seq[Column] = Seq(col("query_id"), col("rank"),
+    col("vec_id").as("neighbor_id"), round4(col("cosine")).as("cosine"))
+
+  /** A cosine top-k as published rows, ordered. */
   private def knnRows(top: DataFrame): DataFrame =
-    top.select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round4(col("cosine")).as("cosine"))
-      .orderBy("query_id", "rank")
+    top.select(knnCols: _*).orderBy("query_id", "rank")
 
   /** q200 geometry: candidate pool size, selections, diversity weight. */
   private[graft] val mmrPool = 20
@@ -656,7 +662,7 @@ object Similarity {
     * the memoized 16-row `_centroids` epoch and the query batch is
     * driver-sized, so the ranking runs no job. It is
     * [[rankAgainstScored]]'s ranking (spec-pinned on every q37 query):
-    * cosine desc in Spark's double order, then c_id asc, the dot product
+    * cosine desc then c_id asc by [[DriverTopK]], the dot product
     * folded by [[graft.functions.DotProduct.fold]] and qn the
     * [[graft.functions.VectorOps.norm]] expression over the batch. The
     * query vector rides along, so the candidate join needs no second
@@ -664,25 +670,22 @@ object Similarity {
     * nothing. */
   private[graft] def rankProbes(s: SparkSession, index: String, queries: DataFrame,
       nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
-    import scala.jdk.CollectionConverters._
-    def arr(v: scala.collection.Seq[Double]) = ArrayData.toArrayData(v.toArray)
     val cents = LsmIndex.read(s, centroidsLayout(index)).select("c_id", "cv", "cn")
-      .collect().map(c => (c.getLong(0), arr(c.getSeq[Double](1)), c.getDouble(2)))
+      .collect().map(c => (c.getLong(0), arrayData(c.getSeq[Double](1)), c.getDouble(2)))
     val qn = queries.select(col("query_id"), col("qv"),
       graft.functions.VectorOps.norm(col("qv")).as("qn"))
     val probes = qn.collect().toSeq.filterNot(_.isNullAt(2)).flatMap { q =>
-      val qv = arr(q.getSeq[Double](1))
-      cents.map { case (c, cv, cn) =>
+      val qv = arrayData(q.getSeq[Double](1))
+      val scored = cents.map { case (c, cv, cn) =>
         c -> graft.functions.DotProduct.fold(qv, cv) / (q.getDouble(2) * cn)
-      }.sortWith { case ((c1, x), (c2, y)) =>
-        val o = SQLOrderingUtil.compareDoubles(x, y)
-        o > 0 || o == 0 && c1 < c2
-      }.take(nprobe).map(p => org.apache.spark.sql.Row(q(0), q(1), q(2), p._1))
+      }
+      DriverTopK(scored, nprobe)(_._2, _._1).map(p => Row(q(0), q(1), q(2), p._1))
     }
-    s.createDataFrame(probes.asJava,
-      qn.schema.add("c_id", org.apache.spark.sql.types.LongType))
+    s.createDataFrame(probes.asJava, qn.schema.add("c_id", LongType))
   }
+
+  private def arrayData(v: scala.collection.Seq[Double]): ArrayData =
+    ArrayData.toArrayData(v.toArray)
 
   /** An index's rows in the buckets `probes` names — the probe UNION
     * (read off the local probe relation, bounded by min(queries ×
@@ -701,23 +704,41 @@ object Similarity {
     LsmIndex.erase(byCentroid(index), "vec_id", ids)
 
   /** Cosine top-k served FROM a persisted [[writeIvfIndex]] artifact
-    * alone: probes are ranked on the driver against the `_centroids/`
-    * layout ([[rankProbes]]; never raw embeddings), the probe UNION is
-    * pushed down as a static bucket filter on the live epoch
-    * ([[probedRows]] — an nprobe search reads
+    * alone, as two driver steps around one scan: probes are ranked on
+    * the driver against the `_centroids/` layout ([[rankProbes]]; never
+    * raw embeddings), the probe UNION is pushed down as a static bucket
+    * filter on the live epoch ([[probedRows]] — an nprobe search reads
     * nprobe directories, the PartitionPruningSpec claim, with erased
-    * vectors dropped by the read, before the top-k window, so an erased
-    * vector never surfaces as a neighbor), and per-query candidate
-    * scoping is the broadcast equi-join on c_id of [[ivfCandidates]].
-    * `queries` carries (query_id, qv) raw vectors — queries are new
-    * data; only the corpus is pre-indexed. Returns (query_id, rank,
-    * neighbor_id, cosine): top `k` by cosine desc, vec_id asc
-    * tie-break, self-matches excluded — q37's contract, computed by
-    * the same [[ivfCandidates]] and [[cosineTop]] q37 runs. */
+    * vectors dropped by the read, so an erased vector never surfaces as
+    * a neighbor) and collected — the one Spark job — and each query's
+    * candidates (its probed buckets, minus self) are scored by
+    * [[graft.functions.DotProduct.fold]] / (qn·nrm), the fold the
+    * compiled [[cosine]] is bit-equal to, and ranked by [[DriverTopK]].
+    * `queries` carries (query_id, qv) raw vectors with long ids —
+    * queries are new data; only the corpus is pre-indexed. Returns a
+    * local relation (query_id, rank, neighbor_id, cosine), ordered: top
+    * `k` by cosine desc, vec_id asc, self-matches excluded — q37's
+    * contract, whose [[ivfCandidates]]/[[cosineTop]] plan a spec pins
+    * this ranking to. */
   def ivfIndexSearch(s: SparkSession, index: String, queries: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
     val probes = rankProbes(s, index, queries, nprobe)
-    knnRows(cosineTop(ivfCandidates(probedRows(s, byCentroid(index), probes), probes), k))
+    val buckets = probedRows(s, byCentroid(index), probes)
+      .select("vec_id", "v", "nrm", "c_id").collect()
+      .map(r => (r.getLong(0), arrayData(r.getSeq[Double](1)), r.getDouble(2), r.getLong(3)))
+      .groupBy(_._4)
+    val scored = probes.collect().toSeq.flatMap { p =>
+      val (q, qv) = (p.getLong(0), arrayData(p.getSeq[Double](1)))
+      buckets.getOrElse(p.getLong(3), Array.empty).collect { case (v, x, nrm, _) if v != q =>
+        (q, v, graft.functions.DotProduct.fold(qv, x) / (p.getDouble(2) * nrm))
+      }
+    }
+    val top = DriverTopK.perQuery(scored, k)(_._1, _._3, _._2)
+      .map { case ((q, v, cosine), rank) => Row(q, rank, v, cosine) }
+    s.createDataFrame(top.asJava, StructType(Seq(probes.schema("query_id"),
+        StructField("rank", LongType, nullable = false), StructField("vec_id", LongType),
+        StructField("cosine", DoubleType))))
+      .select(knnCols: _*)
   }
 
   /** The q140 deterministic erasure set: a bounded GDPR-request-sized

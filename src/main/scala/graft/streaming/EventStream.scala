@@ -477,7 +477,7 @@ object EventStream {
     * neighbors FROM the persisted IVF index, per micro-batch. Unlike
     * the text probes there is no useful stateless in-flight half —
     * probe ranking, the partition-pruned candidate scope and the top-k
-    * window are all aggregation-shaped — so the WHOLE search runs in `foreachBatch`
+    * are all aggregation-shaped — so the WHOLE search runs in `foreachBatch`
     * through the batch helper
     * [[graft.ops.Similarity.ivfIndexSearch]] (the [[spanReportBatch]]
     * convention: one definition, stream and batch can never drift).

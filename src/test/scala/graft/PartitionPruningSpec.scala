@@ -903,17 +903,31 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     // ranks — the artifact serves exactly what the in-memory plan computes
     val before = search(idx)
     assert(before == rows(Similarity.q37_knn_ivf(spark, sfDir)))
-    // and it touches ONLY index files: every file relation in the plan
-    // lives under the index root — raw embeddings are never scanned
-    // (queries are checkpointed, so their lineage carries no file scan)
+    // and it touches ONLY index files: every file relation in the plans
+    // the search executes lives under the index root — raw embeddings
+    // are never scanned (queries are checkpointed, so their lineage
+    // carries no file scan). The search returns a local relation, so
+    // the plans are those of the actions it runs, seen by a listener.
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val fileRoots = Similarity.ivfIndexSearch(spark, idx, queries, nprobe = 4, k = 5)
-      .queryExecution.optimizedPlan.collect {
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val executed = scala.collection.mutable.ArrayBuffer.empty[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.synchronized(executed += qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Similarity.ivfIndexSearch(spark, idx, queries, nprobe = 4, k = 5)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val fileRoots = executed.toSeq.flatMap(_.optimizedPlan.collect {
         case l: LogicalRelation => l.relation match {
           case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
           case _ => Seq.empty[String]
         }
-      }.flatten
+      }.flatten)
     assert(fileRoots.nonEmpty)
     fileRoots.foreach { p =>
       assert(p.contains(idx), s"index search scans a non-index file source: $p")
