@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** File-level data skipping via commit-time sidecar manifests — the
   * planning half of the lakehouse-table story ([[StarBuilder]]'s
@@ -32,12 +33,17 @@ import org.apache.spark.sql.functions._
   * File paths are stored RELATIVE to the table directory (the
   * deletion-vector precedent): a manifest written in a staging dir
   * stays valid after [[StarBuilder]]'s atomic rename into `v=<n>/`,
-  * and a byte-copied snapshot keeps its manifest. A REWRITE invalidates
-  * both sidecars (file names change) — [[StarBuilder.compactVersioned]]
-  * therefore regenerates BOTH for a rewritten table (`_idx/stats` from
-  * its own min_* schema, `_idx/bloom` from its pinned key_col) and
-  * carries them as-is with a table it does not rewrite; the ANN serving
-  * indexes keep the rebuild-with-the-artifact rule.
+  * and a byte-copied snapshot keeps its manifest. This object is the
+  * one owner of the `_idx/` layout; the warehouse writers only say
+  * what happened to a table's files. Each sidecar records what it
+  * indexes (`_idx/stats` its columns in its min_* schema — the table's
+  * [[clusterKey]] — and `_idx/bloom` its key in `key_col`), so no
+  * caller passes them again: an append grows every sidecar over the
+  * new files ([[growSidecars]]), and a REWRITE, which renames every
+  * file, regenerates every sidecar ([[rebuildSidecars]]);
+  * [[StarBuilder.compactVersioned]] carries them as-is with a table it
+  * does not rewrite. The ANN serving indexes keep the
+  * rebuild-with-the-artifact rule.
   */
 object DataSkipping {
   type Q = (SparkSession, String) => DataFrame
@@ -69,6 +75,13 @@ object DataSkipping {
   // _stats: per-file min/max manifest
   // ---------------------------------------------------------------------------
 
+  /** A sidecar of `tableDir` — `kind` is `stats` or `bloom`: the one
+    * place the `_idx/` layout is spelled. */
+  private def sidecar(tableDir: String, kind: String): String = s"$tableDir/_idx/$kind"
+
+  private def carries(tableDir: String, kind: String): Boolean =
+    new java.io.File(sidecar(tableDir, kind)).isDirectory
+
   /** Write the `_idx/stats` manifest for `tableDir`: one row per data file
     * with (file, n_rows, min_<c>, max_<c> per stats column). ONE
     * aggregation job over the table, grouped on the file identity the
@@ -80,13 +93,13 @@ object DataSkipping {
   def writeStats(spark: SparkSession, tableDir: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "writeStats needs at least one stats column")
     statsRowsFor(spark.read.parquet(tableDir), tableDir, cols)
-      .write.mode("overwrite").parquet(s"$tableDir/_idx/stats")
+      .write.mode("overwrite").parquet(sidecar(tableDir, "stats"))
   }
 
   /** One manifest row per data file of `df` — THE manifest shape,
-    * shared by [[writeStats]] (whole-table frame) and [[appendStats]]
-    * (fresh-files frame) so the full rebuild and its append twin can
-    * never diverge on schema. */
+    * shared by [[writeStats]] (whole-table frame) and [[growSidecars]]
+    * (fresh-files frame) so the full rebuild and the growth can never
+    * diverge on schema. */
   private def statsRowsFor(df: DataFrame, tableDir: String, cols: Seq[String]): DataFrame = {
     val aggs = count(lit(1)).as("n_rows") +:
       cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
@@ -95,14 +108,16 @@ object DataSkipping {
       .coalesce(1)
   }
 
-  /** The fresh-files frame for the append twins: explicit file paths
-    * read under `basePath = tableDir`, so PARTITION columns survive —
-    * without it each file is its own root and a stats/key column that
-    * lives in the directory structure would vanish from the read. */
-  private def freshFilesFrame(spark: SparkSession, tableDir: String,
-      fresh: Seq[String]): DataFrame =
-    spark.read.option("basePath", tableDir)
-      .parquet(fresh.map(f => s"$tableDir/$f"): _*)
+  /** Scan exactly `files` (absolute paths) of `tableDir` — the one
+    * explicit-file read the pruned scans and the sidecar growth share.
+    * `basePath = tableDir` keeps PARTITION columns: without it each file
+    * is its own root and a column that lives in the directory structure
+    * would vanish from the read. No files → an empty frame with the
+    * table's schema (a footer-only read). */
+  private def scanFiles(spark: SparkSession, tableDir: String,
+      files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.read.parquet(tableDir).where(lit(false))
+    else spark.read.option("basePath", tableDir).parquet(files: _*)
 
   /** The data files of `tableDir` (recursive — partitioned layouts
     * included; the [[leaves]] walk), RELATIVE to the table root — the
@@ -113,52 +128,87 @@ object DataSkipping {
     leaves(root).flatMap(_._2).map(f => root.toPath.relativize(f.toPath).toString)
   }
 
-  /** Incremental `_idx/stats` maintenance — the append twin
-    * [[writeStats]] lacked (r9 verdict: the one artifact family without
-    * one). Aggregates ONLY data files absent from the manifest and
-    * APPENDS their rows; existing manifest part files are never read,
-    * rewritten, or touched (per-file rows are naturally incremental —
-    * DataSkippingSpec pins byte-identity of the old parts and
-    * pruning ≡ full rebuild). At 100 TB this is the difference between
-    * a nightly manifest refresh scanning the day's ingest and scanning
-    * the table: the stats pass costs O(new files), like
-    * [[graft.ops.Dedup.appendSpanIndex]] and `appendPqIndex` before it.
-    * No-op when every file is already covered. */
-  def appendStats(spark: SparkSession, tableDir: String, cols: Seq[String]): Unit = {
-    require(cols.nonEmpty, "appendStats needs at least one stats column")
-    val manifest = statsManifest(spark, tableDir)
-    // the appendBloom key_col rule, for stats: a column-set mismatch
-    // would append rows whose min_*/max_* read back NULL against the
-    // base parts' schema, and prunedFiles drops NULL-stats rows — data
-    // files silently vanishing from pruned reads. Refuse instead.
-    val existing = statsColsOf(manifest.columns.toSeq).toSet
-    require(existing == cols.toSet,
-      s"stats manifest under $tableDir indexes ${existing.toSeq.sorted.mkString(", ")}, " +
-        s"not ${cols.sorted.mkString(", ")} — one column set per manifest")
-    val covered = manifest
-      .select("file").collect().map(_.getString(0)).toSet
-    val fresh = listDataFiles(tableDir).filterNot(covered)
-    if (fresh.nonEmpty)
-      statsRowsFor(freshFilesFrame(spark, tableDir, fresh), tableDir, cols)
-        .write.mode("append").parquet(s"$tableDir/_idx/stats")
+  /** The table's clustering key: the columns its stats manifest indexes,
+    * recovered from the manifest's own min_* schema (Nil without a
+    * manifest). A manifest is only useful over files clustered on its
+    * columns (disjoint intervals), so every writer that adds or rewrites
+    * files of the table sorts them on this key. The schema comes from
+    * one part's footer, read in this JVM: every part of a manifest has
+    * the same columns, and a schema-inference read would cost every
+    * append a Spark job. */
+  def clusterKey(spark: SparkSession, tableDir: String): Seq[String] =
+    Option(new java.io.File(sidecar(tableDir, "stats")).listFiles()).toSeq.flatten
+      .find(_.getName.endsWith(".parquet")).toSeq.flatMap { part =>
+        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(part.toURI), spark.sparkContext.hadoopConfiguration))
+        try footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+        finally footer.close()
+      }.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+
+  /** Incremental maintenance of every sidecar `tableDir` carries: each
+    * grows by rows for exactly the data files it does not cover yet,
+    * and its existing part files are never rewritten (per-file rows are naturally incremental — the specs pin
+    * byte-identity of the old parts and pruning ≡ full rebuild). The
+    * stats columns and the bloom key are the ones the sidecars record,
+    * so a growth can never index other columns than the base did. At
+    * 100 TB this is the difference between a nightly manifest refresh
+    * scanning the day's ingest and scanning the table: the pass costs
+    * O(new files). No-op when every file is covered. */
+  def growSidecars(spark: SparkSession, tableDir: String): Unit = {
+    val files = listDataFiles(tableDir)
+    grow(spark, tableDir, clusterKey(spark, tableDir), kind => {
+      val covered = spark.read.parquet(sidecar(tableDir, kind))
+        .select("file").collect().map(_.getString(0)).toSet
+      files.filterNot(covered)
+    })
   }
 
-  /** The stats columns a manifest indexes, recovered from its own
-    * min_* schema — THE definition, shared with
-    * [[StarBuilder.compactVersioned]]'s regeneration so the append
-    * guard and the rewrite can never disagree on what a manifest
-    * covers. */
-  private[etl] def statsColsOf(manifestColumns: Seq[String]): Seq[String] =
-    manifestColumns.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+  /** Add data files to `tableDir` with `write(key)`, given the table's
+    * [[clusterKey]], and grow every sidecar over exactly the files it
+    * added. The files already there came from a committed version whose
+    * sidecars cover them, so no manifest is read back: this is the
+    * warehouse append's form of [[growSidecars]]. */
+  private[etl] def appendFiles(spark: SparkSession, tableDir: String)(
+      write: Seq[String] => Unit): Unit = {
+    val key = clusterKey(spark, tableDir)
+    val before = listDataFiles(tableDir).toSet
+    write(key)
+    val added = listDataFiles(tableDir).filterNot(before)
+    grow(spark, tableDir, key, _ => added)
+  }
+
+  /** Append to each sidecar the rows of its `fresh(kind)` data files. */
+  private def grow(spark: SparkSession, tableDir: String, statsCols: Seq[String],
+      fresh: String => Seq[String]): Unit =
+    Seq("stats", "bloom").filter(carries(tableDir, _)).foreach { kind =>
+      val files = fresh(kind)
+      if (files.nonEmpty) {
+        val df = scanFiles(spark, tableDir, files.map(f => s"$tableDir/$f"))
+        val rows =
+          if (kind == "stats") statsRowsFor(df, tableDir, statsCols)
+          else bloomRowsFor(df, tableDir, bloomKeyCol(spark, tableDir))
+        rows.write.mode("append").parquet(sidecar(tableDir, kind))
+      }
+    }
+
+  /** Regenerate over the files of `out` every sidecar `tableDir`
+    * carries, with the stats columns and bloom key it records — the
+    * rewrite rule: both sidecars address files BY NAME, so a table
+    * whose files are rewritten needs new ones before its commit. */
+  private[etl] def rebuildSidecars(spark: SparkSession, tableDir: String, out: String): Unit = {
+    if (carries(tableDir, "stats")) writeStats(spark, out, clusterKey(spark, tableDir))
+    if (carries(tableDir, "bloom")) writeBloom(spark, out, bloomKeyCol(spark, tableDir))
+  }
 
   /** The manifest as a DataFrame; loud failure when absent (a scan that
     * silently fell back to reading everything would hide a lost
     * manifest forever). */
   def statsManifest(spark: SparkSession, tableDir: String): DataFrame = {
-    require(new java.io.File(s"$tableDir/_idx/stats").isDirectory,
+    require(carries(tableDir, "stats"),
       s"no stats manifest under $tableDir — writeStats was never run " +
         "(or a rewrite outside compactVersioned, which regenerates it, dropped it)")
-    spark.read.parquet(s"$tableDir/_idx/stats")
+    spark.read.parquet(sidecar(tableDir, "stats"))
   }
 
   /** The data files whose [min, max] interval on `c` intersects
@@ -175,18 +225,10 @@ object DataSkipping {
 
   /** Scan only the files an interval predicate on `c` can touch. The
     * caller still applies the exact predicate — file pruning is a
-    * superset guarantee, same contract as partition pruning. Zero
-    * surviving files → an empty frame with the table's schema (a
-    * footer-only read). */
+    * superset guarantee, same contract as partition pruning. */
   def prunedScan(spark: SparkSession, tableDir: String, c: String,
-      lo: Any, hi: Any): DataFrame = {
-    val files = prunedFiles(spark, tableDir, c, lo, hi)
-    if (files.isEmpty) spark.read.parquet(tableDir).where(lit(false))
-    // basePath keeps partition columns resolvable on the explicit-file
-    // read (the freshFilesFrame rule — without it a partitioned layout's
-    // directory-borne columns vanish from the pruned frame)
-    else spark.read.option("basePath", tableDir).parquet(files: _*)
-  }
+      lo: Any, hi: Any): DataFrame =
+    scanFiles(spark, tableDir, prunedFiles(spark, tableDir, c, lo, hi))
 
   // ---------------------------------------------------------------------------
   // _bloom: per-file Bloom filter for point lookups
@@ -214,29 +256,23 @@ object DataSkipping {
     * file (the sparse encoding of an m-bit filter — exact same
     * membership semantics, parquet-friendly). One aggregation job:
     * explode to (file, pos), distinct, collect per file. */
-  def writeBloom(spark: SparkSession, tableDir: String, keyCol: String): Unit = {
-    val df = spark.read.parquet(tableDir)
-    requireStringKey(df, tableDir, keyCol)
-    bloomRowsFor(df, tableDir, keyCol)
-      .write.mode("overwrite").parquet(s"$tableDir/_idx/bloom")
-  }
+  def writeBloom(spark: SparkSession, tableDir: String, keyCol: String): Unit =
+    bloomRowsFor(spark.read.parquet(tableDir), tableDir, keyCol)
+      .write.mode("overwrite").parquet(sidecar(tableDir, "bloom"))
 
-  /** The bloom key must be STRING: [[bloomCandidateFiles]] probes are
+  /** One sidecar row per data file of `df` — THE bloom-manifest shape,
+    * shared by [[writeBloom]] and [[growSidecars]] (the [[statsRowsFor]]
+    * rule). The key must be STRING: [[bloomCandidateFiles]] probes are
     * strings, and xxhash64 is type-sensitive — a numeric key (e.g. an
     * int-inferred partition value) would hash differently on the build
     * side than every probe, making every lookup a silent false
     * negative. Refused loudly instead (the key_col-pin rule); cast or
     * format the key into a string column first. */
-  private def requireStringKey(df: DataFrame, tableDir: String, keyCol: String): Unit =
+  private def bloomRowsFor(df: DataFrame, tableDir: String, keyCol: String): DataFrame = {
     require(df.schema(keyCol).dataType == org.apache.spark.sql.types.StringType,
       s"bloom key $keyCol under $tableDir is ${df.schema(keyCol).dataType.simpleString}, " +
         "not string — probes hash strings, so a non-string key would " +
         "false-negative on every lookup; cast/format the key to string first")
-
-  /** One sidecar row per data file of `df` — THE bloom-manifest shape,
-    * shared by [[writeBloom]] and [[appendBloom]] (the
-    * [[statsRowsFor]] rule). */
-  private def bloomRowsFor(df: DataFrame, tableDir: String, keyCol: String): DataFrame =
     df.select(relFile(tableDir).as("file"),
         explode(bloomPositions(col(keyCol))).as("pos"))
       .distinct()
@@ -244,42 +280,17 @@ object DataSkipping {
       .agg(sort_array(collect_list(col("pos"))).as("bits"))
       .withColumn("key_col", lit(keyCol))
       .coalesce(1)
+  }
 
   /** The key column a bloom sidecar pins (`key_col` rides every row) —
-    * how a rewrite or an append of the table keeps indexing the key the
+    * how a rewrite or a growth of the table keeps indexing the key the
     * base did. */
-  def bloomKeyCol(spark: SparkSession, tableDir: String): String = {
-    val keys = spark.read.parquet(s"$tableDir/_idx/bloom")
+  private def bloomKeyCol(spark: SparkSession, tableDir: String): String = {
+    val keys = spark.read.parquet(sidecar(tableDir, "bloom"))
       .select("key_col").distinct().collect().map(_.getString(0)).toSeq
     require(keys.size == 1,
       s"bloom sidecar under $tableDir indexes ${keys.mkString(", ")} — one key per sidecar")
     keys.head
-  }
-
-  /** Incremental `_idx/bloom` maintenance — [[appendStats]]'s twin for
-    * the point-lookup sidecar: build filters ONLY for data files absent
-    * from the manifest and append their rows, existing parts untouched.
-    * The key column is pinned by the existing manifest (`key_col` rides
-    * every row), so an append can never silently index a different
-    * key than the base did. */
-  def appendBloom(spark: SparkSession, tableDir: String, keyCol: String): Unit = {
-    require(new java.io.File(s"$tableDir/_idx/bloom").isDirectory,
-      s"no bloom sidecar under $tableDir — writeBloom first (appendBloom " +
-        "only extends an existing manifest)")
-    val manifest = spark.read.parquet(s"$tableDir/_idx/bloom")
-    val keyCols = manifest.select("key_col").distinct()
-      .collect().map(_.getString(0)).toSeq
-    require(keyCols.forall(_ == keyCol),
-      s"bloom sidecar under $tableDir indexes ${keyCols.mkString(", ")}, " +
-        s"not $keyCol — one key per sidecar")
-    val covered = manifest.select("file").collect().map(_.getString(0)).toSet
-    val fresh = listDataFiles(tableDir).filterNot(covered)
-    if (fresh.nonEmpty) {
-      val df = freshFilesFrame(spark, tableDir, fresh)
-      requireStringKey(df, tableDir, keyCol)
-      bloomRowsFor(df, tableDir, keyCol)
-        .write.mode("append").parquet(s"$tableDir/_idx/bloom")
-    }
   }
 
   /** The files a point-lookup on `keys` must read: a file is a
@@ -290,13 +301,13 @@ object DataSkipping {
     * paths; #files-sized planning collect, like [[prunedFiles]]. */
   def bloomCandidateFiles(spark: SparkSession, tableDir: String,
       keys: Seq[String]): Seq[String] = {
-    require(new java.io.File(s"$tableDir/_idx/bloom").isDirectory,
+    require(carries(tableDir, "bloom"),
       s"no bloom sidecar under $tableDir — writeBloom was never run " +
         "(a rewrite invalidates it; rebuild with the table, the serving-index rule)")
     import spark.implicits._
     val probes = keys.toDF("k")
       .select(col("k"), explode(bloomPositions(col("k"))).as("pos"))
-    spark.read.parquet(s"$tableDir/_idx/bloom")
+    spark.read.parquet(sidecar(tableDir, "bloom"))
       .select(col("file"), explode(col("bits")).as("pos"))
       .join(broadcast(probes), "pos")
       .groupBy("file", "k")
@@ -314,11 +325,8 @@ object DataSkipping {
   /** Scan only the Bloom-candidate files for `keys`; the caller applies
     * the exact membership filter (false positives are pruned there). */
   def bloomScan(spark: SparkSession, tableDir: String, keyCol: String,
-      keys: Seq[String]): DataFrame = {
-    val files = bloomCandidateFiles(spark, tableDir, keys)
-    if (files.isEmpty) spark.read.parquet(tableDir).where(lit(false))
-    else spark.read.option("basePath", tableDir).parquet(files: _*)
-  }
+      keys: Seq[String]): DataFrame =
+    scanFiles(spark, tableDir, bloomCandidateFiles(spark, tableDir, keys))
 
   // ---------------------------------------------------------------------------
   // q135: Bloom point-lookup inside the correctness gate
@@ -356,7 +364,7 @@ object DataSkipping {
     * q139's twin for the point-lookup sidecar: the fingerprint table is
     * committed as a base half (doc_id hash bucket < 50, the
     * incremental-family convention) with its `_idx/bloom` sidecar, the
-    * other half lands as APPENDED data files, and [[appendBloom]] grows
+    * other half lands as APPENDED data files, and [[growSidecars]] grows
     * the sidecar for exactly those files (old parts byte-identical —
     * DataSkipping's spec pins it). The gate probes fingerprints of
     * doc_id 0–5 — a set that SPANS the halves (0/1/5 appended, 2/3/4
@@ -376,7 +384,7 @@ object DataSkipping {
       writeBloom(s, out, "fingerprint")
       fp.where(bucket >= 50).repartition(4, col("fingerprint"))
         .write.mode("append").parquet(out)
-      appendBloom(s, out, "fingerprint")
+      growSidecars(s, out)
     }
     val probes = fp.where(col("doc_id") < 6)
       .select("fingerprint").collect().map(_.getString(0)).toSeq
@@ -418,7 +426,7 @@ object DataSkipping {
     * and per-file min/max/count stats are one hash aggregation per
     * layout — so the comparison itself runs at corpus scale (the
     * file-cut rule `z div 1024` IS `repartitionByRange` on z at write
-    * time, and the stats are what [[appendStats]] would record). */
+    * time, and the stats are what [[writeStats]] would record). */
   val q194_zorder_layout: Q = (s, d) => {
     val e = graft.ops.Events.events(s, d).select(col("user_id").as("u"), col("es"))
     val bounds = e.agg(min("u").as("minu"), max("u").as("maxu"),

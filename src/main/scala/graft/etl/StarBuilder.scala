@@ -204,16 +204,11 @@ object StarBuilder {
       .select(col("student"), col("course"), col("tahun"), col("id_waktu"),
         col("id_nilai"), col("sks"), col("bobot"), col("bobot_matkul"))
 
-  /** Full-refresh star write (A17/A19/A20): overwrite the warehouse dir;
-    * facts partitioned by tahun for partition pruning. */
-  def writeAll(spark: SparkSession, dir: String, warehouse: String): Unit =
-    writeTables(spark, dir, warehouse)
-
-  /** The star tables written under one target root — shared by the
-    * flat [[writeAll]] layout and each [[writeAllVersioned]] snapshot
-    * (private[graft] so the spec can simulate a writer killed before
-    * its commit marker lands). */
-  private[graft] def writeTables(spark: SparkSession, dir: String, warehouse: String): Unit = {
+  /** Full-refresh star write (A17/A19/A20): overwrite the star tables
+    * under `warehouse` — the flat layout, and the content of each
+    * [[writeAllVersioned]] snapshot; facts partitioned by tahun for
+    * partition pruning. */
+  def writeAll(spark: SparkSession, dir: String, warehouse: String): Unit = {
     // dim_waktu/dim_nilai have bounded cardinality (calendar × 2 semesters,
     // fixed grade scale) → one file each is correct at any scale. The
     // student/course dims scale WITH the data — the same argument that bans
@@ -271,7 +266,7 @@ object StarBuilder {
     * Returns the committed version number. Old snapshots are retained
     * for time travel until [[vacuumVersions]]. */
   def writeAllVersioned(spark: SparkSession, dir: String, warehouse: String): Long =
-    SnapshotLog.commitNext(warehouse)(txn => writeTables(spark, dir, txn.toString))
+    SnapshotLog.commitNext(warehouse)(txn => writeAll(spark, dir, txn.toString))
 
   /** The copy-on-write commit every read-modify-write writer shares:
     * resolve `from` (the latest when None) through the log — deriving
@@ -349,11 +344,8 @@ object StarBuilder {
     val nOut = math.max(1L,
       math.ceil(bytes.toDouble * liveRows / physRows / targetBytes).toLong).toInt
     // a stats manifest is only useful over files clustered on its
-    // columns (disjoint intervals): re-cluster on them, recovered from
-    // the manifest's own min_* schema
-    val stats = new java.io.File(t, "_idx/stats")
-    val sortBy = if (!stats.isDirectory) Nil else DataSkipping.statsColsOf(
-      spark.read.parquet(stats.toString).columns.toIndexedSeq)
+    // columns (disjoint intervals): re-cluster on them
+    val sortBy = DataSkipping.clusterKey(spark, t.toString)
     if (liveRows == 0L)
       // a fully-deleted table: dynamic partitionBy of an empty frame
       // writes NO schema-bearing file (the dir would be unreadable); the
@@ -378,14 +370,9 @@ object StarBuilder {
       live.repartition(nOut).write.mode("overwrite")
         .option("parquet.block.size", blockSize.toString)
         .parquet(out.toString)
-    // both sidecars address files BY NAME, so the rewrite regenerates
-    // them before the commit — readers resolve either (old files, old
-    // sidecars) or (new files, new sidecars), never a mix. The bloom key
-    // column is pinned in the sidecar itself (`key_col` rides every row).
-    if (sortBy.nonEmpty) DataSkipping.writeStats(spark, out.toString, sortBy)
-    if (new java.io.File(t, "_idx/bloom").isDirectory)
-      DataSkipping.writeBloom(spark, out.toString,
-        DataSkipping.bloomKeyCol(spark, t.toString))
+    // regenerated before the commit, so readers resolve either (old
+    // files, old sidecars) or (new files, new sidecars), never a mix
+    DataSkipping.rebuildSidecars(spark, t.toString, out.toString)
   }
 
   /** Retention sweep ([[SnapshotLog.vacuum]]): keep the newest `keep`
@@ -597,58 +584,34 @@ object StarBuilder {
 
   /** Append `df`'s rows to `table` as a new snapshot derived from
     * version `from`: the prior snapshot is byte-copied (base data files
-    * never rewritten — the [[deleteWhere]]/[[appendTableVersionedStats]]
-    * stance) and `df` lands as ADDITIONAL files in the table directory,
-    * committed as exactly `from + 1` (lost-update protection, like every
-    * read-modify-write writer). `df`'s schema may be a SUPERSET of the
-    * table's — schema evolution by append, the Delta `mergeSchema`
-    * write: old files keep their narrow footer untouched, new files
-    * carry the added columns, and a merged read ([[readAt]] with
-    * `mergeSchema = true`) surfaces the union with nulls where a file
-    * predates a column. Existing columns must keep their exact type —
-    * dropping or retyping a column is a REWRITE, not an append, and is
-    * rejected here (silent type widening would poison every merged
-    * read downstream). At 100 TB this is the only affordable way to
-    * add a derived column going forward: terabytes of history stay
-    * byte-identical, the new column exists only where new data carries
-    * it, and a backfill is an explicit separate rewrite. */
+    * never rewritten — the [[deleteWhere]] stance) and `df` lands as
+    * ADDITIONAL files in the table directory, committed as exactly
+    * `from + 1` (lost-update protection, like every read-modify-write
+    * writer). `df`'s schema may be a SUPERSET of the table's — schema
+    * evolution by append, the Delta `mergeSchema` write: old files keep
+    * their narrow footer untouched, new files carry the added columns,
+    * and a merged read ([[readAt]] with `mergeSchema = true`) surfaces
+    * the union with nulls where a file predates a column. Existing
+    * columns must keep their exact type — dropping or retyping a column
+    * is a REWRITE, not an append, and is rejected before the claim
+    * (silent type widening would poison every merged read downstream,
+    * and a retyped stats column every pruned read of the new version).
+    * At 100 TB this is the only affordable way to add a derived column
+    * going forward: terabytes of history stay byte-identical, the new
+    * column exists only where new data carries it, and a backfill is an
+    * explicit separate rewrite.
+    *
+    * A table carrying data-skipping sidecars keeps them: the appended
+    * files are clustered among THEMSELVES on the table's
+    * [[DataSkipping.clusterKey]] and every sidecar grows by exactly
+    * their rows ([[DataSkipping.appendFiles]]); copied data files AND
+    * copied sidecar parts stay byte-identical. Ingest therefore pays
+    * O(new data) for the table and its sidecars alike; base-file
+    * intervals are untouched, so interval pruning stays a superset
+    * guarantee (and tightens again at the next [[compactVersioned]]). */
   def appendTableVersioned(df: DataFrame, warehouse: String, table: String,
       from: Long): Long =
-    deriveFrom(warehouse, Some(from), Some(table)) { (srcRoot, txn) =>
-      // a data-skipping sidecar byte-copied across this append would NOT
-      // cover the new files — pruned reads at from+1 would silently drop
-      // every appended row (the DataSkipping 'refuse instead' rule). The
-      // stats path with manifest maintenance is appendTableVersionedStats;
-      // a bloom sidecar grows through appendBloom on that same path.
-      Seq("stats", "bloom").foreach { kind =>
-        require(!new java.io.File(srcRoot, s"$table/_idx/$kind").isDirectory,
-          s"table $table carries an _idx/$kind sidecar in v=$from: a plain " +
-            "append would leave it stale (appended files invisible to pruned " +
-            "reads) — use appendTableVersionedStats, which grows the manifest")
-      }
-      // a hive-partitioned (`k=v/`) snapshot cannot take a flat file
-      // drop-in: appended files at the table root break Spark's partition
-      // discovery ("conflicting directory structures") and the partition
-      // column's inferred type need not match the frame's — a committed
-      // snapshot would be unreadable. Refuse with the remedy.
-      require(!Option(new java.io.File(srcRoot, table).listFiles())
-        .getOrElse(Array.empty)
-        .exists(f => f.isDirectory && f.getName.contains("=")),
-        s"table $table in v=$from has a hive-partitioned layout: a flat append " +
-          "would break partition discovery — commit a fresh snapshot via " +
-          "writeTableVersioned with the same partitionBy instead")
-      // merged read: after a prior evolution the table's files carry mixed
-      // footers, and the superset check must hold against their UNION
-      val existing = df.sparkSession.read.option("mergeSchema", true)
-        .parquet(new java.io.File(srcRoot, table).toString).schema
-      val incoming = df.schema.map(f => f.name -> f.dataType).toMap
-      val broken = existing.filterNot(f => incoming.get(f.name).contains(f.dataType))
-      require(broken.isEmpty,
-        s"appendTableVersioned to $table: incoming schema must be a superset " +
-          s"with identical types; missing/retyped: ${broken.map(_.name).mkString(", ")}")
-      copyTree(srcRoot, txn)
-      df.write.mode("append").parquet(new java.io.File(txn, table).toString)
-    }
+    append(df, warehouse, table, Some(from), 128 * 1024 * 1024)
 
   /** [[writeTableVersioned]] with a clustered layout and a committed
     * `_stats` data-skipping manifest — the "stats in the log" shape: the
@@ -669,37 +632,50 @@ object StarBuilder {
     }
   }
 
-  /** Incremental commit to a stats-carrying table — the versioned-path
-    * consumer of [[DataSkipping.appendStats]]: the new snapshot's data
-    * files are BYTE-COPIES of the current ones plus freshly written
-    * files for `df`, and the `_idx/stats` manifest (and an `_idx/bloom`
-    * sidecar, when the table carries one) grows by exactly the new
-    * files' rows; copied data files AND copied manifest parts stay
-    * byte-identical (DataSkippingSpec pins both). Nightly ingest
-    * therefore pays O(new data) for the table and its skipping sidecar
-    * alike — a full [[writeTableVersionedStats]] recommit would rescan
-    * the table for stats it already has. Same stage → claim-exactly
-    * protocol as [[deleteWhere]] (a read-modify-write: commits exactly
-    * cur + 1 or throws ConcurrentModificationException). The appended
-    * files are clustered on `sortBy` among THEMSELVES; base-file
-    * intervals are untouched, so interval pruning stays a superset
-    * guarantee (and tightens again at the next [[compactVersioned]]). */
+  /** [[appendTableVersioned]] onto the latest version of a table
+    * written by [[writeTableVersionedStats]], with that writer's
+    * parameters: `sortBy` and `statsCols` must both equal the table's
+    * [[DataSkipping.clusterKey]] (they name what the manifest already
+    * records, so any other value is refused before the claim). */
   def appendTableVersionedStats(df: DataFrame, warehouse: String, table: String,
       sortBy: Seq[String], statsCols: Seq[String],
-      blockSize: Int = 128 * 1024 * 1024): Long = {
-    require(sortBy.nonEmpty, "appendTableVersionedStats needs a clustering key")
-    deriveFrom(warehouse, None, Some(table)) { (srcRoot, txn) =>
+      blockSize: Int = 128 * 1024 * 1024): Long =
+    append(df, warehouse, table, None, blockSize, Seq(sortBy, statsCols))
+
+  /** The one append behind both entry points; every column list in
+    * `expectKey` must equal the table's clustering key. */
+  private def append(df: DataFrame, warehouse: String, table: String,
+      from: Option[Long], blockSize: Int, expectKey: Seq[Seq[String]] = Nil): Long =
+    deriveFrom(warehouse, from, Some(table)) { (srcRoot, txn) =>
+      val src = new java.io.File(srcRoot, table)
+      // a hive-partitioned (`k=v/`) snapshot cannot take a flat file
+      // drop-in: appended files at the table root break Spark's partition
+      // discovery ("conflicting directory structures") and the partition
+      // column's inferred type need not match the frame's — a committed
+      // snapshot would be unreadable. Refuse with the remedy.
+      require(!Option(src.listFiles()).getOrElse(Array.empty)
+        .exists(f => f.isDirectory && f.getName.contains("=")),
+        s"table $table in ${srcRoot.getName} has a hive-partitioned layout: a flat " +
+          "append would break partition discovery — commit a fresh snapshot via " +
+          "writeTableVersioned with the same partitionBy instead")
+      // merged read: after a prior evolution the table's files carry mixed
+      // footers, and the superset check must hold against their UNION
+      val existing = df.sparkSession.read.option("mergeSchema", true)
+        .parquet(src.toString).schema
+      val incoming = df.schema.map(f => f.name -> f.dataType).toMap
+      val broken = existing.filterNot(f => incoming.get(f.name).contains(f.dataType))
+      require(broken.isEmpty,
+        s"append to $table: incoming schema must be a superset " +
+          s"with identical types; missing/retyped: ${broken.map(_.name).mkString(", ")}")
       copyTree(srcRoot, txn)
       val tableDir = new java.io.File(txn, table).toString
-      writeClustered(df, sortBy.map(col), tableDir, blockSize, mode = "append")
-      DataSkipping.appendStats(df.sparkSession, tableDir, statsCols)
-      // the copied bloom sidecar must cover the appended files too, or a
-      // point lookup at the new version never opens them
-      if (new java.io.File(tableDir, "_idx/bloom").isDirectory)
-        DataSkipping.appendBloom(df.sparkSession, tableDir,
-          DataSkipping.bloomKeyCol(df.sparkSession, tableDir))
+      DataSkipping.appendFiles(df.sparkSession, tableDir) { key =>
+        expectKey.foreach(cols => require(cols == key,
+          s"table $table is clustered and indexed on ${key.mkString(", ")}, " +
+            s"not ${cols.mkString(", ")} — one key per stats manifest"))
+        writeClustered(df, key.map(col), tableDir, blockSize, mode = "append")
+      }
     }
-  }
 
   /** Manifest-pruned interval scan of a committed snapshot table: the
     * version resolves through the log ([[readAt]]'s rule), then the
@@ -757,7 +733,7 @@ object StarBuilder {
     * this proves the append-maintained one does. The fact's lower
     * student half commits with its manifest
     * ([[writeTableVersionedStats]]), the upper half arrives as an
-    * incremental commit ([[appendTableVersionedStats]] — base files
+    * incremental commit ([[appendTableVersioned]] — base files
     * byte-copied, manifest grown by the new files' rows only), and a
     * band STRADDLING the append boundary is served through
     * [[readAtPruned]]: rows must come from base-manifest files AND
@@ -774,12 +750,10 @@ object StarBuilder {
     // once, reps serve the boundary-band read. NO vacuum here — the
     // append-grown v2 must stay the resolvable latest.
     graft.SessionMemo.once(s, d, "stats:whApp") {
-      writeTableVersionedStats(f.where(col("student") <= mid), wh,
+      val v1 = writeTableVersionedStats(f.where(col("student") <= mid), wh,
         "fact_by_student", sortBy = Seq("student"), statsCols = Seq("student"),
         blockSize = 64 * 1024)
-      appendTableVersionedStats(f.where(col("student") > mid), wh,
-        "fact_by_student", sortBy = Seq("student"), statsCols = Seq("student"),
-        blockSize = 64 * 1024)
+      appendTableVersioned(f.where(col("student") > mid), wh, "fact_by_student", v1)
     }
     val (blo, bhi) = (mid - (hi - lo) / 40, mid + (hi - lo) / 40)
     readAtPruned(s, wh, "fact_by_student", "student", blo, bhi)

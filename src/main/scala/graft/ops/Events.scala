@@ -985,14 +985,7 @@ object Events {
   }
 
   private def heavyUserRegisters(heavy: DataFrame): DataFrame = {
-    val h = md5(col("user_id").cast("string"))
-    val regs = heavy.select(col("event_type"),
-        pmod(conv(substring(h, 1, 4), 16, 10).cast("long"),
-          lit(TextStats.hllRegs)).as("b"),
-        conv(substring(h, 5, 8), 16, 10).cast("long").as("v"))
-      .withColumn("rnk",
-        when(col("v") === 0L, lit(33L))
-          .otherwise(lit(33L) - length(bin(col("v"))).cast("long")))
+    val regs = heavy.select(col("event_type"), hllUserBucket.as("b"), hllUserRank.as("rnk"))
       .groupBy("event_type", "b").agg(max("rnk").as("m"))
     heavy.select("event_type").distinct()
       .select(col("event_type"),
@@ -3361,19 +3354,13 @@ object Events {
     * — the one you'd serve at 100×, where the audit would dominate the
     * query it audits. Scale shape: the register table is days×16
     * cells; one corpus pass. */
-  /** q236's user-hash register coordinates, shared VERBATIM by the
-    * batch query and the streaming feed
-    * ([[graft.streaming.EventStream.dailyRegistersStream]]) — one
-    * definition, zero drift. */
-  private[graft] def hllUserBucket: Column =
-    pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-      .cast("long"), lit(TextStats.hllRegs))
+  /** The user-hash register coordinates ([[TextStats.hllBucket]] and
+    * [[TextStats.hllRank]] over user_id), shared VERBATIM by q228/q263,
+    * the batch q236 and the streaming feed
+    * ([[graft.streaming.EventStream.dailyRegistersStream]]). */
+  private[graft] def hllUserBucket: Column = TextStats.hllBucket(col("user_id"))
 
-  private[graft] def hllUserRank: Column = {
-    val v = conv(substring(md5(col("user_id").cast("string")), 5, 8), 16, 10)
-      .cast("long")
-    when(v === 0L, lit(33L)).otherwise(lit(33L) - length(bin(v)).cast("long"))
-  }
+  private[graft] def hllUserRank: Column = TextStats.hllRank(col("user_id"))
 
   /** q236/q261 shared tail: per-day register cells (day, b, m — hit
     * cells only) → densified calendar → trailing-7-day element-wise-max

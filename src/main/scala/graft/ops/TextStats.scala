@@ -1361,6 +1361,18 @@ object TextStats {
   private[ops] val hllEmptyTerm = 8589934592L // 2^33
   private[ops] val hllNum = 0.673 * (16.0 * 16.0) * 8589934592.0
 
+  /** The register coordinate of an id under that geometry: the register
+    * index `b` and the leading-zero rank (33 for an all-zero word) — one
+    * definition for every register build, over doc_id (q152/q155/q262)
+    * and user_id (q228/q263, q236/q261 and the streaming feed). */
+  private[graft] def hllBucket(id: Column): Column =
+    pmod(conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("long"), lit(hllRegs))
+
+  private[graft] def hllRank(id: Column): Column = {
+    val v = conv(substring(md5(id.cast("string")), 5, 8), 16, 10).cast("long")
+    when(v === 0L, lit(33L)).otherwise(lit(33L) - length(bin(v)).cast("long"))
+  }
+
   /** q152: HyperLogLog registers built from scratch — the register-exact
     * twin of q93's claim-style gate (there Spark's native
     * approx_count_distinct is asserted within 5%; here every register,
@@ -1388,16 +1400,10 @@ object TextStats {
 
   /** The per-(lang, register) max-rank table of a document frame — the
     * HLL state. Shared by q152 (single pass) and q155 (merge law). */
-  private def hllRegisters(docs: DataFrame): DataFrame = {
-    val h = md5(col("doc_id").cast("string"))
-    docs.select(col("lang"),
-        pmod(conv(substring(h, 1, 4), 16, 10).cast("long"), lit(hllRegs)).as("b"),
-        conv(substring(h, 5, 8), 16, 10).cast("long").as("v"))
-      .withColumn("rnk",
-        when(col("v") === 0L, lit(33L))
-          .otherwise(lit(33L) - length(bin(col("v"))).cast("long")))
+  private def hllRegisters(docs: DataFrame): DataFrame =
+    docs.select(col("lang"), hllBucket(col("doc_id")).as("b"),
+        hllRank(col("doc_id")).as("rnk"))
       .groupBy("lang", "b").agg(max("rnk").as("m"))
-  }
 
   /** q155: the HLL MERGE LAW — q151's argument for the distinct-count
     * sketch: registers of DISJOINT ingest batches merge by ELEMENT-WISE

@@ -615,7 +615,7 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
       .where(col("key").isin(absent: _*)).count() == 0)
   }
 
-  test("appendStats extends the manifest incrementally: old parts byte-identical, pruning ≡ full rebuild") {
+  test("growSidecars extends the stats manifest incrementally: old parts byte-identical, pruning ≡ full rebuild") {
     import spark.implicits._
     import graft.etl.DataSkipping
     val dir = java.nio.file.Files.createTempDirectory("graft_appstats").toString
@@ -637,11 +637,11 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     (201L to 300L).map(i => (i, s"p_$i")).toDF("id", "payload")
       .repartitionByRange(1, col("id")).sortWithinPartitions("id")
       .write.mode("append").parquet(dir)
-    DataSkipping.appendStats(spark, dir, Seq("id"))
+    DataSkipping.growSidecars(spark, dir)
     // old manifest parts untouched, byte for byte
     val manifestAfter = md5s("_idx/stats")
     manifestBefore.foreach { case (f, h) =>
-      assert(manifestAfter.get(f).contains(h), s"appendStats rewrote manifest part $f")
+      assert(manifestAfter.get(f).contains(h), s"growSidecars rewrote manifest part $f")
     }
     assert(manifestAfter.size > manifestBefore.size)
     // new rows cover exactly the new data files
@@ -651,16 +651,9 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     val newFiles = md5s(".").keySet -- dataBefore
     assert(newFiles.nonEmpty)
     assert(rows.map(_._1) == dataBefore ++ newFiles)
-    // a second append with nothing new is a no-op
-    DataSkipping.appendStats(spark, dir, Seq("id"))
+    // a second growth with nothing new is a no-op
+    DataSkipping.growSidecars(spark, dir)
     assert(md5s("_idx/stats") == manifestAfter)
-    // a mismatched column set is refused — appended rows would read
-    // back NULL stats against the base schema and silently vanish from
-    // pruned reads (the appendBloom key_col rule)
-    val e = intercept[IllegalArgumentException] {
-      DataSkipping.appendStats(spark, dir, Seq("payload"))
-    }
-    assert(e.getMessage.contains("one column set per manifest"))
     // incremental manifest ≡ full rebuild, row for row
     DataSkipping.writeStats(spark, dir, Seq("id"))
     val rebuilt = DataSkipping.statsManifest(spark, dir).collect()
@@ -684,8 +677,7 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     DataSkipping.writeBloom(spark, dir, "dt")
     (101L to 140L).map(i => (i, "d3", s"p_$i")).toDF("id", "dt", "payload")
       .write.mode("append").partitionBy("dt").parquet(dir)
-    DataSkipping.appendStats(spark, dir, Seq("dt"))
-    DataSkipping.appendBloom(spark, dir, "dt")
+    DataSkipping.growSidecars(spark, dir)
     // the appended partition's files carry real dt stats and the
     // pruned/bloom reads serve the new partition's rows
     assert(DataSkipping.statsManifest(spark, dir).where(col("min_dt") === "d3").count() > 0)
@@ -695,7 +687,7 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
       .where(col("dt") === "d3").count() == 40L)
   }
 
-  test("appendBloom extends the bloom sidecar incrementally and matches a rebuild") {
+  test("growSidecars extends the bloom sidecar incrementally and matches a rebuild") {
     import spark.implicits._
     import graft.etl.DataSkipping
     val dir = java.nio.file.Files.createTempDirectory("graft_appbloom").toString
@@ -714,17 +706,11 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     (201L to 260L).map(i => (s"k_$i", i)).toDF("key", "x")
       .repartition(2, col("key"))
       .write.mode("append").parquet(dir)
-    DataSkipping.appendBloom(spark, dir, "key")
+    DataSkipping.growSidecars(spark, dir)
     val sidecarAfter = md5s("_idx/bloom")
     sidecarBefore.foreach { case (f, h) =>
-      assert(sidecarAfter.get(f).contains(h), s"appendBloom rewrote sidecar part $f")
+      assert(sidecarAfter.get(f).contains(h), s"growSidecars rewrote sidecar part $f")
     }
-    // the wrong key is refused — an append can't silently index a
-    // different column than the base
-    val e = intercept[IllegalArgumentException] {
-      DataSkipping.appendBloom(spark, dir, "x")
-    }
-    assert(e.getMessage.contains("one key per sidecar"))
     // point lookups through the grown sidecar: new keys found, zero
     // false negatives, candidates ≡ a full rebuild's
     val probes = Seq("k_10", "k_250")
@@ -847,6 +833,56 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
     assert(hits == Seq((450L, "k_450")))
   }
 
+  test("appendTableVersionedStats refuses a retyped stats column before the claim") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_avretype").toString
+    def batch(lo: Long, hi: Long) = (lo to hi).map(i => (i, s"c_$i")).toDF("nrp", "course")
+    val v1 = StarBuilder.writeTableVersionedStats(batch(1L, 400L), wh, "t",
+      sortBy = Seq("nrp"), statsCols = Seq("nrp"))
+    // the same batch with nrp as a string: committed, its manifest part
+    // would carry binary min/max beside the base's bigint ones, and every
+    // pruned read of the new version would fail on the manifest schema
+    val e = intercept[IllegalArgumentException] {
+      StarBuilder.appendTableVersionedStats(
+        batch(401L, 500L).withColumn("nrp", col("nrp").cast("string")), wh, "t",
+        sortBy = Seq("nrp"), statsCols = Seq("nrp"))
+    }
+    assert(e.getMessage.contains("retyped: nrp"))
+    // refused before the claim: latest stays v1, no v=2 directory exists
+    assert(SnapshotLog.latestVersion(wh).contains(v1))
+    assert(!new java.io.File(s"$wh/v=${v1 + 1}").exists())
+    assert(StarBuilder.readAtPruned(spark, wh, "t", "nrp", 10L, 20L)
+      .where(col("nrp").between(10L, 20L)).select("nrp").as[Long]
+      .collect().sorted.toSeq == (10L to 20L))
+  }
+
+  test("appendTableVersionedStats refuses a clustering key other than the manifest's") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_avkey").toString
+    def batch(lo: Long, hi: Long) = (lo to hi).map(i => (i, s"p_$i")).toDF("id", "payload")
+    val v1 = StarBuilder.writeTableVersionedStats(batch(1L, 400L), wh, "t",
+      sortBy = Seq("id"), statsCols = Seq("id"))
+    // the manifest indexes id: stats rows for payload would read back
+    // NULL against its schema, and prunedFiles drops NULL-stats rows
+    Seq(Seq("id") -> Seq("payload"), Seq("payload") -> Seq("id")).foreach {
+      case (sortBy, statsCols) =>
+        val e = intercept[IllegalArgumentException] {
+          StarBuilder.appendTableVersionedStats(batch(401L, 500L), wh, "t",
+            sortBy = sortBy, statsCols = statsCols)
+        }
+        assert(e.getMessage.contains("one key per stats manifest"))
+    }
+    assert(SnapshotLog.latestVersion(wh).contains(v1))
+    // and a table without a manifest has no key for the stats append
+    val plain = StarBuilder.writeTableVersioned(batch(1L, 10L), wh, "u")
+    val e = intercept[IllegalArgumentException] {
+      StarBuilder.appendTableVersionedStats(batch(11L, 20L), wh, "u",
+        sortBy = Seq("id"), statsCols = Seq("id"))
+    }
+    assert(e.getMessage.contains("one key per stats manifest"))
+    assert(SnapshotLog.latestVersion(wh).contains(plain))
+  }
+
   test("PQ DV sidecar: erasure vanishes from search on unchanged code files; rebuild drops it") {
     import graft.ops.Similarity
     val sfDir = "/root/testdata/sf0.001"
@@ -917,6 +953,8 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
         executed.synchronized(executed += qe)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    // the q37 plan above must not reach the listener late
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       Similarity.ivfIndexSearch(spark, idx, queries, nprobe = 4, k = 5)

@@ -212,7 +212,7 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     // a writer killed mid-snapshot: v=3 table data exists but its
     // commit marker never landed — readers still resolve v2, and a
     // pin to the orphan refuses instead of serving half a write
-    StarBuilder.writeTables(spark, dir1, s"$wh/v=3")
+    StarBuilder.writeAll(spark, dir1, s"$wh/v=3")
     assert(SnapshotLog.latestVersion(wh).contains(2L))
     assert(factRows(None).size == 3)
     val e = intercept[IllegalArgumentException] {
@@ -731,20 +731,47 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
       (3L, 30L, Some(3.5)), (4L, 40L, Some(4.5))))
   }
 
-  test("appendTableVersioned refuses a table carrying a data-skipping sidecar") {
+  test("appendTableVersioned grows the stats and bloom sidecars of the table it appends to") {
     import spark.implicits._
-    import graft.etl.StarBuilder
+    import graft.etl.{DataSkipping, StarBuilder}
+    import org.apache.spark.sql.functions.col
     val wh = java.nio.file.Files.createTempDirectory("graft_evsc").toString
     val v1 = StarBuilder.writeTableVersionedStats(
-      (1L to 100L).map(k => (k, k * 10L)).toDF("k", "n"), wh, "t",
+      (1L to 100L).map(k => (k, s"key_$k")).toDF("k", "key"), wh, "t",
       sortBy = Seq("k"), statsCols = Seq("k"), blockSize = 64 * 1024)
-    // a plain append would byte-copy the manifest and leave the new
-    // files invisible to pruned reads — refuse with the remedy
-    val e = intercept[IllegalArgumentException] {
-      StarBuilder.appendTableVersioned(
-        Seq((101L, 1010L, "x")).toDF("k", "n", "tag"), wh, "t", from = v1)
+    DataSkipping.writeBloom(spark, s"$wh/v=$v1/t", "key")
+    // every parquet file under the table, sidecar parts included
+    def md5s(v: Long): Map[String, String] = {
+      val root = new java.io.File(s"$wh/v=$v/t")
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(root).filter(_.getName.endsWith(".parquet")).map { f =>
+        root.toPath.relativize(f.toPath).toString ->
+          java.security.MessageDigest.getInstance("MD5")
+            .digest(java.nio.file.Files.readAllBytes(f.toPath))
+            .map("%02x".format(_)).mkString
+      }.toMap
     }
-    assert(e.getMessage.contains("appendTableVersionedStats"))
+    val base = md5s(v1)
+    assert(base.keys.exists(_.startsWith("_idx/stats/")) &&
+      base.keys.exists(_.startsWith("_idx/bloom/")))
+    // a plain append, with an evolved column, onto the sidecar-carrying table
+    val v2 = StarBuilder.appendTableVersioned(
+      (101L to 110L).map(k => (k, s"key_$k", "x")).toDF("k", "key", "tag"),
+      wh, "t", from = v1)
+    assert(v2 == v1 + 1)
+    // copied data files and sidecar parts are byte-identical
+    val grown = md5s(v2)
+    base.foreach { case (f, h) => assert(grown.get(f).contains(h), s"append rewrote $f") }
+    assert(grown.size > base.size)
+    // both sidecars serve the appended rows at the new version
+    assert(StarBuilder.readAtPruned(spark, wh, "t", "k", 99L, 105L)
+      .where(col("k").between(99L, 105L)).select("k").as[Long]
+      .collect().sorted.toSeq == (99L to 105L))
+    val probes = Seq("key_7", "key_107")
+    assert(DataSkipping.bloomScan(spark, s"$wh/v=$v2/t", "key", probes)
+      .where(col("key").isin(probes: _*)).select("k").as[Long]
+      .collect().sorted.toSeq == Seq(7L, 107L))
   }
 
   test("partition evolution: snapshots may change layout; pinned readers are unaffected") {
