@@ -42,7 +42,10 @@ import scala.jdk.CollectionConverters._
   * new files ([[growSidecars]]), and a REWRITE, which renames every
   * file, regenerates every sidecar ([[rebuildSidecars]]);
   * [[StarBuilder.compactVersioned]] carries them as-is with a table it
-  * does not rewrite. The ANN serving indexes keep the
+  * does not rewrite. A row a warehouse deletion vector masks stays in
+  * its file and that file's stats, so every interval stays a superset:
+  * the warehouse reader prunes as usual and masks the deleted rows of
+  * just the files it opens. The ANN serving indexes keep the
   * rebuild-with-the-artifact rule.
   */
 object DataSkipping {
@@ -108,16 +111,22 @@ object DataSkipping {
       .coalesce(1)
   }
 
-  /** Scan exactly `files` (absolute paths) of `tableDir` — the one
-    * explicit-file read the pruned scans and the sidecar growth share.
-    * `basePath = tableDir` keeps PARTITION columns: without it each file
-    * is its own root and a column that lives in the directory structure
-    * would vanish from the read. No files → an empty frame with the
-    * table's schema (a footer-only read). */
-  private def scanFiles(spark: SparkSession, tableDir: String,
-      files: Seq[String]): DataFrame =
-    if (files.isEmpty) spark.read.parquet(tableDir).where(lit(false))
-    else spark.read.option("basePath", tableDir).parquet(files: _*)
+  /** Scan exactly `files` (absolute paths) of `tableDir`, or all of it
+    * for None — the one table read the warehouse reader, the pruned
+    * scans and the sidecar growth share. `basePath = tableDir` keeps
+    * PARTITION columns: without it each file is its own root and a
+    * column that lives in the directory structure would vanish from the
+    * read. No files → an empty frame with the table's schema (a
+    * footer-only read). `mergeSchema` reads the union of the footers. */
+  private[etl] def scanFiles(spark: SparkSession, tableDir: String,
+      files: Option[Seq[String]], mergeSchema: Boolean = false): DataFrame = {
+    val read = spark.read.option("mergeSchema", mergeSchema)
+    files match {
+      case None => read.parquet(tableDir)
+      case Some(Seq()) => read.parquet(tableDir).where(lit(false))
+      case Some(fs) => read.option("basePath", tableDir).parquet(fs: _*)
+    }
+  }
 
   /** The data files of `tableDir` (recursive — partitioned layouts
     * included; the [[leaves]] walk), RELATIVE to the table root — the
@@ -184,7 +193,7 @@ object DataSkipping {
     Seq("stats", "bloom").filter(carries(tableDir, _)).foreach { kind =>
       val files = fresh(kind)
       if (files.nonEmpty) {
-        val df = scanFiles(spark, tableDir, files.map(f => s"$tableDir/$f"))
+        val df = scanFiles(spark, tableDir, Some(files.map(f => s"$tableDir/$f")))
         val rows =
           if (kind == "stats") statsRowsFor(df, tableDir, statsCols)
           else bloomRowsFor(df, tableDir, bloomKeyCol(spark, tableDir))
@@ -228,7 +237,7 @@ object DataSkipping {
     * superset guarantee, same contract as partition pruning. */
   def prunedScan(spark: SparkSession, tableDir: String, c: String,
       lo: Any, hi: Any): DataFrame =
-    scanFiles(spark, tableDir, prunedFiles(spark, tableDir, c, lo, hi))
+    scanFiles(spark, tableDir, Some(prunedFiles(spark, tableDir, c, lo, hi)))
 
   // ---------------------------------------------------------------------------
   // _bloom: per-file Bloom filter for point lookups
@@ -326,7 +335,7 @@ object DataSkipping {
     * the exact membership filter (false positives are pruned there). */
   def bloomScan(spark: SparkSession, tableDir: String, keyCol: String,
       keys: Seq[String]): DataFrame =
-    scanFiles(spark, tableDir, bloomCandidateFiles(spark, tableDir, keys))
+    scanFiles(spark, tableDir, Some(bloomCandidateFiles(spark, tableDir, keys)))
 
   // ---------------------------------------------------------------------------
   // q135: Bloom point-lookup inside the correctness gate

@@ -295,7 +295,8 @@ object StarBuilder {
     *    or under ⌈leaf bytes / target⌉ files — the table is byte-copied,
     *    sidecars included, with no decode/re-encode;
     *  - REWRITE: every other table, through [[rewriteTable]] — deletes
-    *    materialize, the `k=v` layout is kept, a stats-carrying table is
+    *    materialize (the one physical drop of the rows a deletion vector
+    *    masks at read time), the `k=v` layout is kept, a stats-carrying table is
     *    re-clustered on its stats columns so file-level skipping
     *    survives (and tightens again after appends), and the stats and
     *    bloom sidecars are regenerated over the new files.
@@ -333,7 +334,7 @@ object StarBuilder {
     // MIXED footers; the rewrite must materialize the UNION schema (nulls
     // where a file predates a column), not whichever footer schema
     // inference happens to pick — the Delta OPTIMIZE semantic
-    val live = applyDv(spark, srcRoot, t.getName, mergeSchema = true)
+    val live = scan(spark, srcRoot, t.getName, mergeSchema = true)
     val physRows = math.max(1L, spark.read.parquet(t.toString).count())
     val liveRows =
       if (dvDir(srcRoot, t.getName).isDirectory) live.count() else physRows
@@ -383,25 +384,58 @@ object StarBuilder {
     SnapshotLog.vacuum(warehouse, keep)
 
   /** Read `table` from the snapshot `version` (or the latest committed
-    * one). Fails loudly on an uncommitted/unknown version — an aborted
-    * write's orphan directory is not data. `mergeSchema = true` reads
-    * the UNION of all data files' schemas (nulls where a file predates
-    * a column) — required after an [[appendTableVersioned]] schema
-    * evolution, where old files keep their narrow footer; the default
-    * single-footer read stays the cheap path for tables whose schema
-    * never widened. */
+    * one), deleted rows masked. Fails loudly on an uncommitted/unknown
+    * version — an aborted write's orphan directory is not data.
+    * `mergeSchema = true` reads the UNION of all data files' schemas
+    * (nulls where a file predates a column) — required after an
+    * [[appendTableVersioned]] schema evolution, where old files keep
+    * their narrow footer; the default single-footer read stays the cheap
+    * path for tables whose schema never widened. */
   def readAt(spark: SparkSession, warehouse: String, table: String,
-      version: Option[Long] = None, mergeSchema: Boolean = false): DataFrame = {
-    val root = snapshotRoot(warehouse, version)
-    if (dvDir(root, table).isDirectory) applyDv(spark, root, table, mergeSchema)
-    else spark.read.option("mergeSchema", mergeSchema)
-      .parquet(new java.io.File(root, table).toString)
-  }
+      version: Option[Long] = None, mergeSchema: Boolean = false): DataFrame =
+    scan(spark, snapshotRoot(warehouse, version), table, mergeSchema)
 
   /** The directory of `version` (or the latest), resolved through the
-    * log — the one resolver both read paths share. */
+    * log — the one resolver every read entry shares. */
   private def snapshotRoot(warehouse: String, version: Option[Long]): java.io.File =
     SnapshotLog.versionDir(warehouse, SnapshotLog.resolve(warehouse, version))
+
+  /** The one warehouse reader, behind [[readAt]], [[readAtPruned]],
+    * [[deleteWhere]] and [[rewriteTable]]: `table` of the snapshot
+    * directory `root`, whole or — `band` = (c, lo, hi) — just the files
+    * whose manifest interval on c meets [lo, hi]
+    * ([[DataSkipping.prunedFiles]]), both through
+    * [[DataSkipping.scanFiles]]. A table with a deletion vector tags each
+    * row with its address — `_file`, the data-file path RELATIVE to the
+    * table root (stable across the byte-copy that builds the next
+    * version, unambiguous across partition leaves), and `_pos`, its
+    * `_metadata.row_index` within the file: the row address an Iceberg v2
+    * position delete or a Delta DV records — and anti-joins the sidecar
+    * on it. The addresses are per file, so the mask is exact over ANY
+    * subset of the files, pruned scans included. The sidecar is
+    * deletes-sized, so the anti-join is HINTED broadcast (a session with
+    * auto-broadcast off must not shuffle the base on the address).
+    * `addr` keeps the address columns (the delete path records them). */
+  private def scan(spark: SparkSession, root: java.io.File, table: String,
+      mergeSchema: Boolean = false, band: Option[(String, Any, Any)] = None,
+      addr: Boolean = false): DataFrame = {
+    val tableDir = new java.io.File(root, table).toString
+    val dv = dvDir(root, table)
+    val rows = DataSkipping.scanFiles(spark, tableDir,
+      band.map { case (c, lo, hi) => DataSkipping.prunedFiles(spark, tableDir, c, lo, hi) },
+      mergeSchema)
+    if (!addr && !dv.isDirectory) rows
+    else {
+      val tagged = rows.select(col("*"), DataSkipping.relFile(tableDir).as("_file"),
+        col("_metadata.row_index").as("_pos"))
+      val live = if (!dv.isDirectory) tagged else {
+        val del = spark.read.parquet(dv.toString)
+        tagged.join(broadcast(del),
+          tagged("_file") === del("file") && tagged("_pos") === del("pos"), "left_anti")
+      }
+      if (addr) live else live.drop("_file", "_pos")
+    }
+  }
 
   // ---------------------------------------------------------------------------
   // Deletion vectors — row-level DELETE without rewriting data files
@@ -415,45 +449,6 @@ object StarBuilder {
   private def dvDir(versionRoot: java.io.File, table: String) =
     new java.io.File(versionRoot, s"_dv/$table")
 
-  /** Every physical row of a snapshot table tagged with its position
-    * identity: (`_file` = data-file path RELATIVE to the table root —
-    * stable across the byte-copy that builds the next version, unlike
-    * the absolute `file_path`, and unambiguous across partition leaves,
-    * unlike the bare file name — `_pos` = `_metadata.row_index`, the
-    * row's physical index within its file). This (file, position) pair
-    * is exactly the row address an Iceberg v2 position-delete / Delta
-    * deletion vector records. */
-  private def withRowId(spark: SparkSession, versionRoot: java.io.File,
-      table: String, mergeSchema: Boolean = false): DataFrame = {
-    val tableDir = new java.io.File(versionRoot, table).toString
-    spark.read.option("mergeSchema", mergeSchema).parquet(tableDir).select(col("*"),
-      DataSkipping.relFile(tableDir).as("_file"),
-      col("_metadata.row_index").as("_pos"))
-  }
-
-  /** The live rows of a (possibly DV-carrying) table, still carrying
-    * their `_file`/`_pos` row addresses: base rows anti-joined against
-    * the sidecar on the (file, pos) address — ONE definition shared by
-    * the read path ([[applyDv]]) and the delete path ([[deleteWhere]]),
-    * so the address-matching semantics cannot drift between them. The
-    * sidecar is deletes-sized — tiny next to the table — so the
-    * anti-join is HINTED broadcast (a session with auto-broadcast off
-    * must not shuffle the base on (_file, _pos)). */
-  private def liveWithRowId(spark: SparkSession, versionRoot: java.io.File,
-      table: String, mergeSchema: Boolean = false): DataFrame = {
-    val base = withRowId(spark, versionRoot, table, mergeSchema)
-    if (!dvDir(versionRoot, table).isDirectory) base
-    else {
-      val dv = spark.read.parquet(dvDir(versionRoot, table).toString)
-      base.join(broadcast(dv),
-        base("_file") === dv("file") && base("_pos") === dv("pos"), "left_anti")
-    }
-  }
-
-  private def applyDv(spark: SparkSession, versionRoot: java.io.File,
-      table: String, mergeSchema: Boolean = false): DataFrame =
-    liveWithRowId(spark, versionRoot, table, mergeSchema).drop("_file", "_pos")
-
   /** Row-level DELETE via deletion vectors — the Iceberg-v2/Delta-DV
     * write path: rows matching `predicate` are soft-deleted by
     * committing a NEW snapshot version whose data files are BYTE-COPIES
@@ -466,12 +461,14 @@ object StarBuilder {
     * of copying them — the same caveat [[compactVersioned]] carries.
     * The predicate is evaluated on the LIVE view, so re-deleting an
     * already-deleted row is a no-op and a repeated call is idempotent
-    * in content. Readers through [[readAt]] see the live view (the
-    * `_`-prefixed sidecar is invisible to plain parquet readers, which
-    * therefore see all physical rows — use the log-resolved path);
-    * pinned versions are untouched, and [[compactVersioned]] folds the
-    * sidecar into a real rewrite of the table (it never carries a
-    * DV-carrying table as-is). Returns the committed version. */
+    * in content. Readers through [[readAt]] and [[readAtPruned]] see
+    * the live view — the mask applies to whichever files a read opens,
+    * so data skipping keeps working after a delete (the `_`-prefixed
+    * sidecar is invisible to plain parquet readers, which therefore see
+    * all physical rows — use the log-resolved path); pinned versions are
+    * untouched, and [[compactVersioned]] folds the sidecar into a real
+    * rewrite of the table (it never carries a DV-carrying table as-is).
+    * Returns the committed version. */
   def deleteWhere(spark: SparkSession, warehouse: String, table: String,
       predicate: Column): Long = {
     import spark.implicits._
@@ -483,7 +480,7 @@ object StarBuilder {
           spark.read.parquet(dvDir(srcRoot, table).toString)
         else Seq.empty[(String, Long)].toDF("file", "pos")
       val merged = oldDv.union(
-        liveWithRowId(spark, srcRoot, table).where(predicate)
+        scan(spark, srcRoot, table, addr = true).where(predicate)
           .select(col("_file").as("file"), col("_pos").as("pos")))
       copyTree(srcRoot, txn)
       // the merged sidecar still READS from the source version's files;
@@ -680,19 +677,13 @@ object StarBuilder {
   /** Manifest-pruned interval scan of a committed snapshot table: the
     * version resolves through the log ([[readAt]]'s rule), then the
     * `_stats` manifest — not a directory listing, not parquet footers —
-    * decides which files the scan opens ([[DataSkipping.prunedScan]]).
-    * The caller still applies the exact predicate (file pruning is a
-    * superset guarantee, like partition pruning). DV-carrying tables
-    * refuse: a pruned scan that skipped the sidecar's files would
-    * resurrect deleted rows. */
+    * decides which files the scan opens ([[DataSkipping.prunedFiles]]),
+    * and a deletion vector masks its rows in exactly the files opened
+    * ([[readAt]]'s mask). The caller still applies the exact predicate
+    * (file pruning is a superset guarantee, like partition pruning). */
   def readAtPruned(spark: SparkSession, warehouse: String, table: String,
-      c: String, lo: Any, hi: Any, version: Option[Long] = None): DataFrame = {
-    val root = snapshotRoot(warehouse, version)
-    require(!dvDir(root, table).isDirectory,
-      s"readAtPruned: $table carries a deletion vector at ${root.getName} — " +
-        "compactVersioned materializes it; pruned scans don't apply DVs")
-    DataSkipping.prunedScan(spark, new java.io.File(root, table).toString, c, lo, hi)
-  }
+      c: String, lo: Any, hi: Any, version: Option[Long] = None): DataFrame =
+    scan(spark, snapshotRoot(warehouse, version), table, band = Some((c, lo, hi)))
 
   /** q131: stats-manifest file skipping inside the correctness gate —
     * the fact is committed clustered on `student` with its `_stats`

@@ -966,9 +966,9 @@ object Events {
 
   /** q228's per-type DENSIFIED register table: every (event_type, b)
     * cell for b ∈ [0,16) holds the max leading-zero rank of the heavy
-    * users hashing there, 0 where the register is empty — so the
-    * harmonic sum needs no separate empty-register correction term and
-    * a pairwise UNION is a plain `greatest` over the aligned cells.
+    * users hashing there, 0 where the register is empty — so
+    * [[TextStats.hllEst]]'s empty-register charge is zero and a pairwise
+    * UNION is a plain `greatest` over the aligned cells.
     * "Heavy" = strictly above the per-type mean event count, stated as
     * the exact integer cross-multiplication `cnt·n_users > total`
     * (scale-invariant — a fixed count threshold saturates as the
@@ -994,14 +994,6 @@ object Events {
       .select(col("event_type"), col("b"), coalesce(col("m"), lit(0L)).as("m"))
   }
 
-  /** The harmonic-sum estimate over a densified register table keyed by
-    * `keys`: one integer shift-sum (empty cells charge 2^33 because
-    * m = 0), one double division. */
-  private def hllEst(regs: DataFrame, keys: Seq[String]): DataFrame =
-    regs.groupBy(keys.map(col): _*)
-      .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(33 - m AS INT))")).as("ssum"))
-      .withColumn("est", lit(TextStats.hllNum) / col("ssum").cast("double"))
-
   /** q228: HLL SET ALGEBRA — the distinct-count sketch answering an
     * INTERSECTION question it cannot store directly: for every pair of
     * event types, |heavyA ∩ heavyB| is estimated by inclusion–exclusion
@@ -1017,13 +1009,13 @@ object Events {
     * inclusion–exclusion pair estimates (type_a, type_b, inter_est). */
   private def hllInterEst(heavy: DataFrame): DataFrame = {
     val regs = heavyUserRegisters(heavy)
-    val perType = hllEst(regs, Seq("event_type"))
+    val perType = TextStats.hllEst(regs, Seq("event_type"))
     val pairCells = regs.select(col("event_type").as("type_a"),
         col("b"), col("m").as("ma"))
       .join(regs.select(col("event_type").as("type_b"),
         col("b"), col("m").as("mb")), Seq("b"))
       .where(col("type_a") < col("type_b"))
-    hllEst(
+    TextStats.hllEst(
       pairCells.select(col("type_a"), col("type_b"), col("b"),
         greatest(col("ma"), col("mb")).as("m")),
       Seq("type_a", "type_b"))
@@ -3374,7 +3366,7 @@ object Events {
       .join(regs0, Seq("day", "b"), "left")
       .select(col("day"), col("b"), coalesce(col("m"), lit(0L)).as("m"))
     val wr = Window.partitionBy("b").orderBy("day").rangeBetween(-6, 0)
-    hllEst(dens.select(col("day"), col("b"), max("m").over(wr).as("m")),
+    TextStats.hllEst(dens.select(col("day"), col("b"), max("m").over(wr).as("m")),
       Seq("day"))
   }
 

@@ -1386,7 +1386,7 @@ object TextStats {
     * baseline + rel_err moved to their own gated row, q262, so the
     * plan gated here is exactly the one you'd run at 100×. */
   lazy val q152_hll_registers: Q = (s, d) =>
-    hllServeOnly(hllRegisters(docShingles(s, d)))
+    hllServeOnly(hllRegisters(docShingles(s, d))).orderBy("lang")
 
   /** q262: q152's EXACT AUDIT as its own gated row — the r16 serve/
     * audit split (r15 verdict item 4): q152 now gates the pure
@@ -1425,31 +1425,34 @@ object TextStats {
     hllServe(merged, docs)
   }
 
-  /** The q152 estimate chain over a register table WITHOUT the exact
-    * side: integer-scaled harmonic sum (empty registers charge 2^33),
-    * one double division — the serve plan (q152/q262 split, r16). */
-  private def hllServeOnly(reg: DataFrame): DataFrame =
-    reg.groupBy("lang").agg(
+  /** THE harmonic-sum estimate over a register table (`keys`, b, m) —
+    * one definition for q152/q155/q262 and Events' q228/q263/q236/q261:
+    * per key, `regs_hit` registers with an integer-scaled sum `ssum_hit`
+    * of 2^(33−m), every register absent from the table charged 2^33, and
+    * one double division, `est` = hllNum / (ssum_hit + (hllRegs −
+    * regs_hit)·2^33). A densified table (every register present, m = 0
+    * where empty) has regs_hit = hllRegs, so the empty charge is an
+    * exact integer 0 there. */
+  private[ops] def hllEst(reg: DataFrame, keys: Seq[String]): DataFrame =
+    reg.groupBy(keys.map(col): _*).agg(
         count(lit(1)).as("regs_hit"),
         sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(33 - m AS INT))")).as("ssum_hit"))
-      .select(col("lang"), col("regs_hit"),
-        round2(lit(hllNum) /
-          (col("ssum_hit") + (lit(hllRegs) - col("regs_hit")) * lit(hllEmptyTerm))
-            .cast("double")).as("hll_est"))
-      .orderBy("lang")
+      .withColumn("est", lit(hllNum) /
+        (col("ssum_hit") + (lit(hllRegs) - col("regs_hit")) * lit(hllEmptyTerm)).cast("double"))
+
+  /** The q152 estimate chain over a register table WITHOUT the exact
+    * side — the serve plan (q152/q262 split, r16). */
+  private def hllServeOnly(reg: DataFrame): DataFrame =
+    hllEst(reg, Seq("lang"))
+      .select(col("lang"), col("regs_hit"), round2(col("est")).as("hll_est"))
 
   /** [[hllServeOnly]] plus the exact side as audit baseline — q262's
     * row, and still q155's (the merge-law gate keeps its exact anchor:
     * proving merged ≡ single-pass is the LAW, not a serving path). */
   private def hllServe(reg: DataFrame, docs: DataFrame): DataFrame =
-    reg.groupBy("lang").agg(
-        count(lit(1)).as("regs_hit"),
-        sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(33 - m AS INT))")).as("ssum_hit"))
+    hllServeOnly(reg)
       .join(docs.groupBy("lang").agg(countDistinct("doc_id").as("n_exact")), Seq("lang"))
-      .select(col("lang"), col("n_exact"), col("regs_hit"),
-        round2(lit(hllNum) /
-          (col("ssum_hit") + (lit(hllRegs) - col("regs_hit")) * lit(hllEmptyTerm))
-            .cast("double")).as("hll_est"))
+      .select("lang", "n_exact", "regs_hit", "hll_est")
       .withColumn("rel_err", round4(abs(col("hll_est") - col("n_exact").cast("double")) /
         col("n_exact").cast("double")))
       .orderBy("lang")

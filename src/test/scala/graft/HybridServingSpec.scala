@@ -1,11 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.ops.{Retrieval, Similarity, TextCore}
-import scala.collection.mutable
 
 /** The persisted-index serving path: hybridIndexSearch resolves each
   * index epoch once per session (LsmIndex's epoch memo), collects the
@@ -38,21 +36,6 @@ class HybridServingSpec extends AnyFunSuite with SparkTestBase {
     Seq(rows(Retrieval.hybridIndexSearch(ss, lex, ivf, qf)),
       rows(Retrieval.lexIndexSearchText(ss, lex, qf.select("query_id", "text"))),
       rows(Similarity.ivfIndexSearch(ss, ivf, qf.select("query_id", "qv"), 4, 5)))
-  }
-
-  /** Job-start stage names of everything `body` runs. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val jobs = mutable.ArrayBuffer.empty[String]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        jobs += e.stageInfos.map(_.name).mkString(";")
-      }
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.toSeq
   }
 
   test("hybrid search after append, rebuild, delete-and-rebuild or erasure equals a fresh session's") {

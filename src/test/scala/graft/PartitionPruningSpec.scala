@@ -577,6 +577,60 @@ class PartitionPruningSpec extends AnyFunSuite with SparkTestBase {
       == band(spark.read.parquet(t2), lo, hi))
   }
 
+  test("readAtPruned masks a deletion vector: pruned band ≡ readAt band through delete, append, empty delete and compaction") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_dv_pruned").toString
+    StarBuilder.writeTableVersionedStats((1L to 400L).map(i => (i, s"p_$i")).toDF("id", "payload"),
+      wh, "t", sortBy = Seq("id"), statsCols = Seq("id"))
+    val lo = 95L; val hi = 205L // straddles the 100/200 file boundaries
+    def band(d: org.apache.spark.sql.DataFrame) =
+      d.where(col("id").between(lo, hi)).select("id", "payload")
+        .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    def dataFiles(v: Long) = new java.io.File(s"$wh/v=$v/t").listFiles()
+      .count(f => f.isFile && f.getName.endsWith(".parquet"))
+    /** The pruned band equals the whole-table band at `v`; returns it. */
+    def same(v: Long, what: String, pruning: Boolean = true) = {
+      val pruned = StarBuilder.readAtPruned(spark, wh, "t", "id", lo, hi)
+      val opened = pruned.inputFiles.count(!_.contains("/_dv/"))
+      if (pruning) assert(opened < dataFiles(v), s"after $what: $opened of ${dataFiles(v)} files")
+      val rows = band(pruned)
+      assert(rows == band(StarBuilder.readAt(spark, wh, "t")), s"pruned read differs after $what")
+      rows
+    }
+    val v2 = StarBuilder.deleteWhere(spark, wh, "t", col("id") % 3 === 0 || col("id") > 390)
+    val afterDelete = same(v2, "the delete")
+    assert(afterDelete.nonEmpty && afterDelete.forall(_._1 % 3 != 0))
+    // appended rows inside the band live in a new file the sidecar never names
+    val v3 = StarBuilder.appendTableVersionedStats((150L to 160L).map(i => (i, s"a_$i")).toDF("id", "payload"),
+      wh, "t", sortBy = Seq("id"), statsCols = Seq("id"))
+    assert(same(v3, "an append") == (afterDelete ++ (150L to 160L).map(i => (i, s"a_$i"))).sorted)
+    val v4 = StarBuilder.deleteWhere(spark, wh, "t", col("id") < 0L)
+    same(v4, "a delete matching nothing")
+    val v5 = StarBuilder.compactVersioned(spark, wh, targetBytes = 1L << 30)
+    assert(!new java.io.File(s"$wh/v=$v5/_dv").exists())
+    val compacted = same(v5, "the compaction", pruning = false)
+    // a no-match delete on a DV-free version commits an EMPTY sidecar
+    val v6 = StarBuilder.deleteWhere(spark, wh, "t", col("id") < 0L)
+    assert(spark.read.parquet(s"$wh/v=$v6/_dv/t").count() == 0L)
+    assert(same(v6, "an empty sidecar", pruning = false) == compacted)
+  }
+
+  test("a warm pruned read-back of a version without a deletion vector runs 5 jobs") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_pruned_jobs").toString
+    StarBuilder.writeTableVersionedStats((1L to 400L).map(i => (i, i % 7, 1.0)).toDF("id", "g", "x"),
+      wh, "t", sortBy = Seq("id"), statsCols = Seq("id"))
+    // the transcript_ingest read-back shape: one key, exact filter, rollup.
+    // Its jobs: the manifest's footer, the manifest collect, the pruned
+    // files' footer, then the rollup's map and result jobs
+    def readBack() = StarBuilder.readAtPruned(spark, wh, "t", "id", 150L, 150L)
+      .where(col("id") === 150L).groupBy("g").agg(org.apache.spark.sql.functions.sum("x"))
+      .collect()
+    readBack()
+    val jobs = jobsOf(readBack())
+    assert(jobs.length == 5, jobs.mkString("\n"))
+  }
+
   test("bloom sidecar skips files for point lookups where min/max stats cannot") {
     import spark.implicits._
     import graft.etl.DataSkipping

@@ -31,6 +31,20 @@ trait SparkTestBase {
     finally walk.close()
   }
 
+  /** Job-start stage names of everything `body` runs, in start order. */
+  def jobsOf(body: => Unit): Seq[String] = {
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.synchronized { jobs += e.stageInfos.map(_.name).mkString(";") }
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.toSeq
+  }
+
   /** Write a tiny star (lineitem + orders [+ part]) to a temp dir shaped
     * like the driver's testdata, so Star/Insights run on controlled rows.
     *

@@ -441,11 +441,19 @@ class StarSpec extends AnyFunSuite with SparkTestBase {
     assert(md5s(new java.io.File(s"$wh/v=$v3/t")) == md5s(new java.io.File(s"$wh/v=$v1/t")))
 
     // the 100 TB contract: the kilobyte sidecar broadcasts, the base
-    // scan never shuffles for the anti-join — pinned on the plan
-    val tree = StarBuilder.readAt(spark, wh, "t", Some(v3))
-      .queryExecution.sparkPlan.treeString
-    assert(tree.contains("BroadcastHashJoin") && tree.contains("LeftAnti"),
-      s"DV application should be a broadcast anti-join:\n$tree")
+    // scan never shuffles for the anti-join — pinned on the plan, for
+    // the whole-table read and the manifest-pruned read alike
+    val sw = java.nio.file.Files.createTempDirectory("graft_dv_pruned").toString
+    StarBuilder.writeTableVersionedStats(
+      Seq((1L, 1.0), (2L, 2.0), (3L, 3.0), (4L, 4.0)).toDF("k", "x"), sw, "t",
+      sortBy = Seq("k"), statsCols = Seq("k"))
+    StarBuilder.deleteWhere(spark, sw, "t", col("x") < 1.5)
+    Seq(StarBuilder.readAt(spark, wh, "t", Some(v3)),
+        StarBuilder.readAtPruned(spark, sw, "t", "k", 1L, 2L)).foreach { df =>
+      val tree = df.queryExecution.sparkPlan.treeString
+      assert(tree.contains("BroadcastHashJoin") && tree.contains("LeftAnti"),
+        s"DV application should be a broadcast anti-join:\n$tree")
+    }
 
     // compaction folds the sidecar into a real rewrite: no _dv in the
     // new version, physical rows == live rows, content unchanged
